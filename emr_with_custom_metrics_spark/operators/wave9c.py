@@ -2,8 +2,8 @@
 
 Split into its own module so the additions could land without touching
 the registry mid-benchmark (each bench leg is a fresh process importing
-current code — the round-9 sweep froze at 344 rows); imported from
-registry._ensure_loaded like every other operator module.
+current code — the round-9 sweep froze at 344 rows); the registry
+discovers it like every other module of the package.
 """
 
 from __future__ import annotations

@@ -1,11 +1,11 @@
 """Query registry: the single source of truth behind ``__spark_entry__``.
 
-Every operator from SURVEY.md §2 registers here as a named query — a callable
-``(spark, sf_dir) -> DataFrame`` — optionally paired with the ANSI-SQL string
-DuckDB runs as the correctness oracle (driver contract,
-``__spark_entry__.py:22-39``). Ops whose semantics aren't SQL-expressible
-(LSH candidate generation, stateful cooldown) register with ``oracle=None``
-and get the driver's weaker rows-only check.
+Every module of the package except ``__main__`` is imported on first use,
+and each query registers through ``@register`` as an import side effect —
+a callable ``(spark, sf_dir) -> DataFrame`` plus the ANSI-SQL string DuckDB
+runs as its correctness oracle, or ``oracle=None`` for a rows-only check.
+The driver walks unverified queries first, then verified ones by (round of
+the latest green row in the ``CORRECTNESS_r*.json`` ledgers, name).
 
 Column-name parity rule (driver hashes after sorting columns by name): every
 computed/aggregate column is aliased identically in the DataFrame code and
@@ -129,35 +129,11 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
     return wrap
 
 
-# Driver-verified queries, DERIVED at import from the checked-in official
-# CORRECTNESS_r*.json ledgers (round-9: the hand-maintained frozenset was
-# the likeliest future bookkeeping bug at 334 rows — r8's 50 green rows
-# had not been folded back in). A query counts as verified iff its LATEST
+# Driver-verified queries, derived at import from the checked-in official
+# CORRECTNESS_r*.json ledgers. A query counts as verified iff its LATEST
 # official row is green: no err, rows_match, and schema/hash matches that
 # are either true or not-applicable (rows-only checks record null there).
-# Queries whose ANSWER CONTRACT changes in the current round must be named
-# in _ANSWER_CHANGED so they re-queue for a fresh row despite an old green.
-# Round 14: the r13 pair (stats_ljung_box_resid, text_quality_classifier)
-# rotated OUT — both took fresh r13 official greens under their new
-# contracts (VERDICT r13 item 1: stale entries waste slots). The r13-ADVICE
-# overflow fixes applied this round (cross-coherence double spectral sums,
-# Burrows-Delta sff-in-double, t-closeness weighted-avg-in-double,
-# modularity m=0 parity, jdbc jar version-sort) are proven byte-identical
-# at the sf0.001/sf0.01 gates, so they do not re-queue.
-# Round 15 (driver numbering): the AR(2) trio queued here last round
-# (the e6 -> e3 deterministic-fit contract change) all took fresh r14
-# official greens, so the set empties — the r14 VERDICT item 1 rule:
-# stale entries burn official slots that should rotate vintage rows.
-# MECHANICAL STALENESS GATE: each entry maps to the driver round it was
-# ADDED in; tests/test_stats_ops.py fails the suite when a member's
-# latest official green is >= its added round (the green under the new
-# contract landed, so the entry is spent). This is the second time the
-# same defect recurred by hand (r13 pair, r14 trio) — now it cannot.
-_ANSWER_CHANGED_ADDED: dict[str, int] = {}
-_ANSWER_CHANGED: frozenset[str] = frozenset(_ANSWER_CHANGED_ADDED)
-
-
-def _load_driver_verified() -> frozenset[str]:
+def _load_driver_verified() -> tuple[frozenset[str], dict[str, int]]:
     import glob as _glob
     import json as _json
 
@@ -185,153 +161,24 @@ def _load_driver_verified() -> frozenset[str]:
             prev = latest.get(name)
             if prev is None or rnd >= prev[0]:
                 latest[name] = (rnd, green)
-    verified = frozenset(
-        n for n, (_, g) in latest.items() if g and n not in _ANSWER_CHANGED
-    )
     rounds = {n: r for n, (r, g) in latest.items() if g}
-    return verified, rounds
+    return frozenset(rounds), rounds
 
 
 # _VERIFIED_ROUND: the round of each query's LATEST official green row.
-# The verified re-verification tail is ordered oldest-green-first so the
-# driver's spare budget rotates through stale rows instead of
-# re-sampling the same fresh ones (r11 VERDICT item 5: 32 queries'
-# latest official green was still round-1 vintage after eleven rounds).
 _DRIVER_VERIFIED, _VERIFIED_ROUND = _load_driver_verified()
 
-# Heaviest per-invocation queries at sf0.01 (streaming-query startup or
-# multi-stage dedup/ANN pipelines): still unverified-first, but after the
-# cheap batch ones so a time-capped verify pass banks the most green rows.
-_HEAVY = frozenset(
-    {
-        "dedup_minhash_lsh", "dedup_simhash", "dedup_ngram_jaccard",
-        "dedup_ngram_jaccard_prefix",
-        "dedup_clusters", "dedup_keep_canonical", "dedup_incremental_batch",
-        "dedup_embedding_cosine",
-        "similarity_ann_lsh", "similarity_ivf_topk", "cooldown_suppression",
-        "autoscale_timeline", "multimodal_feature_extract", "kmeans_embeddings",
-        "decontaminate_against_eval", "knn_self_join_exact",
-        "pagerank_similarity_graph", "graph_triangle_count",
-        "graph_label_propagation", "multimodal_decode_video_motion",
-        "text_bpe_train_merges", "graph_bfs_levels", "embedding_pca_project",
-        "similarity_ivfpq_topk", "similarity_recall_report",
-        # round 11: 40 staged value-iteration rounds (5 checkpoint jobs)
-        "events_markov_absorption",
-        # round 14: the re-queued classifier (24 GD rounds in BOTH
-        # engines — the DuckDB oracle replays the chained-CTE training)
-        # and the three new pair-memo/GEMM riders — a time-capped
-        # verify should bank the ~1s stats rows first
-        "text_quality_classifier",
-        "graph_rich_club",
-        "embedding_intrinsic_dim",
-        "embedding_knn_outliers",
-        # round 15: the ANN-index stager (pays the ann_index build) and
-        # the pair-memo rider
-        "similarity_ivfpq_tradeoff",
-        "embedding_hubness",
-    }
-)
 
-
-# Round 8: for the first time the whole backlog fits the ~50-row budget.
-# Head order: (1) geo_grid_nearest — the round-7 red row, now pure integer
-# domain (r7 VERDICT item 1); (2) the seven queries whose ANSWERS changed
-# this round (sample_stratified's new deterministic hash-threshold form,
-# r7 VERDICT item 4, and the six integer-output upgrades of item 2) — all
-# were removed from _DRIVER_VERIFIED so they rank here; (3) the nine
-# never-verified tier-1 queries; (4) all 21 previously deferred thin-API
-# demos — after this round, zero registry entries remain driver-unverified.
-_DRIVER_PRIORITY = (
-    # -- (1) the round-7 red row, rebuilt in integer domain ------------------
-    "geo_grid_nearest",
-    # -- (2) round-8 answer-changing upgrades (need rows under the new
-    #    contract: integer outputs / deterministic stratified sampling) -----
-    "sample_stratified", "similarity_ann_lsh", "similarity_pq_topk",
-    "similarity_ivfpq_topk", "kmeans_embeddings", "survival_kaplan_meier",
-    "embedding_pca_project",
-    # -- (3) never-verified tier-1 ------------------------------------------
-    "timeseries_holt_winters", "stream_late_event_audit",
-    "text_distribution_drift", "pack_chunks_overlap",
-    "corpus_negative_samples", "corpus_curriculum_interleave",
-    "e2e_span_dedup_pipeline", "text_html_extract", "dedup_url_canonical",
-    # -- (4) the full deferred thin-API set (the declared r7 slip) ----------
-    "bucketed_join_no_shuffle", "agg_hll_sketch_union",
-    "sql_recursive_cte_hierarchy", "mapinarrow_token_stats",
-    "udtf_dynamic_schema", "session_windows_dynamic_gap",
-    "maintenance_compact_small_files", "formats_parquet_schema_evolution",
-    "timeseries_delta_of_delta", "sql_pipe_syntax", "sql_parameterized",
-    "sql_collation_lcase", "sql_join_hints", "sql_lateral_topn",
-    "json_parse_modes", "scalar_xml_funcs", "window_ignore_nulls",
-    "agg_filter_clause", "snapshot_diff", "transpose_priority_metrics",
-    "formats_xml_roundtrip",
-    # -- (5) new round-8 operators ------------------------------------------
-    "text_kneserney_bigram", "graph_hits_scores", "text_wordpiece_encode",
-    "dedup_cdc_chunks", "stats_ab_ttest", "stats_chi2_independence",
-    "timeseries_seasonal_decompose", "sketch_theta_overlap",
-    "embedding_random_projection", "stats_mann_whitney",
-    "stats_cuped_variance_reduction", "stats_bootstrap_ci",
-    "anomaly_seasonal_residual", "text_rake_keywords",
-    "text_collocation_llr", "stats_power_analysis",
-    "timeseries_autocorrelation", "text_zipf_fit",
-    "customer_rfm_segments", "inventory_pareto_abc",
-    "stats_anova_oneway", "stats_proportion_ztest", "e2e_ab_cuped_ttest",
-    "events_active_users_rolling", "events_path_topk", "stats_srm_check",
-    # Spark-4 SQL surface demos — thin tier, deliberately last in the head
-    "sql_udf_scalar_function", "sql_udf_table_function",
-    "sql_listagg_within_group", "sql_scripting_block",
-    "stats_effect_sizes",
-)
-_PRIORITY_RANK = {n: i for i, n in enumerate(_DRIVER_PRIORITY)}
-
-_DRIVER_DEFER = frozenset(
-    {
-        "sql_parameterized", "sql_collation_lcase", "transpose_priority_metrics",
-        "scalar_xml_funcs", "window_ignore_nulls", "json_parse_modes",
-        "agg_filter_clause", "sql_lateral_topn", "formats_xml_roundtrip",
-        "formats_parquet_schema_evolution", "sql_pipe_syntax",
-        "sql_recursive_cte_hierarchy", "sql_join_hints", "agg_hll_sketch_union",
-        "mapinarrow_token_stats", "udtf_dynamic_schema",
-        "bucketed_join_no_shuffle", "maintenance_compact_small_files",
-        "snapshot_diff", "session_windows_dynamic_gap",
-        "timeseries_delta_of_delta",
-    }
-)
-
-
-def _driver_order(specs: dict[str, "QuerySpec"]) -> list[str]:
-    """Driver-facing ordering, round 6 continuation: the explicit
-    _DRIVER_PRIORITY head leads (VERDICT-mandated re-verifies + flagship
-    tiers, in list order), then the remaining unverified oracled queries
-    (registration order), then the deferred thin-API set, then unverified
-    rows-only checks, then the already-verified tail for re-verification.
-    """
-    names = list(specs)
-    idx = {n: i for i, n in enumerate(names)}
-
-    def key(n: str) -> tuple[int, int, int]:
-        if n in _PRIORITY_RANK and n not in _DRIVER_VERIFIED:
-            return (0, 0, _PRIORITY_RANK[n])
-        if n in _DRIVER_VERIFIED:
-            # oldest official green first (r11 VERDICT item 5): spare
-            # driver budget refreshes round-1-vintage rows before
-            # re-sampling anything recent
-            return (5, _VERIFIED_ROUND.get(n, 0), idx[n])
-        if specs[n].oracle is None:
-            tier = 4
-        elif n in _DRIVER_DEFER:
-            tier = 3
-        elif n in _HEAVY:
-            tier = 2
-        else:
-            tier = 1
-        return (tier, 0, idx[n])
-
-    return sorted(names, key=key)
+def _driver_key(name: str) -> tuple[bool, int, str]:
+    """Unverified queries first, then verified ones oldest green first,
+    so a budget-capped driver pass spends its spare rows on the stalest
+    greens; ties break by name, never by import order."""
+    return (name in _DRIVER_VERIFIED, _VERIFIED_ROUND.get(name, 0), name)
 
 
 def all_specs() -> dict[str, QuerySpec]:
     _ensure_loaded()
-    return {n: _REGISTRY[n] for n in _driver_order(_REGISTRY)}
+    return {n: _REGISTRY[n] for n in sorted(_REGISTRY, key=_driver_key)}
 
 
 def QUERIES() -> dict[str, QueryFn]:
@@ -348,81 +195,20 @@ _LOADED = False
 
 
 def _ensure_loaded() -> None:
-    """Import every module that registers queries (import has the side effect)."""
+    """Import every module of the package except ``__main__``; queries
+    register as an import side effect. An import error raises."""
     global _LOADED
     if _LOADED:
         return
-    import emr_with_custom_metrics_spark.operators.relational  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.extended  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.joins  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.tpch_extra  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.windows  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.setops  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.asof  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.anomaly  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.graph  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.analytics  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.quality  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.geo  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.sketches  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.stats  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.linkage  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.privacy  # noqa: F401
-    import emr_with_custom_metrics_spark.functions.scalar  # noqa: F401
-    import emr_with_custom_metrics_spark.functions.collections  # noqa: F401
-    import emr_with_custom_metrics_spark.functions.vector  # noqa: F401
-    import emr_with_custom_metrics_spark.sources.reference_pipeline  # noqa: F401
-    import emr_with_custom_metrics_spark.sources.avro_ocf  # noqa: F401
-    import emr_with_custom_metrics_spark.sources.jdbc  # noqa: F401
-    import emr_with_custom_metrics_spark.streaming.metrics  # noqa: F401
-    import emr_with_custom_metrics_spark.llm.text  # noqa: F401
-    import emr_with_custom_metrics_spark.llm.dedup  # noqa: F401
-    import emr_with_custom_metrics_spark.llm.corpus_ops  # noqa: F401
-    import emr_with_custom_metrics_spark.llm.embeddings  # noqa: F401
-    import emr_with_custom_metrics_spark.llm.similarity  # noqa: F401
-    import emr_with_custom_metrics_spark.llm.multimodal  # noqa: F401
-    import emr_with_custom_metrics_spark.llm.html  # noqa: F401
-    import emr_with_custom_metrics_spark.llm.url  # noqa: F401
-    import emr_with_custom_metrics_spark.llm.classifier  # noqa: F401
-    import emr_with_custom_metrics_spark.llm.pdf  # noqa: F401
-    import emr_with_custom_metrics_spark.llm.unigram  # noqa: F401
-    import emr_with_custom_metrics_spark.llm.keywords  # noqa: F401
-    import emr_with_custom_metrics_spark.llm.topics  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave9c  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave9d  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave9e  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave9f  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave9g  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave9h  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave10a  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave10b  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave10c  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave10d  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave10e  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave11a  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave11b  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave11c  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave11d  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave11e  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave11f  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave12a  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave12b  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave13a  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave13b  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave13c  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave13d  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave14a  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave14b  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave14c  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave14d  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave14e  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave14f  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave15a  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave15b  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave15c  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave15d  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave16a  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave16b  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave16c  # noqa: F401
-    import emr_with_custom_metrics_spark.operators.wave16d  # noqa: F401
+    import importlib
+    import pkgutil
+
+    import emr_with_custom_metrics_spark as pkg
+
+    def _raise(name: str) -> None:
+        raise  # re-raise the package's import error (walk_packages' default skips it)
+
+    for mod in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + ".", onerror=_raise):
+        if mod.name.rsplit(".", 1)[-1] != "__main__":
+            importlib.import_module(mod.name)
     _LOADED = True

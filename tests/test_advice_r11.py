@@ -265,14 +265,9 @@ def test_gini_lorenz_tiny_corpus_keeps_all_deciles(spark, tmp_path):
 
 
 def test_linkage_requeued_for_fresh_driver_row():
-    """Round 11 queued linkage via _ANSWER_CHANGED; once the fresh
-    official green landed (CORRECTNESS_r11) the durable property is
-    that its LATEST green row postdates the r10 band change — it must
-    never again ride a pre-r11 green."""
+    """Round 11 re-queued linkage for a fresh official row; the durable
+    property is that its LATEST green row postdates the r10 band change —
+    it must never again ride a pre-r11 green."""
     from emr_with_custom_metrics_spark import registry
 
-    if "linkage_fellegi_sunter" in registry._ANSWER_CHANGED:
-        # still queued (the round the fix landed)
-        assert "linkage_fellegi_sunter" not in registry._DRIVER_VERIFIED
-    else:
-        assert registry._VERIFIED_ROUND.get("linkage_fellegi_sunter", 0) >= 11
+    assert registry._VERIFIED_ROUND.get("linkage_fellegi_sunter", 0) >= 11

@@ -632,63 +632,40 @@ def test_sql_scripting_threshold_selects_rows(duck):
     assert got.n_large.sum() > 0
 
 
-def test_driver_priority_names_are_registered():
-    """A typo in _DRIVER_PRIORITY (or a stale _ANSWER_CHANGED entry)
-    silently demotes a query out of (or into) the driver's ~50-row
-    verification budget — make registry bookkeeping loud instead.
-    _DRIVER_VERIFIED is derived from the CORRECTNESS ledgers since
-    round 9, so stale-set omissions can no longer happen by hand."""
+def test_driver_order_is_one_key():
+    """The driver walk is unverified rows first (the ~50-row budget
+    certifies them before re-verifying old greens), then verified rows
+    oldest green first, ties by name — independent of import order."""
     from emr_with_custom_metrics_spark import registry
 
-    specs = registry.all_specs()
-    assert [n for n in registry._DRIVER_PRIORITY if n not in specs] == []
-    assert [n for n in registry._DRIVER_VERIFIED if n not in specs] == []
-    assert [n for n in registry._ANSWER_CHANGED if n not in specs] == []
-    assert len(set(registry._DRIVER_PRIORITY)) == len(registry._DRIVER_PRIORITY)
-    # unverified (never-green-row) queries must lead the driver walk so a
-    # ~50-row budget certifies them before re-verifying old greens
-    names = list(specs)
+    names = list(registry.all_specs())
+    assert [n for n in registry._DRIVER_VERIFIED if n not in names] == []
     unverified = [n for n in names if n not in registry._DRIVER_VERIFIED]
-    assert names[: len(unverified)] == unverified, "unverified rows not first"
+    assert names[: len(unverified)] == sorted(unverified), "unverified rows not first"
+    verified = names[len(unverified):]
+    assert verified == sorted(verified, key=lambda n: (registry._VERIFIED_ROUND[n], n))
 
 
-def test_answer_changed_entries_not_stale():
-    """r14 VERDICT item 1 (second recurrence of the same defect): an
-    _ANSWER_CHANGED entry exists to force a fresh official row under a
-    NEW answer contract. Once a green lands in a round >= the round the
-    entry was added, the entry is spent — keeping it burns one of the
-    driver's ~50 official slots every round. Fail loudly instead."""
-    import glob
-    import json
-    import os
+def test_registry_discovers_every_registering_module():
+    """Discovery completeness: every package module whose source uses
+    ``@register(`` is imported by ``all_specs()``, and the CLI entry
+    ``__main__`` is not (importing it must never be a side effect)."""
+    import pathlib
+    import sys
 
+    import emr_with_custom_metrics_spark as pkg
     from emr_with_custom_metrics_spark import registry
 
-    assert set(registry._ANSWER_CHANGED) == set(registry._ANSWER_CHANGED_ADDED)
-    if not registry._ANSWER_CHANGED_ADDED:
-        return
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    latest_green: dict[str, int] = {}
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        rnd = int(os.path.basename(path)[len("CORRECTNESS_r"):-len(".json")])
-        for name, row in json.load(open(path)).items():
-            green = (
-                not row.get("err")
-                and row.get("rows_match") is True
-                and row.get("schema_match") is not False
-                and row.get("hash_match") is not False
-            )
-            if green and rnd > latest_green.get(name, -1):
-                latest_green[name] = rnd
-    stale = {
-        n: (added, latest_green[n])
-        for n, added in registry._ANSWER_CHANGED_ADDED.items()
-        if latest_green.get(n, -1) >= added
-    }
-    assert not stale, (
-        f"stale _ANSWER_CHANGED entries (added_round <= latest official "
-        f"green round — the re-queue already succeeded): {stale}"
-    )
+    registry.all_specs()
+    root = pathlib.Path(pkg.__file__).parent
+    registering = [
+        ".".join((pkg.__name__, *path.relative_to(root).with_suffix("").parts))
+        for path in sorted(root.rglob("*.py"))
+        if "@register(" in path.read_text()
+    ]
+    assert len(registering) > 70
+    assert [m for m in registering if m not in sys.modules] == []
+    assert f"{pkg.__name__}.__main__" not in sys.modules
 
 
 def test_driver_verified_matches_ledgers():
@@ -715,7 +692,7 @@ def test_driver_verified_matches_ledgers():
         and r.get("rows_match") is True
         and r.get("schema_match") is not False
         and r.get("hash_match") is not False
-    } - set(registry._ANSWER_CHANGED)
+    }
     assert set(registry._DRIVER_VERIFIED) == expect
 
 

@@ -1,56 +1,45 @@
-"""Decade-up probe for the wave-16a/16b/16c/16d operators (the standing round
-ritual: every new operator gets one measured decade before the round
-closes). Times each at sf0.1 and at the x10 fixture from
-tools/inflate_x10.py, best-of-2, single 24 GB JVM, uncontended.
+"""Decade-up probe: time registered queries at sf0.1 and at the x10
+fixture from tools/inflate_x10.py, best-of-2 per scale, single 24 GB
+JVM on local[32]. Run uncontended (pgrep -cx java = 0); prints a
+markdown table to stdout.
 
-Usage: python tools/probe_wave16_x10.py [SF01_DIR] [X10_DIR]
+Usage: python tools/probe_x10.py --sf01 SF01_DIR --x10 X10_DIR NAME [NAME ...]
 """
 
 from __future__ import annotations
 
+import argparse
+import os
 import sys
 import time
 
-SF01 = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-X10 = sys.argv[2] if len(sys.argv) > 2 else "/tmp/sfx1_r13"
-
-ROWS = [
-    "sketch_spacesaving_topk",
-    "timeseries_kpss",
-    "spc_ewma_chart",
-    "sketch_bottomk_jaccard",
-    "graph_conductance_labels",
-    "stats_hoeffding_drift",
-    "retrieval_dirichlet_lm",
-    "corpus_source_concentration",
-    "stats_atkinson_spend",
-    "stats_mood_median",
-    "text_oov_rate",
-    "sketch_ams_f2",
-    "text_chao1_richness",
-    "stats_eb_shrinkage",
-    "sample_weighted_reservoir",
-    "dq_eval_leakage_screen",
-    "join_bloom_prefilter_dim",
-]
-
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--sf01", required=True, help="sf0.1 fixture directory")
+    ap.add_argument("--x10", required=True, help="x10 fixture directory (tools/inflate_x10.py)")
+    ap.add_argument("names", nargs="+", help="registered query names")
+    args = ap.parse_args()
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from emr_with_custom_metrics_spark.registry import all_specs
+
+    specs = all_specs()
+    unknown = [n for n in args.names if n not in specs]
+    if unknown:
+        ap.error(f"not registered: {unknown}")
+
     from pyspark.sql import SparkSession
 
     spark = (
         SparkSession.builder.master("local[32]")
-        .appName("wave16-x10-probe")
+        .appName("x10-probe")
         .config("spark.driver.memory", "24g")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.enabled", "true")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    sys.path.insert(0, "/root/repo")
-    from emr_with_custom_metrics_spark.registry import all_specs
-
-    specs = all_specs()
 
     def run_once(name: str, sf_dir: str):
         t0 = time.time()
@@ -61,9 +50,9 @@ def main() -> None:
         return time.time() - t0, n
 
     results = []
-    for name in ROWS:
+    for name in args.names:
         per_scale = []
-        for sf_dir in (SF01, X10):
+        for sf_dir in (args.sf01, args.x10):
             a, n = run_once(name, sf_dir)
             if not isinstance(a, str):
                 b, _ = run_once(name, sf_dir)
