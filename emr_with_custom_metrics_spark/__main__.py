@@ -9,8 +9,8 @@ README.md:164-167, scripts/spark_converter.py:5-16). Same UX here:
         [group_col] [num_output_files]
 
 Reads headered TSV (all-string, S1 parity), prints the category counts
-(X1's show()), writes repartitioned parquet (P1+S2) — with the
-scan-once-cache fix the reference lacked (SURVEY.md §4.1).
+(X1's show()), writes repartitioned parquet (P1+S2) — scanning the TSV
+once, where the reference scanned it twice (SURVEY.md §4.1).
 """
 
 from __future__ import annotations

@@ -5,8 +5,8 @@ all-string (S1) → groupBy(category).count() (A1) → show() (X1) →
 repartition(10) (P1) → overwrite parquet (S2). ~31 LoC; reproduced here as a
 parameterized library pipeline plus fixes the reference missed:
 
-* the input was scanned TWICE (no cache between show() and write —
-  SURVEY.md §4.1); we cache between actions,
+* the input was scanned TWICE (SURVEY.md §4.1); we scan it once, then
+  count from a one-column read of the written parquet,
 * ``repartition(10)`` forces a round-robin shuffle just to control file
   count; at 100 TB the right lever is AQE coalescing +
   ``spark.sql.files.maxRecordsPerFile`` (SURVEY.md §4.2) — both supported.
@@ -66,25 +66,20 @@ def convert(
 ) -> DataFrame:
     """The full S1→A1→X1→P1→S2 pipeline (reference spark_converter.py:25-31).
 
-    Returns the grouped counts (X1's show() became a returned DataFrame),
-    MATERIALIZED before the cached scan is released — unpersisting first
-    would silently rescan the TSV when the caller finally evaluates counts,
-    defeating the cache-between-actions fix this function exists to make.
+    Scans the TSV once, in the write, and caches nothing. The returned
+    counts (X1's show() became a returned DataFrame) are a lazy group-by
+    over the group column of the written parquet, so they read
+    ``output_path`` when evaluated: overwriting it first invalidates them.
     """
-    df = read_tsv(spark, input_path).cache()
-    counts = category_counts(df, group_col)
+    df = read_tsv(spark, input_path)
     if use_aqe_file_sizing:
         # Scale path: let AQE size the shuffle, bound file size at the sink.
         df.write.mode("overwrite").option("maxRecordsPerFile", 5_000_000).parquet(output_path)
     else:
         # Parity path: fixed fan-out like the reference's repartition(10).
         df.repartition(num_output_files).write.mode("overwrite").parquet(output_path)
-    # Pin the (tiny, one-row-per-category) counts in their own cache and
-    # force them while the scan cache is still live; only then release it.
-    counts = counts.cache()
-    counts.count()
-    df.unpersist()
-    return counts
+    written = spark.read.schema(df.schema).parquet(output_path).select(group_col)
+    return category_counts(written, group_col)
 
 
 @register(

@@ -25,12 +25,19 @@ Items:
    lexicographic sorted()[-1] (chooses 1.9 over 1.10); now newest by
    mtime. The local-session-only classloader injection is documented
    in the failure path.
+
+Two further round-14 notes are pinned at the end: the dense-daily
+family emits a degenerate-flagged row for a metric whose span is too
+short to lag, and the IVF centroids keep their e9 quantization.
 """
 
 from __future__ import annotations
 
+import inspect
+
 import numpy as np
 import pandas as pd
+import pytest
 
 
 def _collect(spark, name, sf_dir):
@@ -226,3 +233,55 @@ def test_duckdb_attach_documents_local_only():
     src = inspect.getsource(jdbc._attach_duckdb_jar)
     assert "LOCAL-SESSION-ONLY" in src
     assert "spark.jars" in src
+
+
+# ---------------------------------------------------------------------------
+# Dense-daily family: a single-day span still emits a degenerate row
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["timeseries_dickey_fuller", "timeseries_arch_lm", "stats_gumbel_block_maxima"],
+)
+def test_daily_dense_single_day_emits_degenerate_row(spark, tmp_path, name):
+    """Every event falls on one day, so no metric has a lagged
+    observation or a second block. Each metric must still emit one
+    row, flagged degenerate, and both engines must agree."""
+    t0 = pd.Timestamp("2024-03-05 08:00:00")
+    rows = [
+        (i, t0 + pd.Timedelta(minutes=7 * i), i % 5, et, 1.0, "{}")
+        for i, et in enumerate(["view"] * 6 + ["click"] * 3 + ["purchase"])
+    ]
+    pd.DataFrame(
+        rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
+    ).astype({"event_id": np.int64, "user_id": np.int64}).to_parquet(
+        tmp_path / "events.parquet", index=False
+    )
+
+    out = _collect(spark, name, str(tmp_path))
+    assert sorted(out["event_type"]) == ["click", "purchase", "view"]
+    assert out["degenerate"].astype(bool).all(), out
+    _frames_equal(out, _duck_oracle(name, tmp_path))
+
+
+# ---------------------------------------------------------------------------
+# IVF centroids: e9 quantization in every engine text
+# ---------------------------------------------------------------------------
+
+
+def test_ivf_centroids_keep_e9_quantization():
+    """Centroid averages are rounded to 1e-9 before any distance is
+    formed, so the engines rank against identical centroids whatever
+    their summation order."""
+    from emr_with_custom_metrics_spark.llm import similarity
+
+    def flat(text: str) -> str:
+        return " ".join(text.split())
+
+    assert "F.round(F.col(\"a\") * 1000000000) / 1000000000.0" in flat(
+        inspect.getsource(similarity.label_centroids)
+    )
+    duck_avg = "ROUND(AVG(embedding[i]::DOUBLE) * 1000000000) / 1000000000.0e0 AS c"
+    assert duck_avg in flat(similarity._SQL_IVF_TOPK)
+    assert duck_avg in flat(similarity._ivfpq_head(4))

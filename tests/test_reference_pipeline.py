@@ -9,6 +9,7 @@ import csv
 import glob
 import os
 import tempfile
+from urllib.parse import urlparse
 
 import pytest
 
@@ -19,12 +20,12 @@ from emr_with_custom_metrics_spark.sources.reference_pipeline import (
 )
 
 CATEGORIES = ["Books", "Music", "Video_DVD", "Toys", "Wireless", "Home"]
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-@pytest.fixture(scope="module")
-def reviews_tsv_dir():
-    """Deterministic reviews-shaped TSV (seed-free: modular arithmetic)."""
-    d = tempfile.mkdtemp(prefix="reviews_tsv_")
+def _write_reviews_tsv(d: str, blank_every: int = 0) -> None:
+    """3000 reviews-shaped rows (seed-free: modular arithmetic); with
+    ``blank_every`` > 0, every such row has an empty product_category."""
     cols = [
         "marketplace", "customer_id", "review_id", "product_id",
         "product_parent", "product_title", "product_category", "star_rating",
@@ -39,12 +40,26 @@ def reviews_tsv_dir():
                 [
                     "US", str(10000 + i), f"R{i:07d}", f"B{i % 700:06d}",
                     str(i % 997), f"Product {i % 700}",
-                    CATEGORIES[i % len(CATEGORIES)], str(i % 5 + 1),
+                    "" if blank_every and i % blank_every == 0 else CATEGORIES[i % len(CATEGORIES)],
+                    str(i % 5 + 1),
                     str(i % 17), str(i % 23), "N", "Y" if i % 3 else "N",
                     f"headline {i}", f"body text with tabs escaped {i}",
                     f"2015-0{i % 9 + 1}-15",
                 ]
             )
+
+
+@pytest.fixture(scope="module")
+def reviews_tsv_dir():
+    d = tempfile.mkdtemp(prefix="reviews_tsv_")
+    _write_reviews_tsv(d)
+    return d
+
+
+@pytest.fixture(scope="module")
+def reviews_tsv_with_blanks_dir():
+    d = tempfile.mkdtemp(prefix="reviews_tsv_blanks_")
+    _write_reviews_tsv(d, blank_every=7)
     return d
 
 
@@ -76,7 +91,7 @@ def test_cli_entry_reference_invocation(reviews_tsv_dir):
         capture_output=True,
         text=True,
         timeout=300,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     assert "Books" in r.stdout  # X1: counts shown on stdout
@@ -88,7 +103,7 @@ def test_cli_entry_reference_invocation(reviews_tsv_dir):
         capture_output=True,
         text=True,
         timeout=60,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
     )
     assert r2.returncode == 2 and "usage:" in r2.stderr
 
@@ -110,3 +125,36 @@ def test_convert_writes_ten_parquet_files(spark, reviews_tsv_dir):
     files = glob.glob(f"{out}/part-*.parquet")
     assert len(files) == 10, files  # reference parity: repartition(10) → 10 files
     assert spark.read.parquet(out).count() == 3000
+
+
+@pytest.mark.parametrize("use_aqe_file_sizing", [False, True])
+def test_convert_counts_one_column_of_written_output(
+    spark, reviews_tsv_with_blanks_dir, use_aqe_file_sizing
+):
+    """One TSV scan, nothing pinned: the counts are a lazy group-by over the
+    group column of the written parquet, the null group included, and the
+    session's cache is left as convert found it."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cached_before = cache.numCachedEntries()
+    out = tempfile.mkdtemp(prefix="reviews_out_") + "/parquet"
+    counts = convert(
+        spark, reviews_tsv_with_blanks_dir, out, "product_category",
+        use_aqe_file_sizing=use_aqe_file_sizing,
+    )
+    assert cache.numCachedEntries() == cached_before
+
+    plan = counts._jdf.queryExecution().toString()
+    assert "FileScan parquet" in plan and "ReadSchema: struct<product_category:string>" in plan, plan
+    assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan, plan
+    files = [urlparse(f).path for f in counts.inputFiles()]
+    assert files and all(
+        os.path.dirname(f) == os.path.abspath(out) and f.endswith(".parquet") for f in files
+    ), files
+
+    def as_dict(df):
+        return {r["product_category"]: r["cnt"] for r in df.collect()}
+
+    got = as_dict(counts)
+    want = as_dict(category_counts(read_tsv(spark, reviews_tsv_with_blanks_dir), "product_category"))
+    assert got == want and want[None] == 3000 // 7 + 1, (got, want)
+    assert cache.numCachedEntries() == cached_before

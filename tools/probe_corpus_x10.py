@@ -15,6 +15,7 @@ Writes a markdown table to stdout; run uncontended (pgrep -cx java = 0).
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -57,7 +58,7 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from emr_with_custom_metrics_spark.registry import all_specs
 
     specs = all_specs()
