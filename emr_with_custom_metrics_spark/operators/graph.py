@@ -211,14 +211,12 @@ def pagerank_similarity_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from emr_with_custom_metrics_spark.llm.dedup import embedding_cosine_pairs
 
-    # localCheckpoint: the edge table is referenced by all three join legs —
-    # without it the block-pair GEMM replays once per leg (and once per
-    # union branch: 9 MapInPandas instances in the measured plan). Same
-    # remedy pagerank uses for its per-iteration edge probes.
-    edges = (
-        embedding_cosine_pairs(spark, sf_dir, threshold=0.3)
-        .select("a_id", "b_id")
-        .localCheckpoint(eager=False)
+    # The edge table is referenced by all three join legs. The pair memo
+    # is already an eager checkpoint, so each leg scans its stored rows
+    # and the block-pair GEMM never replays; another checkpoint here
+    # would only copy them.
+    edges = embedding_cosine_pairs(spark, sf_dir, threshold=0.3).select(
+        "a_id", "b_id"
     )
     e1 = edges.alias("e1")
     e2 = edges.alias("e2")

@@ -812,10 +812,15 @@ def stats_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Exact-integer trick: center through d_t = N*c_t - S (N hours, S total
 # events — both integers), so numerator and denominator of every ACF lag are
-# EXACT integer sums (the common N^2 factor cancels in the ratio). Lag pairs
-# come from an equi-join on (series, h + lag), not a 24-expression window —
-# at scale that is a co-partitioned shuffle on the hour key, and the lags
-# table is a 24-row broadcast.
+# EXACT integer sums (the common N^2 factor cancels in the ratio).
+#
+# _ACF_CORE is the DuckDB oracle's form: lag pairs come from an equi-join
+# on (series, h + lag) over the dense spine, an independent reference for
+# the Spark kernel below. Its in-text remark that the density is "loudly
+# guarded" is wrong and stays only because the oracle text is pinned: no
+# ACF row ever applied dense_hourly_x_guarded. dense/d hold series x N
+# rows, where N is the global spine length in hours — calendar-bounded
+# (~720 on the fixture, 8,760 per year) but not budget-checked.
 
 _ACF_CORE = """
     , dense AS (
@@ -859,15 +864,78 @@ _ACF_CORE = """
     FROM num n JOIN den dn ON n.event_type = dn.event_type
 """
 
-_ACF_SPARK = (
-    _SPINE_FROM_COUNTS_SPARK
-    + ", lags AS (SELECT explode(sequence(1, 24)) AS lag)"
-    + _ACF_CORE
-)
 _ACF_DUCK = (
     _SPINE_FROM_COUNTS_DUCK
     + ", lags AS (SELECT UNNEST(generate_series(1, 24)) AS lag)"
     + _ACF_CORE
+)
+
+# The Spark side of the whole ACF family (timeseries_autocorrelation,
+# stats_ljung_box, timeseries_pacf_durbin, timeseries_ar_order_fit): one
+# pass per series, no staged view and no lag self-join. Hour counts
+# shuffle by (series, hour); one aggregate per series packs them into a
+# map with the series' MIN/MAX hour and S; the global spine bounds are a
+# window over those metric-count-sized rows (a second reference to
+# counts would re-scan events). v is the centered series d = N*c - S
+# over the spine, one array of N longs per series; den and each lag's
+# numerator are array folds over it, O(24*N) per series. Lags with
+# N <= lag emit no row, as the join did (Spark's sequence(0, -1) counts
+# DOWN, so the filter is load-bearing). The window also keeps the map
+# a column: directly over the aggregate, CollapseProject would inline
+# map_from_entries(collect_list(...)) into the transform lambda and
+# rebuild the map per element, O(N^2) (SCALING.md, the ACF entry).
+# Defines acf(event_type, lag INT, n_pairs BIGINT, acf_e6 BIGINT); a
+# series' N is n_pairs + lag on any of its rows.
+_ACF_KERNEL_SPARK = """
+    WITH counts AS ({counts}), ser AS (
+        SELECT event_type,
+               map_from_entries(collect_list(struct(h, cnt))) AS m,
+               MIN(h) AS smin, MAX(h) AS smax,
+               CAST(SUM(cnt) AS BIGINT) AS s
+        FROM counts WHERE h IS NOT NULL GROUP BY event_type
+    ), spanned AS (
+        SELECT event_type, m, s,
+               MIN(smin) OVER () AS hmin, MAX(smax) OVER () AS hmax
+        FROM ser
+    ), centered AS (
+        -- a NULL series is in the join form's spine (so in the bounds)
+        -- but never pairs with itself
+        SELECT event_type, hmax - hmin + 1 AS n,
+               transform(sequence(hmin, hmax),
+                         h -> (hmax - hmin + 1)
+                              * COALESCE(m[h], CAST(0 AS BIGINT)) - s) AS v
+        FROM spanned WHERE event_type IS NOT NULL
+    ), lagged AS (
+        SELECT event_type,
+               aggregate(v, CAST(0 AS BIGINT), (a, x) -> a + x * x) AS den,
+               inline(transform(filter(sequence(1, 24), l -> l < n),
+                   l -> named_struct(
+                       'lag', l,
+                       'n_pairs', n - l,
+                       'num', aggregate(sequence(0, CAST(n - 1 - l AS INT)),
+                                        CAST(0 AS BIGINT),
+                                        (a, i) -> a + v[i] * v[i + l]))))
+        FROM centered
+    ), acf AS (
+        SELECT event_type, lag, n_pairs,
+               CAST(ROUND((CAST(num AS DOUBLE) / den) * 1000000) AS BIGINT)
+                   AS acf_e6
+        FROM lagged{where}
+    )
+"""
+
+
+def acf_kernel_spark(positive_den: bool = False) -> str:
+    """The family's WITH-prefix defining ``acf``. ``positive_den`` drops
+    series whose centered variance is 0 (PACF, AR fit); without it such a
+    series raises DIVIDE_BY_ZERO, as the join form did."""
+    return _ACF_KERNEL_SPARK.format(
+        counts=_COUNTS_SPARK, where=" WHERE den > 0" if positive_den else ""
+    )
+
+
+_ACF_SPARK = (
+    acf_kernel_spark() + "    SELECT event_type, lag, n_pairs, acf_e6 FROM acf\n"
 )
 
 
@@ -881,11 +949,12 @@ _ACF_DUCK = (
     "via d = N*c - S keeps both the lag products and the variance "
     "denominator exact integer sums (the N² factor cancels in the "
     "ratio); the single division per (metric, lag) quantizes to 1e-6. "
-    "Lag pairs are an equi-join on (series, h+lag) against a 24-row "
-    "broadcast lags table — no per-lag window scan.",
+    "Spark reads events once and folds each series' centered hourly "
+    "array per lag; the oracle pairs lags by an equi-join on "
+    "(series, h+lag).",
 )
 def timeseries_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _stage_hour_counts(spark, sf_dir)
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_ACF_SPARK)
 
 

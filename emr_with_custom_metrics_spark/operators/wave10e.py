@@ -34,7 +34,6 @@ from emr_with_custom_metrics_spark.catalog import register_views
 from emr_with_custom_metrics_spark.operators.stats import (
     _ACF_DUCK,
     _ACF_SPARK,
-    _stage_hour_counts,
 )
 from emr_with_custom_metrics_spark.registry import register
 
@@ -160,10 +159,10 @@ _LB_TMPL = """
     "engines read identical r_k so the Q epilogue is bit-identical by "
     "construction; n is recovered exactly as n_pairs + lag. The formal "
     "'is there structure' gate in front of the decomposition/forecast "
-    "family. Same staged scan as the ACF.",
+    "family. Same one-pass Spark kernel as the ACF.",
 )
 def stats_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _stage_hour_counts(spark, sf_dir)
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_LB_TMPL.format(acf=_ACF_SPARK))
 
 

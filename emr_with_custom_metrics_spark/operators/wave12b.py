@@ -37,6 +37,7 @@ from emr_with_custom_metrics_spark.operators.stats import (
     _SPINE_FROM_COUNTS_DUCK,
     _SPINE_FROM_COUNTS_SPARK,
     _stage_hour_counts,
+    acf_kernel_spark,
 )
 from emr_with_custom_metrics_spark.registry import register
 
@@ -57,6 +58,9 @@ _PACF_L = 10
 # pacf_1..pacf_L]; phi_kk and every updated phi quantize e9 per round
 # (division is correctly rounded, so identical quantized inputs give
 # identical quantized outputs on both engines). Model-sized end to end.
+# The Spark side reads its acf from stats.acf_kernel_spark (one pass per
+# series); _PACF_ACF_CORE is the DuckDB oracle's join form, shared with
+# the AR fit's oracle.
 
 _PACF_ACF_CORE = """
     , dense AS (
@@ -169,8 +173,6 @@ def _pacf_step_duck(acc: str, k: str) -> str:
 def _pacf_sql(engine: str) -> str:
     L = _PACF_L
     if engine == "spark":
-        prefix = _SPINE_FROM_COUNTS_SPARK
-        lags = ", lags AS (SELECT explode(sequence(1, 24)) AS lag)"
         pack = (
             "SELECT event_type, transform(array_sort(collect_list("
             "struct(lag, acf_e6))), s -> CAST(s.acf_e6 AS DOUBLE)"
@@ -198,7 +200,7 @@ def _pacf_sql(engine: str) -> str:
     FROM folded f
     CROSS JOIN (SELECT explode(sequence(1, {L})) AS lag) l
 """
-        return prefix + lags + _PACF_ACF_CORE + tail
+        return acf_kernel_spark(positive_den=True) + tail
     prefix = _SPINE_FROM_COUNTS_DUCK
     lags = ", lags AS (SELECT UNNEST(generate_series(1, 24)) AS lag)"
     pack = (
@@ -250,7 +252,7 @@ def _pacf_sql(engine: str) -> str:
     "(ACF tails off under AR; PACF cuts off at p).",
 )
 def timeseries_pacf_durbin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _stage_hour_counts(spark, sf_dir)
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_pacf_sql("spark"))
 
 

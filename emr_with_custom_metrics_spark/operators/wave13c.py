@@ -37,6 +37,7 @@ from emr_with_custom_metrics_spark.operators.stats import (
     _SPINE_FROM_COUNTS_DUCK,
     _SPINE_FROM_COUNTS_SPARK,
     _stage_hour_counts,
+    acf_kernel_spark,
 )
 from emr_with_custom_metrics_spark.operators.wave12b import (
     _PACF_ACF_CORE,
@@ -63,13 +64,14 @@ _EPOCH_US_DUCK = "epoch_us(ts)"
 def _arfit_sql(engine: str) -> str:
     L = _PACF_L
     if engine == "spark":
-        prefix = _SPINE_FROM_COUNTS_SPARK
-        lags = ", lags AS (SELECT explode(sequence(1, 24)) AS lag)"
-        pack = (
-            "SELECT event_type, transform(array_sort(collect_list("
+        head = acf_kernel_spark(positive_den=True)
+        # n = n_pairs + lag on every acf row: reading it from a second
+        # relation would reference the kernel twice and re-scan events
+        packed = (
+            "packed AS (SELECT event_type, transform(array_sort(collect_list("
             "struct(lag, acf_e6))), s -> CAST(s.acf_e6 AS DOUBLE)"
-            " / 1000000.0) AS rarr "
-            "FROM acf GROUP BY event_type"
+            " / 1000000.0) AS rarr, CAST(MAX(n_pairs + lag) AS DOUBLE) AS nd "
+            "FROM acf GROUP BY event_type)"
         )
         init = (
             f"concat(array(CAST(1.0 AS DOUBLE)), "
@@ -104,12 +106,22 @@ def _arfit_sql(engine: str) -> str:
         fin = "element_at(g.st2, {i})"
         mat = ""
     else:
-        prefix = _SPINE_FROM_COUNTS_DUCK
-        lags = ", lags AS (SELECT UNNEST(generate_series(1, 24)) AS lag)"
+        head = (
+            _SPINE_FROM_COUNTS_DUCK
+            + ", lags AS (SELECT UNNEST(generate_series(1, 24)) AS lag)"
+            + _PACF_ACF_CORE
+        )
         pack = (
             "SELECT event_type, list(CAST(acf_e6 AS DOUBLE) / 1000000.0 "
             "ORDER BY lag) AS rarr FROM acf GROUP BY event_type"
         )
+        packed = f"""nd AS MATERIALIZED (
+        SELECT event_type, CAST(MAX(n) AS DOUBLE) AS nd FROM tot
+        GROUP BY event_type
+    ), packed AS MATERIALIZED (
+        SELECT /*+ BROADCAST(t) */ a.event_type, a.rarr, t.nd
+        FROM ({pack}) a JOIN nd t ON t.event_type = a.event_type
+    )"""
         init = (
             f"list_concat([1.0], list_transform(generate_series(1, {2 * L}),"
             f" z -> 0.0))"
@@ -155,13 +167,7 @@ def _arfit_sql(engine: str) -> str:
     # surviving lambda is single-capture; rarr/nd/p_ord carry through
     # the CTE chain.
     tail = f"""
-    , nd AS{mat} (
-        SELECT event_type, CAST(MAX(n) AS DOUBLE) AS nd FROM tot
-        GROUP BY event_type
-    ), packed AS{mat} (
-        SELECT /*+ BROADCAST(t) */ a.event_type, a.rarr, t.nd
-        FROM ({pack}) a JOIN nd t ON t.event_type = a.event_type
-    ), folded AS{mat} (
+    , {packed}, folded AS{mat} (
         SELECT p.event_type, p.rarr, p.nd, ({fold1}) AS st
         FROM packed p
     ), sigd AS{mat} (
@@ -183,7 +189,7 @@ def _arfit_sql(engine: str) -> str:
                AS var_ratio_e9
     FROM fitted g
 """
-    return prefix + lags + _PACF_ACF_CORE + tail
+    return head + tail
 
 
 @register(
@@ -203,7 +209,7 @@ def _arfit_sql(engine: str) -> str:
     "the shared hourly count reduction.",
 )
 def timeseries_ar_order_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _stage_hour_counts(spark, sf_dir)
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_arfit_sql("spark"))
 
 

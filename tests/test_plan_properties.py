@@ -707,14 +707,72 @@ def test_theta_sketch_bounds_topk_state(spark):
     assert plan.count("documents.parquet") <= 4, plan[:2000]
 
 
-def test_acf_lag_join_is_not_cartesian(spark):
-    """timeseries_autocorrelation pairs lags via an equi-join on
-    (series, h + lag); only the 24-row lags table may ride a nested-loop
-    broadcast. A CartesianProduct over the density rows would explode at
-    scale."""
-    plan = formatted_plan(SPECS["timeseries_autocorrelation"].fn(spark, SF_DIR))
-    assert "CartesianProduct" not in plan, plan[:2000]
-    assert "BroadcastHashJoin" in plan or "SortMergeJoin" in plan, plan[:2000]
+_JOIN_OPS = (
+    "BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
+    "BroadcastNestedLoopJoin", "CartesianProduct",
+)
+
+
+def _join_sides(tree: str) -> list[list[str]]:
+    """For each join node in a plan tree string, the subtree text of each
+    of its children."""
+    lines = tree.splitlines()
+
+    def col(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    out = []
+    for i, line in enumerate(lines):
+        if not line.lstrip(" :+-").startswith(_JOIN_OPS):
+            continue
+        c, sides = col(line), []
+        for nxt in lines[i + 1:]:
+            if col(nxt) <= c:
+                break
+            if col(nxt) == c + 3:
+                sides.append([])
+            sides[-1].append(nxt)
+        out.append(["\n".join(side) for side in sides])
+    return out
+
+
+def test_acf_family_scans_events_once_without_density_joins(spark):
+    """The ACF family's Spark kernel folds each series' centered hourly
+    array per lag: one events scan, no staged (checkpoint) counts, and no
+    join with the density on both sides — the lag self-join of the dense
+    spine is gone. PACF's read-out may still cross its 10 lags with the
+    one-row-per-series fold."""
+    for name in (
+        "timeseries_autocorrelation", "stats_ljung_box",
+        "timeseries_pacf_durbin", "timeseries_ar_order_fit",
+    ):
+        df = SPECS[name].fn(spark, SF_DIR)
+        tree = df._jdf.queryExecution().executedPlan().toString()
+        assert tree.count("events.parquet") == 1, (name, tree[:3000])
+        assert "ExistingRDD" not in tree, (name, tree[:3000])
+        assert "ReusedExchange" not in tree, (name, tree[:3000])
+        assert "CartesianProduct" not in tree, (name, tree[:3000])
+        for sides in _join_sides(tree):
+            dense = [s for s in sides if "events.parquet" in s]
+            assert len(dense) <= 1, (name, tree[:3000])
+
+
+def test_triangle_count_reads_the_pair_memo_without_recheckpointing(spark, duck):
+    """graph_triangle_count's three join legs scan the cosine pair memo,
+    which embedding_cosine_pairs already checkpoints eagerly: the plan
+    runs no MapInPandas (the GEMM never replays), a repeat call persists
+    no new RDD, and the answer still matches the oracle."""
+    from tests.compare import assert_frames_match
+
+    spec = SPECS["graph_triangle_count"]
+    spec.fn(spark, SF_DIR).count()  # builds the memo
+    persisted = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    df = spec.fn(spark, SF_DIR)
+    assert "MapInPandas" not in formatted_plan(df)
+    assert_frames_match(
+        df.toPandas(), duck.sql(spec.oracle).df(), "graph_triangle_count"
+    )
+    assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == persisted
 
 
 def test_random_projection_broadcasts_signs(spark):
@@ -743,7 +801,7 @@ def test_staged_stats_tails_scan_raw_tables_zero_times(spark):
     otherwise re-ran the scan chain per consumer (measured: 3-4 scans)."""
     staged = [
         "timeseries_seasonal_decompose", "anomaly_seasonal_residual",
-        "timeseries_autocorrelation", "stats_chi2_independence",
+        "stats_chi2_independence",
         "e2e_ab_cuped_ttest", "text_rake_keywords", "text_collocation_llr",
         "events_active_users_rolling",
     ]
