@@ -12,6 +12,8 @@ downstream query regardless of the physical layout behind the path.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +34,8 @@ TABLES: tuple[str, ...] = (
 # Dimension tables small enough to broadcast at any scale factor. At 100 TB
 # the facts (lineitem/orders/events/documents) grow; these stay tiny.
 BROADCAST_TABLES: frozenset[str] = frozenset({"region", "nation", "supplier", "part"})
+
+_T = TypeVar("_T")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -56,23 +60,28 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    if os.environ.get("SPARK_GRAFT_NO_PLAN_MEMO") == "1":
-        return _read_table(spark, sf_dir, name)
-    memo: dict[tuple[str, str], DataFrame] | None = getattr(
-        spark, "_graft_table_plan_memo", None
+    return _memoized(
+        spark, "_graft_table_plan_memo", (sf_dir, name),
+        lambda: _read_table(spark, sf_dir, name),
     )
+
+
+def _memoized(spark: SparkSession, attr: str, key: tuple[str, str], build: Callable[[], _T]) -> _T:
+    """``build()`` memoized in a dict hung on the session object as
+    ``attr``; unmemoized under ``SPARK_GRAFT_NO_PLAN_MEMO=1`` or on a
+    session proxy that refuses new attributes."""
+    if os.environ.get("SPARK_GRAFT_NO_PLAN_MEMO") == "1":
+        return build()
+    memo = getattr(spark, attr, None)
     if memo is None:
         memo = {}
         try:
-            spark._graft_table_plan_memo = memo  # type: ignore[attr-defined]
+            setattr(spark, attr, memo)
         except AttributeError:  # exotic session proxy: skip memoization
-            return _read_table(spark, sf_dir, name)
-    key = (sf_dir, name)
-    df = memo.get(key)
-    if df is None:
-        df = _read_table(spark, sf_dir, name)
-        memo[key] = df
-    return df
+            return build()
+    if key not in memo:
+        memo[key] = build()
+    return memo[key]
 
 
 def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -85,17 +94,27 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def load_fanned(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load + round-robin repartition to cluster parallelism.
+    """Load a table for per-row work that dwarfs its scan (shingling,
+    vector math, Arrow/pandas decode), round-robin repartitioned to
+    ``defaultParallelism`` only when the scan has fewer partitions.
 
-    For operators whose per-row work dwarfs the scan (shingling, vector
-    math, Arrow/pandas decode), a single parquet row-group would otherwise
-    pin the whole stage on one core locally. At 100 TB the input arrives in
-    thousands of splits and this repartition degenerates to a cheap
-    rebalance, so the query shape is scale-correct either way.
+    A round-robin repartition is a full shuffle at any scale and caps the
+    output at ``defaultParallelism`` partitions, so it pays only where it
+    adds parallelism: a local table is one parquet row group, which would
+    pin the stage on one core. A scan at least as wide as the cluster
+    (every table at 100 TB, in thousands of splits) comes back untouched.
+    The partition count is read once per (session, sf_dir, table), like
+    the relation memo of :func:`load_table`. Cheap per-row work (a light
+    Python kernel), or a fan feeding an exchange straight away, should
+    read :func:`load_table` instead.
     """
-    return load_table(spark, sf_dir, name).repartition(
-        spark.sparkContext.defaultParallelism
+    df = load_table(spark, sf_dir, name)
+    n = spark.sparkContext.defaultParallelism
+    width = _memoized(
+        spark, "_graft_scan_width_memo", (sf_dir, name),
+        lambda: df.rdd.getNumPartitions(),
     )
+    return df if width >= n else df.repartition(n)
 
 
 def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:

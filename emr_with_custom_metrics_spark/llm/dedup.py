@@ -65,18 +65,14 @@ def _token_sets(documents: DataFrame) -> DataFrame:
 
 
 def _shingle_sets(documents: DataFrame) -> DataFrame:
-    """Distinct 3-gram shingle HASHES per doc, fanned out across the cluster.
+    """Distinct 3-gram shingle HASHES per doc.
 
     Hashes, not strings: every downstream explode/join/intersect runs on
     fixed-width longs (see text.shingle_hashes — Jaccard is preserved up to
-    negligible 64-bit collision odds). The fan-out repartition matters in
-    two ways: locally, a single parquet row-group otherwise pins the whole
-    explode on one core; at 100 TB it is a no-op shape-wise (inputs already
-    arrive in thousands of splits)."""
-    n = documents.sparkSession.sparkContext.defaultParallelism
-    return documents.repartition(n).select(
-        "doc_id", shingle_hashes(F.col("text")).alias("toks")
-    )
+    negligible 64-bit collision odds). Shingling is heavy per-row JVM work:
+    callers pass a ``load_fanned`` relation so a narrow scan is spread
+    over the cluster first."""
+    return documents.select("doc_id", shingle_hashes(F.col("text")).alias("toks"))
 
 
 # ---------------------------------------------------------------------------
@@ -357,7 +353,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     "oracle: the prefix filter is provably lossless for J ≥ threshold.",
 )
 def dedup_ngram_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _shingle_sets(load_table(spark, sf_dir, "documents"))
+    docs = _shingle_sets(load_fanned(spark, sf_dir, "documents"))
     return jaccard_pairs_prefix(docs, 0.5)
 
 
@@ -470,17 +466,15 @@ _MH_K = NUM_MINHASHES  # 64 slots, banded 32×2 like the production path
 def _md5_shingles(documents: DataFrame) -> DataFrame:
     """(doc_id, s): distinct 3-gram shingle STRINGS per doc — the md5-family
     representation (strings, not xxhash64 longs, because md5-of-string is
-    the one hash both engines share)."""
+    the one hash both engines share). Callers pass a ``load_fanned``
+    relation, as for :func:`_shingle_sets`."""
     w = tokens(F.col("text"))
     grams = F.transform(
         F.sequence(F.lit(0), F.size(w) - 3),
         lambda i: F.concat_ws(" ", F.slice(w, (i + 1).cast("int"), 3)),
     )
-    n = documents.sparkSession.sparkContext.defaultParallelism
-    return (
-        documents.where(F.size(w) >= 3)
-        .repartition(n)
-        .select("doc_id", F.explode(F.array_distinct(grams)).alias("s"))
+    return documents.where(F.size(w) >= 3).select(
+        "doc_id", F.explode(F.array_distinct(grams)).alias("s")
     )
 
 
@@ -580,7 +574,7 @@ def _md5_minhash_bands(sh: DataFrame) -> DataFrame:
     "the pipeline consumers (dedup_corpus, incremental_dedup).",
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
+    d = load_fanned(spark, sf_dir, "documents")
     # Opt r15 (guide §2.4): bands feeds both self-join sides — staged so
     # the signature pipeline (explode + 64-slot partial-MIN) runs once
     # (32 compact rows/doc). The exploded shingle table `sh` is NOT
@@ -631,6 +625,8 @@ def dedup_corpus(documents: DataFrame, jaccard_threshold: float = JACCARD_THRESH
 
     Returns (doc_id, keep BOOLEAN, reason STRING, cluster_rep BIGINT):
     every input doc appears once; `keep` marks the survivor of its cluster.
+    Shingling is heavy per-row work: pass a ``load_fanned`` relation to
+    spread a narrow scan over the cluster.
     """
     bag = F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(tokens(F.col("text"))))))
     keyed = documents.select(
@@ -772,7 +768,7 @@ def incremental_dedup(
     "measured production path and keeps its own tests.",
 )
 def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
+    d = load_fanned(spark, sf_dir, "documents")
     # Opt r15 (guide §2.4): `bands` feeds both the corpus and the batch
     # side of the probe join — un-staged, the shingle -> minhash ->
     # band pipeline ran twice. Stage the 32-compact-rows-per-doc band
@@ -1145,11 +1141,8 @@ def simhash(token_sets: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     "hazards anywhere).",
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    n = d.sparkSession.sparkContext.defaultParallelism
-    tok = (
-        d.repartition(n)
-        .select("doc_id", F.explode(F.array_distinct(tokens(F.col("text")))).alias("t"))
+    tok = load_fanned(spark, sf_dir, "documents").select(
+        "doc_id", F.explode(F.array_distinct(tokens(F.col("text")))).alias("t")
     )
     # ONE aggregation, no explode: 64 static bit-sum expressions over the
     # token rows (bit b of md5 = bit (b%4) of hex nibble b//4), plus the
@@ -1322,7 +1315,7 @@ def shingle_jaccard_pairs_cached(
     if hit is None:
         import time as _time
 
-        docs = _shingle_sets(load_table(spark, sf_dir, "documents"))
+        docs = _shingle_sets(load_fanned(spark, sf_dir, "documents"))
         # eager + timed: the build cost lands in PAIR_MEMO_BUILD_SECS
         # instead of hiding inside whichever consumer acts first
         t0 = _time.perf_counter()
@@ -1342,19 +1335,34 @@ def embedding_cosine_pairs(
     distributed block-pair GEMM described on ``dedup_embedding_cosine`` —
     shared with the similarity-graph operators (triangle counting).
     Memoized per (session, sf_dir, threshold) — see ``_PAIR_CACHE``."""
-    import numpy as np
-
     _note_pair_memo_rider()
     key = (spark.sparkContext.applicationId, sf_dir, "cosine", float(threshold))
     hit = _pair_cache_get(key)
     if hit is not None:
         return hit
 
+    import time as _time
+
+    t0 = _time.perf_counter()
+    out = _cosine_pair_gemm(spark, sf_dir, threshold).localCheckpoint(eager=True)
+    PAIR_MEMO_BUILD_SECS[("cosine", float(threshold))] = (
+        PAIR_MEMO_BUILD_SECS.get(("cosine", float(threshold)), 0.0)
+        + (_time.perf_counter() - t0)
+    )
+    _PAIR_CACHE[key] = out
+    return out
+
+
+def _cosine_pair_gemm(spark: SparkSession, sf_dir: str, threshold: float) -> DataFrame:
+    """The unmemoized block-pair GEMM behind :func:`embedding_cosine_pairs`."""
+    import numpy as np
+
     # Block count: 8 spreads the GEMM across executors at test scale while
     # keeping 36 block-pair tasks; at cluster scale choose P ≈ N·d·8B /
     # (executor-memory budget per block) so each packed block row fits.
     P = 8
-    e = load_fanned(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    # Plain scan, no fan: the block groupBy below is an exchange anyway.
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # One collect_list of (id, vector) structs, not two parallel collect_lists
     # zipped by index: collect_list's element order is documented
     # non-deterministic, so two independent aggregates could legally disagree
@@ -1402,18 +1410,7 @@ def embedding_cosine_pairs(
                     s = np.concatenate([s, sims[r2, c2]])
                 yield pd.DataFrame({"a_id": lo, "b_id": hi, "cos_sim": s})
 
-    import time as _time
-
-    t0 = _time.perf_counter()
-    out = pairs.mapInPandas(
-        kernel, schema="a_id long, b_id long, cos_sim double"
-    ).localCheckpoint(eager=True)
-    PAIR_MEMO_BUILD_SECS[("cosine", float(threshold))] = (
-        PAIR_MEMO_BUILD_SECS.get(("cosine", float(threshold)), 0.0)
-        + (_time.perf_counter() - t0)
-    )
-    _PAIR_CACHE[key] = out
-    return out
+    return pairs.mapInPandas(kernel, schema="a_id long, b_id long, cos_sim double")
 
 
 @register(
@@ -1456,7 +1453,7 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branch (the dedup_ngram_jaccard_prefix finding, ~1.7 s each at
     # sf0.1). Lazy checkpoint: one compact (id, hashes) row per doc,
     # materialized inside the first consumer's job.
-    docs = _shingle_sets(load_table(spark, sf_dir, "documents")).localCheckpoint(
+    docs = _shingle_sets(load_fanned(spark, sf_dir, "documents")).localCheckpoint(
         eager=False
     )
     sizes = docs.select("doc_id", F.size("toks").alias("n"))

@@ -1553,7 +1553,9 @@ def _wav_roundtrip_batch(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.Data
     "stub.",
 )
 def multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_fanned(spark, sf_dir, "documents").select("doc_id")
+    # Plain scan, no fan: the kernel costs microseconds per row, less than
+    # a round-robin shuffle and the extra Python workers it would start.
+    d = load_table(spark, sf_dir, "documents").select("doc_id")
     return d.mapInPandas(_wav_roundtrip_batch, schema=WAV_DECODED_SCHEMA)
 
 

@@ -294,7 +294,8 @@ def test_q22_anti_join_shape(spark):
 
 def test_winnowing_is_shuffle_free(spark):
     # per-document HOF pipeline: the only exchange allowed is the
-    # load_fanned round-robin repartition (scan parallelism), never a
+    # load_fanned round-robin repartition of a scan narrower than the
+    # cluster (a one-split local table; none on a wider scan), never a
     # data-dependent shuffle.
     df = SPECS["text_fingerprint_winnowing"].fn(spark, SF_DIR)
     assert count_exchanges(df) <= 1, formatted_plan(df)[:2000]
