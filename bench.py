@@ -404,15 +404,15 @@ def main() -> None:
     # query, not session startup.
     specs["a1_group_count"].fn(spark, sf_dir).count()
 
-    # Pair-memo builds are eager and self-timed (llm/dedup.
-    # PAIR_MEMO_BUILD_SECS); each timed run subtracts any build that
-    # occurred inside it, so EVERY family row's time excludes pair
-    # generation in EVERY leg — r12 VERDICT item 3: with the build lazily
-    # riding the first family row in leg order, which row paid it
-    # differed per leg and the family's per-row times were not
-    # leg-comparable. The extracted cost gets its own `pair_memo` record
+    # Staged-relation builds (pair sets, Welch pv, ANN index, unigram
+    # vocabulary) are self-timed in plans/stage_memo.BUILD_SECS; each
+    # timed run subtracts any build that occurred inside it, so EVERY
+    # family row's time excludes memo builds in EVERY leg — r12 VERDICT
+    # item 3: with the build lazily riding the first family row in leg
+    # order, which row paid it differed per leg and the family's per-row
+    # times were not leg-comparable. The extracted cost gets its own `pair_memo` record
     # line below instead of vanishing.
-    from emr_with_custom_metrics_spark.llm.dedup import PAIR_MEMO_BUILD_SECS
+    from emr_with_custom_metrics_spark.plans.stage_memo import BUILD_SECS, RIDERS
 
     # Optional subset mode (r15 VERDICT item 4): SPARK_GRAFT_BENCH_QUERIES=
     # "q1,q2,..." times ONLY the named queries (same methodology — noop
@@ -433,12 +433,12 @@ def main() -> None:
         # the recorded figure reflects the query, not the JVM's mood
         best = float("inf")
         for _ in range(2):
-            memo0 = sum(PAIR_MEMO_BUILD_SECS.values())
+            memo0 = sum(BUILD_SECS.values())
             t0 = time.perf_counter()
             df = specs[name].fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             elapsed = time.perf_counter() - t0
-            elapsed -= sum(PAIR_MEMO_BUILD_SECS.values()) - memo0
+            elapsed -= sum(BUILD_SECS.values()) - memo0
             best = min(best, elapsed)
         times[name] = round(best, 3)
 
@@ -473,12 +473,11 @@ def main() -> None:
 
     total = round(sum(times.values()), 3)
     # Pair-memo transparency (r11 item 3 + r12 item 3): riders are
-    # DERIVED from actual calls (the memo entry points record
+    # DERIVED from actual calls (plans/stage_memo.staged records
     # registry.current_query() at plan construction), and the build
     # cost extracted from the timed runs above is reported here as its
     # own line — every row's time now excludes it in every leg, so the
     # per-row regression audit compares like with like.
-    from emr_with_custom_metrics_spark.llm.dedup import PAIR_MEMO_RIDERS
 
     record = {
         "metric": "headline_queries_total_runtime",
@@ -487,15 +486,15 @@ def main() -> None:
         "queries": times,
         "physical": physical,
         "pair_memo": {
-            "note": "per-row times exclude ALL pair-memo build cost "
+            "note": "per-row times exclude ALL staged-memo build cost "
             "(subtracted from the run it occurred in); the builds' "
-            "wall-clock is recorded here per (kind, threshold).",
-            "secs": round(sum(PAIR_MEMO_BUILD_SECS.values()), 3),
+            "wall-clock is recorded here per (kind, threshold or sf).",
+            "secs": round(sum(BUILD_SECS.values()), 3),
             "builds": {
                 f"{k}@{thr}": round(v, 3)
-                for (k, thr), v in sorted(PAIR_MEMO_BUILD_SECS.items())
+                for (k, thr), v in sorted(BUILD_SECS.items())
             },
-            "riders": sorted(r for r in PAIR_MEMO_RIDERS if r in times),
+            "riders": sorted(r for r in RIDERS if r in times),
         },
         "sf": sf,
         "subset": subset or None,
@@ -538,7 +537,7 @@ def main() -> None:
                 "contended": contention["contended"],
                 "idle": idle_gate["idle"],
                 "pair_memo_secs": round(
-                    sum(PAIR_MEMO_BUILD_SECS.values()), 3
+                    sum(BUILD_SECS.values()), 3
                 ),
                 "n_queries": len(times),
                 **({"subset": True} if subset else {}),

@@ -23,9 +23,15 @@ Layout:
                 cooldown suppression, structured-streaming wiring
   llm/        — dedup (exact/minhash/simhash/ngram/embedding), similarity
                 search (brute-force + IVF + LSH), text analysis, multimodal
+  zip_guard   — keeps Spark Python workers from re-reading pyspark.zip on
+                every task (installed on import inside a worker)
 """
 
-from emr_with_custom_metrics_spark.session import get_spark  # noqa: F401
-from emr_with_custom_metrics_spark.registry import QUERIES, ORACLES  # noqa: F401
+from emr_with_custom_metrics_spark import zip_guard
+
+zip_guard.install_in_worker()
+
+from emr_with_custom_metrics_spark.session import get_spark  # noqa: E402, F401
+from emr_with_custom_metrics_spark.registry import QUERIES, ORACLES  # noqa: E402, F401
 
 __version__ = "0.1.0"

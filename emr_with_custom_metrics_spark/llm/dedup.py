@@ -42,7 +42,9 @@ from pyspark.sql import functions as F
 
 from emr_with_custom_metrics_spark.catalog import load_fanned, load_table
 from emr_with_custom_metrics_spark.llm.text import shingle_hashes, tokens
+from emr_with_custom_metrics_spark.plans import stage_memo
 from emr_with_custom_metrics_spark.registry import register
+from emr_with_custom_metrics_spark.zip_guard import install_in_worker
 
 NUM_MINHASHES = 64
 NUM_BANDS = 32  # rows per band r = 64/32 = 2 → recall 1-(1-J²)³² ≈ 0.9999 at J=0.5
@@ -387,6 +389,7 @@ def minhash_signatures(token_sets: DataFrame, k: int = NUM_MINHASHES) -> DataFra
     max_chunk_tokens = 500_000  # (k=64)×500k×8B ≈ 256 MB peak per batch
 
     def kernel(batches):
+        install_in_worker()
         import pandas as pd
 
         def flush(ids, toks):
@@ -1033,6 +1036,7 @@ def simhash(token_sets: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
         avalanche = False
 
     def kernel(batches):
+        install_in_worker()
         import pandas as pd
 
         shifts = np.arange(bits, dtype=np.uint64)
@@ -1257,75 +1261,18 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return embedding_cosine_pairs(spark, sf_dir, threshold=0.4)
 
 
-# Pair-generation memo, keyed by (applicationId, sf_dir, kind, threshold):
-# the cosine>=0.3 GEMM feeds EIGHT graph-family operators and the
-# shingle-Jaccard join feeds pagerank/HITS/clusters/keep-canonical —
-# each was recomputing the identical pair set per query (~7.5 s GEMM at
-# sf0.1, paid 8x in one bench leg). Same policy as llm/unigram's vocab
-# memo: the pair set is a pure deterministic function of (sf_dir,
-# threshold), the cached frame is lazily localCheckpoint-ed (first
-# action materializes; every later consumer reuses the RDD), and
-# correctness is untouched — reuse returns bit-identical rows.
-_PAIR_CACHE: dict[tuple[str, str, str, float], DataFrame] = {}
-
-# Registered queries that consumed the pair memo in THIS process, recorded
-# at plan-construction time via registry.current_query(). bench.py reads
-# this set AFTER its timing loop to emit the memo_riders transparency
-# manifest, so a new consumer appears in the bench record automatically —
-# the manifest is derived from actual calls, never a hand-maintained list
-# (r10 VERDICT #3 / r11 VERDICT #3: the hardcoded literal in bench.py
-# would have silently missed the next _PAIR_CACHE rider).
-# Both are the process-wide stage-memo registries (plans/stage_memo):
-# the pair sets here and wave9c's staged Welch-pv relation share them,
-# so bench.py reads ONE build ledger. The dedup-local names are kept —
-# they are the public API tests and bench.py import.
-#
-# PAIR_MEMO_BUILD_SECS: wall-clock seconds spent MATERIALIZING each
-# memo entry (eager localCheckpoint at build), keyed (kind, threshold),
-# cumulative per process. bench.py snapshots it around each timed run
-# and moves any in-run build cost to its own `pair_memo` line — r12
-# VERDICT item 3: with the build lazily riding whichever family row ran
-# first in leg order, the dedup/graph family's per-row times were not
-# comparable across legs.
-from emr_with_custom_metrics_spark.plans.stage_memo import (  # noqa: E402
-    BUILD_SECS as PAIR_MEMO_BUILD_SECS,
-    RIDERS as PAIR_MEMO_RIDERS,
-    note_rider as _note_pair_memo_rider,
-)
-
-
-def _pair_cache_get(key: tuple[str, str, str, float]) -> DataFrame | None:
-    """Look up a pair set, evicting entries from DEAD sessions first:
-    a driver that restarts SparkContexts would otherwise accumulate
-    DataFrame references bound to stopped contexts (round-9 review)."""
-    app_id = key[0]
-    stale = [k for k in _PAIR_CACHE if k[0] != app_id]
-    for k in stale:
-        del _PAIR_CACHE[k]
-    return _PAIR_CACHE.get(key)
-
-
 def shingle_jaccard_pairs_cached(
     spark: SparkSession, sf_dir: str, threshold: float
 ) -> DataFrame:
-    """Memoized ``jaccard_pairs(_shingle_sets(documents), threshold)``."""
-    _note_pair_memo_rider()
-    key = (spark.sparkContext.applicationId, sf_dir, "jaccard", float(threshold))
-    hit = _pair_cache_get(key)
-    if hit is None:
-        import time as _time
-
-        docs = _shingle_sets(load_fanned(spark, sf_dir, "documents"))
-        # eager + timed: the build cost lands in PAIR_MEMO_BUILD_SECS
-        # instead of hiding inside whichever consumer acts first
-        t0 = _time.perf_counter()
-        hit = jaccard_pairs(docs, threshold).localCheckpoint(eager=True)
-        PAIR_MEMO_BUILD_SECS[("jaccard", float(threshold))] = (
-            PAIR_MEMO_BUILD_SECS.get(("jaccard", float(threshold)), 0.0)
-            + (_time.perf_counter() - t0)
-        )
-        _PAIR_CACHE[key] = hit
-    return hit
+    """Memoized ``jaccard_pairs(_shingle_sets(documents), threshold)``:
+    the pair set feeds pagerank/HITS/clusters/keep-canonical, staged once
+    per (session, sf_dir, threshold) by ``plans/stage_memo.staged``."""
+    return stage_memo.staged(
+        spark, "jaccard", sf_dir, float(threshold),
+        lambda: _pair_memo(jaccard_pairs(
+            _shingle_sets(load_fanned(spark, sf_dir, "documents")), threshold
+        )),
+    )
 
 
 def embedding_cosine_pairs(
@@ -1333,24 +1280,19 @@ def embedding_cosine_pairs(
 ) -> DataFrame:
     """All cosine-similar pairs (a_id < b_id, cos_sim ≥ threshold) via the
     distributed block-pair GEMM described on ``dedup_embedding_cosine`` —
-    shared with the similarity-graph operators (triangle counting).
-    Memoized per (session, sf_dir, threshold) — see ``_PAIR_CACHE``."""
-    _note_pair_memo_rider()
-    key = (spark.sparkContext.applicationId, sf_dir, "cosine", float(threshold))
-    hit = _pair_cache_get(key)
-    if hit is not None:
-        return hit
-
-    import time as _time
-
-    t0 = _time.perf_counter()
-    out = _cosine_pair_gemm(spark, sf_dir, threshold).localCheckpoint(eager=True)
-    PAIR_MEMO_BUILD_SECS[("cosine", float(threshold))] = (
-        PAIR_MEMO_BUILD_SECS.get(("cosine", float(threshold)), 0.0)
-        + (_time.perf_counter() - t0)
+    shared with the similarity-graph operators (triangle counting), staged
+    once per (session, sf_dir, threshold) by ``plans/stage_memo.staged``."""
+    return stage_memo.staged(
+        spark, "cosine", sf_dir, float(threshold),
+        lambda: _pair_memo(_cosine_pair_gemm(spark, sf_dir, threshold)),
     )
-    _PAIR_CACHE[key] = out
-    return out
+
+
+def _pair_memo(pairs: DataFrame) -> DataFrame:
+    """Checkpoint a pair set eagerly and hand the planner its stored
+    size: the graph joins over a pair memo under the broadcast threshold
+    build on it instead of shuffling it."""
+    return stage_memo.broadcast_if_stored_small(pairs.localCheckpoint(eager=True))
 
 
 def _cosine_pair_gemm(spark: SparkSession, sf_dir: str, threshold: float) -> DataFrame:
@@ -1379,6 +1321,7 @@ def _cosine_pair_gemm(spark: SparkSession, sf_dir: str, threshold: float) -> Dat
     )
 
     def kernel(batches):
+        install_in_worker()
         import pandas as pd
 
         def unpack(pack_cell):

@@ -45,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.plans import stage_memo
 from emr_with_custom_metrics_spark.registry import register
 
 _UG_PLEN = 4     # max piece length (chars)
@@ -72,7 +73,7 @@ def _unigram_sql(dialect: str, tail: str) -> str:
     ('train' → final vocabulary, 'score' → per-doc Viterbi log-prob).
     Only the DuckDB dialect is executed as a single statement (DuckDB
     materializes CTEs); the Spark runtime executes the same stages via
-    temp views + localCheckpoints (see ``_ug_spark``) because Spark
+    staged localCheckpoints (see ``_ug_chain``) because Spark
     inlines WITH-clauses and would recompute the chain per reference.
     The spark dialect here is kept for the differential test that pins
     the two formulations equal."""
@@ -226,35 +227,27 @@ _UG_DOC = (
 )
 
 
-# Trained-vocabulary memo, keyed by (applicationId, sf_dir): train and
-# score share the whole EM chain, and the chain's cost on a vanilla
-# session is dominated by CATALYST ANALYSIS of the fold HOF expressions
-# (round-9 VERDICT item 8: the pair cost ~30 s of a 274 s full replay;
-# execution itself is <1 s). A user running both queries trains once —
-# the checkpointed vocab is a materialized-RDD-backed plan, so reuse
-# skips analysis AND execution of the chain. Determinism is unaffected:
-# the chain is a pure function of (sf_dir) and re-runs bit-identically.
-_UG_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def _ug_chain(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """Build (or reuse) the words table + final trained vocabulary.
+    """Build the words table + final trained vocabulary.
 
     Spark executes the SAME per-stage SQL the oracle's CTE chain
     contains, but materializes each round's tiny vocabulary (and the
-    dictionary-sized words table) behind localCheckpoints — Spark
-    INLINES WITH-clauses, so the one-statement form recomputed the whole
-    upstream chain once per reference (measured 6-10 s exec at sf0.01;
-    staged: <1 s). DuckDB materializes CTEs, so the single-statement
-    oracle is already efficient there — one template, two execution
-    policies, identical math."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _UG_CACHE.get(key)
-    if hit is not None:
-        words, v = hit
-        words.createOrReplaceTempView("ug_words")
-        v.createOrReplaceTempView(f"ug_v{_UG_ROUNDS}")
-        return words, v
+    dictionary-sized words table) behind localCheckpoints, each handed
+    to the next stage as a SQL parameter — Spark INLINES WITH-clauses,
+    so the one-statement form recomputed the whole upstream chain once
+    per reference (measured 6-10 s exec at sf0.01; staged: <1 s).
+    DuckDB materializes CTEs, so the single-statement oracle is already
+    efficient there — one template, two execution policies, identical
+    math.
+
+    Train and score share the whole chain through
+    ``plans/stage_memo.staged``: its cost on a vanilla session is
+    dominated by CATALYST ANALYSIS of the fold HOF expressions (round-9
+    VERDICT item 8: the pair cost ~30 s of a 274 s full replay;
+    execution itself is <1 s), and the checkpointed vocab is a
+    materialized-RDD-backed plan, so reuse skips analysis AND execution
+    of the chain. The chain is a pure function of sf_dir and re-runs
+    bit-identically."""
     register_views(spark, sf_dir, ("documents",))
     P, K = _UG_PLEN, _UG_KEEP
     words = spark.sql(
@@ -264,12 +257,11 @@ def _ug_chain(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
         WHERE LENGTH(w) > 0 GROUP BY w
         """
     ).localCheckpoint(eager=False)
-    words.createOrReplaceTempView("ug_words")
-    v = spark.sql(
+    v0 = spark.sql(
         f"""
         WITH cand AS (
           SELECT substr(w, i + 1, l) AS piece, SUM(c) AS cnt
-          FROM ug_words
+          FROM {{words}}
           LATERAL VIEW explode(sequence(0, n - 1)) gi AS i
           LATERAL VIEW explode(sequence(1, {P})) gl AS l
           WHERE i + l <= n
@@ -285,19 +277,20 @@ def _ug_chain(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
                  AS lp,
                cnt
         FROM sel0
-        """
+        """,
+        words=words,
     ).localCheckpoint(eager=False)
     fold_fwd, fold_bwd = _FOLD_FWD, _FOLD_BWD
-    for r in range(_UG_ROUNDS):
-        v.createOrReplaceTempView(f"ug_v{r}")
+    v = v0
+    for _ in range(_UG_ROUNDS):
         v = spark.sql(
             f"""
             WITH vmap AS (
               SELECT map_from_entries(collect_list(struct(piece, lp))) AS vm
-              FROM ug_v{r}),
+              FROM {{v}}),
             fb AS (
               SELECT w, c, n, vm, {fold_fwd} AS fwd, {fold_bwd} AS bwd
-              FROM ug_words, vmap),
+              FROM {{words}}, vmap),
             edges AS (
               SELECT substr(w, i - l + 1, l) AS piece, c
               FROM fb
@@ -315,17 +308,18 @@ def _ug_chain(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
                 ORDER BY cnt DESC, piece LIMIT {K}) t
               UNION ALL
               SELECT s.piece, COALESCE(c2.cnt, 0) AS cnt
-              FROM (SELECT piece FROM ug_v0 WHERE LENGTH(piece) = 1) s
+              FROM (SELECT piece FROM {{v0}} WHERE LENGTH(piece) = 1) s
               LEFT JOIN cnt c2 ON c2.piece = s.piece)
             SELECT piece,
                    (CAST(ROUND((LN((cnt + 1.0) / (SELECT SUM(cnt + 1.0) FROM sel))) * 1000000) AS BIGINT) / CAST(1000000 AS DOUBLE))
                      AS lp,
                    cnt
             FROM sel
-            """
+            """,
+            v=v,
+            words=words,
+            v0=v0,
         ).localCheckpoint(eager=False)
-    v.createOrReplaceTempView(f"ug_v{_UG_ROUNDS}")
-    _UG_CACHE[key] = (words, v)
     return words, v
 
 
@@ -333,26 +327,29 @@ def _ug_spark(spark: SparkSession, sf_dir: str, tail: str) -> DataFrame:
     """Registered entry: reuse (or build) the trained chain, then emit
     the tail deliverable. register_views is (re)applied so the score
     tail's documents scan points at the requested sf_dir even on a
-    vocabulary cache hit."""
+    vocabulary memo hit."""
     register_views(spark, sf_dir, ("documents",))
-    _ug_chain(spark, sf_dir)
+    words, v = stage_memo.staged(
+        spark, "unigram", sf_dir, None, lambda: _ug_chain(spark, sf_dir)
+    )
     if tail == "train":
         return spark.sql(
-            f"""
+            """
             SELECT piece, lp,
                    CAST(ROW_NUMBER() OVER (ORDER BY cnt DESC, piece) AS INT)
                      AS rank
-            FROM ug_v{_UG_ROUNDS}
-            """
+            FROM {v}
+            """,
+            v=v,
         )
     return spark.sql(
         f"""
         WITH vmap AS (
           SELECT map_from_entries(collect_list(struct(piece, lp))) AS vm
-          FROM ug_v{_UG_ROUNDS}),
+          FROM {{v}}),
         wscore AS (
           SELECT w, element_at({_FOLD_FWD}, n + 1) AS s
-          FROM ug_words, vmap),
+          FROM {{words}}, vmap),
         docw AS (
           SELECT doc_id, explode(split(text, " ")) AS w FROM documents)
         SELECT d.doc_id,
@@ -360,7 +357,9 @@ def _ug_spark(spark: SparkSession, sf_dir: str, tail: str) -> DataFrame:
                (CAST(ROUND((SUM(ws.s)) * 10000) AS BIGINT) / CAST(10000 AS DOUBLE)) AS viterbi_logprob
         FROM docw d JOIN wscore ws ON ws.w = d.w
         GROUP BY d.doc_id
-        """
+        """,
+        v=v,
+        words=words,
     )
 
 

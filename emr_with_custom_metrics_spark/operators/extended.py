@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from emr_with_custom_metrics_spark.catalog import load_table, register_views
 from emr_with_custom_metrics_spark.registry import register
+from emr_with_custom_metrics_spark.zip_guard import install_in_worker
 
 
 def _sql(spark: SparkSession, sf_dir: str, query: str, tables: tuple[str, ...]) -> DataFrame:
@@ -360,6 +361,7 @@ def pandas_grouped_agg_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFra
     @pandas_udf("double")
     def weighted_avg(v: pd.Series, w: pd.Series) -> float:
         # Series → scalar signature marks this as a GROUPED_AGG pandas UDF
+        install_in_worker()
         return float((v * w).sum() / w.sum())
 
     ev = load_table(spark, sf_dir, "events").where(F.col("user_id") > 0)
@@ -380,7 +382,11 @@ def pandas_grouped_agg_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFra
     "Arrow-batched pandas.",
 )
 def python_udf_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rev = F.udf(lambda k: str(k)[::-1], "string")
+    def reverse_key(k):
+        install_in_worker()
+        return str(k)[::-1]
+
+    rev = F.udf(reverse_key, "string")
     c = load_table(spark, sf_dir, "customer").where(F.col("c_custkey") <= 200)
     return c.select("c_custkey", rev("c_custkey").alias("key_reversed"))
 
@@ -596,6 +602,7 @@ def udtf_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     @udtf(returnType="pos int, bigram string")
     class BigramGen:
         def eval(self, text: str):
+            install_in_worker()
             toks = (text or "").split()
             for i in range(len(toks) - 1):
                 yield (i, f"{toks[i]} {toks[i + 1]}")
@@ -949,6 +956,7 @@ def mapinarrow_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def stats(batches):
+        install_in_worker()
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -1003,6 +1011,7 @@ def udtf_dynamic_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
             return AnalyzeResult(st)
 
         def eval(self, text: str, k: int):
+            install_in_worker()
             toks = (text or "").split(" ")
             yield tuple(toks[i] if i < len(toks) else None for i in range(k))
 

@@ -104,15 +104,9 @@ def _fisher_sql(engine: str) -> str:
     "all' scalar above the per-metric readouts.",
 )
 def stats_fisher_combined(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from emr_with_custom_metrics_spark.operators.wave9c import (
-        PV_PREFIX_STAGED,
-        stage_welch_pv,
-    )
+    from emr_with_custom_metrics_spark.operators.wave9c import welch_pv_sql
 
-    stage_welch_pv(spark, sf_dir)
-    return spark.sql(
-        PV_PREFIX_STAGED + _fisher_sql("spark")[len(_PV_PREFIX):]
-    )
+    return welch_pv_sql(spark, sf_dir, _fisher_sql("spark")[len(_PV_PREFIX):])
 
 
 # ---------------------------------------------------------------------------
@@ -173,13 +167,9 @@ _BY_SQL = (
     "reject/accept decision. The dependence-robust sibling of BH.",
 )
 def stats_benjamini_yekutieli(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from emr_with_custom_metrics_spark.operators.wave9c import (
-        PV_PREFIX_STAGED,
-        stage_welch_pv,
-    )
+    from emr_with_custom_metrics_spark.operators.wave9c import welch_pv_sql
 
-    stage_welch_pv(spark, sf_dir)
-    return spark.sql(PV_PREFIX_STAGED + _BY_SQL[len(_PV_PREFIX):])
+    return welch_pv_sql(spark, sf_dir, _BY_SQL[len(_PV_PREFIX):])
 
 
 # ---------------------------------------------------------------------------

@@ -627,13 +627,9 @@ _HOLM_SQL = (
     "windows so the p-value pipeline runs ONCE.",
 )
 def stats_holm_bonferroni(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from emr_with_custom_metrics_spark.operators.wave9c import (
-        PV_PREFIX_STAGED,
-        stage_welch_pv,
-    )
+    from emr_with_custom_metrics_spark.operators.wave9c import welch_pv_sql
 
-    stage_welch_pv(spark, sf_dir)
-    return spark.sql(PV_PREFIX_STAGED + _HOLM_SQL[len(_PV_PREFIX):])
+    return welch_pv_sql(spark, sf_dir, _HOLM_SQL[len(_PV_PREFIX):])
 
 
 # ---------------------------------------------------------------------------

@@ -574,13 +574,9 @@ _STOREY_SQL = (
     "the documented lambda = 0.5 boundary, not an error.",
 )
 def stats_storey_qvalue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from emr_with_custom_metrics_spark.operators.wave9c import (
-        PV_PREFIX_STAGED,
-        stage_welch_pv,
-    )
+    from emr_with_custom_metrics_spark.operators.wave9c import welch_pv_sql
 
-    stage_welch_pv(spark, sf_dir)
-    return spark.sql(PV_PREFIX_STAGED + _STOREY_SQL[len(_PV_PREFIX):])
+    return welch_pv_sql(spark, sf_dir, _STOREY_SQL[len(_PV_PREFIX):])
 
 
 # ---------------------------------------------------------------------------

@@ -92,18 +92,15 @@ def _tradeoff_oracle() -> str:
     return " UNION ALL ".join(arms) + "\n    ORDER BY nprobe"
 
 
-_ANN_INDEX_CACHE: dict[tuple[str, str], tuple] = {}
-
-
-def _staged_ann_index(spark: SparkSession, sf_dir: str) -> tuple:
-    """The IVF-PQ INDEX as a session-staged relation set (the welch-pv
-    staging policy, plans/stage_memo): exact top-k ids, quantized
+def _build_ann_index(spark: SparkSession, sf_dir: str) -> tuple:
+    """The IVF-PQ INDEX as a relation set: exact top-k ids, quantized
     centroids, codebooks, corpus-wide PQ codes + labels, the query ADC
     table, and per-vector exact query cosines — all pure deterministic
-    functions of sf_dir, built eagerly at most once per (session,
-    sf_dir). At 100 TB this is the STORED index (codes are computed at
-    index time, not per query); here it also keeps the sweep's bench
-    cost index-build-once instead of four pipelines deep."""
+    functions of sf_dir, staged eagerly at most once per (session,
+    sf_dir) by plans/stage_memo.staged. At 100 TB this is the STORED
+    index (codes are computed at index time, not per query); here it
+    also keeps the sweep's bench cost index-build-once instead of four
+    pipelines deep."""
     from emr_with_custom_metrics_spark.catalog import load_fanned
     from emr_with_custom_metrics_spark.functions.vector import cosine
     from emr_with_custom_metrics_spark.llm.similarity import (
@@ -114,85 +111,68 @@ def _staged_ann_index(spark: SparkSession, sf_dir: str) -> tuple:
         similarity_topk_exact,
         QUERY_VEC_ID,
     )
-    from emr_with_custom_metrics_spark.plans import stage_memo
 
-    stage_memo.note_rider()
-    key = (spark.sparkContext.applicationId, sf_dir)
-    stale = [k for k in _ANN_INDEX_CACHE if k[0] != key[0]]
-    for k in stale:
-        del _ANN_INDEX_CACHE[k]
-    hit = _ANN_INDEX_CACHE.get(key)
-    if hit is not None:
-        return hit
-    try:
-        sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
-    except ValueError:
-        sf = 0.0
-    with stage_memo.timed_build("ann_index", sf):
-        e = load_fanned(spark, sf_dir, "embeddings")
-        q = e.where(F.col("vec_id") == QUERY_VEC_ID).select(
-            F.col("embedding").alias("qv")
-        )
-        exact_ids = similarity_topk_exact(spark, sf_dir).select(
-            "vec_id"
-        ).localCheckpoint(eager=True)
-        n_other_val = e.count() - 1
-        # Opt r16: centroids and codebooks derive from ONE shared
-        # component-average pass (llm.similarity.pos_avgs) — identical
-        # deterministic values, one posexplode instead of two (guide §2.4).
-        from emr_with_custom_metrics_spark.llm.similarity import pos_avgs
+    e = load_fanned(spark, sf_dir, "embeddings")
+    q = e.where(F.col("vec_id") == QUERY_VEC_ID).select(
+        F.col("embedding").alias("qv")
+    )
+    exact_ids = similarity_topk_exact(spark, sf_dir).select(
+        "vec_id"
+    ).localCheckpoint(eager=True)
+    n_other_val = e.count() - 1
+    # Opt r16: centroids and codebooks derive from ONE shared
+    # component-average pass (llm.similarity.pos_avgs) — identical
+    # deterministic values, one posexplode instead of two (guide §2.4).
+    from emr_with_custom_metrics_spark.llm.similarity import pos_avgs
 
-        avgs = pos_avgs(e).localCheckpoint(eager=False)
-        cents = label_centroids(e, avgs).localCheckpoint(eager=True)
-        cb = pq_codebooks(e, avgs).localCheckpoint(eager=True)
-        vec_slices = _sub_slices(
-            e.where(F.col("vec_id") != QUERY_VEC_ID).select(
-                "vec_id", "embedding"
-            ),
-            "embedding",
-        )
-        codes = (
-            vec_slices.join(F.broadcast(cb), "m")
-            .select(
-                "vec_id",
-                "m",
-                F.struct(
-                    _l2sq(F.col("sub"), F.col("cv")).alias("d2"),
-                    F.col("label").alias("cl"),
-                ).alias("dc"),
-            )
-            .groupBy("vec_id", "m")
-            .agg(F.min("dc").alias("bestc"))
-            .select("vec_id", "m", F.col("bestc.cl").alias("cl"))
-            .join(
-                e.select("vec_id", F.col("label").alias("vlabel")),
-                "vec_id",
-            )
-            .localCheckpoint(eager=True)
-        )
-        adc = (
-            _sub_slices(q, "qv")
-            .join(F.broadcast(cb), "m")
-            .select(
-                "m",
-                F.col("label").alias("cl"),
-                _l2sq(F.col("sub"), F.col("cv")).alias("d2"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        qcos = e.where(F.col("vec_id") != QUERY_VEC_ID).crossJoin(
-            F.broadcast(q)
-        ).select(
+    avgs = pos_avgs(e).localCheckpoint(eager=False)
+    cents = label_centroids(e, avgs).localCheckpoint(eager=True)
+    cb = pq_codebooks(e, avgs).localCheckpoint(eager=True)
+    vec_slices = _sub_slices(
+        e.where(F.col("vec_id") != QUERY_VEC_ID).select(
+            "vec_id", "embedding"
+        ),
+        "embedding",
+    )
+    codes = (
+        vec_slices.join(F.broadcast(cb), "m")
+        .select(
             "vec_id",
-            "label",
-            F.round(cosine(F.col("embedding"), F.col("qv")) * 1000000)
-            .cast("bigint")
-            .alias("cos_sim_e6"),
-        ).localCheckpoint(eager=True)
-        hit = (exact_ids, n_other_val, cents, cb, codes, adc, qcos, q)
-    _ANN_INDEX_CACHE[key] = hit
-    return hit
-
+            "m",
+            F.struct(
+                _l2sq(F.col("sub"), F.col("cv")).alias("d2"),
+                F.col("label").alias("cl"),
+            ).alias("dc"),
+        )
+        .groupBy("vec_id", "m")
+        .agg(F.min("dc").alias("bestc"))
+        .select("vec_id", "m", F.col("bestc.cl").alias("cl"))
+        .join(
+            e.select("vec_id", F.col("label").alias("vlabel")),
+            "vec_id",
+        )
+        .localCheckpoint(eager=True)
+    )
+    adc = (
+        _sub_slices(q, "qv")
+        .join(F.broadcast(cb), "m")
+        .select(
+            "m",
+            F.col("label").alias("cl"),
+            _l2sq(F.col("sub"), F.col("cv")).alias("d2"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    qcos = e.where(F.col("vec_id") != QUERY_VEC_ID).crossJoin(
+        F.broadcast(q)
+    ).select(
+        "vec_id",
+        "label",
+        F.round(cosine(F.col("embedding"), F.col("qv")) * 1000000)
+        .cast("bigint")
+        .alias("cos_sim_e6"),
+    ).localCheckpoint(eager=True)
+    return (exact_ids, n_other_val, cents, cb, codes, adc, qcos, q)
 
 
 @register(
@@ -224,8 +204,10 @@ def similarity_ivfpq_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from emr_with_custom_metrics_spark.functions.vector import cosine
 
-    (exact_ids, n_other_val, cents, cb, codes, adc, qcos, q) = (
-        _staged_ann_index(spark, sf_dir)
+    from emr_with_custom_metrics_spark.plans import stage_memo
+
+    (exact_ids, n_other_val, cents, cb, codes, adc, qcos, q) = stage_memo.staged(
+        spark, "ann_index", sf_dir, None, lambda: _build_ann_index(spark, sf_dir)
     )
 
     arms = []

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
 from emr_with_custom_metrics_spark.operators.stats import _ARM
+from emr_with_custom_metrics_spark.plans import stage_memo
 from emr_with_custom_metrics_spark.registry import register
 
 
@@ -103,11 +104,10 @@ _FDR_SQL = f"""
 # _ARM md5 — the linear-CPU stage the r12 decade probe measured at 8x
 # on stats_storey_qvalue. The pv relation is MODEL-sized (one row per
 # metric) and a pure deterministic function of sf_dir, so the Spark
-# runtimes consume it from a memoized eager localCheckpoint staged
-# once per (session, sf_dir) — the llm/dedup._PAIR_CACHE policy, same
-# shared build ledger (plans/stage_memo, reported by bench.py's
-# pair_memo line). Oracles keep the full inline text; the staged and
-# inline forms are proven frame-identical in
+# runtimes consume it from an eager localCheckpoint staged once per
+# (session, sf_dir) by plans/stage_memo.staged and handed to their SQL
+# as the ``pv`` parameter. Oracles keep the full inline text; the
+# staged and inline forms are proven frame-identical in
 # tests/test_advice_r13.py::test_welch_pv_staged_equals_inline.
 
 _PV_ONLY_SQL = (
@@ -115,37 +115,28 @@ _PV_ONLY_SQL = (
     + "\n    SELECT event_type, abs_z_e6, p_e9 FROM pv"
 )
 # Drop-in WITH-head replacement for the base..pv prefix in consumers'
-# Spark texts: same CTE name, same three columns.
+# Spark texts: same CTE name, same three columns, read from the staged
+# frame bound to ``{pv}`` (see :func:`welch_pv_sql`).
 PV_PREFIX_STAGED = (
-    "\n    WITH pv AS (SELECT event_type, abs_z_e6, p_e9 FROM st_welch_pv)"
+    "\n    WITH pv AS (SELECT event_type, abs_z_e6, p_e9 FROM {pv})"
 )
 
-_PV_STAGE_CACHE: dict[tuple[str, str], "DataFrame"] = {}
 
+def stage_welch_pv(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The staged Welch-pv relation for ``sf_dir`` (event_type, abs_z_e6,
+    p_e9), built at most once per (session, sf_dir)."""
 
-def stage_welch_pv(spark: SparkSession, sf_dir: str) -> None:
-    """Create/refresh the ``st_welch_pv`` temp view for ``sf_dir``,
-    building it at most once per (session, sf_dir)."""
-    from emr_with_custom_metrics_spark.plans import stage_memo
-
-    stage_memo.note_rider()
-    key = (spark.sparkContext.applicationId, sf_dir)
-    stale = [k for k in _PV_STAGE_CACHE if k[0] != key[0]]
-    for k in stale:
-        del _PV_STAGE_CACHE[k]
-    hit = _PV_STAGE_CACHE.get(key)
-    if hit is None:
+    def build() -> DataFrame:
         register_views(spark, sf_dir, ("events",))
-        try:  # fixture dirs (tests) carry no sfN suffix — ledger key 0
-            sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
-        except ValueError:
-            sf = 0.0
-        with stage_memo.timed_build("welch_pv", sf):
-            hit = spark.sql(_PV_ONLY_SQL).localCheckpoint(eager=True)
-        _PV_STAGE_CACHE[key] = hit
-    # re-point the view: a prior stage for a DIFFERENT sf_dir in the
-    # same session (tests sweep SFs) must not leak into this query
-    hit.createOrReplaceTempView("st_welch_pv")
+        return spark.sql(_PV_ONLY_SQL).localCheckpoint(eager=True)
+
+    return stage_memo.staged(spark, "welch_pv", sf_dir, None, build)
+
+
+def welch_pv_sql(spark: SparkSession, sf_dir: str, tail: str) -> DataFrame:
+    """Run ``PV_PREFIX_STAGED + tail`` over the staged pv relation, where
+    ``tail`` is a consumer's text after its ``_PV_PREFIX``."""
+    return spark.sql(PV_PREFIX_STAGED + tail, pv=stage_welch_pv(spark, sf_dir))
 
 
 @register(
@@ -163,9 +154,8 @@ def stage_welch_pv(spark: SparkSession, sf_dir: str) -> None:
     "epilogue over the staged shared pv relation (stage_welch_pv).",
 )
 def stats_fdr_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stage_welch_pv(spark, sf_dir)
-    return spark.sql(
-        PV_PREFIX_STAGED + ", ranked AS" + _FDR_SQL.split(", ranked AS", 1)[1]
+    return welch_pv_sql(
+        spark, sf_dir, ", ranked AS" + _FDR_SQL.split(", ranked AS", 1)[1]
     )
 
 

@@ -60,7 +60,7 @@ _PERF_CONF_SAVED: dict[str, str] = {}
 
 # Name of the registered query currently executing (plan construction
 # included), maintained as a stack by the _pin_utc wrapper. Shared
-# resources (llm/dedup's pair memo) read it to record which registered
+# resources (plans/stage_memo.staged) read it to record which registered
 # queries consume them, so bench.py's transparency manifest is DERIVED
 # from actual calls instead of a hand-maintained list (r10/r11 VERDICT:
 # the hardcoded literal would silently miss the next memo rider).

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from emr_with_custom_metrics_spark.catalog import load_table, register_views
 from emr_with_custom_metrics_spark.registry import register
+from emr_with_custom_metrics_spark.zip_guard import install_in_worker
 
 SCALE_OUT_THRESHOLD = 25.0  # avg <= 25 → scale out (+5) — instance-group-config.json:49
 SCALE_IN_THRESHOLD = 75.0  # avg > 75 → scale in (−2) — instance-group-config.json:78
@@ -275,6 +276,7 @@ def autoscale_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def simulate(pdf: pd.DataFrame) -> pd.DataFrame:
+        install_in_worker()
         pdf = pdf.sort_values(["bucket_start", "rule"])
         size = INITIAL_CAPACITY
         last = {"scale-out": -(10**9), "scale-in": -(10**9)}
@@ -414,6 +416,7 @@ def cooldown_suppression(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def suppress(pdf: pd.DataFrame) -> pd.DataFrame:
+        install_in_worker()
         pdf = pdf.sort_values("bucket_start")
         fired, last_fire = [], None
         for t in pdf["bucket_start"]:

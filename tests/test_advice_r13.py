@@ -262,7 +262,7 @@ def test_wave13c_docstring_matches_registry():
 
 def test_welch_pv_staged_equals_inline(spark):
     """The five multiple-testing Spark runtimes now consume the memoized
-    st_welch_pv staged view; each must produce exactly the rows of its
+    staged Welch-pv relation; each must produce exactly the rows of its
     original single-statement text (which the oracles still run)."""
     import importlib
 
@@ -296,17 +296,14 @@ def test_welch_pv_staged_equals_inline(spark):
 
 
 def test_welch_pv_stage_is_memoized_and_timed(spark):
-    from emr_with_custom_metrics_spark.operators.wave9c import (
-        _PV_STAGE_CACHE,
-        stage_welch_pv,
-    )
+    from emr_with_custom_metrics_spark.operators.wave9c import stage_welch_pv
     from emr_with_custom_metrics_spark.plans.stage_memo import BUILD_SECS
 
-    _PV_STAGE_CACHE.clear()
+    fresh = spark.newSession()  # a new session starts with an empty memo
     sf = ("welch_pv", 0.001)
     before = BUILD_SECS.get(sf, 0.0)
-    stage_welch_pv(spark, "/root/testdata/sf0.001")
+    stage_welch_pv(fresh, "/root/testdata/sf0.001")
     assert BUILD_SECS.get(sf, 0.0) > before
     mid = BUILD_SECS[sf]
-    stage_welch_pv(spark, "/root/testdata/sf0.001")  # cache hit
+    stage_welch_pv(fresh, "/root/testdata/sf0.001")  # memo hit
     assert BUILD_SECS[sf] == mid

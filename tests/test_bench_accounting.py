@@ -1,7 +1,7 @@
 """Round-13 bench-accounting pins (r12 VERDICT items 3 and 6).
 
 * The pair-memo build is eager + self-timed: building a memo entry
-  lands its wall-clock in PAIR_MEMO_BUILD_SECS, the source bench.py
+  lands its wall-clock in stage_memo.BUILD_SECS, the source bench.py
   subtracts from the run it occurred in and reports as its own
   `pair_memo` record line.
 * The idle gate refuses a leg (exit 3, before any Spark startup) when
@@ -20,25 +20,23 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_pair_memo_build_is_timed(spark):
-    from emr_with_custom_metrics_spark.llm.dedup import (
-        PAIR_MEMO_BUILD_SECS,
-        shingle_jaccard_pairs_cached,
-    )
+    from emr_with_custom_metrics_spark.llm.dedup import shingle_jaccard_pairs_cached
+    from emr_with_custom_metrics_spark.plans.stage_memo import BUILD_SECS
 
     # a threshold no registered query uses -> guaranteed fresh build
     thr = 0.731
     key = ("jaccard", thr)
-    PAIR_MEMO_BUILD_SECS.pop(key, None)
+    BUILD_SECS.pop(key, None)
     df = shingle_jaccard_pairs_cached(spark, "/root/testdata/sf0.001", thr)
-    assert key in PAIR_MEMO_BUILD_SECS
-    assert PAIR_MEMO_BUILD_SECS[key] > 0.0
+    assert key in BUILD_SECS
+    assert BUILD_SECS[key] > 0.0
     # eager build: consuming the frame must not re-enter the build path
-    before = PAIR_MEMO_BUILD_SECS[key]
+    before = BUILD_SECS[key]
     df.count()
-    assert PAIR_MEMO_BUILD_SECS[key] == before
+    assert BUILD_SECS[key] == before
     # second call is a cache hit — no additional build time
     shingle_jaccard_pairs_cached(spark, "/root/testdata/sf0.001", thr)
-    assert PAIR_MEMO_BUILD_SECS[key] == before
+    assert BUILD_SECS[key] == before
 
 
 def test_idle_gate_refuses_loaded_leg():

@@ -15,7 +15,7 @@ def test_cosine_memo_hits_same_key(spark):
 
     a = embedding_cosine_pairs(spark, SF_SMOKE_DIR, threshold=0.3)
     b = embedding_cosine_pairs(spark, SF_SMOKE_DIR, threshold=0.3)
-    assert a is b  # cache hit returns the SAME checkpointed frame
+    assert a is b  # memo hit returns the SAME checkpointed frame
 
 
 def test_cosine_memo_misses_across_threshold_and_sf(spark):
@@ -35,23 +35,21 @@ def test_cosine_memo_misses_across_threshold_and_sf(spark):
 
 def test_rider_manifest_derived_from_calls(spark):
     """bench.py's memo_riders manifest is DERIVED: registering a brand-new
-    query that consumes the pair memo lands it in PAIR_MEMO_RIDERS the
+    query that consumes the pair memo lands it in RIDERS the
     moment it runs, with bench.py untouched (r11 VERDICT item 3 done
     criterion). Direct helper calls outside a registered query must NOT
     pollute the manifest."""
     from emr_with_custom_metrics_spark import registry
-    from emr_with_custom_metrics_spark.llm.dedup import (
-        PAIR_MEMO_RIDERS,
-        shingle_jaccard_pairs_cached,
-    )
+    from emr_with_custom_metrics_spark.llm.dedup import shingle_jaccard_pairs_cached
+    from emr_with_custom_metrics_spark.plans.stage_memo import RIDERS
 
     name = "synthetic_rider_for_manifest_test"
-    assert name not in PAIR_MEMO_RIDERS
+    assert name not in RIDERS
 
     # Outside any registered query: current_query() is None -> no entry.
-    before = set(PAIR_MEMO_RIDERS)
+    before = set(RIDERS)
     shingle_jaccard_pairs_cached(spark, SF_SMOKE_DIR, 0.5)
-    assert set(PAIR_MEMO_RIDERS) == before
+    assert set(RIDERS) == before
 
     @registry.register(name, oracle="SELECT 1 AS one")
     def _synthetic(sp, sf_dir):
@@ -59,21 +57,21 @@ def test_rider_manifest_derived_from_calls(spark):
 
     try:
         registry.all_specs()[name].fn(spark, SF_SMOKE_DIR).count()
-        assert name in PAIR_MEMO_RIDERS
+        assert name in RIDERS
     finally:
         registry._REGISTRY.pop(name, None)
-        PAIR_MEMO_RIDERS.discard(name)
+        RIDERS.discard(name)
 
 
 def test_known_riders_recorded_when_run(spark):
     """A real registered consumer (dedup_clusters rides the jaccard memo)
     shows up after one run — the derived set matches what the old
     hardcoded bench list claimed for it."""
-    from emr_with_custom_metrics_spark.llm.dedup import PAIR_MEMO_RIDERS
+    from emr_with_custom_metrics_spark.plans.stage_memo import RIDERS
     from emr_with_custom_metrics_spark.registry import all_specs
 
     all_specs()["dedup_clusters"].fn(spark, SF_SMOKE_DIR).count()
-    assert "dedup_clusters" in PAIR_MEMO_RIDERS
+    assert "dedup_clusters" in RIDERS
 
 
 def test_jaccard_memo_rows_match_uncached(spark):

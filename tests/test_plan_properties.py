@@ -182,7 +182,7 @@ def test_no_driver_side_collect_in_query_modules():
             # multiple-testing queries share the base..pv prefix and
             # each was re-scanning events + the per-row _ARM md5; the
             # model-sized pv is checkpointed once per (session, sf_dir)
-            # behind st_welch_pv, build time in plans/stage_memo
+            # by plans/stage_memo.staged
             "operators/wave9c.py",
             # TextRank stages tok/vocab/edges/wdeg (the 5-iteration
             # chain re-references each per round); skyline stages the

@@ -49,7 +49,7 @@ def main() -> None:
     # warm footers + JVM like bench.py
     specs["a1_group_count"].fn(spark, sf_dir).count()
 
-    from emr_with_custom_metrics_spark.llm.dedup import PAIR_MEMO_BUILD_SECS
+    from emr_with_custom_metrics_spark.plans.stage_memo import BUILD_SECS
 
     out: dict[str, float] = {}
     for name in names:
@@ -58,12 +58,12 @@ def main() -> None:
             continue
         best = float("inf")
         for _ in range(args.runs):
-            memo0 = sum(PAIR_MEMO_BUILD_SECS.values())
+            memo0 = sum(BUILD_SECS.values())
             t0 = time.perf_counter()
             df = specs[name].fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             elapsed = time.perf_counter() - t0
-            elapsed -= sum(PAIR_MEMO_BUILD_SECS.values()) - memo0
+            elapsed -= sum(BUILD_SECS.values()) - memo0
             best = min(best, elapsed)
         out[name] = round(best, 3)
         print(f"{best:8.3f}  {name}", flush=True)
