@@ -109,26 +109,45 @@ def staged(
     return slot.value
 
 
+def stored_bytes(df: DataFrame) -> int | None:
+    """Bytes one copy of ``df``'s checkpointed RDD occupies in the block
+    managers, or None when some partition is not stored.
+
+    The figure comes from the block manager master, which every task
+    reports its stored blocks to before it ends, so once an eager
+    checkpoint has returned, all of its blocks are counted. (Spark's
+    ``getRDDStorageInfo`` reads the UI status store instead, which the
+    listener bus fills after the job, so its answer depends on how far
+    that thread has got.) One RPC per partition; no job.
+    """
+    jvm = df.sparkSession._jvm
+    rdd = df._jdf.queryExecution().analyzed().rdd()
+    master = df.sparkSession.sparkContext._jsc.sc().env().blockManager().master()
+    total = 0
+    for i in range(rdd.getNumPartitions()):
+        block = jvm.org.apache.spark.storage.RDDBlockId(rdd.id(), i)
+        holders = master.getBlockStatus(block, False).values().iterator()
+        copy = None
+        while holders.hasNext():
+            s = holders.next()
+            copy = max(copy or 0, s.memSize() + s.diskSize())
+        if copy is None:
+            return None
+        total += copy
+    return total
+
+
 def broadcast_if_stored_small(df: DataFrame) -> DataFrame:
     """``df`` (an eager localCheckpoint) under ``F.broadcast`` when its
-    STORED size is at most ``spark.sql.autoBroadcastJoinThreshold``.
+    :func:`stored_bytes` are at most ``spark.sql.autoBroadcastJoinThreshold``.
 
     A checkpointed frame is a ``LogicalRDD`` that reports the size
     estimate of the plan it came from, which for a thresholded pair join
     can be five orders of magnitude above the rows it kept; the block
-    manager's figure (``getRDDStorageInfo``) is the real one and costs no
-    job. A hinted side always becomes the build side, so only relations
-    that are joined as the smaller side should come through here.
+    manager's figure is the real one and costs no job. A hinted side
+    always becomes the build side, so only relations that are joined as
+    the smaller side should come through here.
     """
-    spark = df.sparkSession
-    rid = df._jdf.queryExecution().analyzed().rdd().id()
-    stored = next(
-        (
-            i.memSize() + i.diskSize()
-            for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-            if i.id() == rid
-        ),
-        None,
-    )
-    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    stored = stored_bytes(df)
+    limit = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
     return F.broadcast(df) if stored is not None and stored <= limit else df

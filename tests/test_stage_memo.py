@@ -163,6 +163,24 @@ def test_triangle_plan_broadcasts_the_small_pair_memo(spark):
     assert "BroadcastHashJoin" in plan
 
 
+def test_stored_bytes_is_the_stored_size_and_none_before_storage(spark):
+    from emr_with_custom_metrics_spark.plans import stage_memo
+
+    df = spark.range(0, 5000, numPartitions=3).selectExpr("id", "id * 2 AS b")
+    lazy = df.localCheckpoint(eager=False)
+    # nothing stored yet: no figure, so no hint
+    assert stage_memo.stored_bytes(lazy) is None
+    assert stage_memo.broadcast_if_stored_small(lazy) is lazy
+
+    eager = df.localCheckpoint(eager=True)
+    got = stage_memo.stored_bytes(eager)
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    rid = eager._jdf.queryExecution().analyzed().rdd().id()
+    (info,) = [i for i in sc.getRDDStorageInfo() if i.id() == rid]
+    assert got == info.memSize() + info.diskSize() > 0
+
+
 def test_pair_memo_over_threshold_keeps_sort_merge_joins(spark):
     from emr_with_custom_metrics_spark.registry import all_specs
 
