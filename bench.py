@@ -23,205 +23,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from emr_with_custom_metrics_spark import registry  # noqa: E402
 from emr_with_custom_metrics_spark.session import get_spark  # noqa: E402
 
-# Headline set. Round 9 UNFREEZES the headline to the ENTIRE registry
-# (r8 VERDICT item 2: 158 rows — the whole stats tier among them — had no
-# official perf row). Layout: the explicit legacy list below keeps its
-# order so every row stays diffable against BENCH_r01..r08; _headline()
-# appends all remaining registered queries sorted by name.
-LEGACY_HEADLINE = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "sql_q6_forecast_revenue",
-    "agg_stats",
-    "window_rank_battery",
-    "topk_per_group",
-    "asof_purchase_last_click",
-    "join_interval_time",
-    "metrics_tumbling_avg",
-    "session_windows",
-    "timeseries_gapfill_ffill",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "similarity_topk_exact",
-    "similarity_ivf_topk",
-    "similarity_ann_lsh",
-    "text_word_freq_topk",
-    "text_tfidf_top_term",
-    "multimodal_decode_meta",
-    # round-2 additions (new rows; the 21 rows above stay diffable vs r01)
-    "q7_nation_volume",
-    "q19_disjunctive_pred",
-    "scd2_customer_history",
-    "bitmap_weekly_retention",
-    "text_fingerprint_winnowing",
-    "decontaminate_against_eval",
-    "dedup_levenshtein_blocked",
-    "knn_self_join_exact",
-    "kmeans_embeddings",
-    "pagerank_similarity_graph",
-    "e2e_corpus_pipeline",
-    "multimodal_decode_wav",
-    # round-5 additions (new rows; the 33 rows above stay diffable vs r01-r04)
-    "multimodal_decode_jpeg_subsampled",
-    "multimodal_decode_gif",
-    "multimodal_decode_jpeg_progressive",
-    "multimodal_decode_wav_g711",
-    "multimodal_decode_avi_mjpeg",
-    "e2e_multimodal_pipeline",
-    "dedup_levenshtein_multipass",
-    "similarity_pq_topk",
-    # round-6 additions (new rows; the 41 rows above stay diffable vs r01-r05)
-    "join_skew_salted",
-    "parquet_dpp_prune",
-    "multimodal_feature_extract",
-    "multimodal_decode_mpeg1",
-    "multimodal_decode_avi_rle_delta",
-    "graph_triangle_count",
-    "dedup_paragraph_chunks",
-    "dq_profile_columns",
-    "dq_constraint_checks",
-    "cdc_merge_upsert",
-    "similarity_ivfpq_topk",
-    "similarity_recall_report",
-    "decontaminate_bloom_prefilter",
-    "text_gopher_rules",
-    "multimodal_decode_mpeg1_l2",
-    "sql_pipe_syntax",
-    "sql_recursive_cte_hierarchy",
-    "sql_lateral_topn",
-    "timeseries_ewma",
-    "timeseries_delta_of_delta",
-    "sketch_countmin_heavy_hitters",
-    "bucketed_join_no_shuffle",
-    "geo_grid_nearest",
-    "sketch_distinct_hll_kmv",
-    "ivm_incremental_agg",
-    "formats_parquet_schema_evolution",
-    "multimodal_decode_jpeg_arithmetic",
-    "text_bm25_retrieval",
-    "maintenance_compact_small_files",
-    "agg_hll_sketch_union",
-    "sql_collation_lcase",
-    "graph_label_propagation",
-    "session_windows_dynamic_gap",
-    "mapinarrow_token_stats",
-    "udtf_dynamic_schema",
-    "window_ignore_nulls",
-    "scalar_xml_funcs",
-    "sql_join_hints",
-    "pack_chunks_overlap",
-    "multimodal_decode_video_motion",
-    "scd2_asof_lookup",
-    "agg_filter_clause",
-    "multimodal_audio_spectral",
-    "multimodal_phash_dedup",
-    "text_bpe_train_merges",
-    "graph_bfs_levels",
-    "json_parse_modes",
-    "multimodal_audio_fingerprint",
-    "text_cooccurrence_pmi",
-    "graph_clustering_coefficient",
-    "embedding_pca_project",
-    "similarity_hard_negatives",
-    "snapshot_diff",
-    "multimodal_decode_mpeg1_l3",
-    # round 6, continuation wave 6
-    "dedup_substring_spans",
-    "dedup_substring_remove",
-    "multimodal_decode_flac",
-    "graph_shortest_paths",
-    "timeseries_holt_winters",
-    "formats_binaryfile_scan",
-    "cogroup_asof_pandas",
-    "text_bpe_encode",
-    "multimodal_image_resize",
-    "multimodal_audio_resample",
-    "similarity_mmr_rerank",
-    "sketch_quantile_mergeable",
-    "retrieval_rrf_hybrid",
-    "join_range_banded",
-    "attribution_linear_touch",
-    "window_rolling_median",
-    "dq_k_anonymity",
-    "stream_late_event_audit",
-    "graph_adamic_adar",
-    "events_cusum_drift",
-    "multimodal_exif_redact",
-    "corpus_curriculum_interleave",
-    "multimodal_video_scene_detect",
-    "multimodal_decode_gif_interlaced",
-    "multimodal_decode_png_palette",
-    "multimodal_decode_png_adam7",
-    "e2e_span_dedup_pipeline",
-    "text_distribution_drift",
-    "graph_kcore_peel",
-    "multimodal_av_mux",
-    "similarity_matryoshka_recall",
-    "basket_part_lift",
-    "user_activity_streaks",
-    "corpus_warc_ingest",
-    "corpus_tar_ingest",
-    # round 6, fourth batch
-    "multimodal_decode_flac_stereo",
-    "dedup_semantic_clusters",
-    "corpus_importance_resample",
-    "retrieval_ndcg_eval",
-    "maintenance_zorder_layout",
-    "text_quality_classifier",
-    "corpus_pdf_ingest",
-    "corpus_zip_ingest",
-    "corpus_jsonl_gz_ingest",
-    # round 7
-    "corpus_e2e_archive_pipeline",
-    "multimodal_decode_mp3_huffman",
-    "corpus_pdf15_ingest",
-    "corpus_zip64_ingest",
-    "stream_stream_interval_join",
-    "text_suffix_array",
-    "text_longest_repeat",
-    "text_unigram_lm_train",
-    "text_unigram_lm_score",
-    "timeseries_ar2_forecast",
-    "dq_benford_screen",
-    "events_transition_matrix",
-    "survival_kaplan_meier",
-    "multimodal_decode_tiff",
-    "text_bwt",
-    "formats_avro_roundtrip",
-    "window_running_distinct",
-    # round 8
-    "text_kneserney_bigram",
-    "graph_hits_scores",
-    "text_wordpiece_encode",
-    "dedup_cdc_chunks",
-    "stats_ab_ttest",
-    "stats_chi2_independence",
-    "timeseries_seasonal_decompose",
-    "sketch_theta_overlap",
-    "embedding_random_projection",
-    "stats_mann_whitney",
-    "stats_cuped_variance_reduction",
-    "stats_bootstrap_ci",
-    "anomaly_seasonal_residual",
-    "text_rake_keywords",
-    "text_collocation_llr",
-    "stats_power_analysis",
-    "timeseries_autocorrelation",
-    "text_zipf_fit",
-    "customer_rfm_segments",
-    "inventory_pareto_abc",
-]
-
-
-def _headline(specs) -> list[str]:
-    seen = set(LEGACY_HEADLINE)
-    missing = [n for n in LEGACY_HEADLINE if n not in specs]
-    if missing:
-        raise SystemExit(f"legacy headline rows no longer registered: {missing}")
-    return LEGACY_HEADLINE + sorted(n for n in specs if n not in seen)
-
 # Shuffle-heavy flagship rows whose executed-plan accumulators ride along
 # in the bench record (r7 VERDICT item 6). Kept small: each row pays one
 # extra untimed collect.
@@ -425,7 +226,7 @@ def main() -> None:
     unknown = [q for q in subset if q not in specs]
     if unknown:
         raise SystemExit(f"SPARK_GRAFT_BENCH_QUERIES names unknown queries: {unknown}")
-    headline = subset if subset else _headline(specs)
+    headline = subset if subset else sorted(specs)
 
     times: dict[str, float] = {}
     for name in headline:

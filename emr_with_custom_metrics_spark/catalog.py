@@ -121,6 +121,11 @@ def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TA
     """Register temp views so ``spark.sql`` queries see the same catalog the
     DuckDB oracle does (driver pre-registers identical view names).
 
+    The base tables are the only session views the engine writes, and
+    only here, each under its own name over the plain scan. A relation a
+    query stages (a checkpoint, a fanned scan) is bound into its SQL as
+    a parameter instead (``plans/stage_memo``).
+
     Always re-registers: with the relation memoized above, a
     ``createOrReplaceTempView`` is a cheap catalog update (no file
     listing, no footer read), and an earlier skip-if-registered memo

@@ -253,7 +253,7 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kmeans_spark_staged(spark: SparkSession) -> DataFrame:
-    """Execute the Lloyd chain round-by-round behind checkpointed views.
+    """Execute the Lloyd chain round-by-round over checkpointed frames.
 
     Opt r15 (guide §2.4/§3.3): in the single WITH-chain form every
     ``c{it+1}`` references ``c{it}`` TWICE (the assignment pass and the
@@ -261,26 +261,27 @@ def _kmeans_spark_staged(spark: SparkSession) -> DataFrame:
     round — the executed plan held 32 embeddings scans / 92 Exchanges at
     3 rounds (plans/r15/kmeans_embeddings_before.txt). Staging each
     round's k·d-cell centroid table (8 rows) behind an eager
-    localCheckpoint + temp view leaves 5 scans — one per assignment pass
-    plus the seed — with arithmetic (and therefore answers) identical:
+    localCheckpoint, bound into the next round's SQL, leaves 5 scans —
+    one per assignment pass plus the seed — with arithmetic (and
+    therefore answers) identical:
     each CTE's SQL text is unchanged, it just executes once. The DuckDB
     oracle keeps the one-string chain (_kmeans_sql('duckdb')): DuckDB
     materializes multi-referenced CTEs itself."""
     frag = _km_frags("spark")
     rng, idx, tx, fold, seq, collect, emb, d2, asn, afin = frag
-    spark.sql(
+    cents = spark.sql(
         f"""
         SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) AS INT) AS cid,
                {tx}({seq}, d -> {emb('d + 1')}) AS centroid
         FROM (SELECT vec_id, embedding FROM embeddings
               ORDER BY vec_id LIMIT {_KM_K}) s0"""
-    ).localCheckpoint().createOrReplaceTempView("km_c0")
-    for it in range(_KM_ITERS):
-        spark.sql(
+    ).localCheckpoint()
+    for _ in range(_KM_ITERS):
+        cents = spark.sql(
             f"""
             WITH a AS (
                 SELECT vec_id, embedding, cid, {d2('centroid')} AS d2
-                FROM embeddings, km_c{it}),
+                FROM embeddings, {{cents}}),
             asn AS ({asn('a')}),
             mean AS (
                 SELECT cid, i, (CAST(ROUND((AVG({emb('i + 1')})) * 1000000) AS BIGINT) / CAST(1000000 AS DOUBLE)) AS mu
@@ -288,18 +289,20 @@ def _kmeans_spark_staged(spark: SparkSession) -> DataFrame:
             cm AS (
                 SELECT c.cid, r.i,
                        COALESCE(m.mu, {idx('c.centroid', 'r.i + 1')}) AS mu
-                FROM km_c{it} c CROSS JOIN {rng} r
+                FROM {{cents}} c CROSS JOIN {rng} r
                 LEFT JOIN mean m ON m.cid = c.cid AND m.i = r.i)
-            SELECT cid, {collect} AS centroid FROM cm GROUP BY cid"""
-        ).localCheckpoint().createOrReplaceTempView(f"km_c{it + 1}")
+            SELECT cid, {collect} AS centroid FROM cm GROUP BY cid""",
+            cents=cents,
+        ).localCheckpoint()
     return spark.sql(
         f"""
         WITH afin AS ({afin(
             f"(SELECT vec_id, embedding, cid, {d2('centroid')} AS d2 "
-            f"FROM embeddings, km_c{_KM_ITERS})"
+            "FROM embeddings, {cents})"
         )})
         SELECT cid, COUNT(*) AS n_points, CAST(ROUND(SUM(d2) * 10000) AS BIGINT) AS inertia_e4
-        FROM afin GROUP BY cid"""
+        FROM afin GROUP BY cid""",
+        cents=cents,
     )
 
 
@@ -478,23 +481,21 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """).localCheckpoint(eager=False)
     chunk = 10
     for start in range(0, _PCA_ITERS, chunk):
-        state.createOrReplaceTempView("pca_state")
-        parts = ["WITH w0 AS (SELECT m, v FROM pca_state)"]
+        parts = ["WITH w0 AS (SELECT m, v FROM {state})"]
         for it in range(chunk):
             parts.append(f""",
             mv{it} AS (SELECT m, {mv} AS v FROM w{it}),
             w{it + 1} AS (SELECT m, transform(v, y -> y / sqrt({fold(sq)})) AS v
                           FROM mv{it})""")
         parts.append(f" SELECT m, v FROM w{chunk}")
-        state = spark.sql("".join(parts)).localCheckpoint(eager=False)
-    state.createOrReplaceTempView("pca_state")
+        state = spark.sql("".join(parts), state=state).localCheckpoint(eager=False)
     proj_terms = ("transform(sequence(0, 7), "
                   "d -> CAST(element_at(embedding, d + 1) AS DOUBLE) "
                   "* element_at(v, d + 1))")
     return spark.sql(f"""
         SELECT vec_id, CAST(ROUND(({fold(proj_terms)}) * 1000000) AS BIGINT) AS pc1_e6
-        FROM embeddings, pca_state
-    """)
+        FROM embeddings, {{state}}
+    """, state=state)
 
 
 def _pca_project_one_statement(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -155,12 +155,10 @@ _RAKE_DUCK = (
 )
 def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("documents",))
-    spark.sql(_RAKE_HEAD_SPARK).localCheckpoint().createOrReplaceTempView(
-        "st_rake_seg"
-    )
     return spark.sql(
-        "WITH seg AS (SELECT * FROM st_rake_seg)"
-        + _RAKE_TAIL.replace("agg_phrase", _AGG_PHRASE_SPARK)
+        "WITH seg AS (SELECT * FROM {seg})"
+        + _RAKE_TAIL.replace("agg_phrase", _AGG_PHRASE_SPARK),
+        seg=spark.sql(_RAKE_HEAD_SPARK).localCheckpoint(),
     )
 
 
@@ -246,10 +244,10 @@ _LLR_DUCK = (
 )
 def text_collocation_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("documents",))
-    spark.sql(_LLR_BG_SPARK).localCheckpoint().createOrReplaceTempView(
-        "st_llr_bg"
+    return spark.sql(
+        "WITH bg AS (SELECT * FROM {bg})" + _LLR_POST,
+        bg=spark.sql(_LLR_BG_SPARK).localCheckpoint(),
     )
-    return spark.sql("WITH bg AS (SELECT * FROM st_llr_bg)" + _LLR_POST)
 
 
 # ---------------------------------------------------------------------------

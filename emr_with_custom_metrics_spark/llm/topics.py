@@ -20,10 +20,10 @@ playbook):
   re-quantized to 1e-9 immediately.
 
 Spark stages the count matrix and each round's parameter tables behind
-localCheckpoint temp views (Spark inlines WITH-chains per reference —
-un-staged, round 2's E-step would recompute round 1's entire subtree
-per z-branch); DuckDB materializes the same chain as MATERIALIZED CTEs
-in one statement.
+localCheckpoints bound into the next statement (Spark inlines
+WITH-chains per reference — un-staged, round 2's E-step would
+recompute round 1's entire subtree per z-branch); DuckDB materializes
+the same chain as MATERIALIZED CTEs in one statement.
 
 Scale posture: the only data-sized stage is the (doc, word) count
 aggregation (map-side combinable explode). Everything after operates
@@ -255,8 +255,7 @@ def _duck_sql() -> str:
 )
 def text_plsa_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("documents",))
-    f = _fills("plsa_wd", "plsa_pwz0", "plsa_pzd0", "plsa_e1", "plsa_pwz1",
-               "plsa_pzd1", "plsa_e2", "plsa_pwz2", "plsa_pzd2")
+    f = _fills("wd", "pwz0", "pzd0", "e1", "pwz1", "pzd1", "e2", "pwz2", "pzd2")
 
     # Opt r16 (guide §1.2/§2.4): the r15 form eagerly checkpointed all 10
     # staged tables — 11 serial driver-blocking jobs, each paying ~0.4 s of
@@ -265,29 +264,28 @@ def text_plsa_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # beat WITH-inlining re-execution: tc (2 refs from wd), wd (4 refs:
     # pwz0/pzd0/e1/e2), e1/e2 (2 refs each: the two M-step reductions), and
     # pzd2 (2 refs in the report). Single-consumer tables (pwz0/pzd0/
-    # pwz1/pzd1/pwz2) become PLAIN temp views — inlined once, zero extra
+    # pwz1/pzd1/pwz2) stay PLAIN frames — inlined once, zero extra
     # jobs. Checkpoints are lazy, so the whole EM chain collapses into one
     # action; each checkpoint RDD still materializes exactly once and is
     # reused by every consumer (same arithmetic, same rows; per-stage A/B
     # 4.38 -> 2.64 s at sf0.1).
-    def stage(name: str, sql: str) -> None:
-        spark.sql(sql).localCheckpoint().createOrReplaceTempView(name)
-
-    def inline(name: str, sql: str) -> None:
-        spark.sql(sql).createOrReplaceTempView(name)
-
-    stage("plsa_tc", _TC_SPARK)
-    stage("plsa_wd", _WD_FROM_TC_TMPL.format(tc="plsa_tc", vocab=_VOCAB))
-    inline("plsa_pwz0", _PWZ0_TMPL.format(wd="plsa_wd", h=f["h"], e9=_E9))
-    inline("plsa_pzd0", _PZD0_TMPL.format(wd="plsa_wd", third=f["third"]))
+    # Each template slot is filled with a ``{name}`` placeholder and the
+    # frame itself is bound as that SQL parameter.
+    tc = spark.sql(_TC_SPARK).localCheckpoint()
+    wd = spark.sql(
+        _WD_FROM_TC_TMPL.format(tc="{tc}", vocab=_VOCAB), tc=tc
+    ).localCheckpoint()
+    pwz = spark.sql(_PWZ0_TMPL.format(wd="{wd}", h=f["h"], e9=_E9), wd=wd)
+    pzd = spark.sql(_PZD0_TMPL.format(wd="{wd}", third=f["third"]), wd=wd)
     for r in range(1, _ROUNDS + 1):
-        prev_w, prev_d = f"plsa_pwz{r - 1}", f"plsa_pzd{r - 1}"
-        stage(f"plsa_e{r}",
-              _E_SPARK_TMPL.format(wd="plsa_wd", pwz=prev_w, pzd=prev_d,
-                                   e9=_E9))
-        mk = stage if r == _ROUNDS else inline
-        inline(f"plsa_pwz{r}", _PWZ_TMPL.format(e=f"plsa_e{r}", e9=_E9))
-        mk(f"plsa_pzd{r}", _PZD_TMPL.format(e=f"plsa_e{r}", e9=_E9))
+        e = spark.sql(
+            _E_SPARK_TMPL.format(wd="{wd}", pwz="{pwz}", pzd="{pzd}", e9=_E9),
+            wd=wd, pwz=pwz, pzd=pzd,
+        ).localCheckpoint()
+        pwz = spark.sql(_PWZ_TMPL.format(e="{e}", e9=_E9), e=e)
+        pzd = spark.sql(_PZD_TMPL.format(e="{e}", e9=_E9), e=e)
+        if r == _ROUNDS:
+            pzd = pzd.localCheckpoint()
     return spark.sql(
-        _REPORT_TMPL.format(pwz=f"plsa_pwz{_ROUNDS}", pzd=f"plsa_pzd{_ROUNDS}")
+        _REPORT_TMPL.format(pwz="{pwz}", pzd="{pzd}"), pwz=pwz, pzd=pzd
     )

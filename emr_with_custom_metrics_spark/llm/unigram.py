@@ -68,6 +68,16 @@ _FOLD_BWD = f"""
                + element_at(acc, k - l + 1))))))"""
 
 
+# Each word's Viterbi score is a fold of e6-quantized log-probs, so it
+# quantizes to an exact e6 BIGINT; the per-doc sum is then an exact
+# integer sum and rounds to 1e-4 once. Summing the doubles instead let
+# the summation order decide the last digit.
+_LOGPROB_SUM = (
+    "(CAST(ROUND(CAST(SUM(CAST(ROUND(ws.s * 1000000) AS BIGINT)) AS DOUBLE)"
+    " / 100) AS BIGINT) / CAST(10000 AS DOUBLE)) AS viterbi_logprob"
+)
+
+
 def _unigram_sql(dialect: str, tail: str) -> str:
     """One template, two dialects; ``tail`` picks the deliverable
     ('train' → final vocabulary, 'score' → per-doc Viterbi log-prob).
@@ -207,7 +217,7 @@ def _unigram_sql(dialect: str, tail: str) -> str:
       FROM documents)
     SELECT d.doc_id,
            CAST(COUNT(*) AS BIGINT) AS n_words,
-           (CAST(ROUND((SUM(ws.s)) * 10000) AS BIGINT) / CAST(10000 AS DOUBLE)) AS viterbi_logprob
+           {_LOGPROB_SUM}
     FROM docw d JOIN wscore ws ON ws.w = d.w
     GROUP BY d.doc_id""")
     return "".join(parts)
@@ -354,7 +364,7 @@ def _ug_spark(spark: SparkSession, sf_dir: str, tail: str) -> DataFrame:
           SELECT doc_id, explode(split(text, " ")) AS w FROM documents)
         SELECT d.doc_id,
                CAST(COUNT(*) AS BIGINT) AS n_words,
-               (CAST(ROUND((SUM(ws.s)) * 10000) AS BIGINT) / CAST(10000 AS DOUBLE)) AS viterbi_logprob
+               {_LOGPROB_SUM}
         FROM docw d JOIN wscore ws ON ws.w = d.w
         GROUP BY d.doc_id
         """,

@@ -951,7 +951,7 @@ _AU_CORE = """
     FROM rolled
 """
 
-# Spark side reads the STAGED distinct-(user, day) temp view: the CORE
+# Spark side reads the STAGED distinct-(user, day) relation: the CORE
 # references the activity set from three consumers (dau + the two island
 # passes), and Spark inlines WITH-chains per reference — un-staged, the
 # events scan + distinct shuffle ran three times (observed in the plan).
@@ -961,7 +961,7 @@ _AU_CORE = """
 _AU_SPARK = (
     """
     WITH activity AS (
-        SELECT user_id, day FROM au_user_days
+        SELECT user_id, day FROM {user_days}
     ), bounds AS (
         SELECT MIN(day) AS dmin, MAX(day) AS dmax FROM activity
     ), spine AS (
@@ -1012,8 +1012,7 @@ def events_active_users_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint()  # 3 CORE consumers; see _AU_SPARK note
     )
-    ud.createOrReplaceTempView("au_user_days")
-    return spark.sql(_AU_SPARK)
+    return spark.sql(_AU_SPARK, user_days=ud)
 
 
 # ---------------------------------------------------------------------------

@@ -608,11 +608,11 @@ def udtf_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield (i, f"{toks[i]} {toks[i + 1]}")
 
     spark.udtf.register("bigram_gen", BigramGen)
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("docs_udtf")
     return spark.sql(
         """SELECT d.doc_id, g.pos, g.bigram
-           FROM docs_udtf d, LATERAL bigram_gen(d.text) g
-           WHERE d.doc_id < 40"""
+           FROM {docs} d, LATERAL bigram_gen(d.text) g
+           WHERE d.doc_id < 40""",
+        docs=load_table(spark, sf_dir, "documents"),
     )
 
 
@@ -1016,11 +1016,11 @@ def udtf_dynamic_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield tuple(toks[i] if i < len(toks) else None for i in range(k))
 
     spark.udtf.register("first_tokens", udtf(FirstTokens))
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("docs_udtf2")
     return spark.sql(
         """SELECT d.doc_id, g.tok_1, g.tok_2, g.tok_3
-           FROM docs_udtf2 d, LATERAL first_tokens(d.text, 3) g
-           WHERE d.doc_id < 40"""
+           FROM {docs} d, LATERAL first_tokens(d.text, 3) g
+           WHERE d.doc_id < 40""",
+        docs=load_table(spark, sf_dir, "documents"),
     )
 
 

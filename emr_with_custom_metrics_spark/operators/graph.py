@@ -386,18 +386,18 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     dir_edges = edges.select(
         F.col("a_id").alias("src"), F.col("b_id").alias("dst")
     ).unionByName(edges.select(F.col("b_id").alias("src"), F.col("a_id").alias("dst")))
-    dir_edges.createOrReplaceTempView("bfs_dir_edges")
     return spark.sql(
         """
         WITH RECURSIVE bfs(node, lvl) AS (
             SELECT CAST(0 AS BIGINT), 0
             UNION ALL
             SELECT d.dst, b.lvl + 1
-            FROM bfs b JOIN bfs_dir_edges d ON d.src = b.node
+            FROM bfs b JOIN {dir_edges} d ON d.src = b.node
             WHERE b.lvl < 4
         )
         SELECT node, MIN(lvl) AS level FROM bfs GROUP BY node
-        """
+        """,
+        dir_edges=dir_edges,
     )
 
 

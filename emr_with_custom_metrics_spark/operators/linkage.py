@@ -191,7 +191,7 @@ _FS_TAIL = """
 
 _FS_ORACLE = ("WITH pairs AS MATERIALIZED ("
               + _PAIRS_SQL.format(tbl="customer") + ")" + _FS_TAIL)
-_FS_SPARK_TAIL = "WITH pairs AS (SELECT * FROM lk_pairs)" + _FS_TAIL
+_FS_SPARK_TAIL = "WITH pairs AS (SELECT * FROM {pairs})" + _FS_TAIL
 
 
 @register(
@@ -215,12 +215,10 @@ def linkage_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # file, and the pair join broadcasts the small side — without the
     # fan-out, ALL pair generation + levenshtein runs in the stream
     # side's 1-2 scan tasks (measured 37 s single-threaded vs ~4 s
-    # fanned at sf0.1). Scoped view name so the shared `customer` view
-    # other queries register stays untouched.
-    load_fanned(spark, sf_dir, "customer").createOrReplaceTempView(
-        "lk_customer"
-    )
-    spark.sql(
-        _PAIRS_SQL.format(tbl="lk_customer")
-    ).localCheckpoint().createOrReplaceTempView("lk_pairs")
-    return spark.sql(_FS_SPARK_TAIL)
+    # fanned at sf0.1). Bound as a parameter, so the shared `customer`
+    # view other queries register stays untouched.
+    pairs = spark.sql(
+        _PAIRS_SQL.format(tbl="{customer}"),
+        customer=load_fanned(spark, sf_dir, "customer"),
+    ).localCheckpoint()
+    return spark.sql(_FS_SPARK_TAIL, pairs=pairs)

@@ -127,11 +127,9 @@ def sketch_distinct_hll_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct-user table behind a lazy checkpoint; tail text
     # unchanged (the md5 re-derivations run on checkpoint rows).
     head, _, tail = _SKETCH_SQL.partition(", hashed AS")
-    spark.sql(head + " SELECT * FROM base").localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("st_hllkmv_base")
     return spark.sql(
-        "WITH base AS (SELECT * FROM st_hllkmv_base), hashed AS" + tail
+        "WITH base AS (SELECT * FROM {base}), hashed AS" + tail,
+        base=spark.sql(head + " SELECT * FROM base").localCheckpoint(eager=False),
     )
 
 
@@ -208,11 +206,9 @@ def sketch_quantile_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
     # property made physical: only the summary, never the values,
     # feeds the merge; all downstream CTE text is unchanged.
     head, _, tail = _QSKETCH_SQL.partition(", tot AS")
-    spark.sql(head + " SELECT * FROM summary").localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("st_qsk_summary")
     return spark.sql(
-        "WITH summary AS (SELECT * FROM st_qsk_summary), tot AS" + tail
+        "WITH summary AS (SELECT * FROM {summary}), tot AS" + tail,
+        summary=spark.sql(head + " SELECT * FROM summary").localCheckpoint(eager=False),
     )
 
 

@@ -183,8 +183,13 @@ _CHI2_SQL = f"WITH obs AS ({_CHI2_OBS})" + _CHI2_TAIL
 )
 def stats_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("documents",))
-    spark.sql(_CHI2_OBS).localCheckpoint().createOrReplaceTempView("st_chi_obs")
-    return spark.sql("WITH obs AS (SELECT * FROM st_chi_obs)" + _CHI2_TAIL)
+    # The alias keeps the bound frame's generated (per-call random) view
+    # name out of the plan: the distinct-count rewrite qualifies its
+    # Expand attributes with it.
+    return spark.sql(
+        "WITH obs AS (SELECT * FROM {obs} obs)" + _CHI2_TAIL,
+        obs=spark.sql(_CHI2_OBS).localCheckpoint(),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -231,8 +236,8 @@ _DECOMP_CORE = """
 # (per-(series, hour) counts) is computed up front and every other CTE —
 # bounds, the series list, the dense spine — derives from the counts,
 # never from the raw table. The Spark side additionally STAGES the counts
-# behind a localCheckpoint + temp view (`st_hour_counts`): the core
-# references counts three times and Spark inlines WITH-chains per
+# behind a localCheckpoint bound as ``{counts}`` (hour_counts_sql): the
+# core references counts three times and Spark inlines WITH-chains per
 # reference, so the un-staged plan re-ran the events scan per consumer
 # (the rolling-actives lesson). DuckDB materializes CTEs, so the oracle
 # keeps the single-statement form with the counts CTE first.
@@ -245,7 +250,7 @@ _COUNTS_SPARK = """
 
 _SPINE_FROM_COUNTS_SPARK = """
     WITH counts AS (
-        SELECT event_type, h, cnt FROM st_hour_counts
+        SELECT event_type, h, cnt FROM {counts}
     ), spine AS (
         SELECT t.event_type, g.h
         FROM (SELECT DISTINCT event_type FROM counts) t
@@ -359,11 +364,11 @@ def global_rank_guard(engine: str, rank_col: str) -> str:
     )
 
 
-def _stage_hour_counts(spark: SparkSession, sf_dir: str) -> None:
+def hour_counts_sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
+    """Run ``text`` with ``{counts}`` bound to the per-(series, hour)
+    event counts, staged behind an eager localCheckpoint."""
     register_views(spark, sf_dir, ("events",))
-    spark.sql(_COUNTS_SPARK).localCheckpoint().createOrReplaceTempView(
-        "st_hour_counts"
-    )
+    return spark.sql(text, counts=spark.sql(_COUNTS_SPARK).localCheckpoint())
 
 
 _DECOMP_SPARK = _SPINE_FROM_COUNTS_SPARK + _DECOMP_CORE
@@ -388,8 +393,7 @@ _DECOMP_DUCK = _SPINE_FROM_COUNTS_DUCK + _DECOMP_CORE
     "rows — the pre-aggregated density, never events.",
 )
 def timeseries_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _stage_hour_counts(spark, sf_dir)
-    return spark.sql(_DECOMP_SPARK)
+    return hour_counts_sql(spark, sf_dir, _DECOMP_SPARK)
 
 
 # ---------------------------------------------------------------------------
@@ -674,9 +678,6 @@ def stats_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every value is computed by the same arithmetic as the one-string
     # oracle chain.
     head, _, _ = _BOOT_SPARK.partition(", means AS")
-    spark.sql(head + " SELECT * FROM reps").localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("st_boot_reps")
     tail = _BOOT_TAIL.partition(", means AS")[2]
     return spark.sql(
         """
@@ -685,9 +686,10 @@ def stats_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(ROUND(value * 1000) AS BIGINT) AS v_e3
         FROM events
     ), reps AS (
-        SELECT * FROM st_boot_reps
+        SELECT * FROM {reps}
     ), means AS"""
-        + tail
+        + tail,
+        reps=spark.sql(head + " SELECT * FROM reps").localCheckpoint(eager=False),
     )
 
 
@@ -745,9 +747,10 @@ def anomaly_seasonal_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Stage the full decomposition once: _ANOM_TAIL references it from
     # both the residual-moments reduce and the z projection, and the
     # decomposition itself is the expensive subtree.
-    dec = timeseries_seasonal_decompose(spark, sf_dir).localCheckpoint()
-    dec.createOrReplaceTempView("st_decomp")
-    return spark.sql("WITH decomp AS (SELECT * FROM st_decomp)" + _ANOM_TAIL)
+    return spark.sql(
+        "WITH decomp AS (SELECT * FROM {decomp})" + _ANOM_TAIL,
+        decomp=timeseries_seasonal_decompose(spark, sf_dir).localCheckpoint(),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1200,11 +1203,9 @@ _CUPED_TTEST_SQL = (
 )
 def e2e_ab_cuped_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    spark.sql(_CUPED_USER_SQL).localCheckpoint().createOrReplaceTempView(
-        "st_cuped_user"
-    )
     return spark.sql(
-        "WITH per_user AS (SELECT * FROM st_cuped_user)" + _CUPED_TT_TAIL
+        "WITH per_user AS (SELECT * FROM {per_user})" + _CUPED_TT_TAIL,
+        per_user=spark.sql(_CUPED_USER_SQL).localCheckpoint(),
     )
 
 
@@ -1375,7 +1376,7 @@ _CHANGEPOINT_CORE = """
 """
 
 _CHANGEPOINT_SPARK = (
-    "WITH counts AS (SELECT event_type, h, cnt FROM st_hour_counts)"
+    "WITH counts AS (SELECT event_type, h, cnt FROM {counts})"
     + _CHANGEPOINT_CORE
 )
 _CHANGEPOINT_DUCK = (
@@ -1400,12 +1401,11 @@ _CHANGEPOINT_DUCK = (
     "- S^2/n, exact integer sums with three fixed-order double divisions "
     "(bit-identical cross-engine), min segment 3 days, tie-break earliest "
     "day. Complements events_cusum_drift (online). Derives from the "
-    "staged hourly-counts reduction (st_hour_counts) — at 100 TB the "
+    "staged hourly-counts reduction (hour_counts_sql) — at 100 TB the "
     "shuffle carries the (series, hour) density, never raw events.",
 )
 def timeseries_changepoint_binseg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _stage_hour_counts(spark, sf_dir)
-    return spark.sql(_CHANGEPOINT_SPARK)
+    return hour_counts_sql(spark, sf_dir, _CHANGEPOINT_SPARK)
 
 
 # ---------------------------------------------------------------------------
@@ -1481,8 +1481,7 @@ _CONFORMAL_DUCK = _SPINE_FROM_COUNTS_DUCK + _CONFORMAL_CORE
     "density as the decomposition family — events are never re-scanned.",
 )
 def timeseries_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _stage_hour_counts(spark, sf_dir)
-    return spark.sql(_CONFORMAL_SPARK)
+    return hour_counts_sql(spark, sf_dir, _CONFORMAL_SPARK)
 
 
 # ---------------------------------------------------------------------------

@@ -568,11 +568,9 @@ def stats_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unchanged, so the arithmetic (and answer) is identical. The
     # DuckDB oracle keeps the one-string form.
     li_body = _SPEARMAN_SQL.partition("WITH li AS (")[2].partition("\n    ), tot AS")[0]
-    spark.sql(li_body).localCheckpoint(eager=False).createOrReplaceTempView(
-        "spearman_li"
-    )
     return spark.sql(
-        _SPEARMAN_SQL.replace(li_body, "SELECT * FROM spearman_li")
+        _SPEARMAN_SQL.replace(li_body, "SELECT * FROM {li}"),
+        li=spark.sql(li_body).localCheckpoint(eager=False),
     )
 
 

@@ -40,7 +40,7 @@ from emr_with_custom_metrics_spark.catalog import register_views
 from emr_with_custom_metrics_spark.operators.stats import (
     _SPINE_FROM_COUNTS_DUCK,
     _SPINE_FROM_COUNTS_SPARK,
-    _stage_hour_counts,
+    hour_counts_sql,
 )
 from emr_with_custom_metrics_spark.registry import register
 
@@ -393,22 +393,21 @@ def retrieval_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     z_part, _, sys_body = after_truth.partition(", sysrank AS")
     scored_part, _, ranks_body = _MRR_TAIL.partition(", ranks AS")
 
-    def ck(sql: str, name: str) -> None:
-        spark.sql(sql).localCheckpoint(eager=False).createOrReplaceTempView(
-            name
-        )
+    def ck(sql: str, **frames: DataFrame) -> DataFrame:
+        return spark.sql(sql, **frames).localCheckpoint(eager=False)
 
-    ck(truth_part + " SELECT * FROM truth", "st_mrr_truth")
-    ck(e_part + ", z AS" + z_part + " SELECT * FROM z", "st_mrr_z")
-    ck(
-        "WITH z AS (SELECT * FROM st_mrr_z), "
+    truth = ck(truth_part + " SELECT * FROM truth")
+    z = ck(e_part + ", z AS" + z_part + " SELECT * FROM z")
+    scored = ck(
+        "WITH z AS (SELECT * FROM {z}), "
         "q AS (SELECT vec_id AS qid FROM z WHERE vec_id <= 10), "
         "sysrank AS" + sys_body + scored_part + " SELECT * FROM scored",
-        "st_mrr_scored",
+        z=z,
     )
     return spark.sql(
-        "WITH truth AS (SELECT * FROM st_mrr_truth), "
-        "scored AS (SELECT * FROM st_mrr_scored), ranks AS" + ranks_body
+        "WITH truth AS (SELECT * FROM {truth}), "
+        "scored AS (SELECT * FROM {scored}), ranks AS" + ranks_body,
+        truth=truth, scored=scored,
     )
 
 
@@ -544,8 +543,7 @@ _BACKTEST_DUCK = _SPINE_FROM_COUNTS_DUCK + _BACKTEST_CORE
     "staged (series, hour) density — events are never re-scanned.",
 )
 def timeseries_backtest_snaive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _stage_hour_counts(spark, sf_dir)
-    return spark.sql(_BACKTEST_SPARK)
+    return hour_counts_sql(spark, sf_dir, _BACKTEST_SPARK)
 
 
 # ---------------------------------------------------------------------------
@@ -775,9 +773,6 @@ def basket_apriori_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (order, brand) item table and the canonical pair table behind
     # lazy checkpoints; all CTE text is unchanged.
     items_head, _, tail = _APRIORI_SQL.partition(", n_orders AS")
-    spark.sql(items_head + " SELECT * FROM items").localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("st_apr_items")
     # Checkpointed relations carry no size statistics, so the
     # model-sized support joins (25-value brand domain) would plan as
     # SortMergeJoin — hint them broadcast explicitly (guide §3.1:
@@ -790,5 +785,8 @@ def basket_apriori_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         1,
     )
     return spark.sql(
-        "WITH items AS (SELECT * FROM st_apr_items), n_orders AS" + tail
+        "WITH items AS (SELECT * FROM {items}), n_orders AS" + tail,
+        items=spark.sql(items_head + " SELECT * FROM items").localCheckpoint(
+            eager=False
+        ),
     )

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from emr_with_custom_metrics_spark.operators.stats import (
     _SPINE_FROM_COUNTS_DUCK,
     _SPINE_FROM_COUNTS_SPARK,
-    _stage_hour_counts,
+    hour_counts_sql,
 )
 from emr_with_custom_metrics_spark.registry import register
 
@@ -165,8 +165,7 @@ def _viterbi(pdf: pd.DataFrame) -> pd.DataFrame:
     "optimal path cost.",
 )
 def timeseries_burst_kleinberg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _stage_hour_counts(spark, sf_dir)
-    costs = spark.sql(_COSTS_SPARK)
+    costs = hour_counts_sql(spark, sf_dir, _COSTS_SPARK)
     schema = (
         "event_type string, n_hours long, burst_hours long, n_bursts long, "
         "max_burst_len long, first_burst_idx long, total_cost long"

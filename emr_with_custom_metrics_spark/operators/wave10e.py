@@ -291,11 +291,9 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cross-join per reference. Stage the narrow binned projection;
     # tail text unchanged (the ECE/logloss remedy).
     head, _, tail = _BRIER_SQL.partition(", calib AS")
-    spark.sql(head + " SELECT * FROM binned").localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("st_brier_binned")
     return spark.sql(
-        "WITH binned AS (SELECT * FROM st_brier_binned), calib AS" + tail
+        "WITH binned AS (SELECT * FROM {binned}), calib AS" + tail,
+        binned=spark.sql(head + " SELECT * FROM binned").localCheckpoint(eager=False),
     )
 
 

@@ -39,7 +39,7 @@ from emr_with_custom_metrics_spark.operators.stats import (
     _SPINE_FROM_COUNTS_DUCK,
     _SPINE_FROM_COUNTS_SPARK,
     _DENSE_HOURLY_X_BODY,
-    _stage_hour_counts,
+    hour_counts_sql,
 )
 from emr_with_custom_metrics_spark.registry import register
 
@@ -359,11 +359,9 @@ def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     # behind a lazy checkpoint; tail text unchanged.
     full = _kw_sql("spark")
     head, _, tail = full.partition(", vals AS")
-    spark.sql(head + " SELECT * FROM hist").localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("st_kw_hist")
     return spark.sql(
-        "WITH hist AS (SELECT * FROM st_kw_hist), vals AS" + tail
+        "WITH hist AS (SELECT * FROM {hist}), vals AS" + tail,
+        hist=spark.sql(head + " SELECT * FROM hist").localCheckpoint(eager=False),
     )
 
 
@@ -377,7 +375,7 @@ def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
 # one LAG; mean/variance of the run count are exact integer rationals
 # with a single double epilogue, |z| vs 1.96 at the quantized scale.
 #
-# Scale: rides the staged hour-counts scan (st_hour_counts); all
+# Scale: rides the staged hour-counts scan (hour_counts_sql); all
 # downstream state is the calendar-bounded series.
 
 _RUNS_CORE = f"""
@@ -456,9 +454,9 @@ _RUNS_TAIL = """
     "autocorrelation portmanteau. Rides the staged hour-counts scan.",
 )
 def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _stage_hour_counts(spark, sf_dir)
-    return spark.sql(
-        _RUNS_TAIL.format(core=_SPINE_FROM_COUNTS_SPARK + _RUNS_CORE)
+    return hour_counts_sql(
+        spark, sf_dir,
+        _RUNS_TAIL.format(core=_SPINE_FROM_COUNTS_SPARK + _RUNS_CORE),
     )
 
 

@@ -261,17 +261,19 @@ def ml_confusion_multiclass(spark: SparkSession, sf_dir: str) -> DataFrame:
     # behind lazy checkpoints; tail CTE text unchanged.
     base_head, _, rest = _CONF3_SQL.partition(", vals AS")
     cuts_body, _, tail = rest.partition(", ids AS")
-    spark.sql(base_head + " SELECT * FROM base").localCheckpoint(
+    base = spark.sql(base_head + " SELECT * FROM base").localCheckpoint(
         eager=False
-    ).createOrReplaceTempView("st_conf_base")
-    spark.sql(
-        "WITH base AS (SELECT * FROM st_conf_base), vals AS"
+    )
+    cuts = spark.sql(
+        "WITH base AS (SELECT * FROM {base}), vals AS"
         + cuts_body
-        + " SELECT * FROM cuts"
-    ).localCheckpoint(eager=False).createOrReplaceTempView("st_conf_cuts")
+        + " SELECT * FROM cuts",
+        base=base,
+    ).localCheckpoint(eager=False)
     return spark.sql(
-        "WITH base AS (SELECT * FROM st_conf_base), "
-        "cuts AS (SELECT * FROM st_conf_cuts), ids AS" + tail
+        "WITH base AS (SELECT * FROM {base}), "
+        "cuts AS (SELECT * FROM {cuts}), ids AS" + tail,
+        base=base, cuts=cuts,
     )
 
 
@@ -444,11 +446,9 @@ def ml_logloss_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # range cross-join per reference. Stage the narrow binned
     # projection; tail text unchanged.
     head, _, tail = _LOGLOSS_SQL.partition(", calib AS")
-    spark.sql(head + " SELECT * FROM binned").localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("st_logloss_binned")
     return spark.sql(
-        "WITH binned AS (SELECT * FROM st_logloss_binned), calib AS" + tail
+        "WITH binned AS (SELECT * FROM {binned}), calib AS" + tail,
+        binned=spark.sql(head + " SELECT * FROM binned").localCheckpoint(eager=False),
     )
 
 
@@ -527,11 +527,9 @@ def stats_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unchanged, so the pair weights and median picks are identical.
     full = _HL_TMPL.format(arm=_ARM)
     head, _, tail = full.partition(", pairs AS")
-    spark.sql(head + " SELECT * FROM hist").localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("st_hl_hist")
     return spark.sql(
-        "WITH hist AS (SELECT * FROM st_hl_hist), pairs AS" + tail
+        "WITH hist AS (SELECT * FROM {hist}), pairs AS" + tail,
+        hist=spark.sql(head + " SELECT * FROM hist").localCheckpoint(eager=False),
     )
 
 

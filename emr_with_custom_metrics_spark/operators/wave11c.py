@@ -37,7 +37,7 @@ from emr_with_custom_metrics_spark.operators.stats import (
     _SPINE_FROM_COUNTS_DUCK,
     _SPINE_FROM_COUNTS_SPARK,
     _DENSE_HOURLY_X_BODY,
-    _stage_hour_counts,
+    hour_counts_sql,
 )
 from emr_with_custom_metrics_spark.registry import register
 
@@ -149,8 +149,7 @@ _WE_CORE = f"""
     "Rides the staged hour-counts scan.",
 )
 def spc_western_electric(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _stage_hour_counts(spark, sf_dir)
-    return spark.sql(_SPINE_FROM_COUNTS_SPARK + _WE_CORE)
+    return hour_counts_sql(spark, sf_dir, _SPINE_FROM_COUNTS_SPARK + _WE_CORE)
 
 
 # ---------------------------------------------------------------------------
@@ -227,8 +226,7 @@ _PH_CORE = f"""
     "drifts the fixed window normalizes away. Earliest argmax reported.",
 )
 def timeseries_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _stage_hour_counts(spark, sf_dir)
-    return spark.sql(_SPINE_FROM_COUNTS_SPARK + _PH_CORE)
+    return hour_counts_sql(spark, sf_dir, _SPINE_FROM_COUNTS_SPARK + _PH_CORE)
 
 
 # ---------------------------------------------------------------------------
@@ -309,11 +307,9 @@ def stats_cvm_twosample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-running the events scan + histogram. Stage the value
     # histogram behind a lazy checkpoint; tail text unchanged.
     head, _, tail = _CVM_SQL.partition(", vals AS")
-    spark.sql(head + " SELECT * FROM hist").localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("st_cvm_hist")
     return spark.sql(
-        "WITH hist AS (SELECT * FROM st_cvm_hist), vals AS" + tail
+        "WITH hist AS (SELECT * FROM {hist}), vals AS" + tail,
+        hist=spark.sql(head + " SELECT * FROM hist").localCheckpoint(eager=False),
     )
 
 
@@ -433,17 +429,19 @@ def stats_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     # all downstream CTE text is unchanged.
     ubase_part, _, after_ubase = _PERM_SPARK.partition(", obs AS")
     obs_body, _, tail = after_ubase.partition(", hashed AS")
-    spark.sql(ubase_part + " SELECT * FROM ubase").localCheckpoint(
+    ubase = spark.sql(ubase_part + " SELECT * FROM ubase").localCheckpoint(
         eager=False
-    ).createOrReplaceTempView("st_perm_ubase")
-    spark.sql(
-        "WITH ubase AS (SELECT * FROM st_perm_ubase), obs AS"
+    )
+    obs = spark.sql(
+        "WITH ubase AS (SELECT * FROM {ubase}), obs AS"
         + obs_body
-        + " SELECT * FROM obs"
-    ).localCheckpoint(eager=False).createOrReplaceTempView("st_perm_obs")
+        + " SELECT * FROM obs",
+        ubase=ubase,
+    ).localCheckpoint(eager=False)
     return spark.sql(
-        "WITH ubase AS (SELECT * FROM st_perm_ubase), "
-        "obs AS (SELECT * FROM st_perm_obs), hashed AS" + tail
+        "WITH ubase AS (SELECT * FROM {ubase}), "
+        "obs AS (SELECT * FROM {obs}), hashed AS" + tail,
+        ubase=ubase, obs=obs,
     )
 
 

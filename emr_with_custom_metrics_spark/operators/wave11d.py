@@ -519,9 +519,7 @@ def ml_expected_calibration_error(spark: SparkSession, sf_dir: str) -> DataFrame
     # (half, y, bin) projection behind a lazy checkpoint; tail text
     # unchanged.
     head, _, tail = _ECE_SQL.partition(", calib AS")
-    spark.sql(head + " SELECT * FROM binned").localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("st_ece_binned")
     return spark.sql(
-        "WITH binned AS (SELECT * FROM st_ece_binned), calib AS" + tail
+        "WITH binned AS (SELECT * FROM {binned}), calib AS" + tail,
+        binned=spark.sql(head + " SELECT * FROM binned").localCheckpoint(eager=False),
     )

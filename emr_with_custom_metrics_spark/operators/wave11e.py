@@ -146,11 +146,9 @@ def stats_sprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (metric, t, llr) walk behind a lazy checkpoint; tail unchanged.
     full = _SPRT_TMPL.format(epoch_us=_EPOCH_US_SPARK)
     head, _, tail = full.partition(", crossing AS")
-    spark.sql(head + " SELECT * FROM walk").localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("st_sprt_walk")
     return spark.sql(
-        "WITH walk AS (SELECT * FROM st_sprt_walk), crossing AS" + tail
+        "WITH walk AS (SELECT * FROM {walk}), crossing AS" + tail,
+        walk=spark.sql(head + " SELECT * FROM walk").localCheckpoint(eager=False),
     )
 
 

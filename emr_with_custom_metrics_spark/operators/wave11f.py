@@ -335,10 +335,9 @@ def _pgram_sql(engine: str) -> str:
     "hour-counts scan.",
 )
 def timeseries_spectral_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from emr_with_custom_metrics_spark.operators.stats import _stage_hour_counts
+    from emr_with_custom_metrics_spark.operators.stats import hour_counts_sql
 
-    _stage_hour_counts(spark, sf_dir)
-    return spark.sql(_pgram_sql("spark"))
+    return hour_counts_sql(spark, sf_dir, _pgram_sql("spark"))
 
 
 # ---------------------------------------------------------------------------

@@ -268,11 +268,9 @@ def stats_jonckheere_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # value histogram behind a lazy checkpoint; tail text unchanged.
     full = _jt_sql("spark")
     head, _, tail = full.partition(", vals AS")
-    spark.sql(head + " SELECT * FROM hist").localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("st_jt_hist")
     return spark.sql(
-        "WITH hist AS (SELECT * FROM st_jt_hist), vals AS" + tail
+        "WITH hist AS (SELECT * FROM {hist}), vals AS" + tail,
+        hist=spark.sql(head + " SELECT * FROM hist").localCheckpoint(eager=False),
     )
 
 
@@ -732,9 +730,7 @@ def ml_krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unchanged, so all integer predicates and the alpha identity are
     # computed identically.
     head, _, tail = _KALPHA_SQL.partition(", stats AS")
-    spark.sql(head + " SELECT * FROM base").localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("st_ka_base")
     return spark.sql(
-        "WITH base AS (SELECT * FROM st_ka_base), stats AS" + tail
+        "WITH base AS (SELECT * FROM {base}), stats AS" + tail,
+        base=spark.sql(head + " SELECT * FROM base").localCheckpoint(eager=False),
     )

@@ -36,7 +36,7 @@ from emr_with_custom_metrics_spark.catalog import load_table, register_views
 from emr_with_custom_metrics_spark.operators.stats import (
     _SPINE_FROM_COUNTS_DUCK,
     _SPINE_FROM_COUNTS_SPARK,
-    _stage_hour_counts,
+    hour_counts_sql,
     acf_kernel_spark,
 )
 from emr_with_custom_metrics_spark.registry import register
@@ -355,8 +355,7 @@ _HURST_CORE = """
     "data-sized crosses one task.",
 )
 def timeseries_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _stage_hour_counts(spark, sf_dir)
-    return spark.sql(_SPINE_FROM_COUNTS_SPARK + _HURST_CORE)
+    return hour_counts_sql(spark, sf_dir, _SPINE_FROM_COUNTS_SPARK + _HURST_CORE)
 
 
 # ---------------------------------------------------------------------------
@@ -438,8 +437,7 @@ _MASE_CORE = """
     "(metric, t-24) — co-partitioned, no window over the full spine.",
 )
 def timeseries_mase_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _stage_hour_counts(spark, sf_dir)
-    return spark.sql(_SPINE_FROM_COUNTS_SPARK + _MASE_CORE)
+    return hour_counts_sql(spark, sf_dir, _SPINE_FROM_COUNTS_SPARK + _MASE_CORE)
 
 
 # ---------------------------------------------------------------------------

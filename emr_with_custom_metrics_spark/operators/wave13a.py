@@ -49,7 +49,7 @@ from emr_with_custom_metrics_spark.catalog import register_views
 from emr_with_custom_metrics_spark.operators.stats import (
     _SPINE_FROM_COUNTS_DUCK,
     _SPINE_FROM_COUNTS_SPARK,
-    _stage_hour_counts,
+    hour_counts_sql,
 )
 from emr_with_custom_metrics_spark.operators.wave9c import _FDR_SQL
 from emr_with_custom_metrics_spark.operators.wave11a import (
@@ -340,11 +340,11 @@ def stats_ljung_box_resid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one-string chain.
     full = _LB_SPARK.replace(*_SPARK_TS_FIX)
     head, _, tail = full.partition("), calc AS")
-    spark.sql(head + ") SELECT * FROM packed").localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("lb_ar2_packed")
     return spark.sql(
-        "WITH packed AS (SELECT * FROM lb_ar2_packed), calc AS" + tail
+        "WITH packed AS (SELECT * FROM {packed}), calc AS" + tail,
+        packed=spark.sql(head + ") SELECT * FROM packed").localCheckpoint(
+            eager=False
+        ),
     )
 
 
@@ -511,10 +511,10 @@ def basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the compact (order, brand) basket-item table behind a lazy
     # checkpoint; the tail's CTE text is unchanged.
     head, _, tail = _BASKET_SQL.partition(", nb AS")
-    spark.sql(head + " SELECT * FROM bi").localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("st_basket_bi")
-    return spark.sql("WITH bi AS (SELECT * FROM st_basket_bi), nb AS" + tail)
+    return spark.sql(
+        "WITH bi AS (SELECT * FROM {bi}), nb AS" + tail,
+        bi=spark.sql(head + " SELECT * FROM bi").localCheckpoint(eager=False),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -779,5 +779,4 @@ def _kbm_sql(engine: str) -> str:
 def timeseries_kleinberg_multistate(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    _stage_hour_counts(spark, sf_dir)
-    return spark.sql(_kbm_sql("spark"))
+    return hour_counts_sql(spark, sf_dir, _kbm_sql("spark"))

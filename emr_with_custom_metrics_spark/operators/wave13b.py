@@ -312,11 +312,9 @@ def demand_croston_sbc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint; tail text unchanged.
     full = _croston_sql("spark")
     head, _, tail = full.partition(", start AS")
-    spark.sql(head + " SELECT * FROM wk").localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("st_croston_wk")
     return spark.sql(
-        "WITH wk AS (SELECT * FROM st_croston_wk), start AS" + tail
+        "WITH wk AS (SELECT * FROM {wk}), start AS" + tail,
+        wk=spark.sql(head + " SELECT * FROM wk").localCheckpoint(eager=False),
     )
 
 

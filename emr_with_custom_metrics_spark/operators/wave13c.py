@@ -36,7 +36,7 @@ from emr_with_custom_metrics_spark.catalog import register_views
 from emr_with_custom_metrics_spark.operators.stats import (
     _SPINE_FROM_COUNTS_DUCK,
     _SPINE_FROM_COUNTS_SPARK,
-    _stage_hour_counts,
+    hour_counts_sql,
     acf_kernel_spark,
 )
 from emr_with_custom_metrics_spark.operators.wave12b import (
@@ -407,8 +407,7 @@ def _hw_sql(engine: str) -> str:
 def timeseries_holt_winters_seasonal(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    _stage_hour_counts(spark, sf_dir)
-    return spark.sql(_hw_sql("spark"))
+    return hour_counts_sql(spark, sf_dir, _hw_sql("spark"))
 
 
 # ---------------------------------------------------------------------------

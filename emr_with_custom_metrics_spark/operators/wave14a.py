@@ -49,7 +49,7 @@ from emr_with_custom_metrics_spark.catalog import register_views
 from emr_with_custom_metrics_spark.operators.stats import (
     _SPINE_FROM_COUNTS_DUCK,
     _SPINE_FROM_COUNTS_SPARK,
-    _stage_hour_counts,
+    hour_counts_sql,
 )
 from emr_with_custom_metrics_spark.registry import register
 
@@ -400,11 +400,9 @@ def stats_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # value-domain-bounded histogram behind a lazy checkpoint; every
     # downstream CTE's text is unchanged.
     head, _, tail = _ENERGY_TMPL.partition(", tot AS")
-    spark.sql(head + " SELECT * FROM hist").localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("st_energy_hist")
     return spark.sql(
-        "WITH hist AS (SELECT * FROM st_energy_hist), tot AS" + tail
+        "WITH hist AS (SELECT * FROM {hist}), tot AS" + tail,
+        hist=spark.sql(head + " SELECT * FROM hist").localCheckpoint(eager=False),
     )
 
 
@@ -555,5 +553,4 @@ def _theta_sql(engine: str) -> str:
     "hourly reduction; the fold is calendar-bounded.",
 )
 def timeseries_theta_method(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _stage_hour_counts(spark, sf_dir)
-    return spark.sql(_theta_sql("spark"))
+    return hour_counts_sql(spark, sf_dir, _theta_sql("spark"))

@@ -35,7 +35,7 @@ from emr_with_custom_metrics_spark.catalog import register_views
 from emr_with_custom_metrics_spark.operators.stats import (
     _SPINE_FROM_COUNTS_DUCK,
     _SPINE_FROM_COUNTS_SPARK,
-    _stage_hour_counts,
+    hour_counts_sql,
 )
 from emr_with_custom_metrics_spark.registry import register
 
@@ -270,8 +270,7 @@ def _kd_sql(engine: str) -> str:
 def timeseries_kleinberg_depth(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    _stage_hour_counts(spark, sf_dir)
-    return spark.sql(_kd_sql("spark"))
+    return hour_counts_sql(spark, sf_dir, _kd_sql("spark"))
 
 
 # ---------------------------------------------------------------------------

@@ -50,7 +50,7 @@ from emr_with_custom_metrics_spark.catalog import register_views
 from emr_with_custom_metrics_spark.operators.stats import (
     _SPINE_FROM_COUNTS_DUCK,
     _SPINE_FROM_COUNTS_SPARK,
-    _stage_hour_counts,
+    hour_counts_sql,
 )
 from emr_with_custom_metrics_spark.operators.wave13b import (
     _KTRUSS_MUTUAL_SQL,
@@ -375,8 +375,7 @@ def _vr_sql(engine: str) -> str:
     "per metric; constant series flag degenerate.",
 )
 def timeseries_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _stage_hour_counts(spark, sf_dir)
-    return spark.sql(_vr_sql("spark"))
+    return hour_counts_sql(spark, sf_dir, _vr_sql("spark"))
 
 
 # ---------------------------------------------------------------------------

@@ -39,6 +39,7 @@ _ID_SAMPLE = 256
 
 def _twonn_sql(engine: str) -> str:
     strty = "STRING" if engine == "spark" else "VARCHAR"
+    src = "{embeddings}" if engine == "spark" else "embeddings"
     if engine == "spark":
         cos = (
             "aggregate(zip_with(s.qv, b.embedding, (x, y) -> "
@@ -58,13 +59,13 @@ def _twonn_sql(engine: str) -> str:
     WITH samp AS (
         -- deterministic hash-ordered sample: a global TakeOrdered of
         -- {_ID_SAMPLE} rows, bounded by construction
-        SELECT vec_id AS qid, embedding AS qv FROM embeddings
+        SELECT vec_id AS qid, embedding AS qv FROM {src}
         ORDER BY md5(CAST(vec_id AS {strty})), vec_id
         LIMIT {_ID_SAMPLE}
     ), pairs AS (
         SELECT s.qid, b.vec_id AS nid,
                CAST(ROUND(({cos}) * 1000000) AS BIGINT) AS c_e6
-        FROM samp s JOIN embeddings b ON b.vec_id <> s.qid
+        FROM samp s JOIN {src} b ON b.vec_id <> s.qid
     ), ranked AS (
         SELECT qid, nid, c_e6,
                ROW_NUMBER() OVER (PARTITION BY qid
@@ -123,10 +124,9 @@ def _twonn_sql(engine: str) -> str:
 def embedding_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     from emr_with_custom_metrics_spark.catalog import load_fanned
 
-    load_fanned(spark, sf_dir, "embeddings").createOrReplaceTempView(
-        "embeddings"
+    return spark.sql(
+        _twonn_sql("spark"), embeddings=load_fanned(spark, sf_dir, "embeddings")
     )
-    return spark.sql(_twonn_sql("spark"))
 
 
 # ---------------------------------------------------------------------------

@@ -643,7 +643,7 @@ _ANISO_TMPL = f"""
 def _aniso_sql(engine: str) -> str:
     if engine == "spark":
         return _ANISO_TMPL.format(
-            src="embeddings",
+            src="{embeddings}",
             norm=(
                 "sqrt(aggregate(embedding, CAST(0.0 AS DOUBLE), "
                 "(a, v) -> a + CAST(v AS DOUBLE) * v))"
@@ -694,7 +694,6 @@ def _aniso_sql(engine: str) -> str:
 def embedding_anisotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from emr_with_custom_metrics_spark.catalog import load_fanned
 
-    load_fanned(spark, sf_dir, "embeddings").createOrReplaceTempView(
-        "embeddings"
+    return spark.sql(
+        _aniso_sql("spark"), embeddings=load_fanned(spark, sf_dir, "embeddings")
     )
-    return spark.sql(_aniso_sql("spark"))

@@ -737,10 +737,10 @@ def retrieval_dirichlet_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_body = full.partition(", q AS")[2].partition(", cf AS")[0]
     tf_body = full.partition(", tf AS")[2].partition(", matched AS")[0]
     tail = full.partition(", matched AS")[2]
-    spark.sql(
+    tf = spark.sql(
         tok_part + ", q AS" + q_body + ", tf AS" + tf_body
         + " SELECT * FROM tf"
-    ).localCheckpoint(eager=False).createOrReplaceTempView("st_dir_tf")
+    ).localCheckpoint(eager=False)
     return spark.sql(
         """
     WITH doclen AS (
@@ -749,7 +749,7 @@ def retrieval_dirichlet_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), tot AS (
         SELECT CAST(SUM(dl) AS BIGINT) AS t FROM doclen
     ), tf AS (
-        SELECT * FROM st_dir_tf
+        SELECT * FROM {tf}
     ), cf AS (
         SELECT term, CAST(SUM(f) AS BIGINT) AS cf FROM tf GROUP BY term
     ), qconst AS (
@@ -758,6 +758,7 @@ def retrieval_dirichlet_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
                    ln({mu}.0e0 * cf / tt.t) * 1000000000)
                    AS BIGINT)) AS BIGINT) AS k_e9
         FROM cf CROSS JOIN tot tt
-    ), matched AS""".format(mu=_DIR_MU)
-        + tail
+    ), matched AS"""
+        + tail,
+        mu=_DIR_MU, tf=tf,
     )

@@ -27,7 +27,7 @@ from emr_with_custom_metrics_spark.catalog import register_views
 from emr_with_custom_metrics_spark.operators.stats import (
     _SPINE_FROM_COUNTS_DUCK,
     _SPINE_FROM_COUNTS_SPARK,
-    _stage_hour_counts,
+    hour_counts_sql,
 )
 from emr_with_custom_metrics_spark.registry import register
 
@@ -181,27 +181,28 @@ def _tr_oracle() -> str:
 )
 def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("documents",))
-    spark.sql(_TR_TOK_SPARK).localCheckpoint().createOrReplaceTempView("tr_tok")
-    spark.sql(
-        "WITH tok AS (SELECT * FROM tr_tok)" + _TR_VOCAB_SQL
-    ).localCheckpoint().createOrReplaceTempView("tr_vocab")
-    spark.sql(
-        "WITH tok AS (SELECT * FROM tr_tok), vocab AS (SELECT * FROM tr_vocab)"
-        + _TR_EDGES_SQL.replace("WITH seq AS", ", seq AS", 1)
-    ).localCheckpoint().createOrReplaceTempView("tr_edges")
-    spark.sql(
-        "WITH edges AS (SELECT * FROM tr_edges)" + _TR_WDEG_SQL
-    ).localCheckpoint().createOrReplaceTempView("tr_wdeg")
+    tok = spark.sql(_TR_TOK_SPARK).localCheckpoint()
+    vocab = spark.sql(
+        "WITH tok AS (SELECT * FROM {tok})" + _TR_VOCAB_SQL, tok=tok
+    ).localCheckpoint()
+    edges = spark.sql(
+        "WITH tok AS (SELECT * FROM {tok}), vocab AS (SELECT * FROM {vocab})"
+        + _TR_EDGES_SQL.replace("WITH seq AS", ", seq AS", 1),
+        tok=tok, vocab=vocab,
+    ).localCheckpoint()
+    wdeg = spark.sql(
+        "WITH edges AS (SELECT * FROM {edges})" + _TR_WDEG_SQL, edges=edges
+    ).localCheckpoint()
     parts = [
-        "WITH vocab AS (SELECT * FROM tr_vocab),",
-        " edges AS (SELECT * FROM tr_edges),",
-        " wdeg AS (SELECT * FROM tr_wdeg),",
+        "WITH vocab AS (SELECT * FROM {vocab}),",
+        " edges AS (SELECT * FROM {edges}),",
+        " wdeg AS (SELECT * FROM {wdeg}),",
         f" r0 AS ({_TR_R0})",
     ]
     for it in range(1, _TR_ITERS + 1):
         parts.append(_tr_step(f"r{it - 1}", it))
     parts.append(_TR_FINAL)
-    return spark.sql("".join(parts))
+    return spark.sql("".join(parts), vocab=vocab, edges=edges, wdeg=wdeg)
 
 
 # ---------------------------------------------------------------------------
@@ -232,7 +233,7 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale: the series length is calendar-bounded (30 days = 720 hourly
 # points), so the n^2 stage is CONSTANT-size regardless of data volume;
 # the only data-sized stage is the staged hourly-counts reduction
-# (st_hour_counts, shared with the decomposition family).
+# (hour_counts_sql, shared with the decomposition family).
 
 _MP_M = 24
 _MP_EXCL = 12
@@ -373,7 +374,7 @@ _MP_DUCK = (
     "comparison with smallest-index tie-break; dist = sqrt(2m(1-corr)) "
     "derives from the quantized value. Zero-variance windows excluded. "
     "Only data-sized stage: the shared staged hourly reduction "
-    "(st_hour_counts).",
+    "(hour_counts_sql).",
 )
 def timeseries_matrix_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Staged execution (the WITH-inlining lesson): x feeds win + the
@@ -381,7 +382,6 @@ def timeseries_matrix_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # symmetrization union references corr twice — un-staged, Catalyst
     # re-ran the spine build ~5x and the 1.3M-row diagonal window pass
     # 2x (measured 8.1 s -> ~3 s at sf0.1).
-    _stage_hour_counts(spark, sf_dir)
     # Fan the 3600-row dense series across the session's parallelism
     # BEFORE the pair join: its output is ~700x its input, and the
     # event_type equi-key alone has 5 values, so an un-fanned stream
@@ -389,19 +389,20 @@ def timeseries_matrix_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # load_fanned lesson: fan any input whose per-row work dwarfs the
     # scan). The b side is broadcast, so stream partitioning is
     # preserved through the join.
-    spark.sql(
-        _SPINE_FROM_COUNTS_SPARK + dense_hourly_x_guarded('spark')
-    ).repartition(
-        spark.sparkContext.defaultParallelism
-    ).localCheckpoint().createOrReplaceTempView("mp_x")
-    spark.sql(
-        "WITH x AS (SELECT * FROM mp_x)" + _MP_WIN_BODY
-    ).localCheckpoint().createOrReplaceTempView("mp_win")
-    spark.sql(
-        "WITH x AS (SELECT * FROM mp_x), win AS (SELECT * FROM mp_win)"
-        + _MP_CORR_BODY.replace("WITH prod AS", ", prod AS", 1)
-    ).localCheckpoint().createOrReplaceTempView("mp_corr")
-    return spark.sql("WITH corr AS (SELECT * FROM mp_corr)" + _MP_FINAL_SPARK)
+    x = hour_counts_sql(
+        spark, sf_dir, _SPINE_FROM_COUNTS_SPARK + dense_hourly_x_guarded('spark')
+    ).repartition(spark.sparkContext.defaultParallelism).localCheckpoint()
+    win = spark.sql(
+        "WITH x AS (SELECT * FROM {x})" + _MP_WIN_BODY, x=x
+    ).localCheckpoint()
+    corr = spark.sql(
+        "WITH x AS (SELECT * FROM {x}), win AS (SELECT * FROM {win})"
+        + _MP_CORR_BODY.replace("WITH prod AS", ", prod AS", 1),
+        x=x, win=win,
+    ).localCheckpoint()
+    return spark.sql(
+        "WITH corr AS (SELECT * FROM {corr})" + _MP_FINAL_SPARK, corr=corr
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -467,5 +468,7 @@ _SKY_DUCK = f"WITH m AS MATERIALIZED ({_SKY_AGG})" + _SKY_TAIL
 )
 def skyline_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("lineitem",))
-    spark.sql(_SKY_AGG).localCheckpoint().createOrReplaceTempView("sky_m")
-    return spark.sql("WITH m AS (SELECT * FROM sky_m)" + _SKY_TAIL)
+    return spark.sql(
+        "WITH m AS (SELECT * FROM {m})" + _SKY_TAIL,
+        m=spark.sql(_SKY_AGG).localCheckpoint(),
+    )

@@ -213,7 +213,7 @@ _THEILSEN_CORE = """
 """
 
 _THEILSEN_SPARK = (
-    "WITH counts AS (SELECT event_type, h, cnt FROM st_hour_counts)"
+    "WITH counts AS (SELECT event_type, h, cnt FROM {counts})"
     + _THEILSEN_CORE
 )
 _THEILSEN_DUCK = (
@@ -237,14 +237,13 @@ _THEILSEN_DUCK = (
     "intercept = median of the EXACT integer residuals y*1e6 - "
     "slope_e6*t. The pair set is calendar-bounded (435 pairs/metric) — "
     "constant wrt data volume; derives from the staged hourly reduction "
-    "(st_hour_counts). Complements OLS (agg_linear_regression) and "
+    "(hour_counts_sql). Complements OLS (agg_linear_regression) and "
     "isotonic (stats_isotonic_trend) with the outlier-robust estimate.",
 )
 def stats_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from emr_with_custom_metrics_spark.operators.stats import _stage_hour_counts
+    from emr_with_custom_metrics_spark.operators.stats import hour_counts_sql
 
-    _stage_hour_counts(spark, sf_dir)
-    return spark.sql(_THEILSEN_SPARK)
+    return hour_counts_sql(spark, sf_dir, _THEILSEN_SPARK)
 
 
 # ---------------------------------------------------------------------------

@@ -225,7 +225,7 @@ def sample_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # at-or-after it, then the distribution (mean / median / p90) of those
 # deltas. Timestamps floor to whole epoch seconds PER EVENT on both
 # engines (unix_timestamp truncates; FLOOR(epoch()) matches — the
-# st_hour_counts equivalence at 1 s grain), so deltas and order
+# hour-counts equivalence at 1 s grain), so deltas and order
 # statistics are exact integers; median/p90 are lower order statistics
 # with user_id tie-break; only the mean divides, quantized e3.
 

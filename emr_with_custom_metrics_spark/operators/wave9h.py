@@ -21,7 +21,7 @@ from emr_with_custom_metrics_spark.catalog import register_views
 from emr_with_custom_metrics_spark.operators.stats import (
     _SPINE_FROM_COUNTS_DUCK,
     _SPINE_FROM_COUNTS_SPARK,
-    _stage_hour_counts,
+    hour_counts_sql,
     global_rank_guard,
 )
 from emr_with_custom_metrics_spark.registry import register
@@ -108,17 +108,16 @@ _XCORR_CORE = """
     "exact integer sums from one shifted self-join, Pearson is one "
     "fixed-order double expression with two separate sqrts, quantized "
     "e9. Series are calendar-bounded, so the 25-lag sweep is constant-"
-    "size; only the staged hourly reduction (st_hour_counts) is "
+    "size; only the staged hourly reduction (hour_counts_sql) is "
     "data-sized.",
 )
 def timeseries_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # x feeds both the shifted cross product and the b side of the pair
     # join — staged once (the MP/decomposition WITH-inlining lesson).
-    _stage_hour_counts(spark, sf_dir)
-    spark.sql(
-        _SPINE_FROM_COUNTS_SPARK + dense_hourly_x_guarded('spark')
-    ).localCheckpoint().createOrReplaceTempView("xc_x")
-    return spark.sql("WITH x AS (SELECT * FROM xc_x)" + _XCORR_CORE)
+    x = hour_counts_sql(
+        spark, sf_dir, _SPINE_FROM_COUNTS_SPARK + dense_hourly_x_guarded('spark')
+    ).localCheckpoint()
+    return spark.sql("WITH x AS (SELECT * FROM {x})" + _XCORR_CORE, x=x)
 
 
 # ---------------------------------------------------------------------------
@@ -246,11 +245,9 @@ def events_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (metric, half, value) histogram behind a lazy checkpoint; tail
     # text unchanged.
     head, _, tail = _PSI_SPARK.partition(", ref AS")
-    spark.sql(head + " SELECT * FROM hist").localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("st_psi_hist")
     return spark.sql(
-        "WITH hist AS (SELECT * FROM st_psi_hist), ref AS" + tail
+        "WITH hist AS (SELECT * FROM {hist}), ref AS" + tail,
+        hist=spark.sql(head + " SELECT * FROM hist").localCheckpoint(eager=False),
     )
 
 

@@ -1,11 +1,21 @@
-"""One memo for staged relations.
+"""One memo for staged relations, and the one rule for every staged
+relation.
+
+The rule, memo or not: a staged relation is a value. The code that
+stages it keeps the DataFrame and hands it to the SQL that reads it as
+a parameter (``spark.sql("... FROM {pv}", pv=df)``; the text then runs
+through ``str.format``, so a literal brace in it must be doubled) or
+reads it through the DataFrame API. It never names it in the session
+catalog: a temp view is a side effect that any other query in the
+session can re-point, and the only session views are the base tables
+``catalog.register_views`` writes.
 
 Some relations are pure deterministic functions of ``(kind, sf_dir,
 param)`` and feed MANY registered queries: llm/dedup's pair sets (the
 cosine GEMM and the shingle-Jaccard join), the Welch |z|/p-value
 relation of the multiple-testing family (operators/wave9c), the IVF-PQ
 index (operators/wave15c) and the trained unigram vocabulary
-(llm/unigram). The one rule for all of them:
+(llm/unigram). The memo rule for them:
 
 * :func:`staged` builds an entry at most once per SparkSession and keeps
   it in a dict hung on that session object, keyed ``(kind, sf_dir,
@@ -13,10 +23,9 @@ index (operators/wave15c) and the trained unigram vocabulary
   scan-width memos. Entries die with their session; ``newSession()``
   starts empty. No module global holds a staged DataFrame, so there is
   no stale-session eviction to get wrong.
-* A hit returns the SAME object. Consumers hand it to SQL as a
-  parameter (``spark.sql("... FROM {pv}", pv=df)``) or through the
-  DataFrame API, never through a shared temp-view name, so two queries
-  on threads of one session cannot re-point each other's input.
+* A hit returns the SAME object, bound by the rule above, so two
+  queries on threads of one session cannot re-point each other's
+  input.
 * A per-key lock makes concurrent first callers wait for one build.
   The pair, pv and ANN builds checkpoint eagerly, so their cost lands
   in the ledger below; the unigram chain checkpoints lazily (its build

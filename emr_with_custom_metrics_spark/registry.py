@@ -15,6 +15,7 @@ order-insensitive value hash is stable across engines.
 
 from __future__ import annotations
 
+import contextvars
 import os as _os
 import warnings
 from collections.abc import Callable
@@ -59,18 +60,23 @@ _PERF_CONF_SAVED: dict[str, str] = {}
 
 
 # Name of the registered query currently executing (plan construction
-# included), maintained as a stack by the _pin_utc wrapper. Shared
-# resources (plans/stage_memo.staged) read it to record which registered
-# queries consume them, so bench.py's transparency manifest is DERIVED
-# from actual calls instead of a hand-maintained list (r10/r11 VERDICT:
-# the hardcoded literal would silently miss the next memo rider).
-_CURRENT_QUERY: list[str] = []
+# included), set and reset by the _pin_utc wrapper. A context variable,
+# so each thread sees only its own query and a nested call restores
+# its caller's name. Shared resources (plans/stage_memo.staged) read it
+# to record which registered queries consume them, so bench.py's
+# transparency manifest is DERIVED from actual calls instead of a
+# hand-maintained list (r10/r11 VERDICT: the hardcoded literal would
+# silently miss the next memo rider).
+_CURRENT_QUERY: contextvars.ContextVar[str | None] = contextvars.ContextVar(
+    "graft_current_query", default=None
+)
 
 
 def current_query() -> str | None:
-    """The registered query name currently executing, or None outside
-    a registry-wrapped call (direct helper invocations, tests)."""
-    return _CURRENT_QUERY[-1] if _CURRENT_QUERY else None
+    """The registered query name currently executing on this thread, or
+    None outside a registry-wrapped call (direct helper invocations,
+    tests)."""
+    return _CURRENT_QUERY.get()
 
 
 def _pin_utc(fn: QueryFn, query_name: str | None = None) -> QueryFn:
@@ -101,11 +107,11 @@ def _pin_utc(fn: QueryFn, query_name: str | None = None) -> QueryFn:
         except Exception as exc:
             # Perf-only tuning: correctness is unaffected, but never silent.
             warnings.warn(f"registry perf-conf pinning failed: {exc!r}", stacklevel=2)
-        _CURRENT_QUERY.append(query_name or fn.__name__)
+        token = _CURRENT_QUERY.set(query_name or fn.__name__)
         try:
             return fn(spark, sf_dir)
         finally:
-            _CURRENT_QUERY.pop()
+            _CURRENT_QUERY.reset(token)
 
     wrapped.__name__ = fn.__name__
     wrapped.__doc__ = fn.__doc__

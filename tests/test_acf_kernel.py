@@ -8,14 +8,10 @@ the cases where an array fold can drift from the (series, h + lag)
 self-join: a series occupying a single hour, a global spine shorter
 than the 24 lags, zero-filled gaps, and series whose first and last
 hours differ from the global bounds. Also pinned here: the den = 0
-behaviour of each row, and that no row depends on the ``st_hour_counts``
-view the family used to stage.
+behaviour of each row.
 """
 
 from __future__ import annotations
-
-import sys
-import types
 
 import duckdb
 import numpy as np
@@ -24,7 +20,6 @@ import pytest
 from pyspark.errors import ArithmeticException
 
 from tests.compare import assert_frames_match
-from tests.conftest import SF_SMOKE_DIR
 
 ACF_FAMILY = (
     "timeseries_autocorrelation",
@@ -151,96 +146,3 @@ def test_zero_variance_series_divides_by_zero_in_acf_rows(
 ):
     with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
         _run(spark, name, flat_dir)
-
-
-# ---------------------------------------------------------------------------
-# Catalog hygiene: the family stages no st_hour_counts view, and no row
-# relies on one it left behind
-# ---------------------------------------------------------------------------
-
-_PKG = "emr_with_custom_metrics_spark"
-
-
-def _query_fn(spec) -> types.FunctionType:
-    """The undecorated query function inside the registry's wrapper."""
-    return next(
-        c.cell_contents
-        for c in spec.fn.__closure__
-        if isinstance(c.cell_contents, types.FunctionType)
-    )
-
-
-def _package_names() -> dict[str, list]:
-    """Every module-level name in the package, for names a function
-    imports inside its body (they are not in its globals)."""
-    index: dict[str, list] = {}
-    for mname, mod in list(sys.modules.items()):
-        if mname.startswith(_PKG) and mod is not None:
-            for k, v in vars(mod).items():
-                index.setdefault(k, []).append(v)
-    return index
-
-
-def _reachable_strings(fn: types.FunctionType, index: dict[str, list]):
-    """Every string constant a query function can reach: its own
-    literals and those of nested code, module globals it names and
-    package functions it calls (imported at module or function level)."""
-    seen = set()
-    stack = [(fn.__code__, fn.__globals__)]
-    while stack:
-        code, g = stack.pop()
-        if code in seen:
-            continue
-        seen.add(code)
-        for c in code.co_consts:
-            if isinstance(c, str):
-                yield c
-            elif isinstance(c, types.CodeType):
-                stack.append((c, g))
-        for name in code.co_names:
-            for v in [g[name]] if name in g else index.get(name, []):
-                if isinstance(v, str):
-                    yield v
-                elif isinstance(v, types.FunctionType) and (
-                    v.__module__.startswith(_PKG)
-                ):
-                    stack.append((v.__code__, v.__globals__))
-
-
-def _hour_count_readers() -> list[str]:
-    from emr_with_custom_metrics_spark.registry import all_specs
-
-    specs = all_specs()
-    index = _package_names()
-    return sorted(
-        name
-        for name, spec in specs.items()
-        if any(
-            "st_hour_counts" in s
-            for s in _reachable_strings(_query_fn(spec), index)
-        )
-    )
-
-
-@pytest.mark.parametrize("name", ACF_FAMILY)
-def test_acf_family_leaves_no_hour_counts_view(spark, name):
-    from emr_with_custom_metrics_spark.registry import all_specs
-
-    spark.catalog.dropTempView("st_hour_counts")
-    all_specs()[name].fn(spark, SF_SMOKE_DIR).collect()
-    assert "st_hour_counts" not in {t.name for t in spark.catalog.listTables()}
-
-
-def test_hour_count_readers_build_without_a_staged_view(spark):
-    """Every row whose Spark text reads st_hour_counts stages it itself:
-    each builds with the view dropped first, so none relied on the ACF
-    family's old side effect."""
-    from emr_with_custom_metrics_spark.registry import all_specs
-
-    readers = _hour_count_readers()
-    assert "timeseries_seasonal_decompose" in readers, readers
-    assert not set(readers) & set(ACF_FAMILY), readers
-    specs = all_specs()
-    for name in readers:
-        spark.catalog.dropTempView("st_hour_counts")
-        specs[name].fn(spark, SF_SMOKE_DIR)

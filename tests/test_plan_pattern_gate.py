@@ -8,7 +8,10 @@ audit stops being a ritual someone remembers to run and becomes a test
 that fails when skipped.
 
 Builds all ~490 physical plans (no execution) at the smoke SF — the
-suite's one deliberately heavy structural test (~3-5 min).
+suite's one deliberately heavy structural test (~3-5 min). The same
+pass checks the staging idiom: staged relations are bound into SQL as
+parameters, so after every row has been built the session's temp views
+are the base tables and nothing else, each still the plain scan.
 """
 
 from __future__ import annotations
@@ -27,10 +30,21 @@ sys.path.insert(
 def test_every_plan_pattern_flag_is_classified(spark):
     import audit_plan_patterns as app
 
+    from emr_with_custom_metrics_spark.catalog import TABLES
     from emr_with_custom_metrics_spark.registry import all_specs
 
-    found = app.scan(spark, SF_SMOKE_DIR, all_specs())
+    fresh = spark.newSession()  # views earlier tests left do not count
+    found = app.scan(fresh, SF_SMOKE_DIR, all_specs())
     assert found["errors"] == [], found["errors"]
+
+    views = {t.name for t in fresh.catalog.listTables() if t.isTemporary}
+    assert views <= set(TABLES), sorted(views - set(TABLES))
+    fanned = [
+        t for t in sorted(views)
+        if "RoundRobinPartitioning" in fresh.table(t)._jdf.queryExecution()
+        .executedPlan().toString()
+    ]
+    assert not fanned, f"base views re-pointed at a fanned frame: {fanned}"
 
     table = app.load_classification()
     diff = app.diff_vs_classification(found, table)

@@ -3,7 +3,9 @@ the same object, each (kind, sf_dir, param) is built once per session
 even under concurrent first calls, a new session starts empty, every
 memo kind lands in the build ledger and the rider manifest, no module
 global keeps a staged DataFrame, and the pair memos carry their stored
-size to the planner."""
+size to the planner. Also: rows that stage without a memo bind their
+frames too, so they run side by side on threads of one session, and
+the query name the memo ledger reads is per thread."""
 
 from __future__ import annotations
 
@@ -33,6 +35,31 @@ PAIR_RIDERS = (
     "dedup_clusters",
     "dedup_embedding_cosine",
     "graph_triangle_count",
+)
+# Rows that stage per call (no memo): loops and chains of checkpointed
+# frames, the two rows that fan the embeddings scan, and hour-count
+# readers. Each binds its frames as SQL parameters.
+STAGED_ROWS = (
+    "embedding_pca_project",
+    "embedding_intrinsic_dim",
+    "embedding_anisotropy",
+    "text_plsa_topics",
+    "kmeans_embeddings",
+    "text_textrank_keywords",
+    "linkage_fellegi_sunter",
+    "stats_permutation_test",
+    "retrieval_mrr_eval",
+    "anomaly_seasonal_residual",
+    "timeseries_seasonal_decompose",
+    "timeseries_changepoint_binseg",
+    "timeseries_conformal_interval",
+    "timeseries_matrix_profile",
+    "timeseries_cross_correlation",
+    "timeseries_page_hinkley",
+    "spc_western_electric",
+    "stats_runs_test",
+    "stats_theil_sen_trend",
+    "timeseries_burst_kleinberg",
 )
 
 
@@ -131,16 +158,17 @@ def test_memo_hits_leave_no_staging_views(spark):
 
 
 def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
+    return sorted((tuple(r) for r in df.collect()), key=repr)
 
 
 def test_thread_pool_matches_serial(spark):
-    """Eleven memo riders, each twice, on a 4-thread pool in ONE fresh
-    session (so the first builds race too) return their serial rows."""
+    """Eleven memo riders and twenty per-call staged rows, each twice,
+    on a 4-thread pool in ONE fresh session (so the first builds race
+    too) return their serial rows."""
     from emr_with_custom_metrics_spark.registry import all_specs
 
     specs = all_specs()
-    names = PV_RIDERS + UNIGRAM_RIDERS + PAIR_RIDERS
+    names = PV_RIDERS + UNIGRAM_RIDERS + PAIR_RIDERS + STAGED_ROWS
     serial = {n: _rows(specs[n].fn(spark, SF_SMOKE_DIR)) for n in names}
     fresh = spark.newSession()
     with ThreadPoolExecutor(4) as pool:
@@ -149,6 +177,30 @@ def test_thread_pool_matches_serial(spark):
         )
     for name, rows in got:
         assert rows == serial[name], name
+
+
+def test_current_query_is_per_thread(spark):
+    """Two registered functions on two threads, both inside their
+    wrapper at once: each sees its own name, and each name is gone
+    once its call returns."""
+    from emr_with_custom_metrics_spark import registry
+
+    gate = threading.Barrier(2, timeout=30)
+
+    def probe(spark, sf_dir):
+        gate.wait()  # both calls are now inside the wrapper
+        seen = registry.current_query()
+        gate.wait()  # neither returns before both have looked
+        return seen
+
+    calls = {n: registry._pin_utc(probe, n) for n in ("q_one", "q_two")}
+    with ThreadPoolExecutor(2) as pool:
+        got = {n: pool.submit(fn, spark, SF_SMOKE_DIR) for n, fn in calls.items()}
+        assert {n: f.result(timeout=60) for n, f in got.items()} == {
+            "q_one": "q_one", "q_two": "q_two",
+        }
+        assert pool.submit(registry.current_query).result() is None
+    assert registry.current_query() is None
 
 
 def _plan(df) -> str:
