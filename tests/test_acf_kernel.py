@@ -8,10 +8,14 @@ the cases where an array fold can drift from the (series, h + lag)
 self-join: a series occupying a single hour, a global spine shorter
 than the 24 lags, zero-filled gaps, and series whose first and last
 hours differ from the global bounds. Also pinned here: the den = 0
-behaviour of each row.
+behaviour of each row, and that no row depends on the ``st_hour_counts``
+view the family used to stage.
 """
 
 from __future__ import annotations
+
+import sys
+import types
 
 import duckdb
 import numpy as np
@@ -20,6 +24,7 @@ import pytest
 from pyspark.errors import ArithmeticException
 
 from tests.compare import assert_frames_match
+from tests.conftest import SF_SMOKE_DIR
 
 ACF_FAMILY = (
     "timeseries_autocorrelation",
@@ -146,3 +151,103 @@ def test_zero_variance_series_divides_by_zero_in_acf_rows(
 ):
     with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
         _run(spark, name, flat_dir)
+
+
+# ---------------------------------------------------------------------------
+# Catalog hygiene: the family stages no st_hour_counts view, and no row
+# relies on one it left behind
+# ---------------------------------------------------------------------------
+
+_PKG = "emr_with_custom_metrics_spark"
+
+
+def _query_fn(spec) -> types.FunctionType:
+    """The undecorated query function inside the registry's wrapper."""
+    return next(
+        c.cell_contents
+        for c in spec.fn.__closure__
+        if isinstance(c.cell_contents, types.FunctionType)
+    )
+
+
+def _package_names() -> dict[str, list]:
+    """Every module-level name in the package, for names a function
+    imports inside its body (they are not in its globals)."""
+    index: dict[str, list] = {}
+    for mname, mod in list(sys.modules.items()):
+        if mname.startswith(_PKG) and mod is not None:
+            for k, v in vars(mod).items():
+                index.setdefault(k, []).append(v)
+    return index
+
+
+def _reachable_functions(fn: types.FunctionType, index: dict[str, list]):
+    """Every package function a query function can reach: itself and
+    the package functions it calls (imported at module or function
+    level), through nested code too."""
+    seen = set()
+    stack = [(fn.__code__, fn.__globals__)]
+    while stack:
+        code, g = stack.pop()
+        if code in seen:
+            continue
+        seen.add(code)
+        for c in code.co_consts:
+            if isinstance(c, types.CodeType):
+                stack.append((c, g))
+        for name in code.co_names:
+            for v in [g[name]] if name in g else index.get(name, []):
+                if isinstance(v, types.FunctionType) and (
+                    v.__module__.startswith(_PKG)
+                ):
+                    yield v
+                    stack.append((v.__code__, v.__globals__))
+
+
+def _hour_count_readers() -> list[str]:
+    """Rows that read the staged per-(series, hour) counts, i.e. reach
+    ``operators.stats.hour_counts_sql``."""
+    from emr_with_custom_metrics_spark.operators.stats import hour_counts_sql
+    from emr_with_custom_metrics_spark.registry import all_specs
+
+    specs = all_specs()
+    index = _package_names()
+    return sorted(
+        name
+        for name, spec in specs.items()
+        if any(
+            f is hour_counts_sql
+            for f in _reachable_functions(_query_fn(spec), index)
+        )
+    )
+
+
+@pytest.mark.parametrize("name", ACF_FAMILY)
+def test_acf_family_leaves_no_hour_counts_view(spark, name):
+    from emr_with_custom_metrics_spark.catalog import TABLES
+    from emr_with_custom_metrics_spark.registry import all_specs
+
+    spark.catalog.dropTempView("st_hour_counts")
+    all_specs()[name].fn(spark, SF_SMOKE_DIR).collect()
+    views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    assert "st_hour_counts" not in views
+    assert views <= set(TABLES), sorted(views - set(TABLES))
+
+
+def test_hour_count_readers_build_without_a_staged_view(spark):
+    """Every row that reads the staged hour counts binds them itself
+    (hour_counts_sql): each builds in a session holding no view but the
+    base tables it registers, so none relied on the ACF family's old
+    st_hour_counts side effect, and none leaves a view of its own."""
+    from emr_with_custom_metrics_spark.catalog import TABLES
+    from emr_with_custom_metrics_spark.registry import all_specs
+
+    readers = _hour_count_readers()
+    assert "timeseries_seasonal_decompose" in readers, readers
+    assert not set(readers) & set(ACF_FAMILY), readers
+    specs = all_specs()
+    for name in readers:
+        fresh = spark.newSession()
+        specs[name].fn(fresh, SF_SMOKE_DIR)
+        views = {t.name for t in fresh.catalog.listTables() if t.isTemporary}
+        assert views <= set(TABLES), (name, sorted(views - set(TABLES)))
