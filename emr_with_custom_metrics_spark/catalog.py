@@ -11,7 +11,6 @@ downstream query regardless of the physical layout behind the path.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 from typing import TypeVar
 
@@ -56,7 +55,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ~350 call sites × best-of-2 this was ~15% of the whole bench. No DATA
     is cached: every action still scans parquet; DataFrames are immutable
     so sharing the relation is safe. The memo dies with the session
-    object; ``SPARK_GRAFT_NO_PLAN_MEMO=1`` disables it for debugging.
+    object.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
@@ -68,10 +67,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _memoized(spark: SparkSession, attr: str, key: tuple[str, str], build: Callable[[], _T]) -> _T:
     """``build()`` memoized in a dict hung on the session object as
-    ``attr``; unmemoized under ``SPARK_GRAFT_NO_PLAN_MEMO=1`` or on a
-    session proxy that refuses new attributes."""
-    if os.environ.get("SPARK_GRAFT_NO_PLAN_MEMO") == "1":
-        return build()
+    ``attr``; unmemoized on a session proxy that refuses new
+    attributes."""
     memo = getattr(spark, attr, None)
     if memo is None:
         memo = {}

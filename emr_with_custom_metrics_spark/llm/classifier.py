@@ -31,11 +31,10 @@ this belongs to the mandated §2B training-data-pipeline surface.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.registry import register
 
 _LR_BUCKETS = 128  # hashed unigram feature buckets (+1 bias slot)
@@ -59,12 +58,12 @@ _LR_MOMENTUM = 0.7
 # comfortably fits ONE task, so the whole GD loop fuses into a single
 # job (see train_local below) instead of paying ~200 ms of job round-trip
 # per round. Above it, the distributed per-round treeAggregate shape runs
-# unchanged. Env-tunable so a cluster profile can move the cutover.
-_LR_LOCAL_ROWS = int(os.environ.get("SPARK_GRAFT_LR_LOCAL_ROWS", "300000"))
+# unchanged.
+_LR_LOCAL_ROWS = 300000
 _HEX = "0123456789abcdef"
 
 
-def _lr_sql(dialect: str, feats_ref: str | None = None) -> str:
+def _lr_sql(d: Dialect, feats_ref: str | None = None) -> str:
     """One template, two dialects: hashed-BoW logistic regression trained
     with ``_LR_ITERS`` full-batch Jacobi-preconditioned heavy-ball GD
     rounds, then per-doc scoring. Plain GD at the smoothness-safe rate
@@ -80,29 +79,21 @@ def _lr_sql(dialect: str, feats_ref: str | None = None) -> str:
     bucket/grid pipeline per round (measured 37 s -> seconds at sf0.01).
     The DuckDB oracle keeps the pure single-statement form (MATERIALIZED
     CTEs give it the same effect)."""
-    d = _LR_BUCKETS + 1  # slot 0 = bias
-    if dialect == "spark":
-        split = "explode(split(text, ' ')) AS term"
-        rngd = f"(SELECT explode(sequence(0, {d - 1})) AS j)"
-        seqd = f"sequence(0, {d - 1})"
-        idx = lambda arr, k: f"element_at({arr}, {k})"  # noqa: E731
-        tx = "transform"
-        fold = lambda terms: f"aggregate({terms}, CAST(0.0 AS DOUBLE), (a, x) -> a + x)"  # noqa: E731
+    nd = _LR_BUCKETS + 1  # slot 0 = bias
+    split = f"{d.terms} AS term"
+    idx, tx, fold = d.idx, d.tx, d.fold_sum
+    # d.mat: without it DuckDB's optimizer re-plans the inlined chain
+    # and planning time grows super-linearly in rounds (the kcore lesson)
+    mat = d.mat
+    if d is SPARK:
+        rngd = f"(SELECT explode(sequence(0, {nd - 1})) AS j)"
+        seqd = f"sequence(0, {nd - 1})"
         mk_list = lambda val: (f"transform(sort_array(collect_list(struct(j, {val}))), "  # noqa: E731
                                f"s -> s.{val})")
-        mat = ""  # Spark SQL has no MATERIALIZED keyword
     else:
-        split = "UNNEST(string_split(text, ' ')) AS term"
-        rngd = f"(SELECT UNNEST(range({d})) AS j)"
-        seqd = f"range(0, {d})"
-        idx = lambda arr, k: f"{arr}[{k}]"  # noqa: E731
-        tx = "list_transform"
-        fold = lambda terms: (f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), {terms}), "  # noqa: E731
-                              "(a, x) -> a + x)")
+        rngd = f"(SELECT UNNEST(range({nd})) AS j)"
+        seqd = f"range(0, {nd})"
         mk_list = lambda val: f"list({val} ORDER BY j)"  # noqa: E731
-        # Without this, DuckDB's optimizer re-plans the inlined chain and
-        # planning time grows super-linearly in rounds (the kcore lesson)
-        mat = "MATERIALIZED "
 
     nib = lambda i: f"(instr('{_HEX}', substr(md5(term), {i}, 1)) - 1)"  # noqa: E731
 
@@ -223,7 +214,7 @@ def _lr_sql(dialect: str, feats_ref: str | None = None) -> str:
 
 @register(
     "text_quality_classifier",
-    oracle=_lr_sql("duckdb"),
+    oracle=_lr_sql(DUCK),
     doc="Linear document classifier TRAINED in-engine: logistic "
     "regression over 128 hashed-unigram buckets (+bias), 24 full-batch "
     "Jacobi-preconditioned heavy-ball GD rounds (rate 0.2, momentum "
@@ -248,7 +239,7 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_views(spark, sf_dir, ("documents",))
     d = _LR_BUCKETS + 1
-    feats = spark.sql(_lr_sql("spark", "__feats_only__")).localCheckpoint(eager=True)
+    feats = spark.sql(_lr_sql(SPARK, "__feats_only__")).localCheckpoint(eager=True)
     n = feats.count()
 
     def sig9(w: list[float], dp: int):

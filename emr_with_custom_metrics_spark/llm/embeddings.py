@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from emr_with_custom_metrics_spark.catalog import load_fanned, load_table
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.registry import register
 
 
@@ -121,7 +122,7 @@ _KM_ITERS = 3
 _KM_D = 64
 
 
-def _km_frags(dialect: str):
+def _km_frags(d: Dialect):
     """Dialect-bound SQL fragments shared by the one-string chain
     (_kmeans_sql — the DuckDB oracle and the reference form) and the
     staged Spark executor (_kmeans_spark_staged). The per-vector argmin
@@ -130,11 +131,9 @@ def _km_frags(dialect: str):
     aggregable map-side, no per-vector window sort (measured 3.10 → ~2 s
     at sf0.1 vs the ROW_NUMBER form); DuckDB keeps ROW_NUMBER, its
     natural argmin."""
-    if dialect == "spark":
+    idx, tx, fold = d.idx, d.tx, d.fold_sum
+    if d is SPARK:
         rng = f"(SELECT explode(sequence(0, {_KM_D - 1})) AS i)"
-        idx = lambda arr, k: f"element_at({arr}, {k})"  # noqa: E731
-        tx = "transform"
-        fold = lambda terms: f"aggregate({terms}, CAST(0.0 AS DOUBLE), (a, x) -> a + x)"  # noqa: E731
         seq = f"sequence(0, {_KM_D - 1})"
         collect = "transform(sort_array(collect_list(struct(i, mu))), s -> s.mu)"
         emb = lambda k: f"CAST(element_at(embedding, {k}) AS DOUBLE)"  # noqa: E731
@@ -150,10 +149,6 @@ def _km_frags(dialect: str):
         )
     else:
         rng = f"(SELECT UNNEST(range({_KM_D})) AS i)"
-        idx = lambda arr, k: f"{arr}[{k}]"  # noqa: E731
-        tx = "list_transform"
-        fold = lambda terms: (f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), {terms}), "  # noqa: E731
-                              "(a, x) -> a + x)")
         seq = f"range(0, {_KM_D})"
         collect = "list(mu ORDER BY i)"
         emb = lambda k: f"CAST(embedding[{k}] AS DOUBLE)"  # noqa: E731
@@ -177,7 +172,7 @@ def _km_frags(dialect: str):
     return rng, idx, tx, fold, seq, collect, emb, d2, asn, afin
 
 
-def _kmeans_sql(dialect: str) -> str:
+def _kmeans_sql(d: Dialect) -> str:
     """One template, two dialects (the PCA/LR recipe applied to Lloyd's
     k-means — r6 VERDICT item 5): every float reduction is either an
     ORDERED left fold over the 64 dims (identical IEEE op sequence in
@@ -188,7 +183,7 @@ def _kmeans_sql(dialect: str) -> str:
     tie-breaks on (d2, cid) via ROW_NUMBER, so boundary assignments are
     deterministic too. Empty clusters keep their previous centroid
     (COALESCE against the prior round)."""
-    rng, idx, tx, fold, seq, collect, emb, d2, asn, afin = _km_frags(dialect)
+    rng, idx, tx, fold, seq, collect, emb, d2, asn, afin = _km_frags(d)
 
     parts = [f"""
     WITH c0 AS (
@@ -230,7 +225,7 @@ def _kmeans_sql(dialect: str) -> str:
     # Upgraded rows-only → hash-oracled in round 7 (r6 VERDICT item 5) via
     # the ordered-fold chained-CTE recipe: assignments, centroid updates,
     # and inertia are all deterministic and replayed identically by DuckDB.
-    oracle=_kmeans_sql("duckdb"),
+    oracle=_kmeans_sql(DUCK),
     doc="Lloyd's k-means (k=8, d=64, 3 iterations) as one generated CTE "
     "chain, hash-verified end to end: deterministic k-lowest-vec_id "
     "init, distances as ORDERED folds over the dims (identical IEEE "
@@ -265,9 +260,9 @@ def _kmeans_spark_staged(spark: SparkSession) -> DataFrame:
     one per assignment pass plus the seed — with arithmetic (and
     therefore answers) identical:
     each CTE's SQL text is unchanged, it just executes once. The DuckDB
-    oracle keeps the one-string chain (_kmeans_sql('duckdb')): DuckDB
+    oracle keeps the one-string chain (_kmeans_sql(DUCK)): DuckDB
     materializes multi-referenced CTEs itself."""
-    frag = _km_frags("spark")
+    frag = _km_frags(SPARK)
     rng, idx, tx, fold, seq, collect, emb, d2, asn, afin = frag
     cents = spark.sql(
         f"""
@@ -368,7 +363,7 @@ def _kmeans_df(spark: SparkSession, sf_dir: str, k: int = 8, iters: int = 3) -> 
 _PCA_ITERS = 60
 
 
-def _pca_sql(dialect: str) -> str:
+def _pca_sql(d: Dialect) -> str:
     """One template, two dialects: PCA first-component projection as pure
     SQL — covariance (rounded to 6 dp, which makes both engines' matrices
     BIT-IDENTICAL; proven by embedding_covariance's hash-green history),
@@ -376,21 +371,15 @@ def _pca_sql(dialect: str) -> str:
     mat-vec and norm are ORDERED left folds (identical IEEE op sequence in
     both engines), then the projection fold per vector. The only
     engine-variant parts are list-indexing / fold spellings."""
-    if dialect == "spark":
+    idx, tx, fold = d.idx, d.tx, d.fold_sum
+    if d is SPARK:
         rng8 = "(SELECT explode(sequence(0, 7)) AS i)"
-        idx = lambda arr, k: f"element_at({arr}, {k})"  # noqa: E731
-        tx = "transform"
-        fold = lambda terms: f"aggregate({terms}, CAST(0.0 AS DOUBLE), (a, x) -> a + x)"  # noqa: E731
         seq8 = "sequence(0, 7)"
         mk_c = ("SELECT transform(sort_array(collect_list(struct(k, cov))), "
                 "s -> s.cov) AS m FROM covfull")
         emb = lambda k: f"CAST(element_at(embedding, {k}) AS DOUBLE)"  # noqa: E731
     else:
         rng8 = "(SELECT UNNEST(range(8)) AS i)"
-        idx = lambda arr, k: f"{arr}[{k}]"  # noqa: E731
-        tx = "list_transform"
-        fold = lambda terms: (f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), {terms}), "  # noqa: E731
-                              "(a, x) -> a + x)")
         seq8 = "range(0, 8)"
         mk_c = "SELECT list(CAST(cov AS DOUBLE) ORDER BY k) AS m FROM covfull"
         emb = lambda k: f"CAST(embedding[{k}] AS DOUBLE)"  # noqa: E731
@@ -425,7 +414,7 @@ def _pca_sql(dialect: str) -> str:
 
 @register(
     "embedding_pca_project",
-    oracle=_pca_sql("duckdb"),
+    oracle=_pca_sql(DUCK),
     doc="PCA first-principal-component projection, end to end in-engine: "
     "distributed covariance (the only corpus-scale pass — d^2 co-moments "
     "cross the shuffle, never vectors), 60 power-iteration rounds on the "
@@ -510,7 +499,7 @@ def _pca_project_one_statement(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set(key, "1000")
     try:
         # spark.sql analyzes eagerly, so the bump is only needed here
-        return spark.sql(_pca_sql("spark"))
+        return spark.sql(_pca_sql(SPARK))
     finally:
         if old is None:
             spark.conf.unset(key)
@@ -536,8 +525,8 @@ _RP_DIMS = 64
 _RP_K = 16
 
 
-def _rp_sql(dialect: str) -> str:
-    if dialect == "spark":
+def _rp_sql(d: Dialect) -> str:
+    if d is SPARK:
         planes = """
         SELECT d.id AS d, k.id AS k,
                2 * (CAST(conv(substring(md5(concat('rp|',
@@ -594,7 +583,7 @@ def _rp_sql(dialect: str) -> str:
 
 @register(
     "embedding_random_projection",
-    oracle=_rp_sql("duck"),
+    oracle=_rp_sql(DUCK),
     doc="Johnson-Lindenstrauss random projection 64 -> 16 dims via "
     "md5-derived Rademacher (+/-1) hyperplanes over 1e-6-quantized "
     "integer vectors (the similarity_ann_lsh sign family — no gaussians, "
@@ -611,4 +600,4 @@ def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from emr_with_custom_metrics_spark.catalog import register_views
 
     register_views(spark, sf_dir, ("embeddings",))
-    return spark.sql(_rp_sql("spark"))
+    return spark.sql(_rp_sql(SPARK))

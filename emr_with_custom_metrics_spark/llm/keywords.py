@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.operators.stats import global_rank_guard
 from emr_with_custom_metrics_spark.registry import register
 
@@ -301,28 +302,18 @@ _ZIPF_TAIL = """
     FROM mom
 """
 
-_ZIPF_SPARK = (
-    """
-    WITH words AS (
-        SELECT explode(split(text, ' ')) AS tok FROM documents
-    )
-"""
-    + _ZIPF_TAIL.format(guard=global_rank_guard("spark", "r"))
-)
 
-_ZIPF_DUCK = (
-    """
+def _zipf_sql(d: Dialect) -> str:
+    return f"""
     WITH words AS (
-        SELECT UNNEST(string_split(text, ' ')) AS tok FROM documents
+        SELECT {d.terms} AS tok FROM documents
     )
-"""
-    + _ZIPF_TAIL.format(guard=global_rank_guard("duck", "r"))
-)
+""" + _ZIPF_TAIL.format(guard=global_rank_guard(d, "r"))
 
 
 @register(
     "text_zipf_fit",
-    oracle=_ZIPF_DUCK,
+    oracle=_zipf_sql(DUCK),
     doc="Zipf-law fit of the corpus frequency spectrum: OLS slope of "
     "ln(freq) on ln(rank) plus intercept and r² — natural text sits near "
     "slope -1, so the fit doubles as a generation-artifact detector for "
@@ -335,4 +326,4 @@ _ZIPF_DUCK = (
 )
 def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_ZIPF_SPARK)
+    return spark.sql(_zipf_sql(SPARK))

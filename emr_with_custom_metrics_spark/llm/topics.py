@@ -20,9 +20,10 @@ playbook):
   re-quantized to 1e-9 immediately.
 
 Spark stages the count matrix and each round's parameter tables behind
-localCheckpoints bound into the next statement (Spark inlines
-WITH-chains per reference — un-staged, round 2's E-step would
-recompute round 1's entire subtree per z-branch); DuckDB materializes
+eager localCheckpoints (they run while the row is built) bound into the
+next statement (Spark inlines WITH-chains per reference — un-staged,
+round 2's E-step would recompute round 1's entire subtree per
+z-branch); DuckDB materializes
 the same chain as MATERIALIZED CTEs in one statement.
 
 Scale posture: the only data-sized stage is the (doc, word) count
@@ -37,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, SPARK
 from emr_with_custom_metrics_spark.registry import register
 
 _HEX = "0123456789abcdef"
@@ -57,9 +59,6 @@ def _h16(seed: str, key: str) -> str:
 
 
 # ---- stage 0: (doc, word) counts over the top-|V| vocabulary ----------
-_TOK_SPARK = "SELECT doc_id, explode(split(text, ' ')) AS w FROM documents"
-_TOK_DUCK = "SELECT doc_id, UNNEST(string_split(text, ' ')) AS w FROM documents"
-
 _WD_TMPL = """
     WITH tok AS ({tok}),
     voc AS (
@@ -98,9 +97,9 @@ _PZD0_TMPL = """
 # cut a cheap re-read. SUM(c) over the per-doc counts equals COUNT(*)
 # over tokens exactly, so the top-{vocab} cut and the kept counts are
 # identical.
-_TC_SPARK = """
+_TC_SPARK = f"""
     SELECT doc_id, w, CAST(COUNT(*) AS BIGINT) AS c
-    FROM (SELECT doc_id, explode(split(text, ' ')) AS w FROM documents)
+    FROM (SELECT doc_id, {SPARK.terms} AS w FROM documents)
     GROUP BY doc_id, w
 """
 
@@ -220,7 +219,9 @@ def _fills(wd: str, pwz0: str, pzd0: str, e1: str, pwz1: str, pzd1: str,
 def _duck_sql() -> str:
     f = _fills("wd", "pwz0", "pzd0", "e1", "pwz1", "pzd1", "e2", "pwz2", "pzd2")
     parts = [
-        ("wd", _WD_TMPL.format(tok=_TOK_DUCK, vocab=_VOCAB)),
+        ("wd", _WD_TMPL.format(
+            tok=f"SELECT doc_id, {DUCK.terms} AS w FROM documents", vocab=_VOCAB
+        )),
         ("pwz0", _PWZ0_TMPL.format(wd="wd", h=f["h"], e9=_E9)),
         ("pzd0", _PZD0_TMPL.format(wd="wd", third=f["third"])),
         ("e1", _E_TMPL.format(wd="wd", pwz="pwz0", pzd="pzd0", e9=_E9)),
@@ -248,9 +249,9 @@ def _duck_sql() -> str:
     "re-quantized immediately — the whole training trajectory "
     "hash-replays in DuckDB as chained MATERIALIZED CTEs. Spark stages "
     "the count matrix and each round's parameter tables behind "
-    "localCheckpoint (WITH-inlining would recompute round 1 per "
-    "round-2 z-branch). Output: top-5 words per topic + corpus topic "
-    "shares. Only data-sized stage: the map-side-combinable (doc, "
+    "eager localCheckpoints, run while the row is built (WITH-inlining "
+    "would recompute round 1 per round-2 z-branch). Output: top-5 words "
+    "per topic + corpus topic shares. Only data-sized stage: the map-side-combinable (doc, "
     "word) count explode; P(w|z) is 90 rows and broadcasts.",
 )
 def text_plsa_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -265,10 +266,13 @@ def text_plsa_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pwz0/pzd0/e1/e2), e1/e2 (2 refs each: the two M-step reductions), and
     # pzd2 (2 refs in the report). Single-consumer tables (pwz0/pzd0/
     # pwz1/pzd1/pwz2) stay PLAIN frames — inlined once, zero extra
-    # jobs. Checkpoints are lazy, so the whole EM chain collapses into one
-    # action; each checkpoint RDD still materializes exactly once and is
-    # reused by every consumer (same arithmetic, same rows; per-stage A/B
-    # 4.38 -> 2.64 s at sf0.1).
+    # jobs. Each of the five ``localCheckpoint()`` calls is eager
+    # (pyspark's default), so building the row runs them in order, each
+    # materialized once and reused by every consumer (same arithmetic,
+    # same rows; per-stage A/B 4.38 -> 2.64 s at sf0.1). Measured with
+    # the status tracker on local[2]: 11 jobs while building at sf0.001
+    # (10 on a warm session) and 3 more for the report's collect; 23 and
+    # 7 at sf0.1.
     # Each template slot is filled with a ``{name}`` placeholder and the
     # frame itself is bound as that SQL parameter.
     tc = spark.sql(_TC_SPARK).localCheckpoint()

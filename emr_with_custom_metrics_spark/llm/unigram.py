@@ -45,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.plans import stage_memo
 from emr_with_custom_metrics_spark.registry import register
 
@@ -78,7 +79,7 @@ _LOGPROB_SUM = (
 )
 
 
-def _unigram_sql(dialect: str, tail: str) -> str:
+def _unigram_sql(d: Dialect, tail: str) -> str:
     """One template, two dialects; ``tail`` picks the deliverable
     ('train' → final vocabulary, 'score' → per-doc Viterbi log-prob).
     Only the DuckDB dialect is executed as a single statement (DuckDB
@@ -95,8 +96,8 @@ def _unigram_sql(dialect: str, tail: str) -> str:
     # MATERIALIZED, byte-identical results (the wordpiece-oracle
     # lesson applied to the whole chain). Spark has no such keyword;
     # its runtime stages via localCheckpoint instead (_ug_chain).
-    mat = "MATERIALIZED " if dialect != "spark" else ""
-    if dialect == "spark":
+    mat = d.mat
+    if d is SPARK:
         mapagg = "map_from_entries(collect_list(struct(piece, lp)))"
         lookup = lambda key: f"try_element_at(vm, {key})"  # noqa: E731
         gen_i = "LATERAL VIEW explode(sequence(0, n - 1)) gi AS i"
@@ -146,8 +147,7 @@ def _unigram_sql(dialect: str, tail: str) -> str:
     parts = [f"""
     WITH words AS {mat}(
       SELECT w, CAST(COUNT(*) AS BIGINT) AS c, CAST(LENGTH(w) AS INT) AS n
-      FROM (SELECT {'explode(split(text, " "))' if dialect == 'spark'
-                    else "UNNEST(string_split(text, ' '))"} AS w
+      FROM (SELECT {d.terms} AS w
             FROM documents) t
       WHERE LENGTH(w) > 0 GROUP BY w),
     cand AS {mat}(
@@ -212,8 +212,7 @@ def _unigram_sql(dialect: str, tail: str) -> str:
       FROM words, vmap{R}),
     docw AS (
       SELECT doc_id,
-             {'explode(split(text, " "))' if dialect == 'spark'
-              else "UNNEST(string_split(text, ' '))"} AS w
+             {d.terms} AS w
       FROM documents)
     SELECT d.doc_id,
            CAST(COUNT(*) AS BIGINT) AS n_words,
@@ -375,7 +374,7 @@ def _ug_spark(spark: SparkSession, sf_dir: str, tail: str) -> DataFrame:
 
 @register(
     "text_unigram_lm_train",
-    oracle=_unigram_sql("duckdb", "train"),
+    oracle=_unigram_sql(DUCK, "train"),
     doc=_UG_DOC.format(what="TRAINED in-engine (final vocabulary: piece, "
                        "log-prob, count-rank)"),
 )
@@ -385,7 +384,7 @@ def text_unigram_lm_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_unigram_lm_score",
-    oracle=_unigram_sql("duckdb", "score"),
+    oracle=_unigram_sql(DUCK, "score"),
     doc=_UG_DOC.format(what="APPLIED in-engine (per-doc word count + "
                        "summed Viterbi log-prob under the trained "
                        "vocabulary — the compression objective)"),

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from emr_with_custom_metrics_spark.catalog import load_table
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.registry import register
 
 
@@ -763,28 +764,12 @@ _RFM_TAIL = """
     FROM labeled GROUP BY segment
 """
 
-_RFM_SPARK = (
-    """
-    WITH cust AS (
-        SELECT o_custkey,
-               CAST(FLOOR((unix_timestamp(g.maxd) - unix_timestamp(MAX(o_orderdate)))
-                    / 86400) AS BIGINT) AS recency_days,
-               COUNT(*) AS frequency,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) * 100 AS BIGINT)
-                   AS monetary_c
-        FROM orders
-        CROSS JOIN (SELECT MAX(o_orderdate) AS maxd FROM orders) g
-        GROUP BY o_custkey, g.maxd
-    )
-"""
-    + _RFM_TAIL
-)
 
-_RFM_DUCK = (
-    """
+def _rfm_sql(d: Dialect) -> str:
+    return f"""
     WITH cust AS (
         SELECT o_custkey,
-               CAST(FLOOR((epoch(g.maxd) - epoch(MAX(o_orderdate)))
+               CAST(FLOOR(({d.secs("g.maxd")} - {d.secs("MAX(o_orderdate)")})
                     / 86400) AS BIGINT) AS recency_days,
                COUNT(*) AS frequency,
                CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) * 100 AS BIGINT)
@@ -793,14 +778,12 @@ _RFM_DUCK = (
         CROSS JOIN (SELECT MAX(o_orderdate) AS maxd FROM orders) g
         GROUP BY o_custkey, g.maxd
     )
-"""
-    + _RFM_TAIL
-)
+""" + _RFM_TAIL
 
 
 @register(
     "customer_rfm_segments",
-    oracle=_RFM_DUCK,
+    oracle=_rfm_sql(DUCK),
     doc="RFM segmentation: per-customer recency (days before the corpus "
     "max order date), frequency, and exact-DECIMAL monetary cents, each "
     "NTILE(5)-scored with deterministic customer-id tie-breaks, then "
@@ -816,7 +799,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from emr_with_custom_metrics_spark.catalog import register_views
 
     register_views(spark, sf_dir, ("orders",))
-    return spark.sql(_RFM_SPARK)
+    return spark.sql(_rfm_sql(SPARK))
 
 
 # ---------------------------------------------------------------------------

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.registry import register
 
 # Deterministic 50/50 arm assignment: first md5 nibble of the unit id.
@@ -195,9 +196,8 @@ def stats_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Classical seasonal decomposition (trend + seasonal + remainder)
 # ---------------------------------------------------------------------------
-# The arithmetic below the spine is IDENTICAL TEXT in both dialects; only
-# the integer-spine generator differs (Spark sequence() vs DuckDB
-# generate_series — both produce the same BIGINT hour range).
+# The arithmetic below the spine is IDENTICAL TEXT in both dialects; the
+# counts and hour spine above it come from spine_from_counts(d).
 
 _DECOMP_CORE = """
     , dense AS (
@@ -241,11 +241,11 @@ _DECOMP_CORE = """
 # reference, so the un-staged plan re-ran the events scan per consumer
 # (the rolling-actives lesson). DuckDB materializes CTEs, so the oracle
 # keeps the single-statement form with the counts CTE first.
-_COUNTS_SPARK = """
+_COUNTS_SPARK = f"""
     SELECT event_type,
-           CAST(FLOOR(unix_timestamp(ts) / 3600) AS BIGINT) AS h,
+           CAST(FLOOR({SPARK.epoch_s} / 3600) AS BIGINT) AS h,
            COUNT(*) AS cnt
-    FROM events GROUP BY event_type, CAST(FLOOR(unix_timestamp(ts) / 3600) AS BIGINT)
+    FROM events GROUP BY event_type, CAST(FLOOR({SPARK.epoch_s} / 3600) AS BIGINT)
 """
 
 _SPINE_FROM_COUNTS_SPARK = """
@@ -274,6 +274,13 @@ _SPINE_FROM_COUNTS_DUCK = """
                           FROM counts) b) g
     )
 """
+
+
+def spine_from_counts(d: Dialect) -> str:
+    """``counts`` and the dense (series, hour) ``spine`` CTEs. The shape
+    differs, not just the spelling: Spark reads the staged ``{counts}``
+    (run it through :func:`hour_counts_sql`), DuckDB counts in a CTE."""
+    return _SPINE_FROM_COUNTS_SPARK if d is SPARK else _SPINE_FROM_COUNTS_DUCK
 
 
 # Dense hourly series body shared by the matrix profile (wave9d) and
@@ -307,21 +314,12 @@ _SPINE_BUDGET_MSG = (
 )
 
 
-def dense_hourly_x_guarded(engine: str) -> str:
+def dense_hourly_x_guarded(d: Dialect) -> str:
     """``_DENSE_HOURLY_X_BODY`` with an in-plan, per-row budget check:
     execution (not analysis) raises the moment any series index passes
     the budget, on BOTH engines (Spark ``assert_true``, DuckDB
     ``error()``) — the answer is untouched while the bound holds."""
-    if engine == "spark":
-        guard = (
-            f"assert_true(g.t < {_SPINE_BUDGET_HOURS}, "
-            f"'{_SPINE_BUDGET_MSG}') IS NULL"
-        )
-    else:
-        guard = (
-            f"CASE WHEN g.t < {_SPINE_BUDGET_HOURS} THEN TRUE "
-            f"ELSE error('{_SPINE_BUDGET_MSG}') END"
-        )
+    guard = d.guard(f"g.t < {_SPINE_BUDGET_HOURS}", _SPINE_BUDGET_MSG)
     return f"SELECT g.* FROM ({_DENSE_HOURLY_X_BODY}) g WHERE {guard}"
 
 
@@ -346,22 +344,14 @@ _GLOBAL_RANK_MSG = (
 )
 
 
-def global_rank_guard(engine: str, rank_col: str) -> str:
+def global_rank_guard(d: Dialect, rank_col: str) -> str:
     """Per-row in-plan budget check over a globally ranked relation:
     TRUE while ``rank_col`` (a ROW_NUMBER over the unpartitioned order)
     is within budget, raises at EXECUTION past it (Spark
     ``assert_true``, DuckDB ``error()``) — the spine-budget idiom for
     the round-11 audit's vocab-ranked class. The answer is untouched
     while the bound holds."""
-    if engine == "spark":
-        return (
-            f"assert_true({rank_col} <= {GLOBAL_RANK_BUDGET}, "
-            f"'{_GLOBAL_RANK_MSG}') IS NULL"
-        )
-    return (
-        f"CASE WHEN {rank_col} <= {GLOBAL_RANK_BUDGET} THEN TRUE "
-        f"ELSE error('{_GLOBAL_RANK_MSG}') END"
-    )
+    return d.guard(f"{rank_col} <= {GLOBAL_RANK_BUDGET}", _GLOBAL_RANK_MSG)
 
 
 def hour_counts_sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
@@ -371,13 +361,9 @@ def hour_counts_sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
     return spark.sql(text, counts=spark.sql(_COUNTS_SPARK).localCheckpoint())
 
 
-_DECOMP_SPARK = _SPINE_FROM_COUNTS_SPARK + _DECOMP_CORE
-_DECOMP_DUCK = _SPINE_FROM_COUNTS_DUCK + _DECOMP_CORE
-
-
 @register(
     "timeseries_seasonal_decompose",
-    oracle=_DECOMP_DUCK,
+    oracle=spine_from_counts(DUCK) + _DECOMP_CORE,
     doc="Classical additive seasonal decomposition of per-metric hourly "
     "event counts: trend = 24-hour centered moving average over a DENSE "
     "hour spine (missing hours are real zeros, not absent rows — the "
@@ -393,7 +379,7 @@ _DECOMP_DUCK = _SPINE_FROM_COUNTS_DUCK + _DECOMP_CORE
     "rows — the pre-aggregated density, never events.",
 )
 def timeseries_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return hour_counts_sql(spark, sf_dir, _DECOMP_SPARK)
+    return hour_counts_sql(spark, sf_dir, spine_from_counts(SPARK) + _DECOMP_CORE)
 
 
 # ---------------------------------------------------------------------------
@@ -621,29 +607,24 @@ _BOOT_TAIL = f"""
     FROM point p JOIN ci c ON p.event_type = c.event_type
 """
 
-_BOOT_SPARK = f"""
-    WITH base AS (
-        SELECT event_type, event_id,
-               CAST(ROUND(value * 1000) AS BIGINT) AS v_e3
-        FROM events
-    ), u AS (
-        SELECT base.event_type, r.b, base.v_e3,
-               CAST(conv(substring({_BOOT_KEY}, 1, 8), 16, 10) AS BIGINT)
-                   AS u32
-        FROM base CROSS JOIN (SELECT explode(sequence(0, 31)) AS b) r
-    )
-{_BOOT_TAIL}
-"""
 
-_BOOT_DUCK = f"""
+
+def _boot_sql(d: Dialect) -> str:
+    if d is SPARK:
+        u32 = f"CAST(conv(substring({_BOOT_KEY}, 1, 8), 16, 10) AS BIGINT)"
+        reps = "(SELECT explode(sequence(0, 31)) AS b) r"
+    else:
+        u32 = f"CAST('0x' || substring({_BOOT_KEY}, 1, 8) AS BIGINT)"
+        reps = "(SELECT UNNEST(range(0, 32)) AS b) r(b)"
+    return f"""
     WITH base AS (
         SELECT event_type, event_id,
                CAST(ROUND(value * 1000) AS BIGINT) AS v_e3
         FROM events
     ), u AS (
         SELECT base.event_type, r.b, base.v_e3,
-               CAST('0x' || substring({_BOOT_KEY}, 1, 8) AS BIGINT) AS u32
-        FROM base CROSS JOIN (SELECT UNNEST(range(0, 32)) AS b) r(b)
+               {u32} AS u32
+        FROM base CROSS JOIN {reps}
     )
 {_BOOT_TAIL}
 """
@@ -651,7 +632,7 @@ _BOOT_DUCK = f"""
 
 @register(
     "stats_bootstrap_ci",
-    oracle=_BOOT_DUCK,
+    oracle=_boot_sql(DUCK),
     doc="Poisson-bootstrap 90%-ish confidence interval for each metric's "
     "mean (B=32 replicas, percentile method at order statistics 2/31): "
     "the bootstrap that actually runs at 100 TB — per-(row, replica) "
@@ -677,7 +658,7 @@ def stats_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from events in the tail with the identical expression text, so
     # every value is computed by the same arithmetic as the one-string
     # oracle chain.
-    head, _, _ = _BOOT_SPARK.partition(", means AS")
+    head, _, _ = _boot_sql(SPARK).partition(", means AS")
     tail = _BOOT_TAIL.partition(", means AS")[2]
     return spark.sql(
         """
@@ -727,7 +708,7 @@ _ANOM_TAIL = """
 """
 
 _ANOM_DUCK = (
-    "WITH decomp AS (" + _DECOMP_DUCK + ")" + _ANOM_TAIL
+    "WITH decomp AS (" + spine_from_counts(DUCK) + _DECOMP_CORE + ")" + _ANOM_TAIL
 )
 
 
@@ -868,7 +849,7 @@ _ACF_CORE = """
 """
 
 _ACF_DUCK = (
-    _SPINE_FROM_COUNTS_DUCK
+    spine_from_counts(DUCK)
     + ", lags AS (SELECT UNNEST(generate_series(1, 24)) AS lag)"
     + _ACF_CORE
 )
@@ -1463,13 +1444,10 @@ _CONFORMAL_CORE = """
     FROM test t JOIN q ON t.event_type = q.event_type
 """
 
-_CONFORMAL_SPARK = _SPINE_FROM_COUNTS_SPARK + _CONFORMAL_CORE
-_CONFORMAL_DUCK = _SPINE_FROM_COUNTS_DUCK + _CONFORMAL_CORE
-
 
 @register(
     "timeseries_conformal_interval",
-    oracle=_CONFORMAL_DUCK,
+    oracle=spine_from_counts(DUCK) + _CONFORMAL_CORE,
     doc="Split-conformal prediction interval (Vovk; Lei et al. 2018) for "
     "a seasonal-naive hourly forecaster (yhat(h) = y(h-24) on the dense "
     "spine): per metric, the ceil(0.9*(n_cal+1))-th smallest calibration "
@@ -1481,7 +1459,7 @@ _CONFORMAL_DUCK = _SPINE_FROM_COUNTS_DUCK + _CONFORMAL_CORE
     "density as the decomposition family — events are never re-scanned.",
 )
 def timeseries_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return hour_counts_sql(spark, sf_dir, _CONFORMAL_SPARK)
+    return hour_counts_sql(spark, sf_dir, spine_from_counts(SPARK) + _CONFORMAL_CORE)
 
 
 # ---------------------------------------------------------------------------
@@ -1605,28 +1583,24 @@ _ISOTONIC_SQL = """
 """
 
 _EVENTS_TS_VIEW = """
-    SELECT event_type, {unix_expr} AS unix_ts,
+    SELECT event_type, {d.epoch_s} AS unix_ts,
            CAST(ROUND(value * 1000) AS BIGINT) AS v_e3
     FROM events
 """
 
-_ISOTONIC_SPARK = (
-    "WITH events_ts AS ("
-    + _EVENTS_TS_VIEW.format(unix_expr="unix_timestamp(ts)")
-    + ")"
-    + _ISOTONIC_SQL.replace("WITH daily", ", daily", 1)
-)
-_ISOTONIC_DUCK = (
-    "WITH events_ts AS ("
-    + _EVENTS_TS_VIEW.format(unix_expr="epoch(ts)")
-    + ")"
-    + _ISOTONIC_SQL.replace("WITH daily", ", daily", 1)
-)
+
+def _isotonic_sql(d: Dialect) -> str:
+    return (
+        "WITH events_ts AS ("
+        + _EVENTS_TS_VIEW.format(d=d)
+        + ")"
+        + _ISOTONIC_SQL.replace("WITH daily", ", daily", 1)
+    )
 
 
 @register(
     "stats_isotonic_trend",
-    oracle=_ISOTONIC_DUCK,
+    oracle=_isotonic_sql(DUCK),
     doc="Exact isotonic (monotone-nondecreasing) regression of each "
     "metric's daily mean — the nonparametric calibration/trend fit — "
     "via the closed-form minimax characterization iso(i) = max_{j<=i} "
@@ -1641,4 +1615,4 @@ _ISOTONIC_DUCK = (
 )
 def stats_isotonic_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_ISOTONIC_SPARK)
+    return spark.sql(_isotonic_sql(SPARK))

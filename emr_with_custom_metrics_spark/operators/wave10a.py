@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, SPARK
 from emr_with_custom_metrics_spark.operators.stats import _ARM
 from emr_with_custom_metrics_spark.registry import register
 
@@ -287,20 +288,17 @@ _CMH_CORE = """
 
 _CMH_BASE = """
     WITH base AS (
-        SELECT CAST(FLOOR({epoch} / 86400) AS BIGINT) % 7 AS dow,
+        SELECT {d.epoch_day} % 7 AS dow,
                {arm} AS arm,
                CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
         FROM events
     )
 """
 
-_CMH_SPARK = _CMH_BASE.format(epoch="unix_timestamp(ts)", arm=_ARM) + _CMH_CORE
-_CMH_DUCK = _CMH_BASE.format(epoch="epoch(ts)", arm=_ARM) + _CMH_CORE
-
 
 @register(
     "stats_cmh_stratified",
-    oracle=_CMH_DUCK,
+    oracle=_CMH_BASE.format(d=DUCK, arm=_ARM) + _CMH_CORE,
     doc="Cochran-Mantel-Haenszel test of the arm x purchase 2x2 "
     "association pooled over 7 day-of-week strata (epoch-arithmetic "
     "dow — the only engine split; no calendar function can drift). "
@@ -314,7 +312,7 @@ _CMH_DUCK = _CMH_BASE.format(epoch="epoch(ts)", arm=_ARM) + _CMH_CORE
 )
 def stats_cmh_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_CMH_SPARK)
+    return spark.sql(_CMH_BASE.format(d=SPARK, arm=_ARM) + _CMH_CORE)
 
 
 # ---------------------------------------------------------------------------
@@ -367,19 +365,16 @@ _DID_BASE = """
     WITH base AS (
         SELECT event_type,
                CASE WHEN {arm} = 'A' THEN 1 ELSE 0 END AS treat,
-               CAST(FLOOR({epoch}) AS BIGINT) AS es,
+               CAST(FLOOR({d.epoch_s}) AS BIGINT) AS es,
                CAST(ROUND(value * 1000) AS BIGINT) AS v_e3
         FROM events
     )
 """
 
-_DID_SPARK = _DID_BASE.format(epoch="unix_timestamp(ts)", arm=_ARM) + _DID_CORE
-_DID_DUCK = _DID_BASE.format(epoch="epoch(ts)", arm=_ARM) + _DID_CORE
-
 
 @register(
     "events_did_estimator",
-    oracle=_DID_DUCK,
+    oracle=_DID_BASE.format(d=DUCK, arm=_ARM) + _DID_CORE,
     doc="Difference-in-differences per metric: treat = md5-nibble arm, "
     "post = second half of the observation window (integer epoch "
     "midpoint from MIN/MAX — engine split only on epoch extraction), "
@@ -391,7 +386,7 @@ _DID_DUCK = _DID_BASE.format(epoch="epoch(ts)", arm=_ARM) + _DID_CORE
 )
 def events_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_DID_SPARK)
+    return spark.sql(_DID_BASE.format(d=SPARK, arm=_ARM) + _DID_CORE)
 
 
 # ---------------------------------------------------------------------------
@@ -451,20 +446,17 @@ _ATE_CORE = """
 _ATE_BASE = """
     WITH base AS (
         SELECT event_type,
-               CAST(FLOOR({epoch} / 3600) AS BIGINT) % 24 AS hod,
+               CAST(FLOOR({d.epoch_s} / 3600) AS BIGINT) % 24 AS hod,
                CASE WHEN {arm} = 'A' THEN 1 ELSE 0 END AS treat,
                CAST(ROUND(value * 1000) AS BIGINT) AS v_e3
         FROM events
     )
 """
 
-_ATE_SPARK = _ATE_BASE.format(epoch="unix_timestamp(ts)", arm=_ARM) + _ATE_CORE
-_ATE_DUCK = _ATE_BASE.format(epoch="epoch(ts)", arm=_ARM) + _ATE_CORE
-
 
 @register(
     "stats_stratified_ate",
-    oracle=_ATE_DUCK,
+    oracle=_ATE_BASE.format(d=DUCK, arm=_ARM) + _ATE_CORE,
     doc="Hour-of-day-stratified average treatment effect per metric: "
     "with the deterministic md5 assignment the propensity is stratum-"
     "constant, so exact-weight IPW reduces to the stratified "
@@ -476,7 +468,7 @@ _ATE_DUCK = _ATE_BASE.format(epoch="epoch(ts)", arm=_ARM) + _ATE_CORE
 )
 def stats_stratified_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_ATE_SPARK)
+    return spark.sql(_ATE_BASE.format(d=SPARK, arm=_ARM) + _ATE_CORE)
 
 
 # ---------------------------------------------------------------------------
@@ -629,18 +621,15 @@ _MK_CORE = """
 
 _MK_BASE = """
     WITH base AS (
-        SELECT event_type, CAST(FLOOR({epoch} / 86400) AS BIGINT) AS d
+        SELECT event_type, {d.epoch_day} AS d
         FROM events
     )
 """
 
-_MK_SPARK = _MK_BASE.format(epoch="unix_timestamp(ts)") + _MK_CORE
-_MK_DUCK = _MK_BASE.format(epoch="epoch(ts)") + _MK_CORE
-
 
 @register(
     "stats_mann_kendall_trend",
-    oracle=_MK_DUCK,
+    oracle=_MK_BASE.format(d=DUCK) + _MK_CORE,
     doc="Mann-Kendall monotone-trend test per metric over the daily "
     "count series: S = sum of pairwise signs, tie-corrected variance "
     "[n(n-1)(2n+5) - sum t(t-1)(2t+5)]/18, continuity-corrected z — "
@@ -651,4 +640,4 @@ _MK_DUCK = _MK_BASE.format(epoch="epoch(ts)") + _MK_CORE
 )
 def stats_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_MK_SPARK)
+    return spark.sql(_MK_BASE.format(d=SPARK) + _MK_CORE)

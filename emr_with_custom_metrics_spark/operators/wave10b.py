@@ -37,10 +37,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, SPARK
 from emr_with_custom_metrics_spark.operators.stats import (
-    _SPINE_FROM_COUNTS_DUCK,
-    _SPINE_FROM_COUNTS_SPARK,
     hour_counts_sql,
+    spine_from_counts,
 )
 from emr_with_custom_metrics_spark.registry import register
 
@@ -527,13 +527,10 @@ _BACKTEST_CORE = """
     GROUP BY event_type, horizon
 """
 
-_BACKTEST_SPARK = _SPINE_FROM_COUNTS_SPARK + _BACKTEST_CORE
-_BACKTEST_DUCK = _SPINE_FROM_COUNTS_DUCK + _BACKTEST_CORE
-
 
 @register(
     "timeseries_backtest_snaive",
-    oracle=_BACKTEST_DUCK,
+    oracle=spine_from_counts(DUCK) + _BACKTEST_CORE,
     doc="Rolling-origin backtest of the daily (h-24) and weekly (h-168) "
     "seasonal-naive forecasters per metric, scored on the COMMON dense-"
     "spine test region h >= min+168 so the two horizons are comparable: "
@@ -543,7 +540,7 @@ _BACKTEST_DUCK = _SPINE_FROM_COUNTS_DUCK + _BACKTEST_CORE
     "staged (series, hour) density — events are never re-scanned.",
 )
 def timeseries_backtest_snaive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return hour_counts_sql(spark, sf_dir, _BACKTEST_SPARK)
+    return hour_counts_sql(spark, sf_dir, spine_from_counts(SPARK) + _BACKTEST_CORE)
 
 
 # ---------------------------------------------------------------------------
@@ -580,20 +577,15 @@ _SEQGAP_CORE = """
 _SEQGAP_BASE = """
     WITH ev AS (
         SELECT user_id, event_id AS eid, event_type AS t,
-               {epoch_us} AS us
+               {d.epoch_us} AS us
         FROM events
     )
 """
 
-_SEQGAP_SPARK = (
-    _SEQGAP_BASE.format(epoch_us="unix_micros(CAST(ts AS TIMESTAMP))") + _SEQGAP_CORE
-)
-_SEQGAP_DUCK = _SEQGAP_BASE.format(epoch_us="epoch_us(ts)") + _SEQGAP_CORE
-
 
 @register(
     "events_prefixspan_gap",
-    oracle=_SEQGAP_DUCK,
+    oracle=_SEQGAP_BASE.format(d=DUCK) + _SEQGAP_CORE,
     doc="Length-3 sequential patterns under a 24 h max-gap constraint "
     "(gap-constrained PrefixSpan step; the GSP query is unconstrained): "
     "self-joins on user_id with a total (microsecond, event_id) order "
@@ -605,7 +597,7 @@ _SEQGAP_DUCK = _SEQGAP_BASE.format(epoch_us="epoch_us(ts)") + _SEQGAP_CORE
 )
 def events_prefixspan_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_SEQGAP_SPARK)
+    return spark.sql(_SEQGAP_BASE.format(d=SPARK) + _SEQGAP_CORE)
 
 
 # ---------------------------------------------------------------------------
@@ -676,20 +668,17 @@ _SHAP_CORE = """
 
 _SHAP_BASE = """
     WITH ev AS (
-        SELECT user_id, event_type, {epoch_us} AS us FROM events
+        SELECT user_id, event_type, {d.epoch_us} AS us FROM events
     ), fp AS (
         SELECT user_id, MIN(us) AS fp_us
         FROM ev WHERE event_type = 'purchase' GROUP BY user_id
     )
 """
 
-_SHAP_SPARK = _SHAP_BASE.format(epoch_us="unix_micros(CAST(ts AS TIMESTAMP))") + _SHAP_CORE
-_SHAP_DUCK = _SHAP_BASE.format(epoch_us="epoch_us(ts)") + _SHAP_CORE
-
 
 @register(
     "attribution_shapley_channels",
-    oracle=_SHAP_DUCK,
+    oracle=_SHAP_BASE.format(d=DUCK) + _SHAP_CORE,
     doc="Exact Shapley-value channel attribution (Shapley 1953; the "
     "marketing formulation of Zhao et al. 2018): coalition value "
     "v(S) = converters whose pre-first-purchase touched-channel set is "
@@ -703,7 +692,7 @@ _SHAP_DUCK = _SHAP_BASE.format(epoch_us="epoch_us(ts)") + _SHAP_CORE
 )
 def attribution_shapley_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_SHAP_SPARK)
+    return spark.sql(_SHAP_BASE.format(d=SPARK) + _SHAP_CORE)
 
 
 # ---------------------------------------------------------------------------

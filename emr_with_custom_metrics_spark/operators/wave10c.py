@@ -32,10 +32,10 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from emr_with_custom_metrics_spark.dialect import DUCK, SPARK
 from emr_with_custom_metrics_spark.operators.stats import (
-    _SPINE_FROM_COUNTS_DUCK,
-    _SPINE_FROM_COUNTS_SPARK,
     hour_counts_sql,
+    spine_from_counts,
 )
 from emr_with_custom_metrics_spark.registry import register
 
@@ -69,15 +69,13 @@ _COST_CORE = """
     WHERE m.mu > 0
 """
 
-_COSTS_SPARK = _SPINE_FROM_COUNTS_SPARK + _COST_CORE
-_COSTS_DUCK = _SPINE_FROM_COUNTS_DUCK + _COST_CORE
 
 # DuckDB oracle: the identical integer DP as a recursive CTE. State
 # carries the two optimal costs and their full state-path strings;
 # tie-breaks match the pandas DP exactly (path0 takes the 0-predecessor
 # when d0 <= d1; path1 stays in 1 when d1 <= d0 + gamma).
 _BURST_DUCK = f"""
-    WITH RECURSIVE costs AS MATERIALIZED ({_COSTS_DUCK}),
+    WITH RECURSIVE costs AS MATERIALIZED ({spine_from_counts(DUCK) + _COST_CORE}),
     dp AS (
         SELECT event_type, i, d0, d1, path0, path1
         FROM (SELECT event_type, i,
@@ -165,7 +163,7 @@ def _viterbi(pdf: pd.DataFrame) -> pd.DataFrame:
     "optimal path cost.",
 )
 def timeseries_burst_kleinberg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    costs = hour_counts_sql(spark, sf_dir, _COSTS_SPARK)
+    costs = hour_counts_sql(spark, sf_dir, spine_from_counts(SPARK) + _COST_CORE)
     schema = (
         "event_type string, n_hours long, burst_hours long, n_bursts long, "
         "max_burst_len long, first_burst_idx long, total_cost long"

@@ -30,6 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.operators.privacy import _h32
 from emr_with_custom_metrics_spark.registry import register
 
@@ -88,13 +89,13 @@ _DTW_CELLS_CORE = """
 
 _DTW_BASE = """
     WITH base AS (
-        SELECT event_type, CAST(FLOOR({epoch} / 86400) AS BIGINT) AS d
+        SELECT event_type, {d.epoch_day} AS d
         FROM events
     )
 """
 
 _DTW_CELLS_SPARK = (
-    _DTW_BASE.format(epoch="unix_timestamp(ts)")
+    _DTW_BASE.format(d=SPARK)
     + _DTW_CELLS_CORE.format(inf=_INF)
 )
 
@@ -295,21 +296,14 @@ _PRF_CORE = """
     WHERE r1.rnk <= 10
 """
 
-_PRF_SPARK = """
-    WITH tok AS (
-        SELECT doc_id, explode(split(text, ' ')) AS term FROM documents
-    ), qterms AS (
-        SELECT explode(slice(split(text, ' '), 1, 8)) AS term
-        FROM documents WHERE doc_id = 1
-    )
-""" + _PRF_CORE
 
-_PRF_DUCK = """
+def _prf_sql(d: Dialect) -> str:
+    return f"""
     WITH tok AS (
-        SELECT doc_id, UNNEST(string_split(text, ' ')) AS term
+        SELECT doc_id, {d.terms} AS term
         FROM documents
     ), qterms AS (
-        SELECT UNNEST(list_slice(string_split(text, ' '), 1, 8)) AS term
+        SELECT {d.first_terms(8)} AS term
         FROM documents WHERE doc_id = 1
     )
 """ + _PRF_CORE
@@ -317,7 +311,7 @@ _PRF_DUCK = """
 
 @register(
     "retrieval_prf_rm3",
-    oracle=_PRF_DUCK,
+    oracle=_prf_sql(DUCK),
     doc="Pseudo-relevance feedback (RM3-style; Lavrenko & Croft 2001): "
     "BM25 top-3 docs donate the top-8 non-query terms (summed tf, "
     "deterministic ties), the expanded query re-ranks, and the top-10 "
@@ -329,7 +323,7 @@ _PRF_DUCK = """
 )
 def retrieval_prf_rm3(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_PRF_SPARK)
+    return spark.sql(_prf_sql(SPARK))
 
 
 # ---------------------------------------------------------------------------

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, SPARK
 from emr_with_custom_metrics_spark.operators.stats import (
     _ACF_DUCK,
     _ACF_SPARK,
@@ -346,22 +347,16 @@ _ENTROPY_BASE = """
     WITH ev AS (
         SELECT user_id, event_type AS t,
                CAST(ROW_NUMBER() OVER (PARTITION BY user_id
-                                       ORDER BY {epoch_us}, event_id)
+                                       ORDER BY {d.epoch_us}, event_id)
                     AS BIGINT) AS rn
         FROM events
     )
 """
 
-_ENTROPY_SPARK = (
-    _ENTROPY_BASE.format(epoch_us="unix_micros(CAST(ts AS TIMESTAMP))")
-    + _ENTROPY_CORE
-)
-_ENTROPY_DUCK = _ENTROPY_BASE.format(epoch_us="epoch_us(ts)") + _ENTROPY_CORE
-
 
 @register(
     "events_entropy_rate",
-    oracle=_ENTROPY_DUCK,
+    oracle=_ENTROPY_BASE.format(d=DUCK) + _ENTROPY_CORE,
     doc="Markov entropy rate of the user-journey chain: per-source-state "
     "conditional entropy H_i = -sum_j P_ij ln P_ij plus the pi-weighted "
     "rate — how predictable events_transition_matrix's chain actually "
@@ -373,7 +368,7 @@ _ENTROPY_DUCK = _ENTROPY_BASE.format(epoch_us="epoch_us(ts)") + _ENTROPY_CORE
 )
 def events_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_ENTROPY_SPARK)
+    return spark.sql(_ENTROPY_BASE.format(d=SPARK) + _ENTROPY_CORE)
 
 
 # ---------------------------------------------------------------------------
@@ -485,20 +480,15 @@ _GRANGER_CORE = """
 
 _GRANGER_BASE = """
     WITH base AS (
-        SELECT event_type, CAST(FLOOR({epoch} / 86400) AS BIGINT) AS d
+        SELECT event_type, {d.epoch_day} AS d
         FROM events
     )
 """
 
-_GRANGER_SPARK = (
-    _GRANGER_BASE.format(epoch="unix_timestamp(ts)") + _GRANGER_CORE
-)
-_GRANGER_DUCK = _GRANGER_BASE.format(epoch="epoch(ts)") + _GRANGER_CORE
-
 
 @register(
     "timeseries_granger_lite",
-    oracle=_GRANGER_DUCK,
+    oracle=_GRANGER_BASE.format(d=DUCK) + _GRANGER_CORE,
     doc="Lag-1 Granger causality for every ordered metric pair over the "
     "daily count series: restricted y~[1,y_lag] vs unrestricted "
     "y~[1,y_lag,x_lag] OLS, both solved CLOSED-FORM from eleven exact "
@@ -510,4 +500,4 @@ _GRANGER_DUCK = _GRANGER_BASE.format(epoch="epoch(ts)") + _GRANGER_CORE
 )
 def timeseries_granger_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_GRANGER_SPARK)
+    return spark.sql(_GRANGER_BASE.format(d=SPARK) + _GRANGER_CORE)

@@ -35,19 +35,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.operators.stats import (
-    _SPINE_FROM_COUNTS_DUCK,
-    _SPINE_FROM_COUNTS_SPARK,
     _DENSE_HOURLY_X_BODY,
     hour_counts_sql,
+    spine_from_counts,
 )
 from emr_with_custom_metrics_spark.registry import register
-
-# Epoch extraction is the only dialect split in this wave.
-_EPOCH_US_SPARK = "unix_micros(CAST(ts AS TIMESTAMP))"
-_EPOCH_US_DUCK = "epoch_us(ts)"
-_EPOCH_S_SPARK = "unix_timestamp(ts)"
-_EPOCH_S_DUCK = "epoch(ts)"
 
 
 # ---------------------------------------------------------------------------
@@ -68,7 +62,7 @@ _EPOCH_S_DUCK = "epoch(ts)"
 _MCNEMAR_TMPL = """
     WITH base AS (
         SELECT user_id,
-               {epoch_us} AS us,
+               {d.epoch_us} AS us,
                CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
         FROM events
     ), mid AS (
@@ -111,7 +105,7 @@ _MCNEMAR_TMPL = """
 
 @register(
     "stats_mcnemar_paired",
-    oracle=_MCNEMAR_TMPL.format(epoch_us=_EPOCH_US_DUCK),
+    oracle=_MCNEMAR_TMPL.format(d=DUCK),
     doc="McNemar's continuity-corrected test of paired per-user binary "
     "outcomes (purchase in first vs second half of the window, split at "
     "the exact integer-microsecond midpoint): the discordant cells b/c "
@@ -122,7 +116,7 @@ _MCNEMAR_TMPL = """
 )
 def stats_mcnemar_paired(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_MCNEMAR_TMPL.format(epoch_us=_EPOCH_US_SPARK))
+    return spark.sql(_MCNEMAR_TMPL.format(d=SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -143,7 +137,7 @@ def stats_mcnemar_paired(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KENDALL_TMPL = """
     WITH base AS (
         SELECT event_type,
-               CAST(FLOOR({epoch_s} / 3600) AS BIGINT) AS h,
+               CAST(FLOOR({d.epoch_s} / 3600) AS BIGINT) AS h,
                CAST(ROUND(value * 1000) AS BIGINT) AS v_e3
         FROM events
     ), hs AS (
@@ -193,7 +187,7 @@ _KENDALL_TMPL = """
 
 @register(
     "stats_kendall_tau_pairs",
-    oracle=_KENDALL_TMPL.format(epoch_s=_EPOCH_S_DUCK),
+    oracle=_KENDALL_TMPL.format(d=DUCK),
     doc="Kendall's tau-b between every unordered pair of metrics' hourly "
     "means (hours where both observed): concordance counted over exact "
     "cross-multiplied rational means (s_i*c_j vs s_j*c_i — no division "
@@ -204,7 +198,7 @@ _KENDALL_TMPL = """
 )
 def stats_kendall_tau_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_KENDALL_TMPL.format(epoch_s=_EPOCH_S_SPARK))
+    return spark.sql(_KENDALL_TMPL.format(d=SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -262,19 +256,12 @@ _CHI2_LOOKUP_MSG = (
 )
 
 
-def chi2_lookup_guard(engine: str) -> str:
+def chi2_lookup_guard(d: Dialect) -> str:
     """In-plan loud guard over a LEFT-JOINed ``_KW_CRIT`` match ``c``:
     TRUE while the lookup hit, raises at EXECUTION on a miss (Spark
     ``assert_true``, DuckDB ``error()``) — the wordpiece/spine-budget
     idiom applied to the pinned-constant joins."""
-    if engine == "spark":
-        return (
-            f"assert_true(c.df IS NOT NULL, '{_CHI2_LOOKUP_MSG}') IS NULL"
-        )
-    return (
-        f"CASE WHEN c.df IS NOT NULL THEN TRUE "
-        f"ELSE error('{_CHI2_LOOKUP_MSG}') END"
-    )
+    return d.guard("c.df IS NOT NULL", _CHI2_LOOKUP_MSG)
 
 _KW_BODY = f"""
     WITH base AS (
@@ -336,13 +323,13 @@ _KW_BODY = f"""
 """
 
 
-def _kw_sql(engine: str) -> str:
-    return _KW_BODY + f"    WHERE {chi2_lookup_guard(engine)}\n"
+def _kw_sql(d: Dialect) -> str:
+    return _KW_BODY + f"    WHERE {chi2_lookup_guard(d)}\n"
 
 
 @register(
     "stats_kruskal_wallis",
-    oracle=_kw_sql("duck"),
+    oracle=_kw_sql(DUCK),
     doc="Kruskal-Wallis k-sample rank ANOVA across metrics: pooled "
     "doubled tie-averaged ranks from the shared value histogram (exact "
     "integer rank sums), per-group H contribution quantized e6 before "
@@ -357,7 +344,7 @@ def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CTE is referenced twice downstream — WITH-inlining re-ran the
     # events scan + histogram per reference. Stage the value histogram
     # behind a lazy checkpoint; tail text unchanged.
-    full = _kw_sql("spark")
+    full = _kw_sql(SPARK)
     head, _, tail = full.partition(", vals AS")
     return spark.sql(
         "WITH hist AS (SELECT * FROM {hist}), vals AS" + tail,
@@ -445,7 +432,7 @@ _RUNS_TAIL = """
 
 @register(
     "stats_runs_test",
-    oracle=_RUNS_TAIL.format(core=_SPINE_FROM_COUNTS_DUCK + _RUNS_CORE),
+    oracle=_RUNS_TAIL.format(core=spine_from_counts(DUCK) + _RUNS_CORE),
     doc="Wald-Wolfowitz runs test per metric over the dense hourly count "
     "series: above/below the exact doubled median (at-median hours "
     "dropped, classical convention), runs via one LAG, z from the exact "
@@ -456,7 +443,7 @@ _RUNS_TAIL = """
 def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hour_counts_sql(
         spark, sf_dir,
-        _RUNS_TAIL.format(core=_SPINE_FROM_COUNTS_SPARK + _RUNS_CORE),
+        _RUNS_TAIL.format(core=spine_from_counts(SPARK) + _RUNS_CORE),
     )
 
 

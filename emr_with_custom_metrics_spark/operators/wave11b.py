@@ -31,11 +31,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, SPARK
 from emr_with_custom_metrics_spark.operators.stats import _ARM
 from emr_with_custom_metrics_spark.registry import register
-
-_EPOCH_S_SPARK = "unix_timestamp(ts)"
-_EPOCH_S_DUCK = "epoch(ts)"
 
 
 # ---------------------------------------------------------------------------
@@ -547,7 +545,7 @@ def stats_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BA_TMPL = """
     WITH base AS (
         SELECT event_type,
-               CAST(FLOOR({epoch_s} / 3600) AS BIGINT) AS h,
+               CAST(FLOOR({d.epoch_s} / 3600) AS BIGINT) AS h,
                CAST(ROUND(value * 1000) AS BIGINT) AS v_e3
         FROM events
     ), hs AS (
@@ -600,7 +598,7 @@ _BA_TMPL = """
 
 @register(
     "stats_bland_altman",
-    oracle=_BA_TMPL.format(epoch_s=_EPOCH_S_DUCK),
+    oracle=_BA_TMPL.format(d=DUCK),
     doc="Bland-Altman agreement between every metric pair's hourly "
     "means: per-hour difference quantized e6 in one fixed-order double "
     "step, bias and 1.96-sd limits of agreement from exact integer "
@@ -610,4 +608,4 @@ _BA_TMPL = """
 )
 def stats_bland_altman(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_BA_TMPL.format(epoch_s=_EPOCH_S_SPARK))
+    return spark.sql(_BA_TMPL.format(d=SPARK))

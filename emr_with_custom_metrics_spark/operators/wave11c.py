@@ -33,16 +33,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.operators.stats import (
-    _SPINE_FROM_COUNTS_DUCK,
-    _SPINE_FROM_COUNTS_SPARK,
     _DENSE_HOURLY_X_BODY,
     hour_counts_sql,
+    spine_from_counts,
 )
 from emr_with_custom_metrics_spark.registry import register
-
-_EPOCH_US_SPARK = "unix_micros(CAST(ts AS TIMESTAMP))"
-_EPOCH_US_DUCK = "epoch_us(ts)"
 
 
 # ---------------------------------------------------------------------------
@@ -138,7 +135,7 @@ _WE_CORE = f"""
 
 @register(
     "spc_western_electric",
-    oracle=_SPINE_FROM_COUNTS_DUCK + _WE_CORE,
+    oracle=spine_from_counts(DUCK) + _WE_CORE,
     doc="Western Electric zone rules 1-4 per metric over the dense "
     "hourly series: every sigma-zone membership is an exact integer "
     "predicate via d^2(n-1) vs k^2 n A with d = v*n - s1, "
@@ -149,7 +146,7 @@ _WE_CORE = f"""
     "Rides the staged hour-counts scan.",
 )
 def spc_western_electric(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return hour_counts_sql(spark, sf_dir, _SPINE_FROM_COUNTS_SPARK + _WE_CORE)
+    return hour_counts_sql(spark, sf_dir, spine_from_counts(SPARK) + _WE_CORE)
 
 
 # ---------------------------------------------------------------------------
@@ -216,7 +213,7 @@ _PH_CORE = f"""
 
 @register(
     "timeseries_page_hinkley",
-    oracle=_SPINE_FROM_COUNTS_DUCK + _PH_CORE,
+    oracle=spine_from_counts(DUCK) + _PH_CORE,
     doc="Page-Hinkley mean-shift detector per metric (running-mean "
     "form): per-point term x_t - runningmean_t quantized e6 in one "
     "fixed-order double step, cumulative walk and running-min/max as "
@@ -226,7 +223,7 @@ _PH_CORE = f"""
     "drifts the fixed window normalizes away. Earliest argmax reported.",
 )
 def timeseries_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return hour_counts_sql(spark, sf_dir, _SPINE_FROM_COUNTS_SPARK + _PH_CORE)
+    return hour_counts_sql(spark, sf_dir, spine_from_counts(SPARK) + _PH_CORE)
 
 
 # ---------------------------------------------------------------------------
@@ -399,17 +396,16 @@ _PERM_TMPL = f"""
     SELECT * FROM final
 """
 
-_PERM_SPARK = _PERM_TMPL.format(
-    seq=f"SELECT explode(sequence(0, {_PERM_B - 1})) AS b"
-)
-_PERM_DUCK = _PERM_TMPL.format(
-    seq=f"SELECT UNNEST(RANGE({_PERM_B})) AS b"
-)
+
+def _perm_sql(d: Dialect) -> str:
+    if d is SPARK:
+        return _PERM_TMPL.format(seq=f"SELECT explode(sequence(0, {_PERM_B - 1})) AS b")
+    return _PERM_TMPL.format(seq=f"SELECT UNNEST(RANGE({_PERM_B})) AS b")
 
 
 @register(
     "stats_permutation_test",
-    oracle=_PERM_DUCK,
+    oracle=_perm_sql(DUCK),
     doc="Exact randomization test of the per-metric A/B mean difference: "
     "200 deterministic md5 re-randomizations of USERS (the true "
     "randomization unit — event-level shuffles would break cluster "
@@ -427,7 +423,7 @@ def stats_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reference. Stage the compact per-(metric, user) sufficient
     # stats and the k-row observed-arm table behind lazy checkpoints;
     # all downstream CTE text is unchanged.
-    ubase_part, _, after_ubase = _PERM_SPARK.partition(", obs AS")
+    ubase_part, _, after_ubase = _perm_sql(SPARK).partition(", obs AS")
     obs_body, _, tail = after_ubase.partition(", hashed AS")
     ubase = spark.sql(ubase_part + " SELECT * FROM ubase").localCheckpoint(
         eager=False
@@ -459,7 +455,7 @@ def stats_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SESS_TMPL = """
     WITH base AS (
-        SELECT user_id, {epoch_us} AS us
+        SELECT user_id, {d.epoch_us} AS us
         FROM events
     ), marked AS (
         SELECT user_id, us,
@@ -521,7 +517,7 @@ _SESS_TMPL = """
 
 @register(
     "events_sessionize_batch",
-    oracle=_SESS_TMPL.format(epoch_us=_EPOCH_US_DUCK),
+    oracle=_SESS_TMPL.format(d=DUCK),
     doc="Batch gap sessionization (30-min inactivity islands via LAG + "
     "cumulative breaks — the batch counterpart of the streaming "
     "session_windows pair): bounded session-length histogram, exact "
@@ -532,7 +528,7 @@ _SESS_TMPL = """
 )
 def events_sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_SESS_TMPL.format(epoch_us=_EPOCH_US_SPARK))
+    return spark.sql(_SESS_TMPL.format(d=SPARK))
 
 
 # ---------------------------------------------------------------------------

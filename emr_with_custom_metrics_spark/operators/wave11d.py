@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, SPARK
 from emr_with_custom_metrics_spark.registry import register
 
 # Dialect-split 8-gram shingle extraction (distinct per doc, md5-hashed
@@ -133,14 +134,14 @@ def corpus_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MIX_TMPL = """
     WITH strata AS (
         SELECT lang, source,
-               CAST(SUM({toklen}) AS BIGINT) AS t_i
+               CAST(SUM({d.n_terms}) AS BIGINT) AS t_i
         FROM documents GROUP BY lang, source
     ), tot AS (
         SELECT CAST(SUM(t_i) AS BIGINT) AS t FROM strata
     ), quota AS (
         SELECT s.lang, s.source, s.t_i, o.t,
-               CAST((1000000 * s.t_i) / o.t AS BIGINT) AS base_i,
-               CAST(1000000 * s.t_i - ((1000000 * s.t_i) / o.t) * o.t
+               CAST((1000000 * s.t_i) {d.intdiv} o.t AS BIGINT) AS base_i,
+               CAST(1000000 * s.t_i - ((1000000 * s.t_i) {d.intdiv} o.t) * o.t
                     AS BIGINT) AS rem_i
         FROM strata s CROSS JOIN tot o
     ), leftover AS (
@@ -160,17 +161,11 @@ _MIX_TMPL = """
 """
 
 # Integer floor division: Spark needs DIV, DuckDB //; both exact.
-_MIX_SPARK = _MIX_TMPL.replace("(1000000 * s.t_i) / o.t", "(1000000 * s.t_i) DIV o.t").format(
-    toklen="size(split(text, ' '))"
-)
-_MIX_DUCK = _MIX_TMPL.replace("(1000000 * s.t_i) / o.t", "(1000000 * s.t_i) // o.t").format(
-    toklen="len(string_split(text, ' '))"
-)
 
 
 @register(
     "corpus_token_budget_mix",
-    oracle=_MIX_DUCK,
+    oracle=_MIX_TMPL.format(d=DUCK),
     doc="Hamilton largest-remainder apportionment of a 1M-token training "
     "budget across (lang, source) strata proportional to available "
     "whitespace tokens: base shares by exact integer floor division, "
@@ -181,7 +176,7 @@ _MIX_DUCK = _MIX_TMPL.replace("(1000000 * s.t_i) / o.t", "(1000000 * s.t_i) // o
 )
 def corpus_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_MIX_SPARK)
+    return spark.sql(_MIX_TMPL.format(d=SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -300,7 +295,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DISP_TMPL = """
     WITH tok AS (
-        {tokens}
+        SELECT source, {d.terms} AS term FROM documents
     ), ts AS (
         SELECT term, source, CAST(COUNT(*) AS BIGINT) AS f_ts
         FROM tok GROUP BY term, source
@@ -340,18 +335,10 @@ _DISP_TMPL = """
     FROM dp
 """
 
-_DISP_SPARK = _DISP_TMPL.format(
-    tokens="SELECT source, explode(split(text, ' ')) AS term FROM documents"
-)
-_DISP_DUCK = _DISP_TMPL.format(
-    tokens="SELECT source, UNNEST(string_split(text, ' ')) AS term "
-    "FROM documents"
-)
-
 
 @register(
     "text_burstiness_dispersion",
-    oracle=_DISP_DUCK,
+    oracle=_DISP_TMPL.format(d=DUCK),
     doc="Gries' deviation of proportions for the 20 most frequent "
     "corpus terms across sources: per-source deviation cross-multiplied "
     "to the exact integer |f_ts*T - tok_s*f_t| (absent cells COALESCE "
@@ -362,7 +349,7 @@ _DISP_DUCK = _DISP_TMPL.format(
 )
 def text_burstiness_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_DISP_SPARK)
+    return spark.sql(_DISP_TMPL.format(d=SPARK))
 
 
 # ---------------------------------------------------------------------------

@@ -36,12 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.registry import register
-
-_EPOCH_US_SPARK = "unix_micros(CAST(ts AS TIMESTAMP))"
-_EPOCH_US_DUCK = "epoch_us(ts)"
-_EPOCH_S_SPARK = "unix_timestamp(ts)"
-_EPOCH_S_DUCK = "epoch(ts)"
 
 
 # ---------------------------------------------------------------------------
@@ -63,7 +59,7 @@ _EPOCH_S_DUCK = "epoch(ts)"
 _SPRT_TMPL = """
     WITH base AS (
         SELECT event_type,
-               {epoch_us} AS us,
+               {d.epoch_us} AS us,
                event_id,
                CAST(ROUND(value * 1000) AS BIGINT) AS v_e3
         FROM events
@@ -130,7 +126,7 @@ _SPRT_TMPL = """
 
 @register(
     "stats_sprt_sequential",
-    oracle=_SPRT_TMPL.format(epoch_us=_EPOCH_US_DUCK),
+    oracle=_SPRT_TMPL.format(d=DUCK),
     doc="Wald SPRT per metric (H0 p=.45 vs H1 p=.55 on the above-median "
     "indicator, alpha=beta=.05): the log-likelihood walk is the exact "
     "integer L_e9*(2s_t - t) with pinned e9 log constants (ln(11/9), "
@@ -144,7 +140,7 @@ def stats_sprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
     # + the tmax subquery — three inlined references, each re-running
     # the scan + median join + both cumulative windows. Stage the
     # (metric, t, llr) walk behind a lazy checkpoint; tail unchanged.
-    full = _SPRT_TMPL.format(epoch_us=_EPOCH_US_SPARK)
+    full = _SPRT_TMPL.format(d=SPARK)
     head, _, tail = full.partition(", crossing AS")
     return spark.sql(
         "WITH walk AS (SELECT * FROM {walk}), crossing AS" + tail,
@@ -176,7 +172,7 @@ _ABS_BASE_TMPL = """
     WITH seq AS (
         SELECT user_id, event_type,
                LEAD(event_type) OVER (PARTITION BY user_id
-                   ORDER BY {epoch_us}, event_id) AS nxt
+                   ORDER BY {d.epoch_us}, event_id) AS nxt
         FROM events
     ), trans AS (
         SELECT event_type AS s_from, nxt AS s_to,
@@ -283,8 +279,8 @@ _ABS_TAIL_TMPL = """
 """
 
 
-def _absorption_sql(engine: str) -> str:
-    if engine == "spark":
+def _absorption_sql(d: Dialect) -> str:
+    if d is SPARK:
         step = _ABS_STEP_SPARK.format(h="hacc")
         fold_last = _ABS_FOLD_SPARK.format(n=_ABS_ROUNDS, step=step)
         fold_prev = _ABS_FOLD_SPARK.format(n=_ABS_ROUNDS - 1, step=step)
@@ -299,7 +295,7 @@ def _absorption_sql(engine: str) -> str:
             elem_at="element_at",
             poscast="CAST(array_position(f.sts, st.s) AS INT)",
         )
-        return _ABS_BASE_TMPL.format(epoch_us=_EPOCH_US_SPARK) + tail
+        return _ABS_BASE_TMPL.format(d=SPARK) + tail
     step = _ABS_STEP_DUCK.format(h="hacc")
     fold_last = _ABS_FOLD_DUCK.format(n=_ABS_ROUNDS, step=step)
     fold_prev = _ABS_FOLD_DUCK.format(n=_ABS_ROUNDS - 1, step=step)
@@ -314,12 +310,12 @@ def _absorption_sql(engine: str) -> str:
         elem_at="list_extract",
         poscast="list_position(f.sts, st.s)",
     )
-    return _ABS_BASE_TMPL.format(epoch_us=_EPOCH_US_DUCK) + tail
+    return _ABS_BASE_TMPL.format(d=DUCK) + tail
 
 
 @register(
     "events_markov_absorption",
-    oracle=_absorption_sql("duck"),
+    oracle=_absorption_sql(DUCK),
     doc="Expected steps to the purchase state from every state of the "
     "user-journey chain (purchase absorbing): 40 rounds of exact value "
     "iteration h <- round(1e6 + sum c(s,s')h(s')/c(s)) on e6 integers "
@@ -333,7 +329,7 @@ def _absorption_sql(engine: str) -> str:
 )
 def events_markov_absorption(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_absorption_sql("spark"))
+    return spark.sql(_absorption_sql(SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -346,7 +342,7 @@ def events_markov_absorption(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _YULE_TMPL = """
     WITH tok AS (
-        {tokens}
+        SELECT source, {d.terms} AS term FROM documents
     ), tf AS (
         SELECT source, term, CAST(COUNT(*) AS BIGINT) AS m
         FROM tok GROUP BY source, term
@@ -364,18 +360,10 @@ _YULE_TMPL = """
     FROM spectrum GROUP BY source
 """
 
-_YULE_SPARK = _YULE_TMPL.format(
-    tokens="SELECT source, explode(split(text, ' ')) AS term FROM documents"
-)
-_YULE_DUCK = _YULE_TMPL.format(
-    tokens="SELECT source, UNNEST(string_split(text, ' ')) AS term "
-    "FROM documents"
-)
-
 
 @register(
     "text_yule_k",
-    oracle=_YULE_DUCK,
+    oracle=_YULE_TMPL.format(d=DUCK),
     doc="Yule's K lexical-diversity characteristic per source from the "
     "exact term-frequency spectrum: K = 1e4 (sum m^2 V(m) - N)/N^2, all "
     "moments exact integers, one double epilogue e6. Length-insensitive "
@@ -384,7 +372,7 @@ _YULE_DUCK = _YULE_TMPL.format(
 )
 def text_yule_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_YULE_SPARK)
+    return spark.sql(_YULE_TMPL.format(d=SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -399,7 +387,7 @@ def text_yule_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SGT_TMPL = """
     WITH tok AS (
-        {tokens}
+        SELECT source, {d.terms} AS term FROM documents
     ), tf AS (
         SELECT source, term, CAST(COUNT(*) AS BIGINT) AS m
         FROM tok GROUP BY source, term
@@ -431,18 +419,10 @@ _SGT_TMPL = """
     FROM rows5
 """
 
-_SGT_SPARK = _SGT_TMPL.format(
-    tokens="SELECT source, explode(split(text, ' ')) AS term FROM documents"
-)
-_SGT_DUCK = _SGT_TMPL.format(
-    tokens="SELECT source, UNNEST(string_split(text, ' ')) AS term "
-    "FROM documents"
-)
-
 
 @register(
     "text_good_turing",
-    oracle=_SGT_DUCK,
+    oracle=_SGT_TMPL.format(d=DUCK),
     doc="Simple Good-Turing table per source: frequency-of-frequencies "
     "N_r for r=1..5 (absent rows surfaced via the full source x r grid "
     "+ spectrum_gap flag), adjusted counts r* = (r+1)N_{r+1}/N_r as "
@@ -452,7 +432,7 @@ _SGT_DUCK = _SGT_TMPL.format(
 )
 def text_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_SGT_SPARK)
+    return spark.sql(_SGT_TMPL.format(d=SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -467,9 +447,9 @@ def text_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DISPIDX_TMPL = """
     WITH daily AS (
         SELECT event_type,
-               CAST(FLOOR({epoch_s} / 86400) AS BIGINT) AS d,
+               {d.epoch_day} AS d,
                CAST(COUNT(*) AS BIGINT) AS v
-        FROM events GROUP BY event_type, CAST(FLOOR({epoch_s} / 86400)
+        FROM events GROUP BY event_type, CAST(FLOOR({d.epoch_s} / 86400)
                                               AS BIGINT)
     ), mom AS (
         SELECT event_type,
@@ -503,7 +483,7 @@ _DISPIDX_TMPL = """
 
 @register(
     "stats_dispersion_index",
-    oracle=_DISPIDX_TMPL.format(epoch_s=_EPOCH_S_DUCK),
+    oracle=_DISPIDX_TMPL.format(d=DUCK),
     doc="Variance-to-mean dispersion index of daily counts per metric "
     "with the chi-square overdispersion gate (normal approximation of "
     "(n-1)D ~ chi2, one-sided 5%): the Poisson-ness check run before "
@@ -512,7 +492,7 @@ _DISPIDX_TMPL = """
 )
 def stats_dispersion_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_DISPIDX_TMPL.format(epoch_s=_EPOCH_S_SPARK))
+    return spark.sql(_DISPIDX_TMPL.format(d=SPARK))
 
 
 # ---------------------------------------------------------------------------

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.operators.wave9c import _FDR_SQL
 from emr_with_custom_metrics_spark.operators.wave11a import (
     _KW_CRIT,
@@ -37,10 +38,6 @@ from emr_with_custom_metrics_spark.operators.wave11a import (
 )
 from emr_with_custom_metrics_spark.registry import register
 
-_EPOCH_US_SPARK = "unix_micros(CAST(ts AS TIMESTAMP))"
-_EPOCH_US_DUCK = "epoch_us(ts)"
-_EPOCH_S_SPARK = "unix_timestamp(ts)"
-_EPOCH_S_DUCK = "epoch(ts)"
 
 # The shared Welch-z -> Zelen-Severo p-value pipeline (base..pv CTEs),
 # sliced from the BH text so the three multiple-testing queries can
@@ -87,15 +84,15 @@ _FISHER_BODY = (
 )
 
 
-def _fisher_sql(engine: str) -> str:
+def _fisher_sql(d: Dialect) -> str:
     # a metric family past the df<=80 lookup (m>40) must raise, never
     # return zero rows (r11 ADVICE silent-empty class)
-    return _FISHER_BODY + f"    WHERE {chi2_lookup_guard(engine)}\n"
+    return _FISHER_BODY + f"    WHERE {chi2_lookup_guard(d)}\n"
 
 
 @register(
     "stats_fisher_combined",
-    oracle=_fisher_sql("duck"),
+    oracle=_fisher_sql(DUCK),
     doc="Fisher's combined probability test across the per-metric Welch "
     "p-values (the family's shared Zelen-Severo template, sliced from "
     "the BH text so the pipelines cannot drift): X = -2 sum ln p with "
@@ -106,7 +103,7 @@ def _fisher_sql(engine: str) -> str:
 def stats_fisher_combined(spark: SparkSession, sf_dir: str) -> DataFrame:
     from emr_with_custom_metrics_spark.operators.wave9c import welch_pv_sql
 
-    return welch_pv_sql(spark, sf_dir, _fisher_sql("spark")[len(_PV_PREFIX):])
+    return welch_pv_sql(spark, sf_dir, _fisher_sql(SPARK)[len(_PV_PREFIX):])
 
 
 # ---------------------------------------------------------------------------
@@ -309,22 +306,15 @@ _PGRAM_CORE = """
 """
 
 
-def _pgram_sql(engine: str) -> str:
-    from emr_with_custom_metrics_spark.operators.stats import (
-        _SPINE_FROM_COUNTS_DUCK,
-        _SPINE_FROM_COUNTS_SPARK,
-    )
+def _pgram_sql(d: Dialect) -> str:
+    from emr_with_custom_metrics_spark.operators.stats import spine_from_counts
 
-    prefix = (
-        _SPINE_FROM_COUNTS_SPARK if engine == "spark"
-        else _SPINE_FROM_COUNTS_DUCK
-    )
-    return prefix + _PGRAM_CORE
+    return spine_from_counts(d) + _PGRAM_CORE
 
 
 @register(
     "timeseries_spectral_periodogram",
-    oracle=_pgram_sql("duck"),
+    oracle=_pgram_sql(DUCK),
     doc="Periodogram of each metric's hourly counts at six calendar "
     "candidate periods (6h..168h): trig weights quantized e6 per (t, "
     "period) immediately (libm trig is not correctly rounded; e6 "
@@ -337,7 +327,7 @@ def _pgram_sql(engine: str) -> str:
 def timeseries_spectral_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from emr_with_custom_metrics_spark.operators.stats import hour_counts_sql
 
-    return hour_counts_sql(spark, sf_dir, _pgram_sql("spark"))
+    return hour_counts_sql(spark, sf_dir, _pgram_sql(SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -354,7 +344,7 @@ def timeseries_spectral_periodogram(spark: SparkSession, sf_dir: str) -> DataFra
 
 _KW_CONCORD_TMPL = """
     WITH tok AS (
-        {tokens}
+        SELECT source, {d.terms} AS term FROM documents
     ), tf AS (
         SELECT source, term, CAST(COUNT(*) AS BIGINT) AS c
         FROM tok GROUP BY source, term
@@ -418,18 +408,10 @@ _KW_CONCORD_TMPL = """
     FROM itemsums i CROSS JOIN w
 """
 
-_KW_CONCORD_SPARK = _KW_CONCORD_TMPL.format(
-    tokens="SELECT source, explode(split(text, ' ')) AS term FROM documents"
-)
-_KW_CONCORD_DUCK = _KW_CONCORD_TMPL.format(
-    tokens="SELECT source, UNNEST(string_split(text, ' ')) AS term "
-    "FROM documents"
-)
-
 
 @register(
     "stats_kendall_w",
-    oracle=_KW_CONCORD_DUCK,
+    oracle=_KW_CONCORD_TMPL.format(d=DUCK),
     doc="Kendall's coefficient of concordance: agreement of the ten "
     "sources on the frequency ranking of the top-12 corpus terms "
     "(per-source doubled midranks over the full source x term grid, "
@@ -439,7 +421,7 @@ _KW_CONCORD_DUCK = _KW_CONCORD_TMPL.format(
 )
 def stats_kendall_w(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_KW_CONCORD_SPARK)
+    return spark.sql(_KW_CONCORD_TMPL.format(d=SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -456,7 +438,7 @@ def stats_kendall_w(spark: SparkSession, sf_dir: str) -> DataFrame:
 _QINI_TMPL = """
     WITH base AS (
         SELECT user_id,
-               {epoch_us} AS us,
+               {d.epoch_us} AS us,
                CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y,
                CASE WHEN (instr('0123456789abcdef', substring(md5(
                          concat('ab|', CAST(user_id AS STRING))), 1, 1)) - 1)
@@ -567,7 +549,7 @@ _QINI_TMPL = """
 
 @register(
     "events_uplift_qini",
-    oracle=_QINI_TMPL.format(epoch_us=_EPOCH_US_DUCK),
+    oracle=_QINI_TMPL.format(d=DUCK),
     doc="Qini/uplift decile table: users ranked by first-half activity "
     "(the stand-in model score), outcome = second-half purchase, md5 "
     "arms as treatment. Cumulative treated/control responders from "
@@ -578,4 +560,4 @@ _QINI_TMPL = """
 )
 def events_uplift_qini(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_QINI_TMPL.format(epoch_us=_EPOCH_US_SPARK))
+    return spark.sql(_QINI_TMPL.format(d=SPARK))

@@ -34,17 +34,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.operators.wave11a import (
     _KW_CRIT,
     chi2_lookup_guard,
 )
 from emr_with_custom_metrics_spark.operators.wave11f import _PV_PREFIX
 from emr_with_custom_metrics_spark.registry import register
-
-_EPOCH_S_SPARK = "unix_timestamp(ts)"
-_EPOCH_S_DUCK = "epoch(ts)"
-_EPOCH_US_SPARK = "unix_micros(CAST(ts AS TIMESTAMP))"
-_EPOCH_US_DUCK = "epoch_us(ts)"
 
 
 # ---------------------------------------------------------------------------
@@ -62,7 +58,7 @@ _EPOCH_US_DUCK = "epoch_us(ts)"
 _FRIEDMAN_TMPL = """
     WITH base AS (
         SELECT event_type,
-               CAST(FLOOR({epoch_s} / 86400) AS BIGINT) AS day
+               {d.epoch_day} AS day
         FROM events
     ), cells AS (
         SELECT event_type, day, CAST(COUNT(*) AS BIGINT) AS c
@@ -122,17 +118,17 @@ _FRIEDMAN_TMPL = """
 """
 
 
-def _friedman_sql(engine: str) -> str:
+def _friedman_sql(d: Dialect) -> str:
     return _FRIEDMAN_TMPL.format(
-        epoch_s=_EPOCH_S_SPARK if engine == "spark" else _EPOCH_S_DUCK,
+        d=d,
         crit=_KW_CRIT,
-        guard=chi2_lookup_guard(engine),
+        guard=chi2_lookup_guard(d),
     )
 
 
 @register(
     "stats_friedman_test",
-    oracle=_friedman_sql("duck"),
+    oracle=_friedman_sql(DUCK),
     doc="Friedman rank test of the k metrics across daily blocks "
     "(repeated measures — the within-block design Kruskal-Wallis "
     "cannot express): within-day doubled midranks over the full day x "
@@ -145,7 +141,7 @@ def _friedman_sql(engine: str) -> str:
 )
 def stats_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_friedman_sql("spark"))
+    return spark.sql(_friedman_sql(SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -160,7 +156,7 @@ def stats_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _JT_TMPL = """
     WITH base AS (
-        SELECT event_type, {epoch_us} AS us,
+        SELECT event_type, {d.epoch_us} AS us,
                CAST(ROUND(value * 1000) AS BIGINT) AS v_e3
         FROM events
     ), rng AS (
@@ -241,15 +237,13 @@ _JT_TMPL = """
 """
 
 
-def _jt_sql(engine: str) -> str:
-    return _JT_TMPL.format(
-        epoch_us=_EPOCH_US_SPARK if engine == "spark" else _EPOCH_US_DUCK
-    )
+def _jt_sql(d: Dialect) -> str:
+    return _JT_TMPL.format(d=d)
 
 
 @register(
     "stats_jonckheere_trend",
-    oracle=_jt_sql("duck"),
+    oracle=_jt_sql(DUCK),
     doc="Jonckheere-Terpstra ordered-alternative test per metric across "
     "the three corpus-time terciles: doubled Mann-Whitney pair counts "
     "read entirely off per-group value histograms with cumulative "
@@ -266,7 +260,7 @@ def stats_jonckheere_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tercile bucketing + histogram per reference (20 scans in
     # plans/r15/stats_jonckheere_trend_scan1.txt). Stage the per-group
     # value histogram behind a lazy checkpoint; tail text unchanged.
-    full = _jt_sql("spark")
+    full = _jt_sql(SPARK)
     head, _, tail = full.partition(", vals AS")
     return spark.sql(
         "WITH hist AS (SELECT * FROM {hist}), vals AS" + tail,
@@ -340,16 +334,16 @@ _BARTLETT_SQL = f"""
 """
 
 
-def _bartlett_sql(engine: str) -> str:
+def _bartlett_sql(d: Dialect) -> str:
     return (
         _BARTLETT_SQL
-        + f"    WHERE {chi2_lookup_guard(engine)}\n"
+        + f"    WHERE {chi2_lookup_guard(d)}\n"
     )
 
 
 @register(
     "stats_bartlett_variance",
-    oracle=_bartlett_sql("duck"),
+    oracle=_bartlett_sql(DUCK),
     doc="Bartlett's k-group variance-homogeneity test across the "
     "metrics: per-group exact integer moments, each ln run once on an "
     "exact rational and quantized e9 immediately, the (n_i-1) "
@@ -363,7 +357,7 @@ def _bartlett_sql(engine: str) -> str:
 )
 def stats_bartlett_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_bartlett_sql("spark"))
+    return spark.sql(_bartlett_sql(SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -513,50 +507,22 @@ _DK2_TMPL = """
 """
 
 
-def _wide_to_double(col: str, engine: str) -> str:
-    """Deterministic wide-integer -> double conversion: hi/mid/lo split
-    at 2^60 / 2^30 on the absolute value (every piece < 2^53 converts
-    exactly; the recomposition is two correctly-rounded additions), so
-    Spark DECIMAL(38,0) and DuckDB HUGEINT produce the IDENTICAL
-    double even past 2^53 — the plain CASTs do not (DuckDB's
-    hugeint->double is not correctly rounded)."""
-    div = "DIV" if engine == "spark" else "//"
-    a = f"ABS({col})"
-    hi = f"CAST({a} {div} 1152921504606846976 AS DOUBLE)"
-    mid = f"CAST(({a} % 1152921504606846976) {div} 1073741824 AS DOUBLE)"
-    lo = f"CAST({a} % 1073741824 AS DOUBLE)"
-    return (
-        f"(CASE WHEN {col} < 0 THEN -1.0e0 ELSE 1.0e0 END"
-        f" * ((({hi} * 1152921504606846976.0e0)"
-        f" + ({mid} * 1073741824.0e0)) + {lo}))"
-    )
-
-
-def _dk2_sql(engine: str) -> str:
-    if engine == "spark":
-        # exact wide accumulation via DECIMAL(38,0); the value domain
-        # is NOT capped at 100 (measured v_e3 past 1.8e5), so w^4 can
-        # exceed int64 even after mean-centering
-        return _DK2_TMPL.format(
-            w3="CAST(w AS DECIMAL(38,0)) * w * w",
-            w4="CAST(w AS DECIMAL(38,0)) * w * w * w",
-            acc="DECIMAL(38,0)",
-            s3d=_wide_to_double("s3", "spark"),
-            s4d=_wide_to_double("s4", "spark"),
-        )
-    # DuckDB: HUGEINT accumulators, same split conversion
+def _dk2_sql(d: Dialect) -> str:
+    # exact wide accumulation (Spark DECIMAL, DuckDB HUGEINT); the value
+    # domain is NOT capped at 100 (measured v_e3 past 1.8e5), so w^4 can
+    # exceed int64 even after mean-centering
     return _DK2_TMPL.format(
-        w3="CAST(w AS HUGEINT) * w * w",
-        w4="CAST(w AS HUGEINT) * w * w * w",
-        acc="HUGEINT",
-        s3d=_wide_to_double("s3", "duck"),
-        s4d=_wide_to_double("s4", "duck"),
+        w3=f"CAST(w AS {d.wide_int}) * w * w",
+        w4=f"CAST(w AS {d.wide_int}) * w * w * w",
+        acc=d.wide_int,
+        s3d=d.wide_to_double("s3"),
+        s4d=d.wide_to_double("s4"),
     )
 
 
 @register(
     "stats_dagostino_k2",
-    oracle=_dk2_sql("duck"),
+    oracle=_dk2_sql(DUCK),
     doc="D'Agostino-Pearson K^2 normality omnibus per metric: exact "
     "power sums of the MEAN-centered value (Spark DECIMAL(38,0) / "
     "DuckDB HUGEINT accumulators; wide sums reach double via an "
@@ -571,7 +537,7 @@ def _dk2_sql(engine: str) -> str:
 )
 def stats_dagostino_k2(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_dk2_sql("spark"))
+    return spark.sql(_dk2_sql(SPARK))
 
 
 # ---------------------------------------------------------------------------

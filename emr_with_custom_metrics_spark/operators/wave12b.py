@@ -33,16 +33,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from emr_with_custom_metrics_spark.catalog import load_table, register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.operators.stats import (
-    _SPINE_FROM_COUNTS_DUCK,
-    _SPINE_FROM_COUNTS_SPARK,
-    hour_counts_sql,
     acf_kernel_spark,
+    hour_counts_sql,
+    spine_from_counts,
 )
 from emr_with_custom_metrics_spark.registry import register
 
-_EPOCH_US_SPARK = "unix_micros(CAST(ts AS TIMESTAMP))"
-_EPOCH_US_DUCK = "epoch_us(ts)"
 
 _PACF_L = 10
 
@@ -170,9 +168,9 @@ def _pacf_step_duck(acc: str, k: str) -> str:
 """
 
 
-def _pacf_sql(engine: str) -> str:
+def _pacf_sql(d: Dialect) -> str:
     L = _PACF_L
-    if engine == "spark":
+    if d is SPARK:
         pack = (
             "SELECT event_type, transform(array_sort(collect_list("
             "struct(lag, acf_e6))), s -> CAST(s.acf_e6 AS DOUBLE)"
@@ -201,7 +199,7 @@ def _pacf_sql(engine: str) -> str:
     CROSS JOIN (SELECT explode(sequence(1, {L})) AS lag) l
 """
         return acf_kernel_spark(positive_den=True) + tail
-    prefix = _SPINE_FROM_COUNTS_DUCK
+    prefix = spine_from_counts(DUCK)
     lags = ", lags AS (SELECT UNNEST(generate_series(1, 24)) AS lag)"
     pack = (
         "SELECT event_type, list(CAST(acf_e6 AS DOUBLE) / 1000000.0 "
@@ -238,7 +236,7 @@ def _pacf_sql(engine: str) -> str:
 
 @register(
     "timeseries_pacf_durbin",
-    oracle=_pacf_sql("duck"),
+    oracle=_pacf_sql(DUCK),
     doc="Partial autocorrelation at lags 1-10 of each metric's hourly "
     "density via the Durbin-Levinson recursion over the family's exact "
     "centered ACF integers (the same d = N*c - S body as "
@@ -253,7 +251,7 @@ def _pacf_sql(engine: str) -> str:
 )
 def timeseries_pacf_durbin(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_pacf_sql("spark"))
+    return spark.sql(_pacf_sql(SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -342,7 +340,7 @@ _HURST_CORE = """
 
 @register(
     "timeseries_hurst_rs",
-    oracle=_SPINE_FROM_COUNTS_DUCK + _HURST_CORE,
+    oracle=spine_from_counts(DUCK) + _HURST_CORE,
     doc="Hurst exponent of each metric's hourly density by classical "
     "rescaled-range analysis (Hurst 1951; Mandelbrot-Wallis): dyadic "
     "block sizes 8..128h, per-block R/S from cross-multiplied integer "
@@ -355,7 +353,7 @@ _HURST_CORE = """
     "data-sized crosses one task.",
 )
 def timeseries_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return hour_counts_sql(spark, sf_dir, _SPINE_FROM_COUNTS_SPARK + _HURST_CORE)
+    return hour_counts_sql(spark, sf_dir, spine_from_counts(SPARK) + _HURST_CORE)
 
 
 # ---------------------------------------------------------------------------
@@ -425,7 +423,7 @@ _MASE_CORE = """
 
 @register(
     "timeseries_mase_backtest",
-    oracle=_SPINE_FROM_COUNTS_DUCK + _MASE_CORE,
+    oracle=spine_from_counts(DUCK) + _MASE_CORE,
     doc="MASE and sMAPE of the rolling one-step seasonal-naive forecast "
     "(yhat_t = y_{t-24}) on the last quarter of each metric's hourly "
     "spine, scaled by the in-train MAE of the same predictor "
@@ -437,7 +435,7 @@ _MASE_CORE = """
     "(metric, t-24) — co-partitioned, no window over the full spine.",
 )
 def timeseries_mase_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return hour_counts_sql(spark, sf_dir, _SPINE_FROM_COUNTS_SPARK + _MASE_CORE)
+    return hour_counts_sql(spark, sf_dir, spine_from_counts(SPARK) + _MASE_CORE)
 
 
 # ---------------------------------------------------------------------------
@@ -457,9 +455,9 @@ _MRM_ROUNDS = 40
 
 _MRM_BASE_TMPL = """
     WITH seq AS (
-        SELECT user_id, event_type, {epoch_us} AS us, event_id,
+        SELECT user_id, event_type, {d.epoch_us} AS us, event_id,
                LEAD(event_type) OVER (PARTITION BY user_id
-                   ORDER BY {epoch_us}, event_id) AS nxt
+                   ORDER BY {d.epoch_us}, event_id) AS nxt
         FROM events
     ), trans AS (
         SELECT event_type AS s_from, nxt AS s_to,
@@ -564,8 +562,8 @@ _MRM_TAIL_TMPL = """
 """
 
 
-def _mrm_sql(engine: str) -> str:
-    if engine == "spark":
+def _mrm_sql(d: Dialect) -> str:
+    if d is SPARK:
         step = _MRM_STEP_SPARK.format(h="hacc")
         fold = (
             f"aggregate(sequence(1, {_MRM_ROUNDS}), "
@@ -581,7 +579,7 @@ def _mrm_sql(engine: str) -> str:
             fold=fold,
             pv="element_at(s.pvec, CAST(array_position(p2.sts, f.s) AS INT))",
         )
-        return _MRM_BASE_TMPL.format(epoch_us=_EPOCH_US_SPARK) + tail
+        return _MRM_BASE_TMPL.format(d=SPARK) + tail
     step = _MRM_STEP_DUCK.format(h="hacc")
     fold = (
         f"list_reduce(list_concat("
@@ -599,12 +597,12 @@ def _mrm_sql(engine: str) -> str:
         fold=fold,
         pv="s.pvec[list_position(p2.sts, f.s)]",
     )
-    return _MRM_BASE_TMPL.format(epoch_us=_EPOCH_US_DUCK) + tail
+    return _MRM_BASE_TMPL.format(d=DUCK) + tail
 
 
 @register(
     "attribution_markov_removal",
-    oracle=_mrm_sql("duck"),
+    oracle=_mrm_sql(DUCK),
     doc="Markov removal-effect attribution over the observed user-"
     "journey chain (Anderl et al. 2014): absorption probability into "
     "purchase solved by 40 exact e9-quantized value-iteration rounds "
@@ -619,7 +617,7 @@ def _mrm_sql(engine: str) -> str:
 )
 def attribution_markov_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_mrm_sql("spark"))
+    return spark.sql(_mrm_sql(SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -764,30 +762,31 @@ _FLESCH_TMPL = """
     FROM counts
 """
 
-_FLESCH_SPARK = _FLESCH_TMPL.format(
-    nwords="size(filter(split(text, ' '), x -> x <> ''))",
-    syll=(
-        "aggregate(filter(split(text, ' '), x -> x <> ''), "
-        "CAST(0 AS BIGINT), (a, wd) -> a + greatest(CAST(1 AS BIGINT), "
-        "CAST(length(regexp_replace(regexp_replace(lower(wd), "
-        "'[aeiou]+', 'V'), '[^V]', '')) AS BIGINT)))"
-    ),
-)
-
-_FLESCH_DUCK = _FLESCH_TMPL.format(
-    nwords="len(list_filter(string_split(text, ' '), x -> x <> ''))",
-    syll=(
-        "list_sum(list_transform(list_filter(string_split(text, ' '), "
-        "x -> x <> ''), wd -> GREATEST(1, "
-        "LENGTH(regexp_replace(regexp_replace(lower(wd), "
-        "'[aeiou]+', 'V', 'g'), '[^V]', '', 'g')))))"
-    ),
-)
+def _flesch_sql(d: Dialect) -> str:
+    if d is SPARK:
+        return _FLESCH_TMPL.format(
+            nwords="size(filter(split(text, ' '), x -> x <> ''))",
+            syll=(
+                "aggregate(filter(split(text, ' '), x -> x <> ''), "
+                "CAST(0 AS BIGINT), (a, wd) -> a + greatest(CAST(1 AS BIGINT), "
+                "CAST(length(regexp_replace(regexp_replace(lower(wd), "
+                "'[aeiou]+', 'V'), '[^V]', '')) AS BIGINT)))"
+            ),
+        )
+    return _FLESCH_TMPL.format(
+        nwords="len(list_filter(string_split(text, ' '), x -> x <> ''))",
+        syll=(
+            "list_sum(list_transform(list_filter(string_split(text, ' '), "
+            "x -> x <> ''), wd -> GREATEST(1, "
+            "LENGTH(regexp_replace(regexp_replace(lower(wd), "
+            "'[aeiou]+', 'V', 'g'), '[^V]', '', 'g')))))"
+        ),
+    )
 
 
 @register(
     "text_flesch_readability",
-    oracle=_FLESCH_DUCK,
+    oracle=_flesch_sql(DUCK),
     doc="Flesch reading ease per document: syllables approximated by "
     "vowel runs per word with the standard max(1, runs) floor, "
     "sentences by '.' count floored at 1 (the corpus has no richer "
@@ -800,4 +799,4 @@ _FLESCH_DUCK = _FLESCH_TMPL.format(
 )
 def text_flesch_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_FLESCH_SPARK)
+    return spark.sql(_flesch_sql(SPARK))

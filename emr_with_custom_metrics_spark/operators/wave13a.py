@@ -46,10 +46,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.operators.stats import (
-    _SPINE_FROM_COUNTS_DUCK,
-    _SPINE_FROM_COUNTS_SPARK,
     hour_counts_sql,
+    spine_from_counts,
 )
 from emr_with_custom_metrics_spark.operators.wave9c import _FDR_SQL
 from emr_with_custom_metrics_spark.operators.wave11a import (
@@ -57,16 +57,16 @@ from emr_with_custom_metrics_spark.operators.wave11a import (
     chi2_lookup_guard,
 )
 from emr_with_custom_metrics_spark.registry import register
-from emr_with_custom_metrics_spark.streaming.metrics import _AR2_ORACLE
+from emr_with_custom_metrics_spark.streaming.metrics import _AR2_TMPL
 
-_EPOCH_S_SPARK = "unix_timestamp(ts)"
-_EPOCH_S_DUCK = "epoch(ts)"
 
 # The AR(2) fit body (CTEs s, lagged, m, solved, coefs) sliced from the
 # forecast query's text so the residual diagnostics can never drift
 # from the model they diagnose (the _PV_PREFIX sibling-interface
 # pattern). Ends with "...WHERE det <> 0)," ready for further CTEs.
-_AR2_COEFS_PREFIX = _AR2_ORACLE.split("tail2 AS")[0].rstrip()
+def _ar2_coefs_prefix(d: Dialect) -> str:
+    return _AR2_TMPL.format(d=d).split("tail2 AS")[0].rstrip()
+
 
 # Residuals of the AR(2) fit: e_t = x_t - (a + b*x_{t-1} + c*x_{t-2})
 # over the 5-minute bucket series. x derives from exact-integer e3
@@ -85,10 +85,7 @@ _AR2_RESID_CTE = """
         WHERE l.x1 IS NOT NULL AND l.x2 IS NOT NULL)
 """
 
-_DW_SQL_BODY = (
-    _AR2_COEFS_PREFIX
-    + _AR2_RESID_CTE
-    + """
+_DW_TAIL = """
     , dlag AS (
         SELECT event_type, e_e3,
                LAG(e_e3) OVER (PARTITION BY event_type
@@ -118,14 +115,15 @@ _DW_SQL_BODY = (
     FROM dlag
     GROUP BY event_type
 """
-)
 
-_SPARK_TS_FIX = ("epoch(ts)", "unix_micros(CAST(ts AS TIMESTAMP)) / 1000000.0")
+
+def _dw_sql(d: Dialect) -> str:
+    return _ar2_coefs_prefix(d) + _AR2_RESID_CTE + _DW_TAIL
 
 
 @register(
     "timeseries_durbin_watson",
-    oracle=_DW_SQL_BODY,
+    oracle=_dw_sql(DUCK),
     doc="Durbin-Watson statistic DW = Σ(e_t - e_{t-1})² / Σe_t² over the "
     "AR(2) forecast model's residuals per metric — the first-order "
     "residual-autocorrelation diagnostic (DW≈2 white, <1.5 positive, "
@@ -143,7 +141,7 @@ _SPARK_TS_FIX = ("epoch(ts)", "unix_micros(CAST(ts AS TIMESTAMP)) / 1000000.0")
 )
 def timeseries_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_DW_SQL_BODY.replace(*_SPARK_TS_FIX))
+    return spark.sql(_dw_sql(SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -192,8 +190,8 @@ def _lb_step(el, elx, v, iv) -> str:
     )
 
 
-def _lb_sql(engine: str) -> str:
-    if engine == "spark":
+def _lb_sql(d: Dialect) -> str:
+    if d is SPARK:
         el = lambda i: f"element_at(acc, {i})"
         elx = lambda e: f"element_at(acc, CAST({e} AS INT))"
         step = _lb_step(el, elx, "v", "i")
@@ -297,16 +295,14 @@ def _lb_sql(engine: str) -> str:
     LEFT JOIN ({_KW_CRIT}) c ON c.df = q.n_lags - 2
     WHERE q.n_lags > 2 AND ({{guard}})
 """
-    return _AR2_COEFS_PREFIX + _AR2_RESID_CTE + body
-
-
-_LB_DUCK = _lb_sql("duck").format(guard=chi2_lookup_guard("duck"))
-_LB_SPARK = _lb_sql("spark").format(guard=chi2_lookup_guard("spark"))
+    return (_ar2_coefs_prefix(d) + _AR2_RESID_CTE + body).format(
+        guard=chi2_lookup_guard(d)
+    )
 
 
 @register(
     "stats_ljung_box_resid",
-    oracle=_LB_DUCK,
+    oracle=_lb_sql(DUCK),
     doc="Ljung-Box portmanteau whiteness test at lags 1-8 on the AR(2) "
     "forecast residuals with df = n_lags - 2 — the fitted-parameter "
     "degrees-of-freedom correction that the raw-series stats_ljung_box "
@@ -338,7 +334,7 @@ def stats_ljung_box_resid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lazy checkpoint; every CTE's SQL text is unchanged, so the
     # arithmetic and answer are identical. The DuckDB oracle keeps the
     # one-string chain.
-    full = _LB_SPARK.replace(*_SPARK_TS_FIX)
+    full = _lb_sql(SPARK)
     head, _, tail = full.partition("), calc AS")
     return spark.sql(
         "WITH packed AS (SELECT * FROM {packed}), calc AS" + tail,
@@ -369,7 +365,7 @@ _ICC_TMPL = """
         -- ORDER (observed on the smoke fixture: 48232.5 pairwise vs
         -- 48232.49999999999 sequential) — order-dependent under
         -- Spark's partition-parallel partial aggregation.
-        SELECT CAST(FLOOR({epoch_s} / 86400) AS BIGINT) AS d, event_type,
+        SELECT {d.epoch_day} AS d, event_type,
                CAST(ROUND(CAST(SUM(CAST(ROUND(value * 1000) AS BIGINT))
                     AS DOUBLE) / COUNT(*)) AS BIGINT) AS x
         FROM events GROUP BY 1, 2
@@ -425,7 +421,7 @@ _ICC_TMPL = """
 
 @register(
     "stats_icc_agreement",
-    oracle=_ICC_TMPL.format(epoch_s=_EPOCH_S_DUCK),
+    oracle=_ICC_TMPL.format(d=DUCK),
     doc="Intraclass correlation ICC(2,1) (two-way random, absolute "
     "agreement) and ICC(3,1) (two-way mixed, consistency) per "
     "Shrout-Fleiss 1979 over the complete day x metric grid of daily "
@@ -439,7 +435,7 @@ _ICC_TMPL = """
 )
 def stats_icc_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_ICC_TMPL.format(epoch_s=_EPOCH_S_SPARK))
+    return spark.sql(_ICC_TMPL.format(d=SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -613,8 +609,8 @@ def _kbm_pred(el, costs) -> str:
     )
 
 
-def _kbm_step(engine: str) -> str:
-    if engine == "spark":
+def _kbm_step(d: Dialect) -> str:
+    if d is SPARK:
         el = lambda i: f"element_at(acc, {i})"
         elx = lambda e: f"element_at(acc, CAST({e} AS INT))"
         st = lambda i: f"element_at(st, {i})"
@@ -687,11 +683,11 @@ _KBM_C = [
 ]
 
 
-def _kbm_sql(engine: str) -> str:
+def _kbm_sql(d: Dialect) -> str:
     zeros = ", ".join(["{z}"] * 10)
     init_tmpl = "{arr}({z}, {big}, {big}, " + zeros + ")"
-    if engine == "spark":
-        prefix = _SPINE_FROM_COUNTS_SPARK
+    prefix = spine_from_counts(d)
+    if d is SPARK:
         packed = f"""
     , packed AS (
         SELECT /*+ BROADCAST(r) */ se.event_type, r.n, r.gam_e3,
@@ -710,11 +706,10 @@ def _kbm_sql(engine: str) -> str:
         )
         fold = (
             f"aggregate(p.steps, {init}, "
-            f"(acc, st) -> ({_kbm_step('spark')}))"
+            f"(acc, st) -> ({_kbm_step(SPARK)}))"
         )
         fin = "element_at(f.st, {i})"
     else:
-        prefix = _SPINE_FROM_COUNTS_DUCK
         packed = f"""
     , packed AS MATERIALIZED (
         SELECT /*+ BROADCAST(r) */ se.event_type, r.n, r.gam_e3,
@@ -728,7 +723,7 @@ def _kbm_sql(engine: str) -> str:
         init = init_tmpl.format(arr="list_value", z="0.0", big=_KBM_BIG)
         fold = (
             f"list_reduce(list_concat([{init}], p.steps), "
-            f"(acc, st) -> ({_kbm_step('duck')}))"
+            f"(acc, st) -> ({_kbm_step(DUCK)}))"
         )
         fin = "f.st[{i}]"
     c1, c2, c3 = (fin.format(i=i) for i in (1, 2, 3))
@@ -760,7 +755,7 @@ def _kbm_sql(engine: str) -> str:
 
 @register(
     "timeseries_kleinberg_multistate",
-    oracle=_kbm_sql("duck"),
+    oracle=_kbm_sql(DUCK),
     doc="Kleinberg (2002) MULTI-state burst hierarchy per metric over "
     "the dense hourly series — the 3-level extension of wave10c's "
     "2-state timeseries_burst_kleinberg (which answers 'is it "
@@ -779,4 +774,4 @@ def _kbm_sql(engine: str) -> str:
 def timeseries_kleinberg_multistate(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return hour_counts_sql(spark, sf_dir, _kbm_sql("spark"))
+    return hour_counts_sql(spark, sf_dir, _kbm_sql(SPARK))

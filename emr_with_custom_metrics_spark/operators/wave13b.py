@@ -45,10 +45,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.registry import register
-
-_EPOCH_US_SPARK = "unix_micros(CAST(ts AS TIMESTAMP))"
-_EPOCH_US_DUCK = "epoch_us(ts)"
 
 
 def _lp_e3(p: float) -> int:
@@ -106,9 +104,8 @@ def _hmm_step(el, st) -> str:
 _HMM_BIG = "1.0e15"  # virtual -inf for the engaged start (never optimal)
 
 
-def _hmm_sql(engine: str) -> str:
-    if engine == "spark":
-        epoch_us = _EPOCH_US_SPARK
+def _hmm_sql(d: Dialect) -> str:
+    if d is SPARK:
         packed = f"""
     , packed AS (
         SELECT user_id,
@@ -130,7 +127,6 @@ def _hmm_sql(engine: str) -> str:
         n_ev = "size(p.steps)"
         fin = "element_at(f.st, {i})"
     else:
-        epoch_us = _EPOCH_US_DUCK
         packed = f"""
     , packed AS MATERIALIZED (
         SELECT user_id,
@@ -150,7 +146,7 @@ def _hmm_sql(engine: str) -> str:
     best0 = f"{fin.format(i=1)} >= {fin.format(i=2)}"
     return f"""
     WITH seq AS (
-        SELECT user_id, event_type, {epoch_us} AS us, event_id FROM events
+        SELECT user_id, event_type, {d.epoch_us} AS us, event_id FROM events
     ){packed}
     , folded AS (
         SELECT p.user_id, CAST({n_ev} AS BIGINT) AS n_events,
@@ -169,7 +165,7 @@ def _hmm_sql(engine: str) -> str:
 
 @register(
     "events_hmm_viterbi",
-    oracle=_hmm_sql("duck"),
+    oracle=_hmm_sql(DUCK),
     doc="MAP (Viterbi) decode of each user's event sequence under a "
     "pinned 2-state HMM (casual / engaged; emissions over the five "
     "event types, transition matrix, and the casual-row initial "
@@ -185,7 +181,7 @@ def _hmm_sql(engine: str) -> str:
 )
 def events_hmm_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_hmm_sql("spark"))
+    return spark.sql(_hmm_sql(SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -221,9 +217,9 @@ def _croston_step(el, st) -> str:
     return f"{z}, {p}, {st(1)}, 1.0e0"
 
 
-def _croston_sql(engine: str) -> str:
-    if engine == "spark":
-        week = "CAST(FLOOR(unix_timestamp(l_shipdate) / 604800) AS BIGINT)"
+def _croston_sql(d: Dialect) -> str:
+    week = f"CAST(FLOOR({d.secs('l_shipdate')} / 604800) AS BIGINT)"
+    if d is SPARK:
         packed = """
     , packed AS (
         SELECT w.l_partkey, s.w0,
@@ -245,7 +241,6 @@ def _croston_sql(engine: str) -> str:
         fold = f"aggregate(p.steps, {init}, (acc, st) -> array({step}))"
         fin = "element_at(f.st, {i})"
     else:
-        week = "CAST(FLOOR(epoch(l_shipdate) / 604800) AS BIGINT)"
         packed = """
     , packed AS MATERIALIZED (
         SELECT w.l_partkey, s.w0,
@@ -288,7 +283,7 @@ def _croston_sql(engine: str) -> str:
 
 @register(
     "demand_croston_sbc",
-    oracle=_croston_sql("duck"),
+    oracle=_croston_sql(DUCK),
     doc="Croston (1972) intermittent-demand forecast with the "
     "Syntetos-Boylan correction per part over weekly shipped "
     "quantities: separate SES (alpha = 0.2) of nonzero demand SIZES "
@@ -310,7 +305,7 @@ def demand_croston_sbc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-part packing, so the lineitem scan + weekly aggregation ran
     # twice. Stage the compact (part, week, qty) table behind a lazy
     # checkpoint; tail text unchanged.
-    full = _croston_sql("spark")
+    full = _croston_sql(SPARK)
     head, _, tail = full.partition(", start AS")
     return spark.sql(
         "WITH wk AS (SELECT * FROM {wk}), start AS" + tail,
@@ -470,7 +465,6 @@ def mutual_topk_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
 @register(
     "graph_ktruss",
     oracle=_ktruss_oracle(_KTRUSS_ROUNDS, _KTRUSS_K),
@@ -548,8 +542,8 @@ def _mtld_step(el, st) -> str:
     )
 
 
-def _mtld_sql(engine: str) -> str:
-    if engine == "spark":
+def _mtld_sql(d: Dialect) -> str:
+    if d is SPARK:
         tok = """
         SELECT doc_id, pos0 + 1 AS pos, term
         FROM (SELECT doc_id, posexplode(split(text, ' ')) AS (pos0, term)
@@ -627,7 +621,7 @@ def _mtld_sql(engine: str) -> str:
 
 @register(
     "text_mtld",
-    oracle=_mtld_sql("duck"),
+    oracle=_mtld_sql(DUCK),
     doc="Forward MTLD lexical diversity per document (McCarthy-Jarvis "
     "2010): sequential factor count where the running segment's "
     "type-token ratio drops below 0.72, final partial factor "
@@ -644,4 +638,4 @@ def _mtld_sql(engine: str) -> str:
 )
 def text_mtld(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_mtld_sql("spark"))
+    return spark.sql(_mtld_sql(SPARK))

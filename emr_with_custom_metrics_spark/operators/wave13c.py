@@ -33,11 +33,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.operators.stats import (
-    _SPINE_FROM_COUNTS_DUCK,
-    _SPINE_FROM_COUNTS_SPARK,
-    hour_counts_sql,
     acf_kernel_spark,
+    hour_counts_sql,
+    spine_from_counts,
 )
 from emr_with_custom_metrics_spark.operators.wave12b import (
     _PACF_ACF_CORE,
@@ -46,9 +46,6 @@ from emr_with_custom_metrics_spark.operators.wave12b import (
     _pacf_step_spark,
 )
 from emr_with_custom_metrics_spark.registry import register
-
-_EPOCH_US_SPARK = "unix_micros(CAST(ts AS TIMESTAMP))"
-_EPOCH_US_DUCK = "epoch_us(ts)"
 
 
 # ---------------------------------------------------------------------------
@@ -61,9 +58,9 @@ _EPOCH_US_DUCK = "epoch_us(ts)"
 # which leaves phi_{p*+1}..phi_L exactly 0 and v at the order-p* ratio.
 
 
-def _arfit_sql(engine: str) -> str:
+def _arfit_sql(d: Dialect) -> str:
     L = _PACF_L
-    if engine == "spark":
+    if d is SPARK:
         head = acf_kernel_spark(positive_den=True)
         # n = n_pairs + lag on every acf row: reading it from a second
         # relation would reference the kernel twice and re-scan events
@@ -107,7 +104,7 @@ def _arfit_sql(engine: str) -> str:
         mat = ""
     else:
         head = (
-            _SPINE_FROM_COUNTS_DUCK
+            spine_from_counts(DUCK)
             + ", lags AS (SELECT UNNEST(generate_series(1, 24)) AS lag)"
             + _PACF_ACF_CORE
         )
@@ -194,7 +191,7 @@ def _arfit_sql(engine: str) -> str:
 
 @register(
     "timeseries_ar_order_fit",
-    oracle=_arfit_sql("duck"),
+    oracle=_arfit_sql(DUCK),
     doc="AR order selection + Yule-Walker fit per metric: p* = the "
     "largest lag whose PACF clears the 1.96/sqrt(n) significance band "
     "(picked by a pure integer-max fold over the Durbin-Levinson "
@@ -210,7 +207,7 @@ def _arfit_sql(engine: str) -> str:
 )
 def timeseries_ar_order_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_arfit_sql("spark"))
+    return spark.sql(_arfit_sql(SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -230,8 +227,8 @@ def timeseries_ar_order_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HW_ALPHA, _HW_BETA, _HW_GAMMA = "0.2e0", "0.05e0", "0.1e0"
 
 
-def _hw_step(engine: str) -> str:
-    if engine == "spark":
+def _hw_step(d: Dialect) -> str:
+    if d is SPARK:
         el = lambda i: f"element_at(acc, {i})"
         elx = lambda e: f"element_at(acc, CAST({e} AS INT))"
         v = "element_at(st, 1)"
@@ -277,9 +274,9 @@ def _hw_step(engine: str) -> str:
     return bind.format(lnew=lnew, arms=arms)
 
 
-def _hw_sql(engine: str) -> str:
-    if engine == "spark":
-        prefix = _SPINE_FROM_COUNTS_SPARK
+def _hw_sql(d: Dialect) -> str:
+    prefix = spine_from_counts(d)
+    if d is SPARK:
         mat = ""
         packed = """
     , idx AS (
@@ -317,15 +314,14 @@ def _hw_sql(engine: str) -> str:
                steps
         FROM packed
     )"""
-        fold = f"aggregate(p.steps, p.init, (acc, st) -> ({_hw_step('spark')}))"
-        fin = "f.st[{i}]".replace("f.st[{i}]", "element_at(f.st, {i})")
+        fold = f"aggregate(p.steps, p.init, (acc, st) -> ({_hw_step(SPARK)}))"
+        fin = "element_at(f.st, {i})"
         samp = (
             "array_max(slice(f.st, 5, 24)) - array_min(slice(f.st, 5, 24))"
         )
         jnext = "(CAST(element_at(f.st, 3) AS INT) % 24) + 1"
         snext = f"element_at(f.st, CAST({jnext} + 4 AS INT))"
     else:
-        prefix = _SPINE_FROM_COUNTS_DUCK
         mat = " MATERIALIZED"
         packed = """
     , idx AS MATERIALIZED (
@@ -363,7 +359,7 @@ def _hw_sql(engine: str) -> str:
     )"""
         fold = (
             f"list_reduce(list_concat([p.init], p.steps), "
-            f"(acc, st) -> ({_hw_step('duck')}))"
+            f"(acc, st) -> ({_hw_step(DUCK)}))"
         )
         fin = "f.st[{i}]"
         samp = "list_max(f.st[5:28]) - list_min(f.st[5:28])"
@@ -388,7 +384,7 @@ def _hw_sql(engine: str) -> str:
 
 @register(
     "timeseries_holt_winters_seasonal",
-    oracle=_hw_sql("duck"),
+    oracle=_hw_sql(DUCK),
     doc="FULL additive Holt-Winters (level + trend + 24-hour seasonality, "
     "alpha/beta/gamma = 0.2/0.05/0.1 pinned) per metric over the dense "
     "hourly count series — the seasonal completion of the existing "
@@ -407,7 +403,7 @@ def _hw_sql(engine: str) -> str:
 def timeseries_holt_winters_seasonal(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return hour_counts_sql(spark, sf_dir, _hw_sql("spark"))
+    return hour_counts_sql(spark, sf_dir, _hw_sql(SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -415,7 +411,7 @@ def timeseries_holt_winters_seasonal(
 # ---------------------------------------------------------------------------
 _SIMPSON_TMPL = """
     WITH tok AS (
-        {tokens}
+        SELECT source, {d.terms} AS term FROM documents
     ), tf AS (
         SELECT source, term, CAST(COUNT(*) AS BIGINT) AS m
         FROM tok GROUP BY source, term
@@ -441,18 +437,10 @@ _SIMPSON_TMPL = """
     FROM spec
 """
 
-_SIMPSON_SPARK = _SIMPSON_TMPL.format(
-    tokens="SELECT source, explode(split(text, ' ')) AS term FROM documents"
-)
-_SIMPSON_DUCK = _SIMPSON_TMPL.format(
-    tokens="SELECT source, UNNEST(string_split(text, ' ')) AS term "
-    "FROM documents"
-)
-
 
 @register(
     "text_simpson_diversity",
-    oracle=_SIMPSON_DUCK,
+    oracle=_SIMPSON_TMPL.format(d=DUCK),
     doc="Simpson concentration per source from the exact term-frequency "
     "spectrum: D = sum m(m-1) / (N(N-1)) — the probability two tokens "
     "drawn without replacement are the same type, an exact integer "
@@ -465,4 +453,4 @@ _SIMPSON_DUCK = _SIMPSON_TMPL.format(
 )
 def text_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_SIMPSON_SPARK)
+    return spark.sql(_SIMPSON_TMPL.format(d=SPARK))

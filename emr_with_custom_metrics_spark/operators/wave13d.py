@@ -33,14 +33,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, SPARK
 from emr_with_custom_metrics_spark.operators.wave11a import (
     _KW_CRIT,
     chi2_lookup_guard,
 )
 from emr_with_custom_metrics_spark.registry import register
-
-_EPOCH_US_SPARK = "unix_micros(CAST(ts AS TIMESTAMP))"
-_EPOCH_US_DUCK = "epoch_us(ts)"
 
 
 # ---------------------------------------------------------------------------
@@ -104,7 +102,7 @@ _COCHRAN_TMPL = """
 
 @register(
     "stats_cochran_q",
-    oracle=_COCHRAN_TMPL.format(crit=_KW_CRIT, guard=chi2_lookup_guard("duck")),
+    oracle=_COCHRAN_TMPL.format(crit=_KW_CRIT, guard=chi2_lookup_guard(DUCK)),
     doc="Cochran's Q (1950) across the five metrics' per-user "
     "high-value indicators (x_ij = user i ever logged metric j at "
     "value >= 100) — the k-treatment generalization of McNemar and "
@@ -121,7 +119,7 @@ _COCHRAN_TMPL = """
 def stats_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
     return spark.sql(
-        _COCHRAN_TMPL.format(crit=_KW_CRIT, guard=chi2_lookup_guard("spark"))
+        _COCHRAN_TMPL.format(crit=_KW_CRIT, guard=chi2_lookup_guard(SPARK))
     )
 
 
@@ -139,12 +137,12 @@ def stats_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PAGE_TMPL = """
     WITH bounds AS (
         SELECT MIN(us) AS mn, MAX(us) AS mx FROM (
-            SELECT {epoch_us} AS us FROM events) z
+            SELECT {d.epoch_us} AS us FROM events) z
     ), terc AS (
         -- FLOOR before the CAST: CAST(double AS BIGINT) truncates in
         -- Spark but ROUNDS in DuckDB (the round-2 dialect lesson)
         SELECT e.user_id,
-               CAST(LEAST(2, FLOOR(({epoch_us} - b.mn) * 3.0e0
+               CAST(LEAST(2, FLOOR(({d.epoch_us} - b.mn) * 3.0e0
                     / (b.mx - b.mn + 1))) AS BIGINT) AS g
         FROM events e CROSS JOIN bounds b
     ), cell AS (
@@ -187,7 +185,7 @@ _PAGE_TMPL = """
 
 @register(
     "stats_page_trend",
-    oracle=_PAGE_TMPL.format(epoch_us=_EPOCH_US_DUCK),
+    oracle=_PAGE_TMPL.format(d=DUCK),
     doc="Page's L test (1963) for a monotone increase of per-user "
     "activity across the three ordered corpus-time terciles: blocks = "
     "users active in all three terciles, within-block DOUBLED "
@@ -203,7 +201,7 @@ _PAGE_TMPL = """
 )
 def stats_page_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_PAGE_TMPL.format(epoch_us=_EPOCH_US_SPARK))
+    return spark.sql(_PAGE_TMPL.format(d=SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -211,7 +209,7 @@ def stats_page_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 _BURSTY_TMPL = """
     WITH seq AS (
-        SELECT event_type, {epoch_us} AS us, event_id FROM events
+        SELECT event_type, {d.epoch_us} AS us, event_id FROM events
     ), gaps AS (
         SELECT event_type,
                ({us_prev_expr}) AS g
@@ -256,7 +254,7 @@ _BURSTY_TMPL = """
 @register(
     "events_interevent_burstiness",
     oracle=_BURSTY_TMPL.format(
-        epoch_us=_EPOCH_US_DUCK, us_prev_expr="(us - pus) // 1000000"
+        d=DUCK, us_prev_expr="(us - pus) // 1000000"
     ),
     doc="Goh-Barabasi (2008) burstiness B = (sigma - mu)/(sigma + mu) "
     "of each metric's inter-event gaps (-1 = perfectly regular, 0 = "
@@ -278,6 +276,6 @@ def events_interevent_burstiness(
     register_views(spark, sf_dir, ("events",))
     return spark.sql(
         _BURSTY_TMPL.format(
-            epoch_us=_EPOCH_US_SPARK, us_prev_expr="(us - pus) div 1000000"
+            d=SPARK, us_prev_expr="(us - pus) div 1000000"
         )
     )

@@ -46,15 +46,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.operators.stats import (
-    _SPINE_FROM_COUNTS_DUCK,
-    _SPINE_FROM_COUNTS_SPARK,
     hour_counts_sql,
+    spine_from_counts,
 )
 from emr_with_custom_metrics_spark.registry import register
 
-_EPOCH_US_SPARK = "unix_micros(CAST(ts AS TIMESTAMP))"
-_EPOCH_US_DUCK = "epoch_us(ts)"
 _DAY_US = 86_400_000_000
 _WEEK_US = 7 * _DAY_US
 
@@ -74,12 +72,12 @@ _WEEK_US = 7 * _DAY_US
 
 _NA_TMPL = """
     WITH bounds AS (
-        SELECT MAX({epoch_us}) AS gmax FROM events
+        SELECT MAX({d.epoch_us}) AS gmax FROM events
     ), life AS (
         SELECT e.user_id,
-               CAST((MAX({epoch_us}) - MIN({epoch_us}))
-                    {intdiv} {day_us} AS BIGINT) AS days,
-               CAST(CASE WHEN MAX({epoch_us}) < b.gmax - {week_us}
+               CAST((MAX({d.epoch_us}) - MIN({d.epoch_us}))
+                    {d.intdiv} {day_us} AS BIGINT) AS days,
+               CAST(CASE WHEN MAX({d.epoch_us}) < b.gmax - {week_us}
                          THEN 1 ELSE 0 END AS BIGINT) AS churned
         FROM events e CROSS JOIN bounds b
         GROUP BY e.user_id, b.gmax
@@ -122,10 +120,7 @@ _NA_TMPL = """
 
 @register(
     "survival_nelson_aalen",
-    oracle=_NA_TMPL.format(
-        epoch_us=_EPOCH_US_DUCK, intdiv="//", day_us=_DAY_US,
-        week_us=_WEEK_US,
-    ),
+    oracle=_NA_TMPL.format(d=DUCK, day_us=_DAY_US, week_us=_WEEK_US),
     doc="Nelson-Aalen cumulative-hazard curve H(t) = sum d_i/n_i over "
     "the survival_kaplan_meier lifetime grid (days first->last event; "
     "final-week actives right-censored), with the Breslow survival "
@@ -142,12 +137,7 @@ _NA_TMPL = """
 )
 def survival_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(
-        _NA_TMPL.format(
-            epoch_us=_EPOCH_US_SPARK, intdiv="div", day_us=_DAY_US,
-            week_us=_WEEK_US,
-        )
-    )
+    return spark.sql(_NA_TMPL.format(d=SPARK, day_us=_DAY_US, week_us=_WEEK_US))
 
 
 # ---------------------------------------------------------------------------
@@ -167,8 +157,8 @@ _SMK_TMPL = """
         -- integer MICROSECONDS, never DuckDB's epoch(): its double
         -- return makes `//` plain division, not floor (round-14 find)
         SELECT event_type,
-               CAST({epoch_us} {intdiv} 86400000000 AS BIGINT) AS day,
-               CAST(({epoch_us} {intdiv} 3600000000) % 24 AS BIGINT)
+               CAST({d.epoch_us} {d.intdiv} 86400000000 AS BIGINT) AS day,
+               CAST(({d.epoch_us} {d.intdiv} 3600000000) % 24 AS BIGINT)
                    AS season,
                CAST(COUNT(*) AS BIGINT) AS cnt
         FROM events GROUP BY 1, 2, 3
@@ -238,13 +228,17 @@ _SMK_TMPL = """
 """
 
 
+def _smk_sql(d: Dialect) -> str:
+    return _SMK_TMPL.format(
+        d=d,
+        day_series=d.series("b.dmin", "b.dmax"),
+        season_series=d.series("0", "23"),
+    )
+
+
 @register(
     "stats_seasonal_mann_kendall",
-    oracle=_SMK_TMPL.format(
-        epoch_us=_EPOCH_US_DUCK, intdiv="//",
-        day_series="UNNEST(generate_series(b.dmin, b.dmax))",
-        season_series="UNNEST(generate_series(0, 23))",
-    ),
+    oracle=_smk_sql(DUCK),
     doc="Hirsch-Slack (1984) SEASONAL Mann-Kendall monotone-trend test "
     "per metric: the MK S statistic and tie-corrected 18*variance are "
     "computed WITHIN each hour-of-day stratum over the dense daily "
@@ -264,13 +258,7 @@ def stats_seasonal_mann_kendall(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(
-        _SMK_TMPL.format(
-            epoch_us=_EPOCH_US_SPARK, intdiv="div",
-            day_series="explode(sequence(b.dmin, b.dmax))",
-            season_series="explode(sequence(0, 23))",
-        )
-    )
+    return spark.sql(_smk_sql(SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -423,8 +411,8 @@ def stats_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 _THETA_ALPHA = "0.2e0"
 
 
-def _theta_step(engine: str) -> str:
-    if engine == "spark":
+def _theta_step(d: Dialect) -> str:
+    if d is SPARK:
         el = lambda i: f"element_at(acc, {i})"
         st = lambda i: f"element_at(st, {i})"
         out = "array({lvl}, {pos}, {sse})"
@@ -445,9 +433,9 @@ def _theta_step(engine: str) -> str:
     )
 
 
-def _theta_sql(engine: str) -> str:
-    if engine == "spark":
-        prefix = _SPINE_FROM_COUNTS_SPARK
+def _theta_sql(d: Dialect) -> str:
+    prefix = spine_from_counts(d)
+    if d is SPARK:
         pack_first = (
             "element_at(transform(array_sort(collect_list(CASE WHEN rn = 1 "
             "THEN struct(rn, y2) END)), s -> s.y2), 1)"
@@ -459,18 +447,17 @@ def _theta_sql(engine: str) -> str:
         fold = (
             f"aggregate(p.steps, array(p.l0, CAST(1.0 AS DOUBLE), "
             f"CAST(0.0 AS DOUBLE)), "
-            f"(acc, st) -> ({_theta_step('spark')}))"
+            f"(acc, st) -> ({_theta_step(SPARK)}))"
         )
         fin = "element_at(f.st, {i})"
     else:
-        prefix = _SPINE_FROM_COUNTS_DUCK
         pack_first = "(list(y2 ORDER BY rn) FILTER (WHERE rn = 1))[1]"
         pack_steps = (
             "list([y2, vd, lin] ORDER BY rn) FILTER (WHERE rn >= 2)"
         )
         fold = (
             f"list_reduce(list_concat([[p.l0, 1.0, 0.0]], p.steps), "
-            f"(acc, st) -> ({_theta_step('duck')}))"
+            f"(acc, st) -> ({_theta_step(DUCK)}))"
         )
         fin = "f.st[{i}]"
     body = f"""
@@ -537,7 +524,7 @@ def _theta_sql(engine: str) -> str:
 
 @register(
     "timeseries_theta_method",
-    oracle=_theta_sql("duck"),
+    oracle=_theta_sql(DUCK),
     doc="Theta(0, 2) forecast (Assimakopoulos-Nikolopoulos 2000 — the "
     "M3 competition winner and the standard bake-off baseline) per "
     "metric over the dense hourly count spine: exact-integer least "
@@ -553,4 +540,4 @@ def _theta_sql(engine: str) -> str:
     "hourly reduction; the fold is calendar-bounded.",
 )
 def timeseries_theta_method(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return hour_counts_sql(spark, sf_dir, _theta_sql("spark"))
+    return hour_counts_sql(spark, sf_dir, _theta_sql(SPARK))

@@ -34,14 +34,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.operators.wave13b import (
     _KTRUSS_MUTUAL_SQL,
     mutual_topk_edges,
 )
 from emr_with_custom_metrics_spark.registry import register
-
-_EPOCH_US_SPARK = "unix_micros(CAST(ts AS TIMESTAMP))"
-_EPOCH_US_DUCK = "epoch_us(ts)"
 
 
 # ---------------------------------------------------------------------------
@@ -177,8 +175,8 @@ _COH_TMPL = """
         -- integer MICROSECONDS (DuckDB's // on epoch()'s double is
         -- plain division, not floor — the round-14 rule)
         SELECT event_type,
-               CAST({epoch_us} {intdiv} 86400000000 AS BIGINT) AS day,
-               CAST(({epoch_us} {intdiv} 3600000000) % 24 AS BIGINT) AS h,
+               CAST({d.epoch_us} {d.intdiv} 86400000000 AS BIGINT) AS day,
+               CAST(({d.epoch_us} {d.intdiv} 3600000000) % 24 AS BIGINT) AS h,
                CAST(COUNT(*) AS BIGINT) AS cnt
         FROM events GROUP BY 1, 2, 3
     ), trig AS (
@@ -277,23 +275,22 @@ _COH_AMP_COND = (
 )
 
 
-def _coh_amp_guard(engine: str) -> str:
-    if engine == "spark":
-        return f"assert_true({_COH_AMP_COND}, '{_COH_AMP_MSG}') IS NULL"
-    return (
-        f"CASE WHEN {_COH_AMP_COND} THEN TRUE "
-        f"ELSE error('{_COH_AMP_MSG}') END"
+def _coh_amp_guard(d: Dialect) -> str:
+    return d.guard(_COH_AMP_COND, _COH_AMP_MSG)
+
+
+def _coh_sql(d: Dialect) -> str:
+    return _COH_TMPL.format(
+        d=d,
+        values_head=f"(VALUES {_TRIG_ROWS})" + (" AS" if d is SPARK else ""),
+        day_series=d.series("b.dmin", "b.dmax"),
+        amp_guard=_coh_amp_guard(d),
     )
 
 
 @register(
     "timeseries_cross_coherence",
-    oracle=_COH_TMPL.format(
-        epoch_us=_EPOCH_US_DUCK, intdiv="//",
-        values_head=f"(VALUES {_TRIG_ROWS})",
-        day_series="UNNEST(generate_series(b.dmin, b.dmax))",
-        amp_guard=_coh_amp_guard("duck"),
-    ),
+    oracle=_coh_sql(DUCK),
     doc="Magnitude-squared coherence at the 24-hour band between every "
     "metric pair: per-(metric, day) Fourier coefficients at period 24 "
     "as exact integer dot products of hourly counts with PINNED "
@@ -315,11 +312,4 @@ def timeseries_cross_coherence(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(
-        _COH_TMPL.format(
-            epoch_us=_EPOCH_US_SPARK, intdiv="div",
-            values_head=f"(VALUES {_TRIG_ROWS}) AS",
-            day_series="explode(sequence(b.dmin, b.dmax))",
-            amp_guard=_coh_amp_guard("spark"),
-        )
-    )
+    return spark.sql(_coh_sql(SPARK))

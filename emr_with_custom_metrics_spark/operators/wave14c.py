@@ -32,10 +32,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.operators.stats import (
-    _SPINE_FROM_COUNTS_DUCK,
-    _SPINE_FROM_COUNTS_SPARK,
     hour_counts_sql,
+    spine_from_counts,
 )
 from emr_with_custom_metrics_spark.registry import register
 
@@ -69,9 +69,9 @@ def _kd_pred(costs: list[str]) -> str:
     return "CASE " + " ".join(arms) + f" ELSE {float(n - 1)}e0 END"
 
 
-def _kd_step(engine: str) -> str:
+def _kd_step(d: Dialect) -> str:
     L = _KD_L
-    if engine == "spark":
+    if d is SPARK:
         el = lambda i: f"element_at(acc, {i})"
         elx = lambda e: f"element_at(acc, CAST({e} AS INT))"
         st = lambda i: f"element_at(st, {i})"
@@ -143,7 +143,7 @@ _KD_C = [
 ]
 
 
-def _kd_sql(engine: str) -> str:
+def _kd_sql(d: Dialect) -> str:
     L = _KD_L
     nslots = L + L * L + L + 1
     init_zeros = ", ".join(["{z}"] * (nslots - L))
@@ -151,8 +151,8 @@ def _kd_sql(engine: str) -> str:
         "{arr}({zero}, " + ", ".join(["{big}"] * (L - 1)) + ", "
         + init_zeros + ")"
     )
-    if engine == "spark":
-        prefix = _SPINE_FROM_COUNTS_SPARK
+    prefix = spine_from_counts(d)
+    if d is SPARK:
         cols = ",\n".join(
             f"                   CAST({_KD_C[s]} AS DOUBLE) AS c{s}"
             for s in range(L)
@@ -174,11 +174,10 @@ def _kd_sql(engine: str) -> str:
         )
         fold = (
             f"aggregate(p.steps, {init}, "
-            f"(acc, st) -> ({_kd_step('spark')}))"
+            f"(acc, st) -> ({_kd_step(SPARK)}))"
         )
         fin = "element_at(f.st, {i})"
     else:
-        prefix = _SPINE_FROM_COUNTS_DUCK
         cols = ",\n".join(
             f"                     CAST({_KD_C[s]} AS DOUBLE)"
             for s in range(L)
@@ -197,7 +196,7 @@ def _kd_sql(engine: str) -> str:
         )
         fold = (
             f"list_reduce(list_concat([{init}], p.steps), "
-            f"(acc, st) -> ({_kd_step('duck')}))"
+            f"(acc, st) -> ({_kd_step(DUCK)}))"
         )
         fin = "f.st[{i}]"
     costs = [fin.format(i=i + 1) for i in range(L)]
@@ -251,7 +250,7 @@ def _kd_sql(engine: str) -> str:
 
 @register(
     "timeseries_kleinberg_depth",
-    oracle=_kd_sql("duck"),
+    oracle=_kd_sql(DUCK),
     doc="Kleinberg burst hierarchy at DEPTH 5 (levels at 1x/2x/4x/8x/"
     "16x the mean hourly rate, upward transitions paying (j-i)*ln(n)) "
     "via a PARAMETERIZED level-count generator — the scoped extension "
@@ -270,7 +269,7 @@ def _kd_sql(engine: str) -> str:
 def timeseries_kleinberg_depth(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return hour_counts_sql(spark, sf_dir, _kd_sql("spark"))
+    return hour_counts_sql(spark, sf_dir, _kd_sql(SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -288,8 +287,8 @@ def timeseries_kleinberg_depth(
 _MSG_ROUNDS = 24
 
 
-def _msg_step(engine: str) -> str:
-    if engine == "spark":
+def _msg_step(d: Dialect) -> str:
+    if d is SPARK:
         el = "acc"
         k = f"(size({el}) - 2)"
         seq = lambda a, b: f"sequence({a}, {b})"
@@ -308,7 +307,7 @@ def _msg_step(engine: str) -> str:
         bind2 = "list_transform([struct_pack(yc := ({yc}))], w2 -> {rest})[1]"
         zer = "0.0"
     # y_i = sum_j P[i][j] * w_j  (pm is the ONLY outer-column capture)
-    if engine == "spark":
+    if d is SPARK:
         dot = (
             f"{agg}({seq('1', k)}, {zer}, (sa, j) -> sa + "
             f"{idx('p.pm', f'(i - 1) * {k} + j')} * {idx(el, 'j')})"
@@ -327,7 +326,7 @@ def _msg_step(engine: str) -> str:
         mean = f"(list_sum(w1.y) / len(w1.y))"
         ycarr = f"{tx}(w1.y, x -> x - {mean})"
         nrm = "list_sum(list_transform(w2.yc, x -> abs(x)))"
-    if engine == "spark":
+    if d is SPARK:
         out = (
             f"transform(sequence(1, size({el})), i -> CASE "
             f"WHEN i <= {k} AND nr > 1.0e-12 THEN "
@@ -365,8 +364,8 @@ def _msg_step(engine: str) -> str:
     return bind1.format(y=yarr, rest=step)
 
 
-def _msg_sql(engine: str) -> str:
-    if engine == "spark":
+def _msg_sql(d: Dialect) -> str:
+    if d is SPARK:
         rounds = f"transform(sequence(1, {_MSG_ROUNDS}), z -> CAST(0.0 AS DOUBLE))"
         init = (
             "concat(transform(sequence(1, s.k), i -> CASE WHEN i = 1 "
@@ -376,7 +375,7 @@ def _msg_sql(engine: str) -> str:
         )
         fold = (
             f"aggregate({rounds}, p.init, "
-            f"(acc, rd) -> ({_msg_step('spark')}))"
+            f"(acc, rd) -> ({_msg_step(SPARK)}))"
         )
         fin = lambda e: f"element_at(f.st, CAST({e} AS INT))"
         pack = (
@@ -396,7 +395,7 @@ def _msg_sql(engine: str) -> str:
         fold = (
             f"list_reduce(list_concat([p.init], "
             f"list_transform({rounds}, z -> [z])), "
-            f"(acc, rd) -> ({_msg_step('duck')}))"
+            f"(acc, rd) -> ({_msg_step(DUCK)}))"
         )
         fin = lambda e: f"f.st[CAST({e} AS INT)]"
         pack = "list(pq ORDER BY i, j)"
@@ -465,7 +464,7 @@ def _msg_sql(engine: str) -> str:
 
 @register(
     "events_markov_spectral_gap",
-    oracle=_msg_sql("duck"),
+    oracle=_msg_sql(DUCK),
     doc="|lambda_2| and the spectral gap of the user-journey Markov "
     "transition matrix (the events_transition_matrix construction, "
     "e9-quantized row-normalization, dead-end rows as self-loops — "
@@ -487,4 +486,4 @@ def events_markov_spectral_gap(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_msg_sql("spark"))
+    return spark.sql(_msg_sql(SPARK))

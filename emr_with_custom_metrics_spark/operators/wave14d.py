@@ -47,19 +47,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.operators.stats import (
-    _SPINE_FROM_COUNTS_DUCK,
-    _SPINE_FROM_COUNTS_SPARK,
     hour_counts_sql,
+    spine_from_counts,
 )
 from emr_with_custom_metrics_spark.operators.wave13b import (
     _KTRUSS_MUTUAL_SQL,
     mutual_topk_edges,
 )
 from emr_with_custom_metrics_spark.registry import register
-
-_EPOCH_US_SPARK = "unix_micros(CAST(ts AS TIMESTAMP))"
-_EPOCH_US_DUCK = "epoch_us(ts)"
 
 
 # ---------------------------------------------------------------------------
@@ -192,7 +189,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CCC_TMPL = """
     WITH cellraw AS (
         SELECT event_type,
-               CAST({epoch_us} {intdiv} 86400000000 AS BIGINT) AS day,
+               CAST({d.epoch_us} {d.intdiv} 86400000000 AS BIGINT) AS day,
                CAST(COUNT(*) AS BIGINT) AS cnt
         FROM events GROUP BY 1, 2
     ), dayspan AS (
@@ -248,12 +245,13 @@ _CCC_TMPL = """
 """
 
 
+def _ccc_sql(d: Dialect) -> str:
+    return _CCC_TMPL.format(d=d, day_series=d.series("b.dmin", "b.dmax"))
+
+
 @register(
     "stats_lin_ccc",
-    oracle=_CCC_TMPL.format(
-        epoch_us=_EPOCH_US_DUCK, intdiv="//",
-        day_series="UNNEST(generate_series(b.dmin, b.dmax))",
-    ),
+    oracle=_ccc_sql(DUCK),
     doc="Lin's concordance correlation coefficient (Biometrics 1989) "
     "between every metric pair's dense daily count series: CCC = "
     "2 s_xy / (s_x^2 + s_y^2 + (mean_x - mean_y)^2), in [-1, 1]. "
@@ -268,12 +266,7 @@ _CCC_TMPL = """
 )
 def stats_lin_ccc(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(
-        _CCC_TMPL.format(
-            epoch_us=_EPOCH_US_SPARK, intdiv="div",
-            day_series="explode(sequence(b.dmin, b.dmax))",
-        )
-    )
+    return spark.sql(_ccc_sql(SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -282,11 +275,8 @@ def stats_lin_ccc(spark: SparkSession, sf_dir: str) -> DataFrame:
 _VR_Q = 24
 
 
-def _vr_sql(engine: str) -> str:
-    if engine == "spark":
-        prefix = _SPINE_FROM_COUNTS_SPARK
-    else:
-        prefix = _SPINE_FROM_COUNTS_DUCK
+def _vr_sql(d: Dialect) -> str:
+    prefix = spine_from_counts(d)
     q = _VR_Q
     body = f"""
     , serie AS (
@@ -361,7 +351,7 @@ def _vr_sql(engine: str) -> str:
 
 @register(
     "timeseries_variance_ratio",
-    oracle=_vr_sql("duck"),
+    oracle=_vr_sql(DUCK),
     doc="Lo-MacKinlay (1988) overlapped variance-ratio test per metric "
     "at q = 24 hours over the dense hourly count series: VR = "
     "Var(24h overlapping sums) / (24 Var(hourly)), z = (VR - 1) / "
@@ -375,7 +365,7 @@ def _vr_sql(engine: str) -> str:
     "per metric; constant series flag degenerate.",
 )
 def timeseries_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return hour_counts_sql(spark, sf_dir, _vr_sql("spark"))
+    return hour_counts_sql(spark, sf_dir, _vr_sql(SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -385,7 +375,7 @@ _BD_TOPN = 150
 
 _BD_TMPL = """
     WITH tok AS (
-        {tokens}
+        SELECT source, {d.terms} AS term FROM documents
     ), tf AS (
         SELECT source, term, CAST(COUNT(*) AS BIGINT) AS c
         FROM tok GROUP BY source, term
@@ -446,21 +436,10 @@ _BD_TMPL = """
     GROUP BY a.source, b.source
 """
 
-_BD_SPARK = _BD_TMPL.format(
-    tokens="SELECT source, explode(split(text, ' ')) AS term "
-    "FROM documents",
-    topn=_BD_TOPN,
-)
-_BD_DUCK = _BD_TMPL.format(
-    tokens="SELECT source, UNNEST(string_split(text, ' ')) AS term "
-    "FROM documents",
-    topn=_BD_TOPN,
-)
-
 
 @register(
     "text_burrows_delta",
-    oracle=_BD_DUCK,
+    oracle=_BD_TMPL.format(d=DUCK, topn=_BD_TOPN),
     doc="Burrows' Delta (2002), the standard stylometric attribution "
     "distance, between every source pair: top-150 corpus terms by "
     "frequency (ORDER BY tot DESC, term ASC LIMIT — the closed "
@@ -477,4 +456,4 @@ _BD_DUCK = _BD_TMPL.format(
 )
 def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_BD_SPARK)
+    return spark.sql(_BD_TMPL.format(d=SPARK, topn=_BD_TOPN))

@@ -32,15 +32,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.registry import register
 
 _ID_SAMPLE = 256
 
 
-def _twonn_sql(engine: str) -> str:
-    strty = "STRING" if engine == "spark" else "VARCHAR"
-    src = "{embeddings}" if engine == "spark" else "embeddings"
-    if engine == "spark":
+def _twonn_sql(d: Dialect) -> str:
+    src = "{embeddings}" if d is SPARK else "embeddings"
+    if d is SPARK:
         cos = (
             "aggregate(zip_with(s.qv, b.embedding, (x, y) -> "
             "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
@@ -60,7 +60,7 @@ def _twonn_sql(engine: str) -> str:
         -- deterministic hash-ordered sample: a global TakeOrdered of
         -- {_ID_SAMPLE} rows, bounded by construction
         SELECT vec_id AS qid, embedding AS qv FROM {src}
-        ORDER BY md5(CAST(vec_id AS {strty})), vec_id
+        ORDER BY md5(CAST(vec_id AS {d.string})), vec_id
         LIMIT {_ID_SAMPLE}
     ), pairs AS (
         SELECT s.qid, b.vec_id AS nid,
@@ -105,7 +105,7 @@ def _twonn_sql(engine: str) -> str:
 
 @register(
     "embedding_intrinsic_dim",
-    oracle=_twonn_sql("duck"),
+    oracle=_twonn_sql(DUCK),
     doc="TwoNN intrinsic-dimension estimate (Facco 2017) of the "
     "embedding collection: for each of 256 deterministically hash-"
     "sampled vectors, the EXACT two nearest neighbors over the full "
@@ -125,7 +125,7 @@ def embedding_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     from emr_with_custom_metrics_spark.catalog import load_fanned
 
     return spark.sql(
-        _twonn_sql("spark"), embeddings=load_fanned(spark, sf_dir, "embeddings")
+        _twonn_sql(SPARK), embeddings=load_fanned(spark, sf_dir, "embeddings")
     )
 
 

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.operators.wave9g import _LDIV_QI
 from emr_with_custom_metrics_spark.registry import register
 
@@ -84,21 +85,14 @@ _TCLOSE_CORE = f"""
     FROM scored
 """
 
-_TCLOSE_SPARK = (
-    _LDIV_QI.format(
-        EPOCH_DAY="CAST(FLOOR(unix_timestamp(ts) / 86400) AS BIGINT)"
-    )
-    + _TCLOSE_CORE
-)
-_TCLOSE_DUCK = (
-    _LDIV_QI.format(EPOCH_DAY="CAST(FLOOR(epoch(ts) / 86400) AS BIGINT)")
-    + _TCLOSE_CORE
-)
+
+def _tclose_sql(d: Dialect) -> str:
+    return _LDIV_QI.format(EPOCH_DAY=d.epoch_day) + _TCLOSE_CORE
 
 
 @register(
     "dq_t_closeness",
-    oracle=_TCLOSE_DUCK,
+    oracle=_tclose_sql(DUCK),
     doc="t-closeness screen (t = 0.2; Li-Li-Venkatasubramanian, ICDE "
     "2007) over the same (day-of-week, value-band) QI classes as "
     "dq_k_anonymity and dq_l_diversity (the QI SQL is sliced from the "
@@ -116,4 +110,4 @@ _TCLOSE_DUCK = (
 )
 def dq_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_TCLOSE_SPARK)
+    return spark.sql(_tclose_sql(SPARK))

@@ -46,10 +46,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, SPARK
 from emr_with_custom_metrics_spark.registry import register
 
-_EPOCH_US_SPARK = "unix_micros(CAST(ts AS TIMESTAMP))"
-_EPOCH_US_DUCK = "epoch_us(ts)"
 _DAY_US = 86_400_000_000
 _WEEK_US = 7 * _DAY_US
 
@@ -116,9 +115,7 @@ _DP_TMPL = f"""
 
 @register(
     "dq_delta_presence",
-    oracle=_DP_TMPL.format(
-        EPOCH_DAY="CAST(FLOOR(epoch(ts) / 86400) AS BIGINT)"
-    ),
+    oracle=_DP_TMPL.format(EPOCH_DAY=DUCK.epoch_day),
     doc="delta-presence membership-disclosure screen (Nergiz-Atzori-"
     "Clifton, SIGMOD 2007) — the privacy attack the k/l/t triad does "
     "not model: can an adversary who knows an individual's QI tell "
@@ -133,11 +130,7 @@ _DP_TMPL = f"""
 )
 def dq_delta_presence(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(
-        _DP_TMPL.format(
-            EPOCH_DAY="CAST(FLOOR(unix_timestamp(ts) / 86400) AS BIGINT)"
-        )
-    )
+    return spark.sql(_DP_TMPL.format(EPOCH_DAY=SPARK.epoch_day))
 
 
 # ---------------------------------------------------------------------------
@@ -226,12 +219,12 @@ _LR_ARM = (
 
 _LOGRANK_TMPL = f"""
     WITH bounds AS (
-        SELECT MAX({{epoch_us}}) AS gmax FROM events
+        SELECT MAX({{d.epoch_us}}) AS gmax FROM events
     ), life AS (
         SELECT e.user_id, {_LR_ARM} AS arm,
-               CAST((MAX({{epoch_us}}) - MIN({{epoch_us}}))
-                    {{intdiv}} {_DAY_US} AS BIGINT) AS days,
-               CAST(CASE WHEN MAX({{epoch_us}}) < b.gmax - {_WEEK_US}
+               CAST((MAX({{d.epoch_us}}) - MIN({{d.epoch_us}}))
+                    {{d.intdiv}} {_DAY_US} AS BIGINT) AS days,
+               CAST(CASE WHEN MAX({{d.epoch_us}}) < b.gmax - {_WEEK_US}
                          THEN 1 ELSE 0 END AS BIGINT) AS churned
         FROM events e CROSS JOIN bounds b
         GROUP BY e.user_id, {_LR_ARM}, b.gmax
@@ -303,7 +296,7 @@ _LOGRANK_TMPL = f"""
 
 @register(
     "survival_logrank_test",
-    oracle=_LOGRANK_TMPL.format(epoch_us=_EPOCH_US_DUCK, intdiv="//"),
+    oracle=_LOGRANK_TMPL.format(d=DUCK),
     doc="Two-sample log-rank test (Mantel 1966) between the "
     "deterministic md5 A/B user arms over the SAME lifetime grid as "
     "survival_kaplan_meier / survival_nelson_aalen (days first->last "
@@ -322,7 +315,7 @@ _LOGRANK_TMPL = f"""
 def survival_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
     return spark.sql(
-        _LOGRANK_TMPL.format(epoch_us=_EPOCH_US_SPARK, intdiv="div")
+        _LOGRANK_TMPL.format(d=SPARK)
     )
 
 

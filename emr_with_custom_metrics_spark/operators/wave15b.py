@@ -29,7 +29,7 @@ diagnostics, Markov chain homogeneity, and extreme-value capacity fits.
   exceedances; block maxima give RETURN LEVELS for sizing).
 
 House discipline (the round-14 hazard checklist): all day bucketing
-in integer microseconds ({intdiv} on exact BIGINTs — the seasonal-MK
+in integer microseconds (integer division on exact BIGINTs — the seasonal-MK
 dialect rule); dense day grids via LEFT JOIN + COALESCE (zero-event
 days are real zeros); centered moments about the ROUNDED integer mean
 accumulated in DECIMAL(38,0) — exact and summation-order-free in both
@@ -49,10 +49,9 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.registry import register
 
-_EPOCH_US_SPARK = "unix_micros(CAST(ts AS TIMESTAMP))"
-_EPOCH_US_DUCK = "epoch_us(ts)"
 
 # Dense per-(metric, day) counts — the CCC/coherence grid shape: one
 # map-side reduction, then a calendar-bounded LEFT JOIN spine where
@@ -60,7 +59,7 @@ _EPOCH_US_DUCK = "epoch_us(ts)"
 _DAILY_DENSE = """
     WITH cellraw AS (
         SELECT event_type,
-               CAST({epoch_us} {intdiv} 86400000000 AS BIGINT) AS day,
+               CAST({d.epoch_us} {d.intdiv} 86400000000 AS BIGINT) AS day,
                CAST(COUNT(*) AS BIGINT) AS cnt
         FROM events GROUP BY 1, 2
     ), dayspan AS (
@@ -75,16 +74,8 @@ _DAILY_DENSE = """
     )"""
 
 
-def _daily_dense(engine: str) -> str:
-    if engine == "spark":
-        return _DAILY_DENSE.format(
-            epoch_us=_EPOCH_US_SPARK, intdiv="div",
-            day_series="explode(sequence(b.dmin, b.dmax))",
-        )
-    return _DAILY_DENSE.format(
-        epoch_us=_EPOCH_US_DUCK, intdiv="//",
-        day_series="UNNEST(generate_series(b.dmin, b.dmax))",
-    )
+def _daily_dense(d: Dialect) -> str:
+    return _DAILY_DENSE.format(d=d, day_series=d.series("b.dmin", "b.dmax"))
 
 
 # ---------------------------------------------------------------------------
@@ -173,7 +164,7 @@ _DF_CORE = """
 
 @register(
     "timeseries_dickey_fuller",
-    oracle=_daily_dense("duck") + _DF_CORE.format(crit=_DF_CRIT_TAU),
+    oracle=_daily_dense(DUCK) + _DF_CORE.format(crit=_DF_CRIT_TAU),
     doc="Dickey-Fuller unit-root tau test (constant-only) per metric "
     "over dense daily counts: delta y_t = alpha + rho y_(t-1) + e, "
     "tau = rho_hat/se against the pinned -2.86 large-n 5% critical "
@@ -190,7 +181,7 @@ _DF_CORE = """
 def timeseries_dickey_fuller(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
     return spark.sql(
-        _daily_dense("spark") + _DF_CORE.format(crit=_DF_CRIT_TAU)
+        _daily_dense(SPARK) + _DF_CORE.format(crit=_DF_CRIT_TAU)
     )
 
 
@@ -276,7 +267,7 @@ _ARCH_CORE = """
 
 @register(
     "timeseries_arch_lm",
-    oracle=_daily_dense("duck") + _ARCH_CORE.format(crit=_ARCH_CRIT),
+    oracle=_daily_dense(DUCK) + _ARCH_CORE.format(crit=_ARCH_CRIT),
     doc="Engle 1982 ARCH LM test per metric: volatility CLUSTERING in "
     "the daily increments — regress squared demeaned increments on "
     "their lag-1, LM = n R^2 against the pinned chi2(1) 5% critical "
@@ -293,7 +284,7 @@ _ARCH_CORE = """
 def timeseries_arch_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
     return spark.sql(
-        _daily_dense("spark") + _ARCH_CORE.format(crit=_ARCH_CRIT)
+        _daily_dense(SPARK) + _ARCH_CORE.format(crit=_ARCH_CRIT)
     )
 
 
@@ -371,7 +362,7 @@ _CSQ_CORE = """
 
 @register(
     "timeseries_cusum_squares",
-    oracle=_daily_dense("duck") + _CSQ_CORE.format(crit=_IT_CRIT),
+    oracle=_daily_dense(DUCK) + _CSQ_CORE.format(crit=_IT_CRIT),
     doc="Inclan-Tiao / Brown-Durbin-Evans CUSUM-of-squares variance-"
     "changepoint per metric: IT = sqrt(n/2) max_k |S_k/S_n - k/n| "
     "over cumulative squared demeaned daily increments, changepoint "
@@ -389,7 +380,7 @@ _CSQ_CORE = """
 def timeseries_cusum_squares(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
     return spark.sql(
-        _daily_dense("spark") + _CSQ_CORE.format(crit=_IT_CRIT)
+        _daily_dense(SPARK) + _CSQ_CORE.format(crit=_IT_CRIT)
     )
 
 
@@ -400,7 +391,7 @@ _MH_Z_CRIT = 1.6448536269514722  # one-sided 5%
 
 _MH_TMPL = """
     WITH bounds AS (
-        SELECT MIN({epoch_us}) AS gmin, MAX({epoch_us}) AS gmax
+        SELECT MIN({d.epoch_us}) AS gmin, MAX({d.epoch_us}) AS gmax
         FROM events
     ), seq AS (
         SELECT user_id, event_type AS src, ts,
@@ -411,7 +402,7 @@ _MH_TMPL = """
         -- a transition belongs to the half of its SOURCE event;
         -- integer-microsecond midpoint (the dialect rule)
         SELECT s.src, s.dst,
-               CASE WHEN {epoch_us_s} < (b.gmin + b.gmax) {intdiv} 2
+               CASE WHEN {epoch_us_s} < (b.gmin + b.gmax) {d.intdiv} 2
                     THEN 0 ELSE 1 END AS half
         FROM seq s CROSS JOIN bounds b
         WHERE s.dst IS NOT NULL
@@ -472,22 +463,13 @@ _MH_TMPL = """
 """
 
 
-def _mh_sql(engine: str) -> str:
-    if engine == "spark":
-        return _MH_TMPL.format(
-            epoch_us=_EPOCH_US_SPARK,
-            epoch_us_s="unix_micros(CAST(s.ts AS TIMESTAMP))",
-            intdiv="div", crit=_MH_Z_CRIT,
-        )
-    return _MH_TMPL.format(
-        epoch_us=_EPOCH_US_DUCK, epoch_us_s="epoch_us(s.ts)",
-        intdiv="//", crit=_MH_Z_CRIT,
-    )
+def _mh_sql(d: Dialect) -> str:
+    return _MH_TMPL.format(d=d, epoch_us_s=d.micros("s.ts"), crit=_MH_Z_CRIT)
 
 
 @register(
     "events_markov_homogeneity",
-    oracle=_mh_sql("duck"),
+    oracle=_mh_sql(DUCK),
     doc="Likelihood-ratio G^2 test that the user-journey transition "
     "matrix is the SAME in the corpus's first and second time halves "
     "(Anderson-Goodman 1957 Markov homogeneity) — the stationarity "
@@ -504,7 +486,7 @@ def _mh_sql(engine: str) -> str:
 )
 def events_markov_homogeneity(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_mh_sql("spark"))
+    return spark.sql(_mh_sql(SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -519,7 +501,7 @@ _GBM_CORE = f"""
         -- weekly block maxima over the DENSE day grid (a zero-event
         -- day can be the block max of an idle week)
         SELECT event_type,
-               CAST((day - (SELECT dmin FROM dayspan)) {{intdiv}} 7
+               CAST((day - (SELECT dmin FROM dayspan)) {{d.intdiv}} 7
                     AS BIGINT) AS wk,
                CAST(MAX(y) AS BIGINT) AS mx
         FROM dense GROUP BY 1, 2
@@ -572,7 +554,7 @@ _GBM_CORE = f"""
 
 @register(
     "stats_gumbel_block_maxima",
-    oracle=_daily_dense("duck") + _GBM_CORE.format(intdiv="//"),
+    oracle=_daily_dense(DUCK) + _GBM_CORE.format(d=DUCK),
     doc="EVT block-maxima Gumbel fit per metric (method of moments "
     "over WEEKLY maxima of dense daily counts: beta = s sqrt(6)/pi, "
     "mu = mean - gamma beta, Euler gamma and sqrt(6)/pi baked as "
@@ -590,5 +572,5 @@ _GBM_CORE = f"""
 def stats_gumbel_block_maxima(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
     return spark.sql(
-        _daily_dense("spark") + _GBM_CORE.format(intdiv="div")
+        _daily_dense(SPARK) + _GBM_CORE.format(d=SPARK)
     )

@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.registry import register
 
 _TRADEOFF_NPROBES = (1, 2, 4, 8)
@@ -640,8 +641,8 @@ _ANISO_TMPL = f"""
 """
 
 
-def _aniso_sql(engine: str) -> str:
-    if engine == "spark":
+def _aniso_sql(d: Dialect) -> str:
+    if d is SPARK:
         return _ANISO_TMPL.format(
             src="{embeddings}",
             norm=(
@@ -675,7 +676,7 @@ def _aniso_sql(engine: str) -> str:
 
 @register(
     "embedding_anisotropy",
-    oracle=_aniso_sql("duck"),
+    oracle=_aniso_sql(DUCK),
     doc="Ethayarajh 2019 anisotropy of the embedding collection: the "
     "expected pairwise cosine of unit-normalized vectors via the "
     "EXACT identity E[cos] = (||sum u||^2 - n)/(n(n-1)) — one pass, "
@@ -695,5 +696,5 @@ def embedding_anisotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from emr_with_custom_metrics_spark.catalog import load_fanned
 
     return spark.sql(
-        _aniso_sql("spark"), embeddings=load_fanned(spark, sf_dir, "embeddings")
+        _aniso_sql(SPARK), embeddings=load_fanned(spark, sf_dir, "embeddings")
     )

@@ -51,6 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.operators.wave15b import _daily_dense
 from emr_with_custom_metrics_spark.registry import register
 
@@ -108,7 +109,7 @@ _TP_CORE = """
 
 @register(
     "timeseries_turning_points",
-    oracle=_daily_dense("duck") + _TP_CORE.format(crit=_TP_Z_CRIT),
+    oracle=_daily_dense(DUCK) + _TP_CORE.format(crit=_TP_Z_CRIT),
     doc="Kendall turning-point randomness test per metric over dense "
     "daily counts: T = strict local extrema among interior points "
     "(ties count as no turn — the conservative integer-data "
@@ -124,7 +125,7 @@ _TP_CORE = """
 def timeseries_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
     return spark.sql(
-        _daily_dense("spark") + _TP_CORE.format(crit=_TP_Z_CRIT)
+        _daily_dense(SPARK) + _TP_CORE.format(crit=_TP_Z_CRIT)
     )
 
 
@@ -215,7 +216,7 @@ _LLN_TMPL = f"""
 
 @register(
     "corpus_length_lognormal_fit",
-    oracle=_LLN_TMPL.format(ntok="len(string_split(text, ' '))"),
+    oracle=_LLN_TMPL.format(ntok=DUCK.n_terms),
     doc="Per-source lognormal fit of document token counts — the "
     "canonical web-corpus length law: mu/sigma by moments of "
     "ln(length) (per-doc LN quantized e9, second moment in DOUBLE), "
@@ -233,7 +234,7 @@ def corpus_length_lognormal_fit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_LLN_TMPL.format(ntok="size(split(text, ' '))"))
+    return spark.sql(_LLN_TMPL.format(ntok=SPARK.n_terms))
 
 
 # ---------------------------------------------------------------------------
@@ -303,11 +304,11 @@ _PACK_TMPL = """
 """
 
 
-def _pack_sql(engine: str) -> str:
+def _pack_sql(d: Dialect) -> str:
     blocks = ", ".join(f"({b})" for b in _PACK_BLOCKS)
-    if engine == "spark":
+    if d is SPARK:
         return _PACK_TMPL.format(
-            ntok="size(split(text, ' '))",
+            ntok=d.n_terms,
             lens=(
                 "transform(array_sort(collect_list(struct(doc_id, l))), "
                 "p -> p.l)"
@@ -324,7 +325,7 @@ def _pack_sql(engine: str) -> str:
             i2="1", i4="3", i5="4",
         )
     return _PACK_TMPL.format(
-        ntok="len(string_split(text, ' '))",
+        ntok=d.n_terms,
         lens="LIST(l ORDER BY doc_id)",
         blocks=blocks,
         balias="b(bsz)",
@@ -344,7 +345,7 @@ def _pack_sql(engine: str) -> str:
 
 @register(
     "pack_nextfit_tradeoff",
-    oracle=_pack_sql("duck"),
+    oracle=_pack_sql(DUCK),
     doc="The PACKING operating curve: no-document-splitting next-fit "
     "packing (the SFT layout — documents never straddle example "
     "boundaries, the complement of pack_token_chunks' concat-and-"
@@ -362,7 +363,7 @@ def _pack_sql(engine: str) -> str:
 )
 def pack_nextfit_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_pack_sql("spark"))
+    return spark.sql(_pack_sql(SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -418,9 +419,7 @@ _RCL_TMPL = f"""
 
 @register(
     "dq_recursive_cl_diversity",
-    oracle=_RCL_TMPL.format(
-        EPOCH_DAY="CAST(FLOOR(epoch(ts) / 86400) AS BIGINT)"
-    ),
+    oracle=_RCL_TMPL.format(EPOCH_DAY=DUCK.epoch_day),
     doc="Recursive (c,l)-diversity screen (Machanavajjhala et al. ICDE "
     "2006 §4.2; pinned c = 3, l = 2) over the SAME (day-of-week, "
     "value-band) QI grid as the k/l/t/delta screens (expressions "
@@ -437,11 +436,7 @@ _RCL_TMPL = f"""
 )
 def dq_recursive_cl_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(
-        _RCL_TMPL.format(
-            EPOCH_DAY="CAST(FLOOR(unix_timestamp(ts) / 86400) AS BIGINT)"
-        )
-    )
+    return spark.sql(_RCL_TMPL.format(EPOCH_DAY=SPARK.epoch_day))
 
 
 # ---------------------------------------------------------------------------

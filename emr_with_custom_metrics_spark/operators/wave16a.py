@@ -72,6 +72,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from emr_with_custom_metrics_spark.catalog import load_fanned, load_table
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -85,7 +86,7 @@ _MG_TOPK = 20
 
 _MG_TMPL = """
     WITH tok AS (
-        SELECT source, {unnest_tokens} AS term FROM documents
+        SELECT source, {d.terms} AS term FROM documents
     ), tf AS (
         -- per-source EXACT counts: the map-side partial aggregate; at
         -- scale 'source' stands in for the partition and this is the
@@ -136,7 +137,7 @@ _MG_TMPL = """
 @register(
     "sketch_spacesaving_topk",
     oracle=_MG_TMPL.format(
-        unnest_tokens="UNNEST(string_split(text, ' '))",
+        d=DUCK,
         m=_MG_CAPACITY,
         k=_MG_TOPK,
     ),
@@ -159,7 +160,7 @@ def sketch_spacesaving_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("documents",))
     return spark.sql(
         _MG_TMPL.format(
-            unnest_tokens="explode(split(text, ' '))",
+            d=SPARK,
             m=_MG_CAPACITY,
             k=_MG_TOPK,
         )
@@ -210,18 +211,14 @@ _RES_TMPL = """
 """
 
 # first 8 md5 hex digits of the doc identity -> BIGINT in [0, 2^32)
-_H32_SPARK = (
-    "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) "
-    "AS BIGINT)"
-)
-_H32_DUCK = (
-    "CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)"
-)
+def _res_sql(d: Dialect) -> str:
+    h32 = d.hex32(f"md5(CAST(doc_id AS {d.string}))")
+    return _RES_TMPL.format(h32=h32, k=_RES_K)
 
 
 @register(
     "sample_weighted_reservoir",
-    oracle=_RES_TMPL.format(h32=_H32_DUCK, k=_RES_K),
+    oracle=_res_sql(DUCK),
     doc="Efraimidis-Spirakis (IPL 2006) A-Res weighted reservoir "
     "sample, k = 10, weight = n_chars, made replayable: the per-item "
     "uniform u comes from the first 8 md5 hex digits of doc_id (a "
@@ -240,7 +237,7 @@ def sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     from emr_with_custom_metrics_spark.catalog import register_views
 
     register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_RES_TMPL.format(h32=_H32_SPARK, k=_RES_K))
+    return spark.sql(_res_sql(SPARK))
 
 
 # ---------------------------------------------------------------------------

@@ -75,7 +75,7 @@ from emr_with_custom_metrics_spark.catalog import (
     load_table,
     register_views,
 )
-from emr_with_custom_metrics_spark.operators.wave12a import _wide_to_double
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.operators.wave15b import _daily_dense
 from emr_with_custom_metrics_spark.registry import register
 
@@ -103,11 +103,11 @@ _KPSS_CORE = """
         SELECT event_type,
                CAST(COUNT(*) AS BIGINT) AS n,
                CAST(SUM(y) AS BIGINT) AS s,
-               SUM(CAST(y AS {acc}) * y) AS s2
+               SUM(CAST(y AS {d.wide_int}) * y) AS s2
         FROM seq GROUP BY event_type
     ), numer AS (
         SELECT q.event_type,
-               SUM(CAST(a.n * q.p - q.t * a.s AS {acc})
+               SUM(CAST(a.n * q.p - q.t * a.s AS {d.wide_int})
                    * (a.n * q.p - q.t * a.s)) AS num
         FROM seq q JOIN agg a ON a.event_type = q.event_type
         GROUP BY q.event_type
@@ -117,9 +117,9 @@ _KPSS_CORE = """
                {dend} AS dend
         FROM agg a JOIN (
             SELECT n2.event_type,
-                   CAST(n2.n AS {acc}) * n2.n
-                   * (CAST(n2.n AS {acc}) * n2.s2_pick
-                      - CAST(n2.s AS {acc}) * n2.s) AS den
+                   CAST(n2.n AS {d.wide_int}) * n2.n
+                   * (CAST(n2.n AS {d.wide_int}) * n2.s2_pick
+                      - CAST(n2.s AS {d.wide_int}) * n2.s) AS den
             FROM (SELECT event_type, n, s, s2 AS s2_pick FROM agg) n2
         ) d ON d.event_type = a.event_type
         JOIN numer u ON u.event_type = a.event_type
@@ -140,22 +140,21 @@ _KPSS_CORE = """
 """
 
 
-def _kpss_sql(engine: str) -> str:
-    # exact wide accumulators: Spark DECIMAL(38,0), DuckDB HUGEINT
-    # (the stats_dagostino_k2 convention — DuckDB decimal products
-    # past precision 38 fail where HUGEINT keeps exact 128-bit ints)
-    acc = "DECIMAL(38, 0)" if engine == "spark" else "HUGEINT"
-    return _daily_dense(engine) + _KPSS_CORE.format(
-        acc=acc,
-        numd=_wide_to_double("u.num", engine),
-        dend=_wide_to_double("d.den", engine),
+def _kpss_sql(d: Dialect) -> str:
+    # exact wide accumulators (d.wide_int; the stats_dagostino_k2
+    # convention — DuckDB decimal products past precision 38 fail where
+    # HUGEINT keeps exact 128-bit ints)
+    return _daily_dense(d) + _KPSS_CORE.format(
+        d=d,
+        numd=d.wide_to_double("u.num"),
+        dend=d.wide_to_double("d.den"),
         crit=_KPSS_CRIT,
     )
 
 
 @register(
     "timeseries_kpss",
-    oracle=_kpss_sql("duck"),
+    oracle=_kpss_sql(DUCK),
     doc="KPSS (1992) level-stationarity test per metric over dense "
     "daily counts, lag truncation l = 0: eta = sum partial-sum^2 / "
     "(n^2 s^2) multiplied out to the exact integer ratio "
@@ -170,7 +169,7 @@ def _kpss_sql(engine: str) -> str:
 )
 def timeseries_kpss(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_kpss_sql("spark"))
+    return spark.sql(_kpss_sql(SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -223,7 +222,7 @@ _EWMA_CORE = """
                CAST(MIN(day) AS BIGINT) AS d0,
                CAST(COUNT(*) AS BIGINT) AS n,
                CAST(SUM(y) AS BIGINT) AS s,
-               SUM(CAST(y AS {acc}) * y) AS s2,
+               SUM(CAST(y AS {d.wide_int}) * y) AS s2,
                {steps} AS steps
         FROM dense GROUP BY event_type
     ), params AS (
@@ -236,8 +235,8 @@ _EWMA_CORE = """
                CAST(ROUND(sqrt({vard} / n / n) * 1000000000)
                     AS BIGINT) AS sig_e9
         FROM (SELECT event_type, d0, n, s, steps,
-                     CAST(n AS {acc}) * s2
-                     - CAST(s AS {acc}) * s AS var_w
+                     CAST(n AS {d.wide_int}) * s2
+                     - CAST(s AS {d.wide_int}) * s AS var_w
               FROM ser) v
     ), folded AS (
         SELECT event_type, d0, n, mu0_e9, sig_e9,
@@ -258,9 +257,8 @@ _EWMA_CORE = """
 """
 
 
-def _ewma_sql(engine: str) -> str:
-    acc = "DECIMAL(38, 0)" if engine == "spark" else "HUGEINT"
-    if engine == "spark":
+def _ewma_sql(d: Dialect) -> str:
+    if d is SPARK:
         el, arr = "element_at", "array"
         steps = (
             "transform(array_sort(collect_list(struct(day, y))), "
@@ -272,7 +270,6 @@ def _ewma_sql(engine: str) -> str:
         )
         step = _EWMA_STEP.format(el=el, arr=arr)
         fold = f"aggregate(steps, {init}, {step})"
-        vard = _wide_to_double("var_w", "spark")
     else:
         el, arr = "list_element", "list_value"
         steps = "list([CAST(y AS BIGINT)] ORDER BY day)"
@@ -282,15 +279,14 @@ def _ewma_sql(engine: str) -> str:
         )
         step = _EWMA_STEP.format(el=el, arr=arr)
         fold = f"list_reduce(list_concat([{init}], steps), {step})"
-        vard = _wide_to_double("var_w", "duck")
-    return _daily_dense(engine) + _EWMA_CORE.format(
-        steps=steps, fold=fold, el2=el, vard=vard, acc=acc
+    return _daily_dense(d) + _EWMA_CORE.format(
+        d=d, steps=steps, fold=fold, el2=el, vard=d.wide_to_double("var_w")
     )
 
 
 @register(
     "spc_ewma_chart",
-    oracle=_ewma_sql("duck"),
+    oracle=_ewma_sql(DUCK),
     doc="Roberts (1959) EWMA control chart per metric over dense "
     "daily counts, lambda = 0.2, exact time-varying 3-sigma limits "
     "sigma_z(t) = sigma sqrt(lam/(2-lam)(1-(1-lam)^2t)): the MEMORY "
@@ -305,7 +301,7 @@ def _ewma_sql(engine: str) -> str:
 )
 def spc_ewma_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_ewma_sql("spark"))
+    return spark.sql(_ewma_sql(SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -313,18 +309,11 @@ def spc_ewma_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 _BK_K = 16
 
-_BK_H32_SPARK = (
-    "CAST(conv(substring(md5(concat('bk|', term)), 1, 8), 16, 10) "
-    "AS BIGINT)"
-)
-_BK_H32_DUCK = (
-    "CAST(('0x' || substr(md5(concat('bk|', term)), 1, 8)) AS BIGINT)"
-)
 
 _BK_TMPL = """
     WITH dtok AS (
         SELECT DISTINCT source, term FROM (
-            SELECT source, {unnest_tokens} AS term FROM documents
+            SELECT source, {d.terms} AS term FROM documents
         ) z
     ), hs AS (
         SELECT DISTINCT source, {h32} AS h FROM dtok
@@ -396,8 +385,8 @@ _BK_TMPL = """
 @register(
     "sketch_bottomk_jaccard",
     oracle=_BK_TMPL.format(
-        unnest_tokens="UNNEST(string_split(text, ' '))",
-        h32=_BK_H32_DUCK,
+        d=DUCK,
+        h32=DUCK.hex32("md5(concat('bk|', term))"),
         k=_BK_K,
     ),
     doc="Bottom-k minwise Jaccard estimation between source "
@@ -418,8 +407,8 @@ def sketch_bottomk_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("documents",))
     return spark.sql(
         _BK_TMPL.format(
-            unnest_tokens="explode(split(text, ' '))",
-            h32=_BK_H32_SPARK,
+            d=SPARK,
+            h32=SPARK.hex32("md5(concat('bk|', term))"),
             k=_BK_K,
         )
     )
@@ -647,7 +636,7 @@ _DIR_TOPK = 10
 # collection mass) while the corpus-sized work stays one token pass.
 _DIR_TMPL = """
     WITH tok AS (
-        SELECT doc_id, {unnest_tokens} AS term FROM documents
+        SELECT doc_id, {d.terms} AS term FROM documents
     ), doclen AS (
         SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM tok
         GROUP BY doc_id
@@ -699,8 +688,8 @@ _DIR_TMPL = """
 @register(
     "retrieval_dirichlet_lm",
     oracle=_DIR_TMPL.format(
-        unnest_tokens="UNNEST(string_split(text, ' '))",
-        unnest_q="UNNEST(list_slice(string_split(text, ' '), 1, 8))",
+        d=DUCK,
+        unnest_q=DUCK.first_terms(8),
         mu=_DIR_MU,
         k=_DIR_TOPK,
     ),
@@ -728,8 +717,8 @@ def retrieval_dirichlet_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # term counts is the identical integer, and the query-sized tf is
     # staged behind a lazy checkpoint — ONE explode pass total.
     full = _DIR_TMPL.format(
-        unnest_tokens="explode(split(text, ' '))",
-        unnest_q="explode(slice(split(text, ' '), 1, 8))",
+        d=SPARK,
+        unnest_q=SPARK.first_terms(8),
         mu=_DIR_MU,
         k=_DIR_TOPK,
     )

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
-from emr_with_custom_metrics_spark.operators.wave12a import _wide_to_double
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -47,12 +47,12 @@ from emr_with_custom_metrics_spark.registry import register
 _HHI_TMPL = """
     WITH tokc AS (
         SELECT source, CAST(COUNT(*) AS BIGINT) AS tok
-        FROM (SELECT source, {unnest_tokens} AS term FROM documents) z
+        FROM (SELECT source, {d.terms} AS term FROM documents) z
         GROUP BY source
     ), agg AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS k,
                CAST(SUM(tok) AS BIGINT) AS t,
-               SUM(CAST(tok AS {acc}) * tok) AS sq,
+               SUM(CAST(tok AS {d.wide_int}) * tok) AS sq,
                CAST(MAX(tok) AS BIGINT) AS mx
         FROM tokc
     ), wide AS (
@@ -60,7 +60,7 @@ _HHI_TMPL = """
                {sqd} AS sqd,
                {t2d} AS t2d
         FROM (SELECT k, t, mx, sq,
-                     CAST(t AS {acc}) * t AS t2
+                     CAST(t AS {d.wide_int}) * t AS t2
               FROM agg) a
     ), calc AS (
         SELECT k, t, mx,
@@ -85,24 +85,17 @@ _HHI_TMPL = """
 """
 
 
-def _hhi_sql(engine: str) -> str:
-    acc = "DECIMAL(38, 0)" if engine == "spark" else "HUGEINT"
-    unnest = (
-        "explode(split(text, ' '))"
-        if engine == "spark"
-        else "UNNEST(string_split(text, ' '))"
-    )
+def _hhi_sql(d: Dialect) -> str:
     return _HHI_TMPL.format(
-        acc=acc,
-        unnest_tokens=unnest,
-        sqd=_wide_to_double("a.sq", engine),
-        t2d=_wide_to_double("a.t2", engine),
+        d=d,
+        sqd=d.wide_to_double("a.sq"),
+        t2d=d.wide_to_double("a.t2"),
     )
 
 
 @register(
     "corpus_source_concentration",
-    oracle=_hhi_sql("duck"),
+    oracle=_hhi_sql(DUCK),
     doc="Herfindahl-Hirschman concentration of corpus token mass "
     "across sources, with the normalized HHI, the Laakso-Taagepera "
     "effective number of sources 1/HHI, and the top-source share — "
@@ -120,7 +113,7 @@ def corpus_source_concentration(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_hhi_sql("spark"))
+    return spark.sql(_hhi_sql(SPARK))
 
 
 # ---------------------------------------------------------------------------

@@ -50,7 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
-from emr_with_custom_metrics_spark.operators.wave12a import _wide_to_double
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -59,7 +59,7 @@ from emr_with_custom_metrics_spark.registry import register
 
 _OOV_TMPL = """
     WITH tok AS (
-        SELECT doc_id, source, {unnest_tokens} AS term FROM documents
+        SELECT doc_id, source, {d.terms} AS term FROM documents
     ), vocab AS (
         SELECT DISTINCT term FROM tok WHERE source <> 'src0'
     ), ev AS (
@@ -89,7 +89,7 @@ _OOV_TMPL = """
 @register(
     "text_oov_rate",
     oracle=_OOV_TMPL.format(
-        unnest_tokens="UNNEST(string_split(text, ' '))"
+        d=DUCK
     ),
     doc="Out-of-vocabulary rate of every eval document (source = "
     "'src0', the dq_eval_leakage_screen split convention) against "
@@ -106,7 +106,7 @@ _OOV_TMPL = """
 def text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("documents",))
     return spark.sql(
-        _OOV_TMPL.format(unnest_tokens="explode(split(text, ' '))")
+        _OOV_TMPL.format(d=SPARK)
     )
 
 
@@ -116,20 +116,16 @@ def text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 _AMS_K = 16
 
 # sign hash: parity of the md5-derived 32-bit hash of 'ams{j}|{term}'
-_AMS_SGN_SPARK = (
-    "1 - 2 * CAST(pmod(CAST(conv(substring(md5(concat('ams', "
-    "CAST(j AS STRING), '|', term)), 1, 8), 16, 10) AS BIGINT), 2) "
-    "AS BIGINT)"
-)
-_AMS_SGN_DUCK = (
-    "1 - 2 * (CAST(('0x' || substr(md5(concat('ams', CAST(j AS "
-    "VARCHAR), '|', term)), 1, 8)) AS BIGINT) % 2)"
-)
+def _ams_sgn(d: Dialect) -> str:
+    h = d.hex32(f"md5(concat('ams', CAST(j AS {d.string}), '|', term))")
+    if d is SPARK:
+        return f"1 - 2 * CAST(pmod({h}, 2) AS BIGINT)"
+    return f"1 - 2 * ({h} % 2)"
 
 _AMS_TMPL = """
     WITH tf AS (
         SELECT term, CAST(COUNT(*) AS BIGINT) AS f
-        FROM (SELECT {unnest_tokens} AS term FROM documents) z
+        FROM (SELECT {d.terms} AS term FROM documents) z
         GROUP BY term
     ), signs AS (
         SELECT t.term, t.f, j.j, {sgn} AS s
@@ -138,7 +134,7 @@ _AMS_TMPL = """
         SELECT j, CAST(SUM(f * s) AS BIGINT) AS zj
         FROM signs GROUP BY j
     ), est AS (
-        SELECT j, CAST(zj AS {acc}) * zj AS e FROM z
+        SELECT j, CAST(zj AS {d.wide_int}) * zj AS e FROM z
     ), med AS (
         -- lower median of the k estimates (8th of 16 ascending,
         -- ties broken by j — pinned, deterministic)
@@ -148,7 +144,7 @@ _AMS_TMPL = """
         ) r WHERE rn = {k} / 2
     ), exact AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n_terms,
-               SUM(CAST(f AS {acc}) * f) AS f2
+               SUM(CAST(f AS {d.wide_int}) * f) AS f2
         FROM tf
     ), wide AS (
         SELECT x.n_terms, {f2d} AS f2d, {emedd} AS emedd
@@ -164,30 +160,20 @@ _AMS_TMPL = """
 """
 
 
-def _ams_sql(engine: str) -> str:
-    acc = "DECIMAL(38, 0)" if engine == "spark" else "HUGEINT"
-    if engine == "spark":
-        unnest = "explode(split(text, ' '))"
-        gen_j = "explode(sequence(1, %d))" % _AMS_K
-        sgn = _AMS_SGN_SPARK
-    else:
-        unnest = "UNNEST(string_split(text, ' '))"
-        gen_j = "UNNEST(generate_series(1, %d))" % _AMS_K
-        sgn = _AMS_SGN_DUCK
+def _ams_sql(d: Dialect) -> str:
     return _AMS_TMPL.format(
-        unnest_tokens=unnest,
-        gen_j=gen_j,
-        sgn=sgn,
-        acc=acc,
+        d=d,
+        gen_j=d.series("1", str(_AMS_K)),
+        sgn=_ams_sgn(d),
         k=_AMS_K,
-        f2d=_wide_to_double("x.f2", engine),
-        emedd=_wide_to_double("m.e_med", engine),
+        f2d=d.wide_to_double("x.f2"),
+        emedd=d.wide_to_double("m.e_med"),
     )
 
 
 @register(
     "sketch_ams_f2",
-    oracle=_ams_sql("duck"),
+    oracle=_ams_sql(DUCK),
     doc="Alon-Matias-Szegedy (STOC 1996) second-frequency-moment "
     "sketch over corpus tokens: k = 16 independent md5-derived "
     "{-1,+1} sign hashes, Z_j = sum f_t s_j(t), estimate = lower "
@@ -203,7 +189,7 @@ def _ams_sql(engine: str) -> str:
 )
 def sketch_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_ams_sql("spark"))
+    return spark.sql(_ams_sql(SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -213,7 +199,7 @@ def sketch_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CHAO_TMPL = """
     WITH tf AS (
         SELECT source, term, CAST(COUNT(*) AS BIGINT) AS f
-        FROM (SELECT source, {unnest_tokens} AS term FROM documents) z
+        FROM (SELECT source, {d.terms} AS term FROM documents) z
         GROUP BY source, term
     ), per AS (
         SELECT source,
@@ -260,7 +246,7 @@ _CHAO_TMPL = """
 @register(
     "text_chao1_richness",
     oracle=_CHAO_TMPL.format(
-        unnest_tokens="UNNEST(string_split(text, ' '))"
+        d=DUCK
     ),
     doc="Chao (1984) nonparametric vocabulary-richness estimate per "
     "source: bias-corrected Chao1 = S_obs + f1(f1-1)/(2(f2+1)) from "
@@ -277,7 +263,7 @@ _CHAO_TMPL = """
 def text_chao1_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("documents",))
     return spark.sql(
-        _CHAO_TMPL.format(unnest_tokens="explode(split(text, ' '))")
+        _CHAO_TMPL.format(d=SPARK)
     )
 
 
@@ -310,8 +296,8 @@ _EB_SQL = """
                CAST(SUM(CASE WHEN n >= 2 THEN p_e9 ELSE 0 END)
                     AS BIGINT) AS sp,
                SUM(CASE WHEN n >= 2
-                        THEN CAST(p_e9 AS {acc}) * p_e9
-                        ELSE CAST(0 AS {acc}) END) AS sp2
+                        THEN CAST(p_e9 AS {d.wide_int}) * p_e9
+                        ELSE CAST(0 AS {d.wide_int}) END) AS sp2
         FROM quant
     ), fit AS (
         -- m, v, then alpha = m(m(1-m)/v - 1), beta = (1-m)(...):
@@ -353,18 +339,17 @@ _EB_SQL = """
 """
 
 
-def _eb_sql(engine: str) -> str:
-    acc = "DECIMAL(38, 0)" if engine == "spark" else "HUGEINT"
+def _eb_sql(d: Dialect) -> str:
     return _EB_SQL.format(
-        acc=acc,
-        sp2d=_wide_to_double("sp2", engine),
+        d=d,
+        sp2d=d.wide_to_double("sp2"),
         topk=_EB_TOPK,
     )
 
 
 @register(
     "stats_eb_shrinkage",
-    oracle=_eb_sql("duck"),
+    oracle=_eb_sql(DUCK),
     doc="Empirical-Bayes beta-binomial shrinkage of per-user "
     "high-value purchase rates (value >= 150, the "
     "stats_proportion_ztest conversion at USER grain): (alpha, "
@@ -382,4 +367,4 @@ def _eb_sql(engine: str) -> str:
 )
 def stats_eb_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_eb_sql("spark"))
+    return spark.sql(_eb_sql(SPARK))

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.operators.stats import _ARM
 from emr_with_custom_metrics_spark.plans import stage_memo
 from emr_with_custom_metrics_spark.registry import register
@@ -174,17 +175,11 @@ def stats_fdr_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # At 100 TB this IS the planning query run before choosing bucket/salt
 # parameters for the big joins.
 
-_SKEW_SPARK_GRAIN = """
+_SKEW_GRAIN = """
     SELECT event_type,
-           CAST(FLOOR(unix_timestamp(ts) / 86400) AS BIGINT) AS d,
+           {d.epoch_day} AS d,
            CAST(COUNT(*) AS BIGINT) AS cnt
-    FROM events GROUP BY event_type, CAST(FLOOR(unix_timestamp(ts) / 86400) AS BIGINT)
-"""
-_SKEW_DUCK_GRAIN = """
-    SELECT event_type,
-           CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS d,
-           CAST(COUNT(*) AS BIGINT) AS cnt
-    FROM events GROUP BY 1, 2
+    FROM events GROUP BY {group_by}
 """
 
 _SKEW_TAIL = """
@@ -205,13 +200,16 @@ _SKEW_TAIL = """
     FROM grain g CROSS JOIN tot t
 """
 
-_SKEW_SPARK = f"WITH grain AS ({_SKEW_SPARK_GRAIN})" + _SKEW_TAIL
-_SKEW_DUCK = f"WITH grain AS ({_SKEW_DUCK_GRAIN})" + _SKEW_TAIL
+
+def _skew_sql(d: Dialect) -> str:
+    group_by = f"event_type, {d.epoch_day}" if d is SPARK else "1, 2"
+    grain = _SKEW_GRAIN.format(d=d, group_by=group_by)
+    return f"WITH grain AS ({grain})" + _SKEW_TAIL
 
 
 @register(
     "dq_partition_skew_report",
-    oracle=_SKEW_DUCK,
+    oracle=_skew_sql(DUCK),
     doc="Partition-layout skew report at the (event_type, day) grain — "
     "the planning query behind salting/bucketing decisions "
     "(join_skew_salted, plans/scale.py): per-partition counts and "
@@ -225,4 +223,4 @@ def dq_partition_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from emr_with_custom_metrics_spark.catalog import register_views
 
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_SKEW_SPARK)
+    return spark.sql(_skew_sql(SPARK))

@@ -24,10 +24,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, SPARK
 from emr_with_custom_metrics_spark.operators.stats import (
-    _SPINE_FROM_COUNTS_DUCK,
-    _SPINE_FROM_COUNTS_SPARK,
     hour_counts_sql,
+    spine_from_counts,
 )
 from emr_with_custom_metrics_spark.registry import register
 
@@ -348,8 +348,8 @@ _MP_FINAL_SPARK = (
 )
 
 _MP_DUCK = (
-    _SPINE_FROM_COUNTS_DUCK
-    + f", x AS MATERIALIZED ({dense_hourly_x_guarded('duck')})"
+    spine_from_counts(DUCK)
+    + f", x AS MATERIALIZED ({dense_hourly_x_guarded(DUCK)})"
     + f", win AS MATERIALIZED ({_MP_WIN_BODY})"
     + ", corr AS MATERIALIZED ("
     + _MP_CORR_BODY.replace("WITH prod AS", "WITH prod AS MATERIALIZED", 1)
@@ -390,7 +390,7 @@ def timeseries_matrix_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan). The b side is broadcast, so stream partitioning is
     # preserved through the join.
     x = hour_counts_sql(
-        spark, sf_dir, _SPINE_FROM_COUNTS_SPARK + dense_hourly_x_guarded('spark')
+        spark, sf_dir, spine_from_counts(SPARK) + dense_hourly_x_guarded(SPARK)
     ).repartition(spark.sparkContext.defaultParallelism).localCheckpoint()
     win = spark.sql(
         "WITH x AS (SELECT * FROM {x})" + _MP_WIN_BODY, x=x

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, SPARK
 from emr_with_custom_metrics_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -258,11 +259,11 @@ def ml_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fixed-order double divisions over exact counts. Normalized MI uses
 # the sqrt(H_x * H_y) denominator (Strehl & Ghosh, JMLR 2002).
 
-_MI_SQL = """
+_MI_TMPL = """
     WITH cells AS (
         SELECT event_type AS x, hr AS y, CAST(COUNT(*) AS BIGINT) AS c
         FROM (SELECT event_type,
-                     CAST(FLOOR(unix_timestamp(ts) / 3600) AS BIGINT) % 24
+                     CAST(FLOOR({d.epoch_s} / 3600) AS BIGINT) % 24
                          AS hr
               FROM events)
         GROUP BY event_type, hr
@@ -309,15 +310,10 @@ _MI_SQL = """
     CROSS JOIN (SELECT n FROM tot) t2
 """
 
-_MI_DUCK = _MI_SQL.replace(
-    "CAST(FLOOR(unix_timestamp(ts) / 3600) AS BIGINT) % 24",
-    "CAST(FLOOR(epoch(ts) / 3600) AS BIGINT) % 24",
-)
-
 
 @register(
     "events_mutual_information",
-    oracle=_MI_DUCK,
+    oracle=_MI_TMPL.format(d=DUCK),
     doc="Entropy and mutual information of the (event_type, hour-of-"
     "day) contingency table, with Strehl-Ghosh sqrt-normalized MI: the "
     "dependence screen behind diurnality. Every LN output quantizes to "
@@ -330,4 +326,4 @@ _MI_DUCK = _MI_SQL.replace(
 )
 def events_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_MI_SQL)
+    return spark.sql(_MI_TMPL.format(d=SPARK))

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, SPARK
 from emr_with_custom_metrics_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -71,19 +72,10 @@ _LDIV_QI = """
     )
 """
 
-_LDIV_SPARK = (
-    _LDIV_QI.format(EPOCH_DAY="CAST(FLOOR(unix_timestamp(ts) / 86400) AS BIGINT)")
-    + _LDIV_CORE
-)
-_LDIV_DUCK = (
-    _LDIV_QI.format(EPOCH_DAY="CAST(FLOOR(epoch(ts) / 86400) AS BIGINT)")
-    + _LDIV_CORE
-)
-
 
 @register(
     "dq_l_diversity",
-    oracle=_LDIV_DUCK,
+    oracle=_LDIV_QI.format(EPOCH_DAY=DUCK.epoch_day) + _LDIV_CORE,
     doc="l-diversity screen (l=3; Machanavajjhala et al., ICDE 2006) "
     "over the (day-of-week, value-band) quasi-identifier classes with "
     "event_type as the sensitive attribute — the complement of "
@@ -95,7 +87,7 @@ _LDIV_DUCK = (
 )
 def dq_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_LDIV_SPARK)
+    return spark.sql(_LDIV_QI.format(EPOCH_DAY=SPARK.epoch_day) + _LDIV_CORE)
 
 
 # ---------------------------------------------------------------------------
@@ -281,20 +273,15 @@ _TTC_CORE = """
 
 _TTC_EV = """
     WITH ev AS (
-        SELECT user_id, event_type, {SEC} AS sec
+        SELECT user_id, event_type, CAST({d.epoch_whole_s} AS BIGINT) AS sec
         FROM events
     )
 """
 
-_TTC_SPARK = (
-    _TTC_EV.format(SEC="CAST(unix_timestamp(ts) AS BIGINT)") + _TTC_CORE
-)
-_TTC_DUCK = _TTC_EV.format(SEC="CAST(FLOOR(epoch(ts)) AS BIGINT)") + _TTC_CORE
-
 
 @register(
     "funnel_time_to_convert",
-    oracle=_TTC_DUCK,
+    oracle=_TTC_EV.format(d=DUCK) + _TTC_CORE,
     doc="First-view -> first-subsequent-purchase latency distribution: "
     "per-user delta in EXACT integer seconds (per-event floor to epoch "
     "seconds on both engines — unix_timestamp truncation == "
@@ -306,4 +293,4 @@ _TTC_DUCK = _TTC_EV.format(SEC="CAST(FLOOR(epoch(ts)) AS BIGINT)") + _TTC_CORE
 )
 def funnel_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_TTC_SPARK)
+    return spark.sql(_TTC_EV.format(d=SPARK) + _TTC_CORE)

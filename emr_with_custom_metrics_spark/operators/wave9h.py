@@ -18,11 +18,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.operators.stats import (
-    _SPINE_FROM_COUNTS_DUCK,
-    _SPINE_FROM_COUNTS_SPARK,
-    hour_counts_sql,
     global_rank_guard,
+    hour_counts_sql,
+    spine_from_counts,
 )
 from emr_with_custom_metrics_spark.registry import register
 
@@ -97,8 +97,8 @@ _XCORR_CORE = """
 
 @register(
     "timeseries_cross_correlation",
-    oracle=_SPINE_FROM_COUNTS_DUCK
-    + f", x AS MATERIALIZED ({dense_hourly_x_guarded('duck')})"
+    oracle=spine_from_counts(DUCK)
+    + f", x AS MATERIALIZED ({dense_hourly_x_guarded(DUCK)})"
     + _XCORR_CORE,
     doc="Cross-correlation function between every ordered metric pair "
     "over the dense hourly spine, lags -12..+12: the lead-lag question "
@@ -115,7 +115,7 @@ def timeseries_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # x feeds both the shifted cross product and the b side of the pair
     # join — staged once (the MP/decomposition WITH-inlining lesson).
     x = hour_counts_sql(
-        spark, sf_dir, _SPINE_FROM_COUNTS_SPARK + dense_hourly_x_guarded('spark')
+        spark, sf_dir, spine_from_counts(SPARK) + dense_hourly_x_guarded(SPARK)
     ).localCheckpoint()
     return spark.sql("WITH x AS (SELECT * FROM {x})" + _XCORR_CORE, x=x)
 
@@ -208,24 +208,20 @@ _PSI_CORE = """
 _PSI_EV = """
     WITH ev AS (
         SELECT event_type,
-               {HOUR} AS h,
+               CAST(FLOOR({d.epoch_s} / 3600) AS BIGINT) AS h,
                CAST(ROUND(value * 1000) AS BIGINT) AS v_e3
         FROM events
     )
 """
 
-_PSI_SPARK = (
-    _PSI_EV.format(HOUR="CAST(FLOOR(unix_timestamp(ts) / 3600) AS BIGINT)")
-    + _PSI_CORE
-)
-_PSI_DUCK = (
-    _PSI_EV.format(HOUR="CAST(FLOOR(epoch(ts) / 3600) AS BIGINT)") + _PSI_CORE
-)
+
+def _psi_sql(d: Dialect) -> str:
+    return _PSI_EV.format(d=d) + _PSI_CORE
 
 
 @register(
     "events_psi_drift",
-    oracle=_PSI_DUCK,
+    oracle=_psi_sql(DUCK),
     doc="Population Stability Index of each metric's value distribution, "
     "second half of the time range vs the first (the credit-scoring "
     "drift standard; PSI >= 0.25 flags action): decile edges fixed from "
@@ -244,7 +240,7 @@ def events_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan + half-split + histogram per reference. Stage the compact
     # (metric, half, value) histogram behind a lazy checkpoint; tail
     # text unchanged.
-    head, _, tail = _PSI_SPARK.partition(", ref AS")
+    head, _, tail = _psi_sql(SPARK).partition(", ref AS")
     return spark.sql(
         "WITH hist AS (SELECT * FROM {hist}), ref AS" + tail,
         hist=spark.sql(head + " SELECT * FROM hist").localCheckpoint(eager=False),
@@ -359,17 +355,15 @@ _HEAPS_TOK_DUCK = """
     )
 """
 
-_HEAPS_SPARK = _HEAPS_TOK_SPARK + _HEAPS_CORE.format(
-    guard=global_rank_guard("spark", "drn")
-)
-_HEAPS_DUCK = _HEAPS_TOK_DUCK + _HEAPS_CORE.format(
-    guard=global_rank_guard("duck", "drn")
-)
+
+def _heaps_sql(d: Dialect) -> str:
+    tok = _HEAPS_TOK_SPARK if d is SPARK else _HEAPS_TOK_DUCK
+    return tok + _HEAPS_CORE.format(guard=global_rank_guard(d, "drn"))
 
 
 @register(
     "text_heaps_law",
-    oracle=_HEAPS_DUCK,
+    oracle=_heaps_sql(DUCK),
     doc="Heaps' law fit V(n) = K*n^beta of vocabulary growth: V at 20 "
     "evenly spaced token-count checkpoints via each word's first global "
     "occurrence ((doc_id, pos)-ordered position — deterministic at any "
@@ -383,4 +377,4 @@ _HEAPS_DUCK = _HEAPS_TOK_DUCK + _HEAPS_CORE.format(
 )
 def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_HEAPS_SPARK)
+    return spark.sql(_heaps_sql(SPARK))

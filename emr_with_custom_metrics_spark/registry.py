@@ -50,13 +50,15 @@ def _sf_of(sf_dir: str) -> float:
 # codegen's per-plan Java compile dominates tiny first-run queries (171 unique
 # plans × compile cost). All three earn their keep at bench scale (sf0.1+),
 # so they're restored — from a snapshot of whatever the session actually had,
-# not reconstructed defaults (r3 ADVICE) — on the first large-SF query.
+# not reconstructed defaults (r3 ADVICE) — on the first large-SF query. The
+# snapshot hangs on the session object (like catalog._memoized's memos), so
+# a query on one session never restores another session's confs.
 _PERF_CONF_SMALL_SF = {
     "spark.sql.shuffle.partitions": "8",
     "spark.sql.adaptive.enabled": "false",
     "spark.sql.codegen.wholeStage": "false",
 }
-_PERF_CONF_SAVED: dict[str, str] = {}
+_PERF_CONF_SAVED_ATTR = "_graft_perf_conf_saved"
 
 
 # Name of the registered query currently executing (plan construction
@@ -86,8 +88,8 @@ def _pin_utc(fn: QueryFn, query_name: str | None = None) -> QueryFn:
 
     Also right-sizes the perf confs in ``_PERF_CONF_SMALL_SF`` to the data
     scale: overridden at sf<=0.01 (the driver's correctness scale), restored
-    from a point-of-override snapshot at sf0.1+ so BENCH numbers and any
-    caller-set session confs are unaffected.
+    from the session's own point-of-override snapshot at sf0.1+ so BENCH
+    numbers and any caller-set session confs are unaffected.
     """
 
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -95,15 +97,17 @@ def _pin_utc(fn: QueryFn, query_name: str | None = None) -> QueryFn:
         # non-UTC driver session — let it raise loudly instead (r4 VERDICT).
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         try:
+            saved = getattr(spark, _PERF_CONF_SAVED_ATTR, None)
             if _sf_of(sf_dir) <= 0.011:
+                if saved is None:
+                    saved = {k: spark.conf.get(k) for k in _PERF_CONF_SMALL_SF}
+                    setattr(spark, _PERF_CONF_SAVED_ATTR, saved)
                 for k, v in _PERF_CONF_SMALL_SF.items():
-                    if k not in _PERF_CONF_SAVED:
-                        _PERF_CONF_SAVED[k] = spark.conf.get(k)
                     spark.conf.set(k, v)
-            elif _PERF_CONF_SAVED:
-                for k, v in _PERF_CONF_SAVED.items():
+            elif saved is not None:
+                for k, v in saved.items():
                     spark.conf.set(k, v)
-                _PERF_CONF_SAVED.clear()
+                setattr(spark, _PERF_CONF_SAVED_ATTR, None)
         except Exception as exc:
             # Perf-only tuning: correctness is unaffected, but never silent.
             warnings.warn(f"registry perf-conf pinning failed: {exc!r}", stacklevel=2)

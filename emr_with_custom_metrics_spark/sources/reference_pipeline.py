@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from emr_with_custom_metrics_spark.catalog import load_table
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.registry import register
 
 
@@ -549,10 +550,13 @@ def formats_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Z-order (Morton) clustering layout + data-skipping measurement
 # ---------------------------------------------------------------------------
-def _interleave_sql(zx: str, zy: str, bits: int, shift_fn) -> str:
-    """Bit-interleave SQL: x bits at even positions, y bits at odd. The
-    ``shift_fn`` renders a right-shift for the target dialect (Spark SQL
-    has shiftright(); DuckDB has the >> operator)."""
+def _interleave_sql(zx: str, zy: str, bits: int, d: Dialect) -> str:
+    """Bit-interleave SQL: x bits at even positions, y bits at odd (Spark
+    SQL right-shifts with shiftright(); DuckDB has the >> operator)."""
+    if d is SPARK:
+        shift_fn = lambda c, i: f"shiftright({c}, {i})"  # noqa: E731
+    else:
+        shift_fn = lambda c, i: f"({c} >> {i})"  # noqa: E731
     terms = []
     for i in range(bits):
         terms.append(f"(({shift_fn(zx, i)}) & 1) * {1 << (2 * i)}")
@@ -560,8 +564,6 @@ def _interleave_sql(zx: str, zy: str, bits: int, shift_fn) -> str:
     return " + ".join(terms)
 
 
-_Z_SPARK = _interleave_sql("zx", "zy", 8, lambda c, i: f"shiftright({c}, {i})")
-_Z_DUCK = _interleave_sql("zx", "zy", 8, lambda c, i: f"({c} >> {i})")
 
 
 @register(
@@ -583,7 +585,7 @@ _Z_DUCK = _interleave_sql("zx", "zy", 8, lambda c, i: f"({c} >> {i})")
       FROM orders CROSS JOIN b),
     z AS (
       SELECT o_totalprice, zx, zy,
-             ({_Z_DUCK}) // 4096 AS zfile,
+             ({_interleave_sql("zx", "zy", 8, DUCK)}) // 4096 AS zfile,
              zy // 16 AS lfile
       FROM s),
     zparts AS (
@@ -647,7 +649,7 @@ def maintenance_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_totalprice",
         "zx",
         "zy",
-        F.expr(f"({_Z_SPARK}) div 4096").alias("zfile"),
+        F.expr(f"({_interleave_sql('zx', 'zy', 8, SPARK)}) div 4096").alias("zfile"),
         F.expr("zy div 16").alias("lfile"),
     )
     tmp = _scratch("zorder")

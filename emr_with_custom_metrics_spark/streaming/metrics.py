@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from emr_with_custom_metrics_spark.catalog import load_table, register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, SPARK
 from emr_with_custom_metrics_spark.registry import register
 from emr_with_custom_metrics_spark.zip_guard import install_in_worker
 
@@ -981,10 +982,10 @@ def stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # AR(2) autoregression + Benford screen (round 7)
 # ---------------------------------------------------------------------------
-_AR2_ORACLE = """
+_AR2_TMPL = """
     WITH s AS (
         SELECT event_type,
-               CAST(FLOOR(epoch(ts) / 300) AS BIGINT) AS bucket,
+               CAST(FLOOR({d.epoch_frac_s} / 300) AS BIGINT) AS bucket,
                -- exact integer bucket mean: per-ROW e3 quantization,
                -- exact integer SUM, ONE correctly-rounded division.
                -- The pre-r12 form ROUND(AVG(value)*1e6) rounded a
@@ -1060,7 +1061,7 @@ _AR2_ORACLE = """
 
 @register(
     "timeseries_ar2_forecast",
-    oracle=_AR2_ORACLE,
+    oracle=_AR2_TMPL.format(d=DUCK),
     doc="AR(2) autoregression per metric: x_t = a + b*x_{t-1} + c*x_{t-2} "
     "fit by ordinary least squares over the 5-minute bucket series — the "
     "3x3 normal equations solved in closed form (Cramer's rule) from "
@@ -1076,9 +1077,7 @@ _AR2_ORACLE = """
 )
 def timeseries_ar2_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_AR2_ORACLE
-                     .replace("epoch(ts)", "unix_micros(CAST(ts AS TIMESTAMP)) / 1000000.0")
-                     )
+    return spark.sql(_AR2_TMPL.format(d=SPARK))
 
 
 _BENFORD_ORACLE = """

@@ -29,6 +29,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
+from emr_with_custom_metrics_spark.dialect import DUCK, SPARK
+
 
 def _collect(spark, name, sf_dir):
     from emr_with_custom_metrics_spark.registry import all_specs
@@ -87,7 +89,7 @@ def test_ar_order_pick_no_two_capture_fold():
     a projection (sigd) + list_max with no fold at all."""
     from emr_with_custom_metrics_spark.operators.wave13c import _arfit_sql
 
-    duck = _arfit_sql("duck")
+    duck = _arfit_sql(DUCK)
     assert duck.count("list_reduce") == 2
     assert "sigd" in duck
     # the old hazard shape — abs(f.st[...]) * sqrt(f.nd) inside a
@@ -278,7 +280,7 @@ def test_welch_pv_staged_equals_inline(spark):
     specs = all_specs()
     inline = {
         "stats_fdr_bh": wave9c._FDR_SQL,
-        "stats_fisher_combined": wave11f._fisher_sql("spark"),
+        "stats_fisher_combined": wave11f._fisher_sql(SPARK),
         "stats_benjamini_yekutieli": wave11f._BY_SQL,
         "stats_holm_bonferroni": wave12a._HOLM_SQL,
         "stats_storey_qvalue": wave13a._STOREY_SQL,

@@ -39,6 +39,8 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from emr_with_custom_metrics_spark.dialect import DUCK, SPARK
+
 
 def _collect(spark, name, sf_dir):
     from emr_with_custom_metrics_spark.registry import all_specs
@@ -148,15 +150,12 @@ def test_burrows_delta_sff_double_structural():
 
 
 def test_t_closeness_weighted_avg_double_structural():
-    from emr_with_custom_metrics_spark.operators.wave14f import (
-        _TCLOSE_DUCK,
-        _TCLOSE_SPARK,
-    )
+    from emr_with_custom_metrics_spark.operators.wave14f import _tclose_sql
 
     # r15 upgrade of the r14 fix: the weighted average accumulates
     # EXACTLY (DECIMAL(19,0) * BIGINT widens to DECIMAL(38,0) in both
     # engines) instead of in DOUBLE
-    for text in (_TCLOSE_DUCK, _TCLOSE_SPARK):
+    for text in (_tclose_sql(DUCK), _tclose_sql(SPARK)):
         assert "SUM(CAST(t_e9 AS DECIMAL(19,0)) * n_rows)" in text
         assert "SUM(CAST(t_e9 AS DOUBLE) * n_rows)" not in text
         assert "CAST(SUM(t_e9 * n_rows) AS DOUBLE)" not in text

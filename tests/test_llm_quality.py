@@ -573,11 +573,12 @@ def test_unigram_lm_one_statement_equals_staged(spark):
     vocabulary — proving the temp-view/checkpoint staging changed the
     execution policy, not the math."""
     from emr_with_custom_metrics_spark.catalog import register_views
+    from emr_with_custom_metrics_spark.dialect import SPARK
     from emr_with_custom_metrics_spark.llm.unigram import _unigram_sql
 
     register_views(spark, SF_DIR, ("documents",))
     one = sorted(
-        tuple(r) for r in spark.sql(_unigram_sql("spark", "train")).collect()
+        tuple(r) for r in spark.sql(_unigram_sql(SPARK, "train")).collect()
     )
     staged = sorted(
         tuple(r)

@@ -203,6 +203,37 @@ def test_current_query_is_per_thread(spark):
     assert registry.current_query() is None
 
 
+
+def test_perf_conf_snapshot_is_per_session(spark):
+    """Small-SF perf confs are restored from the snapshot of the session
+    they were set on: a large-SF query on another session neither takes
+    that snapshot nor leaves the first session pinned."""
+    from emr_with_custom_metrics_spark import registry
+
+    call = registry._pin_utc(lambda s, d: None, "q_conf")
+    keys = list(registry._PERF_CONF_SMALL_SF)
+    call(spark, "/data/sf1")  # restore anything an earlier test left pinned
+    before = {k: spark.conf.get(k) for k in keys}
+    mine = {
+        "spark.sql.shuffle.partitions": "13",
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.codegen.wholeStage": "true",
+    }
+    other = spark.newSession()
+    try:
+        for k, v in mine.items():
+            spark.conf.set(k, v)
+        other_before = {k: other.conf.get(k) for k in keys}
+        call(spark, "/data/sf0.01")
+        assert {k: spark.conf.get(k) for k in keys} == registry._PERF_CONF_SMALL_SF
+        call(other, "/data/sf0.1")
+        assert {k: other.conf.get(k) for k in keys} == other_before
+        call(spark, "/data/sf0.1")
+        assert {k: spark.conf.get(k) for k in keys} == mine
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 

@@ -97,19 +97,17 @@ def test_fuzz_bootstrap_template(spark, duck, seed):
     """Dialect-split pair (conv vs '0x'::BIGINT) — the one stats query
     whose uniform-extraction TEXT differs per engine, so the fuzz is the
     proof the two spellings parse identical integers."""
-    from emr_with_custom_metrics_spark.operators.stats import (
-        _BOOT_DUCK,
-        _BOOT_SPARK,
-    )
+    from emr_with_custom_metrics_spark.dialect import DUCK, SPARK
+    from emr_with_custom_metrics_spark.operators.stats import _boot_sql
 
     pdf = _events_frame(seed + 400)
     sdf = spark.createDataFrame(pdf)
     sdf.createOrReplaceTempView("events")
     try:
-        got_spark = spark.sql(_BOOT_SPARK).toPandas()
+        got_spark = spark.sql(_boot_sql(SPARK)).toPandas()
         duck.register("fuzz_events", pdf)
         duck.execute("CREATE OR REPLACE TEMP VIEW events AS SELECT * FROM fuzz_events")
-        got_duck = duck.sql(_BOOT_DUCK).df()
+        got_duck = duck.sql(_boot_sql(DUCK)).df()
         assert_frames_match(got_spark, got_duck, f"bootstrap[{seed}]")
     finally:
         duck.execute("DROP VIEW IF EXISTS events")

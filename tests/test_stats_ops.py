@@ -15,6 +15,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from emr_with_custom_metrics_spark.dialect import DUCK
 from tests.conftest import SF_DIR
 
 
@@ -111,9 +112,12 @@ def test_theta_overlap_matches_python_kmv(duck, docs_pdf):
 
 
 def test_seasonal_decompose_matches_pandas(duck, events_pdf):
-    from emr_with_custom_metrics_spark.operators.stats import _DECOMP_DUCK
+    from emr_with_custom_metrics_spark.operators.stats import (
+        _DECOMP_CORE,
+        spine_from_counts,
+    )
 
-    got = duck.sql(_DECOMP_DUCK).df()
+    got = duck.sql(spine_from_counts(DUCK) + _DECOMP_CORE).df()
     ev = events_pdf.copy()
     # unit-safe epoch-hour (parquet ts may arrive as datetime64[us] or [ns])
     ev["h"] = ((ev.ts - pd.Timestamp(0)) // pd.Timedelta(hours=1)).astype("int64")
@@ -145,7 +149,7 @@ def test_seasonal_decompose_matches_pandas(duck, events_pdf):
 def test_random_projection_distortion_concentrates(duck):
     from emr_with_custom_metrics_spark.llm.embeddings import _rp_sql
 
-    got = duck.sql(_rp_sql("duck")).df()
+    got = duck.sql(_rp_sql(DUCK)).df()
     emb = pd.read_parquet(f"{SF_DIR}/embeddings.parquet")
     emb = emb[emb.vec_id < 40].set_index("vec_id")
     q = {
@@ -224,11 +228,11 @@ def test_cuped_matches_pandas(duck, events_pdf):
 
 def test_bootstrap_ci_matches_python_replay(duck, events_pdf):
     from emr_with_custom_metrics_spark.operators.stats import (
-        _BOOT_DUCK,
         _POIS_THRESH,
+        _boot_sql,
     )
 
-    got = duck.sql(_BOOT_DUCK).df().set_index("event_type")
+    got = duck.sql(_boot_sql(DUCK)).df().set_index("event_type")
     ev = events_pdf.copy()
     ev["vq"] = (ev.value * 1000).round()
 
@@ -260,11 +264,12 @@ def test_bootstrap_ci_matches_python_replay(duck, events_pdf):
 def test_anomaly_residual_is_top10_of_decomposition(duck, events_pdf):
     from emr_with_custom_metrics_spark.operators.stats import (
         _ANOM_DUCK,
-        _DECOMP_DUCK,
+        _DECOMP_CORE,
+        spine_from_counts,
     )
 
     got = duck.sql(_ANOM_DUCK).df()
-    dec = duck.sql(_DECOMP_DUCK).df()
+    dec = duck.sql(spine_from_counts(DUCK) + _DECOMP_CORE).df()
     for etype, g in dec.groupby("event_type"):
         r = g.remainder_e6.astype(float)
         z = (r - r.mean()) / r.std(ddof=1)
@@ -404,9 +409,9 @@ def test_autocorrelation_matches_numpy(duck, events_pdf):
 
 
 def test_zipf_fit_matches_numpy(duck, docs_pdf):
-    from emr_with_custom_metrics_spark.llm.keywords import _ZIPF_DUCK
+    from emr_with_custom_metrics_spark.llm.keywords import _zipf_sql
 
-    got = duck.sql(_ZIPF_DUCK).df().iloc[0]
+    got = duck.sql(_zipf_sql(DUCK)).df().iloc[0]
     from collections import Counter
 
     freq = Counter(t for txt in docs_pdf.text for t in txt.split(" "))
@@ -433,9 +438,9 @@ def _ntile(values: pd.Series, tiebreak: pd.Series, n: int = 5) -> pd.Series:
 
 
 def test_rfm_segments_match_pandas(duck):
-    from emr_with_custom_metrics_spark.operators.analytics import _RFM_DUCK
+    from emr_with_custom_metrics_spark.operators.analytics import _rfm_sql
 
-    got = duck.sql(_RFM_DUCK).df().set_index("segment")
+    got = duck.sql(_rfm_sql(DUCK)).df().set_index("segment")
     orders = pd.read_parquet(f"{SF_DIR}/orders.parquet")
     maxd = orders.o_orderdate.max()
     cust = orders.groupby("o_custkey").agg(

@@ -25,6 +25,7 @@ from __future__ import annotations
 import pytest
 
 from emr_with_custom_metrics_spark import registry
+from emr_with_custom_metrics_spark.dialect import DUCK, SPARK
 from emr_with_custom_metrics_spark.operators.stats import (
     GLOBAL_RANK_BUDGET,
     global_rank_guard,
@@ -96,10 +97,10 @@ def test_guard_passes_under_budget_both_engines(spark):
         f"SELECT r FROM (VALUES (1), ({GLOBAL_RANK_BUDGET})) t(r) "
         f"WHERE {{g}}"
     )
-    out = spark.sql(sql.format(g=global_rank_guard("spark", "r"))).collect()
+    out = spark.sql(sql.format(g=global_rank_guard(SPARK, "r"))).collect()
     assert len(out) == 2
     out2 = duckdb.connect().execute(
-        sql.format(g=global_rank_guard("duck", "r"))
+        sql.format(g=global_rank_guard(DUCK, "r"))
     ).fetchall()
     assert len(out2) == 2
 
@@ -112,10 +113,10 @@ def test_guard_raises_past_budget_both_engines(spark):
         f"WHERE {{g}}"
     )
     with pytest.raises(Exception, match="globally ranked relation"):
-        spark.sql(sql.format(g=global_rank_guard("spark", "r"))).collect()
+        spark.sql(sql.format(g=global_rank_guard(SPARK, "r"))).collect()
     with pytest.raises(duckdb.Error, match="globally ranked relation"):
         duckdb.connect().execute(
-            sql.format(g=global_rank_guard("duck", "r"))
+            sql.format(g=global_rank_guard(DUCK, "r"))
         ).fetchall()
 
 

@@ -6,6 +6,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
+from emr_with_custom_metrics_spark.dialect import DUCK, SPARK
+
 
 def _collect(spark, name, sf_dir):
     from emr_with_custom_metrics_spark.registry import all_specs
@@ -242,16 +244,16 @@ def test_coherence_amplitude_guard_fires(spark):
             "a(xc, xs) JOIN (VALUES (0.0, 0.0)) b(xc, xs) ON 1=1")
     under = over.replace("2200000.0", "2099999.0")
     con = duckdb.connect()
-    assert con.sql(under.format(g=_coh_amp_guard("duck"))).fetchall() == [
+    assert con.sql(under.format(g=_coh_amp_guard(DUCK))).fetchall() == [
         (True,)
     ]
     with _pytest.raises(Exception, match="quantization budget"):
-        con.sql(over.format(g=_coh_amp_guard("duck"))).fetchall()
+        con.sql(over.format(g=_coh_amp_guard(DUCK))).fetchall()
     assert [r[0] for r in spark.sql(
-        under.format(g=_coh_amp_guard("spark")).replace("ON 1=1", "ON true")
+        under.format(g=_coh_amp_guard(SPARK)).replace("ON 1=1", "ON true")
     ).collect()] == [True]
     with _pytest.raises(Exception, match="quantization budget"):
         spark.sql(
-            over.format(g=_coh_amp_guard("spark")).replace("ON 1=1",
+            over.format(g=_coh_amp_guard(SPARK)).replace("ON 1=1",
                                                            "ON true")
         ).collect()

@@ -14,6 +14,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from emr_with_custom_metrics_spark.dialect import DUCK, SPARK
 from tests.compare import assert_frames_match
 
 
@@ -86,23 +87,21 @@ def test_fuzz_calibration_template(spark, duck, seed):
 
 @pytest.mark.parametrize("seed", range(8))
 def test_fuzz_mutual_information_template(spark, duck, seed):
-    from emr_with_custom_metrics_spark.operators.wave9e import _MI_DUCK, _MI_SQL
+    from emr_with_custom_metrics_spark.operators.wave9e import _MI_TMPL
 
     _both2(
-        spark, duck, _events_frame(seed + 100), _MI_SQL, _MI_DUCK,
+        spark, duck, _events_frame(seed + 100),
+        _MI_TMPL.format(d=SPARK), _MI_TMPL.format(d=DUCK),
         f"mi[{seed}]",
     )
 
 
 @pytest.mark.parametrize("seed", range(8))
 def test_fuzz_psi_template(spark, duck, seed):
-    from emr_with_custom_metrics_spark.operators.wave9h import (
-        _PSI_DUCK,
-        _PSI_SPARK,
-    )
+    from emr_with_custom_metrics_spark.operators.wave9h import _psi_sql
 
     _both2(
-        spark, duck, _events_frame(seed + 200), _PSI_SPARK, _PSI_DUCK,
+        spark, duck, _events_frame(seed + 200), _psi_sql(SPARK), _psi_sql(DUCK),
         f"psi[{seed}]",
     )
 
