@@ -4,9 +4,10 @@ Each registered row is one query meaning, run by Spark and checked
 against DuckDB. The rule is one template, rendered per dialect: either
 ``TEXT.format(d=DUCK)`` with ``{d.epoch_s}``-style fields, or a function
 ``_x_sql(d)``. A registered row passes ``oracle=...(DUCK)`` and runs
-``spark.sql(...(SPARK))``. Where the two texts differ in plan shape
-rather than spelling (Spark reads a staged frame, DuckDB a MATERIALIZED
-CTE), the template branches on ``d is SPARK``.
+``spark.sql(...(SPARK))``. A CTE that several readers share is staged
+on Spark by name (``plans/stage_memo.stage_ctes(spark, ...(SPARK),
+"x")``) and marked ``{d.mat}`` where DuckDB must evaluate it once, so
+staging needs no second text.
 
 A fragment enters this table only when at least two modules spell it;
 a spelling one module uses stays in that module. Epoch, token-split and

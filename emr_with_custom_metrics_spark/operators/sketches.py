@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
+from emr_with_custom_metrics_spark.plans.stage_memo import stage_ctes
 from emr_with_custom_metrics_spark.registry import register
 
 _HEX = "0123456789abcdef"
@@ -123,14 +124,9 @@ def sketch_distinct_hll_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
     # Opt r15 (guide §2.4): `base` feeds hashed + exact and `hashed`
     # feeds regs + kmv — WITH-inlining re-ran the events scan +
-    # DISTINCT (metric, user) shuffle three times. Stage the compact
-    # distinct-user table behind a lazy checkpoint; tail text
-    # unchanged (the md5 re-derivations run on checkpoint rows).
-    head, _, tail = _SKETCH_SQL.partition(", hashed AS")
-    return spark.sql(
-        "WITH base AS (SELECT * FROM {base}), hashed AS" + tail,
-        base=spark.sql(head + " SELECT * FROM base").localCheckpoint(eager=False),
-    )
+    # DISTINCT (metric, user) shuffle three times. The md5
+    # re-derivations run on the staged distinct-user rows.
+    return stage_ctes(spark, _SKETCH_SQL, "base")
 
 
 # ---------------------------------------------------------------------------
@@ -201,15 +197,10 @@ def sketch_quantile_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("lineitem",))
     # Opt r15 (guide §2.4): `summary` is referenced by cum AND by the
     # three (SELECT ... FROM tot) scalar subqueries, so WITH-inlining
-    # re-ran the full per-bucket NTILE sort pass per reference. Stage
-    # the 2048-row summary behind a lazy checkpoint — the sketch
-    # property made physical: only the summary, never the values,
-    # feeds the merge; all downstream CTE text is unchanged.
-    head, _, tail = _QSKETCH_SQL.partition(", tot AS")
-    return spark.sql(
-        "WITH summary AS (SELECT * FROM {summary}), tot AS" + tail,
-        summary=spark.sql(head + " SELECT * FROM summary").localCheckpoint(eager=False),
-    )
+    # re-ran the full per-bucket NTILE sort pass per reference. Staged,
+    # the sketch property is physical: only the 2048-row summary,
+    # never the values, feeds the merge.
+    return stage_ctes(spark, _QSKETCH_SQL, "summary")
 
 
 # ---------------------------------------------------------------------------

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
 from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
+from emr_with_custom_metrics_spark.plans import stage_memo
 from emr_with_custom_metrics_spark.registry import register
 
 # Deterministic 50/50 arm assignment: first md5 nibble of the unit id.
@@ -235,52 +236,37 @@ _DECOMP_CORE = """
 # The decomposition family scans EVENTS exactly once: the first reduction
 # (per-(series, hour) counts) is computed up front and every other CTE —
 # bounds, the series list, the dense spine — derives from the counts,
-# never from the raw table. The Spark side additionally STAGES the counts
-# behind a localCheckpoint bound as ``{counts}`` (hour_counts_sql): the
-# core references counts three times and Spark inlines WITH-chains per
-# reference, so the un-staged plan re-ran the events scan per consumer
-# (the rolling-actives lesson). DuckDB materializes CTEs, so the oracle
-# keeps the single-statement form with the counts CTE first.
-_COUNTS_SPARK = f"""
-    SELECT event_type,
-           CAST(FLOOR({SPARK.epoch_s} / 3600) AS BIGINT) AS h,
-           COUNT(*) AS cnt
-    FROM events GROUP BY event_type, CAST(FLOOR({SPARK.epoch_s} / 3600) AS BIGINT)
-"""
-
-_SPINE_FROM_COUNTS_SPARK = """
-    WITH counts AS (
-        SELECT event_type, h, cnt FROM {counts}
-    ), spine AS (
-        SELECT t.event_type, g.h
-        FROM (SELECT DISTINCT event_type FROM counts) t
-        CROSS JOIN (SELECT explode(sequence(b.hmin, b.hmax)) AS h
-                    FROM (SELECT MIN(h) AS hmin, MAX(h) AS hmax
-                          FROM counts) b) g
-    )
-"""
-
-_SPINE_FROM_COUNTS_DUCK = """
-    WITH counts AS (
+# never from the raw table. The core references counts three times and
+# Spark inlines WITH-chains per reference, so the un-staged plan re-ran
+# the events scan per consumer (the rolling-actives lesson): Spark stages
+# ``counts`` (hour_counts_sql). DuckDB materializes CTEs, so the oracle
+# runs the same chain as one statement.
+_COUNTS = """counts AS {mat}(
         SELECT event_type,
-               CAST(FLOOR(epoch(ts) / 3600) AS BIGINT) AS h,
+               CAST(FLOOR({d.epoch_s} / 3600) AS BIGINT) AS h,
                COUNT(*) AS cnt
         FROM events GROUP BY 1, 2
-    ), spine AS (
-        SELECT t.event_type, g.h
-        FROM (SELECT DISTINCT event_type FROM counts) t
-        CROSS JOIN (SELECT UNNEST(generate_series(b.hmin, b.hmax)) AS h
-                    FROM (SELECT MIN(h) AS hmin, MAX(h) AS hmax
-                          FROM counts) b) g
-    )
-"""
+    )"""
+
+
+def counts_cte(d: Dialect, mat: str = "") -> str:
+    """The per-(series, hour) event ``counts`` CTE every hour-count
+    reader starts from; ``mat`` is ``d.mat`` where the oracle forces one
+    evaluation."""
+    return _COUNTS.format(d=d, mat=mat)
 
 
 def spine_from_counts(d: Dialect) -> str:
-    """``counts`` and the dense (series, hour) ``spine`` CTEs. The shape
-    differs, not just the spelling: Spark reads the staged ``{counts}``
-    (run it through :func:`hour_counts_sql`), DuckDB counts in a CTE."""
-    return _SPINE_FROM_COUNTS_SPARK if d is SPARK else _SPINE_FROM_COUNTS_DUCK
+    """``counts`` and the dense (series, hour) ``spine`` CTEs."""
+    return f"""
+    WITH {counts_cte(d)}, spine AS (
+        SELECT t.event_type, g.h
+        FROM (SELECT DISTINCT event_type FROM counts) t
+        CROSS JOIN (SELECT {d.series("b.hmin", "b.hmax")} AS h
+                    FROM (SELECT MIN(h) AS hmin, MAX(h) AS hmax
+                          FROM counts) b) g
+    )
+"""
 
 
 # Dense hourly series body shared by the matrix profile (wave9d) and
@@ -355,10 +341,17 @@ def global_rank_guard(d: Dialect, rank_col: str) -> str:
 
 
 def hour_counts_sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
-    """Run ``text`` with ``{counts}`` bound to the per-(series, hour)
-    event counts, staged behind an eager localCheckpoint."""
+    """Run ``text``, a chain that starts with :func:`counts_cte`, with
+    ``counts`` bound to an eager checkpoint of that CTE.
+
+    Eager, not a lazy cut: the readers' first action reads counts from a
+    broadcast and from shuffle stages at once, and a lazy checkpoint
+    that concurrent jobs materialize can deadlock Spark's DAG scheduler
+    (a job's doCheckpoint holds RDDCheckpointData and waits for the RDD;
+    the scheduler holds the RDD and waits for RDDCheckpointData)."""
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(text, counts=spark.sql(_COUNTS_SPARK).localCheckpoint())
+    counts = spark.sql(f"WITH {counts_cte(SPARK)} SELECT * FROM counts")
+    return stage_memo.stage_ctes(spark, text, counts=counts.localCheckpoint())
 
 
 @register(
@@ -871,7 +864,7 @@ _ACF_DUCK = (
 # Defines acf(event_type, lag INT, n_pairs BIGINT, acf_e6 BIGINT); a
 # series' N is n_pairs + lag on any of its rows.
 _ACF_KERNEL_SPARK = """
-    WITH counts AS ({counts}), ser AS (
+    WITH {counts}, ser AS (
         SELECT event_type,
                map_from_entries(collect_list(struct(h, cnt))) AS m,
                MIN(h) AS smin, MAX(h) AS smax,
@@ -914,7 +907,7 @@ def acf_kernel_spark(positive_den: bool = False) -> str:
     series whose centered variance is 0 (PACF, AR fit); without it such a
     series raises DIVIDE_BY_ZERO, as the join form did."""
     return _ACF_KERNEL_SPARK.format(
-        counts=_COUNTS_SPARK, where=" WHERE den > 0" if positive_den else ""
+        counts=counts_cte(SPARK), where=" WHERE den > 0" if positive_den else ""
     )
 
 
@@ -1356,24 +1349,14 @@ _CHANGEPOINT_CORE = """
     FROM best WHERE rn = 1
 """
 
-_CHANGEPOINT_SPARK = (
-    "WITH counts AS (SELECT event_type, h, cnt FROM {counts})"
-    + _CHANGEPOINT_CORE
-)
-_CHANGEPOINT_DUCK = (
-    """WITH counts AS MATERIALIZED (
-        SELECT event_type,
-               CAST(FLOOR(epoch(ts) / 3600) AS BIGINT) AS h,
-               COUNT(*) AS cnt
-        FROM events GROUP BY 1, 2
-    )"""
-    + _CHANGEPOINT_CORE
-)
+
+def _changepoint_sql(d: Dialect) -> str:
+    return "WITH " + counts_cte(d, d.mat) + _CHANGEPOINT_CORE
 
 
 @register(
     "timeseries_changepoint_binseg",
-    oracle=_CHANGEPOINT_DUCK,
+    oracle=_changepoint_sql(DUCK),
     doc="Offline changepoint detection per metric — the first split of "
     "binary segmentation (Scott & Knott 1974; the subproblem BinSeg/PELT "
     "iterate): over the daily event-count series, the day whose two-"
@@ -1386,7 +1369,7 @@ _CHANGEPOINT_DUCK = (
     "shuffle carries the (series, hour) density, never raw events.",
 )
 def timeseries_changepoint_binseg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return hour_counts_sql(spark, sf_dir, _CHANGEPOINT_SPARK)
+    return hour_counts_sql(spark, sf_dir, _changepoint_sql(SPARK))
 
 
 # ---------------------------------------------------------------------------

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from emr_with_custom_metrics_spark.catalog import register_views
 from emr_with_custom_metrics_spark.dialect import DUCK, SPARK
 from emr_with_custom_metrics_spark.operators.stats import _ARM
+from emr_with_custom_metrics_spark.plans.stage_memo import stage_ctes
 from emr_with_custom_metrics_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -555,15 +556,8 @@ def stats_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Opt r15 (guide §2.4): the quantized li projection feeds FOUR
     # branches (tot, both rank maps, the join-back) and Spark's
     # WITH-inlining re-scanned lineitem per branch (4 scans in
-    # plans/r15/stats_spearman_corr_before.txt). Stage the narrow
-    # (flag, q, p) relation once; every CTE's text is otherwise
-    # unchanged, so the arithmetic (and answer) is identical. The
-    # DuckDB oracle keeps the one-string form.
-    li_body = _SPEARMAN_SQL.partition("WITH li AS (")[2].partition("\n    ), tot AS")[0]
-    return spark.sql(
-        _SPEARMAN_SQL.replace(li_body, "SELECT * FROM {li}"),
-        li=spark.sql(li_body).localCheckpoint(eager=False),
-    )
+    # plans/r15/stats_spearman_corr_before.txt).
+    return stage_ctes(spark, _SPEARMAN_SQL, "li")
 
 
 # ---------------------------------------------------------------------------

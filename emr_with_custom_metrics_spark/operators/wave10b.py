@@ -42,6 +42,7 @@ from emr_with_custom_metrics_spark.operators.stats import (
     hour_counts_sql,
     spine_from_counts,
 )
+from emr_with_custom_metrics_spark.plans.stage_memo import stage_ctes
 from emr_with_custom_metrics_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -756,26 +757,19 @@ _APRIORI_SQL = """
 def basket_apriori_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("lineitem", "part"))
     # Opt r15 (guide §2.4): `items` feeds SEVEN inlined references
-    # (n_orders, sup1, both pair sides x2 consumers, triples) and
-    # `pairs` two — the executed plan scanned lineitem+part 14x each
-    # (plans/r15/basket_apriori_triples_scan1.txt). Stage the compact
-    # (order, brand) item table and the canonical pair table behind
-    # lazy checkpoints; all CTE text is unchanged.
-    items_head, _, tail = _APRIORI_SQL.partition(", n_orders AS")
+    # (n_orders, sup1, both pair sides x2 consumers, triples) — the
+    # executed plan scanned lineitem+part 14x
+    # (plans/r15/basket_apriori_triples_scan1.txt). Only `items` is
+    # staged; `pairs` (two references) stays inline.
     # Checkpointed relations carry no size statistics, so the
     # model-sized support joins (25-value brand domain) would plan as
     # SortMergeJoin — hint them broadcast explicitly (guide §3.1:
     # estimates are often wrong after opaque ops; hint when you know
     # a side is small). Join strategy only; values unchanged.
-    tail = tail.replace(
+    text = _APRIORI_SQL.replace(
         "SELECT t.b1, t.b2, t.b3,",
         "SELECT /*+ BROADCAST(s2), BROADCAST(s1), BROADCAST(n) */ "
         "t.b1, t.b2, t.b3,",
         1,
     )
-    return spark.sql(
-        "WITH items AS (SELECT * FROM {items}), n_orders AS" + tail,
-        items=spark.sql(items_head + " SELECT * FROM items").localCheckpoint(
-            eager=False
-        ),
-    )
+    return stage_ctes(spark, text, "items")

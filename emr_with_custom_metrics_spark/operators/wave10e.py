@@ -36,6 +36,7 @@ from emr_with_custom_metrics_spark.operators.stats import (
     _ACF_DUCK,
     _ACF_SPARK,
 )
+from emr_with_custom_metrics_spark.plans.stage_memo import stage_ctes
 from emr_with_custom_metrics_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -289,13 +290,8 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
     # Opt r15 (guide §2.4): `binned` feeds calib/test/calg (and tot
     # re-derives test) — WITH-inlining re-ran the events scan + range
-    # cross-join per reference. Stage the narrow binned projection;
-    # tail text unchanged (the ECE/logloss remedy).
-    head, _, tail = _BRIER_SQL.partition(", calib AS")
-    return spark.sql(
-        "WITH binned AS (SELECT * FROM {binned}), calib AS" + tail,
-        binned=spark.sql(head + " SELECT * FROM binned").localCheckpoint(eager=False),
-    )
+    # cross-join per reference (the ECE/logloss remedy).
+    return stage_ctes(spark, _BRIER_SQL, "binned")
 
 
 # ---------------------------------------------------------------------------

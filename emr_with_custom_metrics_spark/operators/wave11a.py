@@ -41,6 +41,7 @@ from emr_with_custom_metrics_spark.operators.stats import (
     hour_counts_sql,
     spine_from_counts,
 )
+from emr_with_custom_metrics_spark.plans.stage_memo import stage_ctes
 from emr_with_custom_metrics_spark.registry import register
 
 
@@ -342,14 +343,8 @@ def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
     # Opt r15 (guide §2.4): `hist` feeds vals + ranksum and the terms
     # CTE is referenced twice downstream — WITH-inlining re-ran the
-    # events scan + histogram per reference. Stage the value histogram
-    # behind a lazy checkpoint; tail text unchanged.
-    full = _kw_sql(SPARK)
-    head, _, tail = full.partition(", vals AS")
-    return spark.sql(
-        "WITH hist AS (SELECT * FROM {hist}), vals AS" + tail,
-        hist=spark.sql(head + " SELECT * FROM hist").localCheckpoint(eager=False),
-    )
+    # events scan + histogram per reference.
+    return stage_ctes(spark, _kw_sql(SPARK), "hist")
 
 
 # ---------------------------------------------------------------------------
@@ -441,10 +436,8 @@ _RUNS_TAIL = """
     "autocorrelation portmanteau. Rides the staged hour-counts scan.",
 )
 def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return hour_counts_sql(
-        spark, sf_dir,
-        _RUNS_TAIL.format(core=spine_from_counts(SPARK) + _RUNS_CORE),
-    )
+    rt = hour_counts_sql(spark, sf_dir, spine_from_counts(SPARK) + _RUNS_CORE)
+    return spark.sql(_RUNS_TAIL.format(core="SELECT * FROM {rt}"), rt=rt)
 
 
 # ---------------------------------------------------------------------------

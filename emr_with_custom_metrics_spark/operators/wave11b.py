@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from emr_with_custom_metrics_spark.catalog import register_views
 from emr_with_custom_metrics_spark.dialect import DUCK, SPARK
 from emr_with_custom_metrics_spark.operators.stats import _ARM
+from emr_with_custom_metrics_spark.plans.stage_memo import stage_ctes
 from emr_with_custom_metrics_spark.registry import register
 
 
@@ -254,25 +255,8 @@ def ml_confusion_multiclass(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Opt r15 (guide §2.4): `base` feeds vals/ids/pred and `cuts`
     # feeds ids + pred — WITH-inlining re-ran the events scan (and the
     # whole histogram -> cumulative -> cut pick) per reference: 16
-    # scans in plans/r15/ml_confusion_multiclass_scan1.txt. Stage the
-    # narrow projection (spearman precedent) and the 1-row cuts table
-    # behind lazy checkpoints; tail CTE text unchanged.
-    base_head, _, rest = _CONF3_SQL.partition(", vals AS")
-    cuts_body, _, tail = rest.partition(", ids AS")
-    base = spark.sql(base_head + " SELECT * FROM base").localCheckpoint(
-        eager=False
-    )
-    cuts = spark.sql(
-        "WITH base AS (SELECT * FROM {base}), vals AS"
-        + cuts_body
-        + " SELECT * FROM cuts",
-        base=base,
-    ).localCheckpoint(eager=False)
-    return spark.sql(
-        "WITH base AS (SELECT * FROM {base}), "
-        "cuts AS (SELECT * FROM {cuts}), ids AS" + tail,
-        base=base, cuts=cuts,
-    )
+    # scans in plans/r15/ml_confusion_multiclass_scan1.txt.
+    return stage_ctes(spark, _CONF3_SQL, "base", "cuts")
 
 
 # ---------------------------------------------------------------------------
@@ -441,13 +425,8 @@ def ml_logloss_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
     # Opt r15 (guide §2.4): same shape as ml_expected_calibration_error
     # — `binned` feeds calib/calg/test, re-running the events scan +
-    # range cross-join per reference. Stage the narrow binned
-    # projection; tail text unchanged.
-    head, _, tail = _LOGLOSS_SQL.partition(", calib AS")
-    return spark.sql(
-        "WITH binned AS (SELECT * FROM {binned}), calib AS" + tail,
-        binned=spark.sql(head + " SELECT * FROM binned").localCheckpoint(eager=False),
-    )
+    # range cross-join per reference.
+    return stage_ctes(spark, _LOGLOSS_SQL, "binned")
 
 
 # ---------------------------------------------------------------------------
@@ -519,16 +498,8 @@ def stats_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Opt r15 (guide §2.4): `hist` feeds BOTH sides of the pair
     # self-join, so WITH-inlining re-ran the events scan + md5 arm
     # assignment + histogram aggregation once per side (2 full scans in
-    # plans/r15/stats_hodges_lehmann_before.txt). Stage the per-arm
-    # value histogram (value-domain-bounded, ~1k cells per arm per
-    # metric) behind a lazy checkpoint; the tail's CTE text is
-    # unchanged, so the pair weights and median picks are identical.
-    full = _HL_TMPL.format(arm=_ARM)
-    head, _, tail = full.partition(", pairs AS")
-    return spark.sql(
-        "WITH hist AS (SELECT * FROM {hist}), pairs AS" + tail,
-        hist=spark.sql(head + " SELECT * FROM hist").localCheckpoint(eager=False),
-    )
+    # plans/r15/stats_hodges_lehmann_before.txt).
+    return stage_ctes(spark, _HL_TMPL.format(arm=_ARM), "hist")
 
 
 # ---------------------------------------------------------------------------

@@ -39,6 +39,7 @@ from emr_with_custom_metrics_spark.operators.stats import (
     hour_counts_sql,
     spine_from_counts,
 )
+from emr_with_custom_metrics_spark.plans.stage_memo import stage_ctes
 from emr_with_custom_metrics_spark.registry import register
 
 
@@ -301,13 +302,8 @@ def stats_cvm_twosample(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
     # Opt r15 (guide §2.4): `hist` feeds vals, the metric spine, the
     # focal left join and counts — four inlined references, each
-    # re-running the events scan + histogram. Stage the value
-    # histogram behind a lazy checkpoint; tail text unchanged.
-    head, _, tail = _CVM_SQL.partition(", vals AS")
-    return spark.sql(
-        "WITH hist AS (SELECT * FROM {hist}), vals AS" + tail,
-        hist=spark.sql(head + " SELECT * FROM hist").localCheckpoint(eager=False),
-    )
+    # re-running the events scan + histogram.
+    return stage_ctes(spark, _CVM_SQL, "hist")
 
 
 # ---------------------------------------------------------------------------
@@ -420,25 +416,8 @@ def stats_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Opt r15 (guide §2.4): `ubase` feeds obs + the 200-replicate
     # explode, and `obs` feeds exceed + final — WITH-inlining re-ran
     # the events scan/group (and obs's per-user md5 pass) per
-    # reference. Stage the compact per-(metric, user) sufficient
-    # stats and the k-row observed-arm table behind lazy checkpoints;
-    # all downstream CTE text is unchanged.
-    ubase_part, _, after_ubase = _perm_sql(SPARK).partition(", obs AS")
-    obs_body, _, tail = after_ubase.partition(", hashed AS")
-    ubase = spark.sql(ubase_part + " SELECT * FROM ubase").localCheckpoint(
-        eager=False
-    )
-    obs = spark.sql(
-        "WITH ubase AS (SELECT * FROM {ubase}), obs AS"
-        + obs_body
-        + " SELECT * FROM obs",
-        ubase=ubase,
-    ).localCheckpoint(eager=False)
-    return spark.sql(
-        "WITH ubase AS (SELECT * FROM {ubase}), "
-        "obs AS (SELECT * FROM {obs}), hashed AS" + tail,
-        ubase=ubase, obs=obs,
-    )
+    # reference.
+    return stage_ctes(spark, _perm_sql(SPARK), "ubase", "obs")
 
 
 # ---------------------------------------------------------------------------

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
 from emr_with_custom_metrics_spark.dialect import DUCK, SPARK
+from emr_with_custom_metrics_spark.plans.stage_memo import stage_ctes
 from emr_with_custom_metrics_spark.registry import register
 
 # Dialect-split 8-gram shingle extraction (distinct per doc, md5-hashed
@@ -502,11 +503,5 @@ _ECE_SQL = """
 def ml_expected_calibration_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
     # Opt r15 (guide §2.4): `binned` feeds calib/calg/test, so the
-    # events scan + range cross-join ran three times. Stage the narrow
-    # (half, y, bin) projection behind a lazy checkpoint; tail text
-    # unchanged.
-    head, _, tail = _ECE_SQL.partition(", calib AS")
-    return spark.sql(
-        "WITH binned AS (SELECT * FROM {binned}), calib AS" + tail,
-        binned=spark.sql(head + " SELECT * FROM binned").localCheckpoint(eager=False),
-    )
+    # events scan + range cross-join ran three times.
+    return stage_ctes(spark, _ECE_SQL, "binned")

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
 from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
+from emr_with_custom_metrics_spark.plans.stage_memo import stage_ctes
 from emr_with_custom_metrics_spark.registry import register
 
 
@@ -138,14 +139,8 @@ def stats_sprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
     # Opt r15 (guide §2.4): `walk` feeds crossing + the tail's w side
     # + the tmax subquery — three inlined references, each re-running
-    # the scan + median join + both cumulative windows. Stage the
-    # (metric, t, llr) walk behind a lazy checkpoint; tail unchanged.
-    full = _SPRT_TMPL.format(d=SPARK)
-    head, _, tail = full.partition(", crossing AS")
-    return spark.sql(
-        "WITH walk AS (SELECT * FROM {walk}), crossing AS" + tail,
-        walk=spark.sql(head + " SELECT * FROM walk").localCheckpoint(eager=False),
-    )
+    # the scan + median join + both cumulative windows.
+    return stage_ctes(spark, _SPRT_TMPL.format(d=SPARK), "walk")
 
 
 # ---------------------------------------------------------------------------

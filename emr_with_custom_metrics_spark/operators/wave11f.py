@@ -31,18 +31,13 @@ from pyspark.sql import DataFrame, SparkSession
 
 from emr_with_custom_metrics_spark.catalog import register_views
 from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
-from emr_with_custom_metrics_spark.operators.wave9c import _FDR_SQL
+from emr_with_custom_metrics_spark.operators.wave9c import WELCH_PV_CTES, stage_welch_pv
 from emr_with_custom_metrics_spark.operators.wave11a import (
     _KW_CRIT,
     chi2_lookup_guard,
 )
+from emr_with_custom_metrics_spark.plans.stage_memo import stage_ctes
 from emr_with_custom_metrics_spark.registry import register
-
-
-# The shared Welch-z -> Zelen-Severo p-value pipeline (base..pv CTEs),
-# sliced from the BH text so the three multiple-testing queries can
-# never drift apart. The suffix starting at `ranked` is BH-specific.
-_PV_PREFIX = _FDR_SQL.split(", ranked AS")[0]
 
 
 # ---------------------------------------------------------------------------
@@ -58,7 +53,7 @@ _PV_PREFIX = _FDR_SQL.split(", ranked AS")[0]
 # p-value pipeline would re-run the events scan (the rolling-actives
 # lesson) — the window form keeps the whole query one pass.
 _FISHER_BODY = (
-    _PV_PREFIX
+    WELCH_PV_CTES
     + f"""
     , lnp AS (
         SELECT event_type, p_e9,
@@ -101,9 +96,7 @@ def _fisher_sql(d: Dialect) -> str:
     "all' scalar above the per-metric readouts.",
 )
 def stats_fisher_combined(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from emr_with_custom_metrics_spark.operators.wave9c import welch_pv_sql
-
-    return welch_pv_sql(spark, sf_dir, _fisher_sql(SPARK)[len(_PV_PREFIX):])
+    return stage_ctes(spark, _fisher_sql(SPARK), pv=stage_welch_pv(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -119,7 +112,7 @@ def stats_fisher_combined(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BY_ALPHA_E9 = 50_000_000
 
 _BY_SQL = (
-    _PV_PREFIX
+    WELCH_PV_CTES
     + f"""
     , ranked AS (
         SELECT event_type, abs_z_e6, p_e9,
@@ -164,9 +157,7 @@ _BY_SQL = (
     "reject/accept decision. The dependence-robust sibling of BH.",
 )
 def stats_benjamini_yekutieli(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from emr_with_custom_metrics_spark.operators.wave9c import welch_pv_sql
-
-    return welch_pv_sql(spark, sf_dir, _BY_SQL[len(_PV_PREFIX):])
+    return stage_ctes(spark, _BY_SQL, pv=stage_welch_pv(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------

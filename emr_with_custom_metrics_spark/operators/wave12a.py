@@ -39,7 +39,8 @@ from emr_with_custom_metrics_spark.operators.wave11a import (
     _KW_CRIT,
     chi2_lookup_guard,
 )
-from emr_with_custom_metrics_spark.operators.wave11f import _PV_PREFIX
+from emr_with_custom_metrics_spark.operators.wave9c import WELCH_PV_CTES, stage_welch_pv
+from emr_with_custom_metrics_spark.plans.stage_memo import stage_ctes
 from emr_with_custom_metrics_spark.registry import register
 
 
@@ -258,14 +259,8 @@ def stats_jonckheere_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Opt r15 (guide §2.4): `hist` feeds vals/dense/ns and `cum` feeds
     # both j2 self-join sides — WITH-inlining re-ran the events scan +
     # tercile bucketing + histogram per reference (20 scans in
-    # plans/r15/stats_jonckheere_trend_scan1.txt). Stage the per-group
-    # value histogram behind a lazy checkpoint; tail text unchanged.
-    full = _jt_sql(SPARK)
-    head, _, tail = full.partition(", vals AS")
-    return spark.sql(
-        "WITH hist AS (SELECT * FROM {hist}), vals AS" + tail,
-        hist=spark.sql(head + " SELECT * FROM hist").localCheckpoint(eager=False),
-    )
+    # plans/r15/stats_jonckheere_trend_scan1.txt).
+    return stage_ctes(spark, _jt_sql(SPARK), "hist")
 
 
 # ---------------------------------------------------------------------------
@@ -551,7 +546,7 @@ def stats_dagostino_k2(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HOLM_ALPHA_E9 = 50_000_000
 
 _HOLM_SQL = (
-    _PV_PREFIX
+    WELCH_PV_CTES
     + f"""
     , ranked AS (
         SELECT event_type, abs_z_e6, p_e9,
@@ -591,9 +586,7 @@ _HOLM_SQL = (
     "windows so the p-value pipeline runs ONCE.",
 )
 def stats_holm_bonferroni(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from emr_with_custom_metrics_spark.operators.wave9c import welch_pv_sql
-
-    return welch_pv_sql(spark, sf_dir, _HOLM_SQL[len(_PV_PREFIX):])
+    return stage_ctes(spark, _HOLM_SQL, pv=stage_welch_pv(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -690,13 +683,5 @@ def ml_krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
     # Opt r15 (guide §2.4): `base` feeds THREE consumers (stats, hist,
     # rated), so WITH-inlining scanned events four times
-    # (plans/r15/ml_krippendorff_alpha_before.txt). Stage the narrow
-    # quantized projection once behind a lazy checkpoint (the
-    # stats_spearman_corr precedent); every downstream CTE's text is
-    # unchanged, so all integer predicates and the alpha identity are
-    # computed identically.
-    head, _, tail = _KALPHA_SQL.partition(", stats AS")
-    return spark.sql(
-        "WITH base AS (SELECT * FROM {base}), stats AS" + tail,
-        base=spark.sql(head + " SELECT * FROM base").localCheckpoint(eager=False),
-    )
+    # (plans/r15/ml_krippendorff_alpha_before.txt).
+    return stage_ctes(spark, _KALPHA_SQL, "base")

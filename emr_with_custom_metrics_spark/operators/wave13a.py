@@ -51,18 +51,19 @@ from emr_with_custom_metrics_spark.operators.stats import (
     hour_counts_sql,
     spine_from_counts,
 )
-from emr_with_custom_metrics_spark.operators.wave9c import _FDR_SQL
+from emr_with_custom_metrics_spark.operators.wave9c import WELCH_PV_CTES, stage_welch_pv
 from emr_with_custom_metrics_spark.operators.wave11a import (
     _KW_CRIT,
     chi2_lookup_guard,
 )
+from emr_with_custom_metrics_spark.plans.stage_memo import stage_ctes
 from emr_with_custom_metrics_spark.registry import register
 from emr_with_custom_metrics_spark.streaming.metrics import _AR2_TMPL
 
 
 # The AR(2) fit body (CTEs s, lagged, m, solved, coefs) sliced from the
 # forecast query's text so the residual diagnostics can never drift
-# from the model they diagnose (the _PV_PREFIX sibling-interface
+# from the model they diagnose (the shared-prefix sibling-interface
 # pattern). Ends with "...WHERE det <> 0)," ready for further CTEs.
 def _ar2_coefs_prefix(d: Dialect) -> str:
     return _AR2_TMPL.format(d=d).split("tail2 AS")[0].rstrip()
@@ -128,7 +129,7 @@ def _dw_sql(d: Dialect) -> str:
     "AR(2) forecast model's residuals per metric — the first-order "
     "residual-autocorrelation diagnostic (DW≈2 white, <1.5 positive, "
     ">2.5 negative serial correlation). The AR(2) fit body is SLICED "
-    "from timeseries_ar2_forecast's text (the _PV_PREFIX sibling-"
+    "from timeseries_ar2_forecast's text (the shared-prefix sibling-"
     "interface pattern), so the diagnostic can never drift from the "
     "model it judges. Residuals are a fixed double DAG over exact-"
     "quantized inputs, e3-quantized to integers immediately: both "
@@ -329,19 +330,9 @@ def stats_ljung_box_resid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Opt r15 (guide §2.4): calc is referenced twice downstream (moments
     # + the qstat join), so WITH-inlining replayed the whole AR(2)
     # prefix -> resid -> 27-slot fold chain per reference (4 events
-    # scans in plans/r15/stats_ljung_box_resid_before.txt). Stage the
-    # model-sized packed relation (one 27-slot row per metric) behind a
-    # lazy checkpoint; every CTE's SQL text is unchanged, so the
-    # arithmetic and answer are identical. The DuckDB oracle keeps the
-    # one-string chain.
-    full = _lb_sql(SPARK)
-    head, _, tail = full.partition("), calc AS")
-    return spark.sql(
-        "WITH packed AS (SELECT * FROM {packed}), calc AS" + tail,
-        packed=spark.sql(head + ") SELECT * FROM packed").localCheckpoint(
-            eager=False
-        ),
-    )
+    # scans in plans/r15/stats_ljung_box_resid_before.txt). `packed`
+    # is model-sized: one 27-slot row per metric.
+    return stage_ctes(spark, _lb_sql(SPARK), "packed")
 
 
 # ---------------------------------------------------------------------------
@@ -503,28 +494,20 @@ def basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("lineitem", "part"))
     # Opt r15 (guide §2.4): `bi` feeds FOUR consumers (basket count,
     # item counts, both pair-join sides), so WITH-inlining ran the
-    # lineitem scan + part broadcast join + DISTINCT four times. Stage
-    # the compact (order, brand) basket-item table behind a lazy
-    # checkpoint; the tail's CTE text is unchanged.
-    head, _, tail = _BASKET_SQL.partition(", nb AS")
-    return spark.sql(
-        "WITH bi AS (SELECT * FROM {bi}), nb AS" + tail,
-        bi=spark.sql(head + " SELECT * FROM bi").localCheckpoint(eager=False),
-    )
+    # lineitem scan + part broadcast join + DISTINCT four times.
+    return stage_ctes(spark, _BASKET_SQL, "bi")
 
 
 # ---------------------------------------------------------------------------
 # Storey q-values (adaptive FDR)
 # ---------------------------------------------------------------------------
-_PV_PREFIX = _FDR_SQL.split(", ranked AS")[0]
-
 _STOREY_MIN_EXPR = (
     "LEAST(CAST(1000000000 AS BIGINT), MIN(q_raw_e9) OVER ("
     "ORDER BY rnk ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))"
 )
 
 _STOREY_SQL = (
-    _PV_PREFIX
+    WELCH_PV_CTES
     + f"""
     , ranked AS (
         SELECT event_type, p_e9,
@@ -559,7 +542,7 @@ _STOREY_SQL = (
     "stats_storey_qvalue",
     oracle=_STOREY_SQL,
     doc="Storey (2002) adaptive-FDR q-values over the family's shared "
-    "Welch p-value pipeline (the _PV_PREFIX sibling interface BH, BY "
+    "Welch p-value pipeline (the WELCH_PV_CTES sibling interface BH, BY "
     "and Fisher consume): pi0 = min(1, #{p > 0.5} / (0.5 m)) at "
     "lambda = 0.5, q_(i) = min_{j>=i} pi0 * m * p_(j) / j, capped at "
     "1 and min-monotone via one descending-window MIN. Completes the "
@@ -570,9 +553,7 @@ _STOREY_SQL = (
     "the documented lambda = 0.5 boundary, not an error.",
 )
 def stats_storey_qvalue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from emr_with_custom_metrics_spark.operators.wave9c import welch_pv_sql
-
-    return welch_pv_sql(spark, sf_dir, _STOREY_SQL[len(_PV_PREFIX):])
+    return stage_ctes(spark, _STOREY_SQL, pv=stage_welch_pv(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------

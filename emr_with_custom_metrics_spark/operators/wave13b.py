@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from emr_with_custom_metrics_spark.catalog import register_views
 from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
+from emr_with_custom_metrics_spark.plans.stage_memo import stage_ctes
 from emr_with_custom_metrics_spark.registry import register
 
 
@@ -303,14 +304,8 @@ def demand_croston_sbc(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("lineitem",))
     # Opt r15 (guide §2.4): `wk` feeds the corpus-start scalar AND the
     # per-part packing, so the lineitem scan + weekly aggregation ran
-    # twice. Stage the compact (part, week, qty) table behind a lazy
-    # checkpoint; tail text unchanged.
-    full = _croston_sql(SPARK)
-    head, _, tail = full.partition(", start AS")
-    return spark.sql(
-        "WITH wk AS (SELECT * FROM {wk}), start AS" + tail,
-        wk=spark.sql(head + " SELECT * FROM wk").localCheckpoint(eager=False),
-    )
+    # twice.
+    return stage_ctes(spark, _croston_sql(SPARK), "wk")
 
 
 # ---------------------------------------------------------------------------

@@ -51,6 +51,7 @@ from emr_with_custom_metrics_spark.operators.stats import (
     hour_counts_sql,
     spine_from_counts,
 )
+from emr_with_custom_metrics_spark.plans.stage_memo import stage_ctes
 from emr_with_custom_metrics_spark.registry import register
 
 _DAY_US = 86_400_000_000
@@ -384,14 +385,8 @@ def stats_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Opt r15 (guide §2.4): `hist` (and `tot` derived from it) feeds
     # seven inlined references (within_g, grid, within, both pair
     # sides, both per-pair tot joins) — 22 events scans in
-    # plans/r15/stats_energy_distance_scan1.txt. Stage the
-    # value-domain-bounded histogram behind a lazy checkpoint; every
-    # downstream CTE's text is unchanged.
-    head, _, tail = _ENERGY_TMPL.partition(", tot AS")
-    return spark.sql(
-        "WITH hist AS (SELECT * FROM {hist}), tot AS" + tail,
-        hist=spark.sql(head + " SELECT * FROM hist").localCheckpoint(eager=False),
-    )
+    # plans/r15/stats_energy_distance_scan1.txt.
+    return stage_ctes(spark, _ENERGY_TMPL, "hist")
 
 
 # ---------------------------------------------------------------------------

@@ -4,7 +4,7 @@
   ICDE 2007) over the SAME (day-of-week, value-band) quasi-identifier
   classes as ``dq_k_anonymity`` / ``dq_l_diversity`` (the QI SQL is
   SLICED from wave9g so the three screens can never drift apart — the
-  _PV_PREFIX sibling-interface pattern): l-diversity stops the
+  shared-prefix sibling-interface pattern): l-diversity stops the
   homogeneous-class attack but not the SKEWNESS attack (a class can
   hold l distinct sensitive values whose distribution still differs
   wildly from the corpus); t-closeness bounds the distance between

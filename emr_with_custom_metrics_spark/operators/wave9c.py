@@ -35,7 +35,10 @@ from emr_with_custom_metrics_spark.registry import register
 
 _BH_ALPHA_E9 = 50_000_000  # alpha = 0.05 in 1e-9 units
 
-_FDR_SQL = f"""
+# The base..pv chain every multiple-testing row starts from (BH here,
+# Fisher + BY in wave11f, Holm in wave12a, Storey in wave13a), so the
+# five pipelines cannot drift apart.
+WELCH_PV_CTES = f"""
     WITH base AS (
         SELECT event_type,
                {_ARM} AS arm,
@@ -77,7 +80,9 @@ _FDR_SQL = f"""
                     + 1.330274429e0 * POWER(1.0e0 / (1.0e0 + 0.2316419e0 * az), 5))
                    * 1000000000) AS BIGINT) AS p_e9
         FROM zt
-    ), ranked AS (
+    )"""
+
+_FDR_SQL = WELCH_PV_CTES + f""", ranked AS (
         SELECT event_type, abs_z_e6, p_e9,
                CAST(ROW_NUMBER() OVER (ORDER BY p_e9, event_type) AS BIGINT)
                    AS rnk,
@@ -111,33 +116,18 @@ _FDR_SQL = f"""
 # staged and inline forms are proven frame-identical in
 # tests/test_advice_r13.py::test_welch_pv_staged_equals_inline.
 
-_PV_ONLY_SQL = (
-    _FDR_SQL.split(", ranked AS")[0]
-    + "\n    SELECT event_type, abs_z_e6, p_e9 FROM pv"
-)
-# Drop-in WITH-head replacement for the base..pv prefix in consumers'
-# Spark texts: same CTE name, same three columns, read from the staged
-# frame bound to ``{pv}`` (see :func:`welch_pv_sql`).
-PV_PREFIX_STAGED = (
-    "\n    WITH pv AS (SELECT event_type, abs_z_e6, p_e9 FROM {pv})"
-)
-
-
 def stage_welch_pv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The staged Welch-pv relation for ``sf_dir`` (event_type, abs_z_e6,
-    p_e9), built at most once per (session, sf_dir)."""
+    p_e9), built at most once per (session, sf_dir). A consumer binds it
+    under ``pv``: ``stage_ctes(spark, text, pv=stage_welch_pv(...))``."""
 
     def build() -> DataFrame:
         register_views(spark, sf_dir, ("events",))
-        return spark.sql(_PV_ONLY_SQL).localCheckpoint(eager=True)
+        return spark.sql(
+            WELCH_PV_CTES + "\n    SELECT event_type, abs_z_e6, p_e9 FROM pv"
+        ).localCheckpoint(eager=True)
 
     return stage_memo.staged(spark, "welch_pv", sf_dir, None, build)
-
-
-def welch_pv_sql(spark: SparkSession, sf_dir: str, tail: str) -> DataFrame:
-    """Run ``PV_PREFIX_STAGED + tail`` over the staged pv relation, where
-    ``tail`` is a consumer's text after its ``_PV_PREFIX``."""
-    return spark.sql(PV_PREFIX_STAGED + tail, pv=stage_welch_pv(spark, sf_dir))
 
 
 @register(
@@ -155,9 +145,7 @@ def welch_pv_sql(spark: SparkSession, sf_dir: str, tail: str) -> DataFrame:
     "epilogue over the staged shared pv relation (stage_welch_pv).",
 )
 def stats_fdr_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return welch_pv_sql(
-        spark, sf_dir, ", ranked AS" + _FDR_SQL.split(", ranked AS", 1)[1]
-    )
+    return stage_memo.stage_ctes(spark, _FDR_SQL, pv=stage_welch_pv(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------

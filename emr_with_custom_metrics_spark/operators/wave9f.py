@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from emr_with_custom_metrics_spark.catalog import load_table, register_views
+from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
+from emr_with_custom_metrics_spark.operators.stats import counts_cte, hour_counts_sql
 from emr_with_custom_metrics_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -212,24 +214,14 @@ _THEILSEN_CORE = """
     GROUP BY event_type
 """
 
-_THEILSEN_SPARK = (
-    "WITH counts AS (SELECT event_type, h, cnt FROM {counts})"
-    + _THEILSEN_CORE
-)
-_THEILSEN_DUCK = (
-    """WITH counts AS MATERIALIZED (
-        SELECT event_type,
-               CAST(FLOOR(epoch(ts) / 3600) AS BIGINT) AS h,
-               COUNT(*) AS cnt
-        FROM events GROUP BY 1, 2
-    )"""
-    + _THEILSEN_CORE
-)
+
+def _theilsen_sql(d: Dialect) -> str:
+    return "WITH " + counts_cte(d, d.mat) + _THEILSEN_CORE
 
 
 @register(
     "stats_theil_sen_trend",
-    oracle=_THEILSEN_DUCK,
+    oracle=_theilsen_sql(DUCK),
     doc="Theil-Sen robust trend (Theil 1950 / Sen 1968) of each metric's "
     "daily count series: slope = lower median of all pairwise slopes "
     "(each one fixed-order double division over exact counts, quantized "
@@ -241,9 +233,7 @@ _THEILSEN_DUCK = (
     "isotonic (stats_isotonic_trend) with the outlier-robust estimate.",
 )
 def stats_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from emr_with_custom_metrics_spark.operators.stats import hour_counts_sql
-
-    return hour_counts_sql(spark, sf_dir, _THEILSEN_SPARK)
+    return hour_counts_sql(spark, sf_dir, _theilsen_sql(SPARK))
 
 
 # ---------------------------------------------------------------------------

@@ -24,6 +24,7 @@ from emr_with_custom_metrics_spark.operators.stats import (
     hour_counts_sql,
     spine_from_counts,
 )
+from emr_with_custom_metrics_spark.plans.stage_memo import stage_ctes
 from emr_with_custom_metrics_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -237,14 +238,8 @@ def events_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
     # Opt r15 (guide §2.4): `hist` feeds the reference-edge pass AND
     # the binned re-measure pass — WITH-inlining re-ran the events
-    # scan + half-split + histogram per reference. Stage the compact
-    # (metric, half, value) histogram behind a lazy checkpoint; tail
-    # text unchanged.
-    head, _, tail = _psi_sql(SPARK).partition(", ref AS")
-    return spark.sql(
-        "WITH hist AS (SELECT * FROM {hist}), ref AS" + tail,
-        hist=spark.sql(head + " SELECT * FROM hist").localCheckpoint(eager=False),
-    )
+    # scan + half-split + histogram per reference.
+    return stage_ctes(spark, _psi_sql(SPARK), "hist")
 
 
 # ---------------------------------------------------------------------------

@@ -1,5 +1,5 @@
-"""One memo for staged relations, and the one rule for every staged
-relation.
+"""One memo for staged relations, one way to stage a CTE, and the one
+rule for every staged relation.
 
 The rule, memo or not: a staged relation is a value. The code that
 stages it keeps the DataFrame and hands it to the SQL that reads it as
@@ -31,6 +31,18 @@ index (operators/wave15c) and the trained unigram vocabulary
   in the ledger below; the unigram chain checkpoints lazily (its build
   cost is plan analysis, its execution is under a second).
 
+Spark inlines a WITH chain at every reference, so a CTE that several
+later CTEs read is re-run once per reader. :func:`stage_ctes` runs the
+same chain text the DuckDB oracle runs and stages the CTEs it is told
+to by name. The cut rule: each named CTE, in chain order, runs as ``WITH
+<the CTEs cut so far as x AS (SELECT * FROM {x})>, <the CTEs since the
+last cut, through this one> SELECT * FROM name`` behind a lazy
+``localCheckpoint``; a frame passed under a CTE's name replaces that
+CTE and cuts the chain there too; the final statement is the cut CTEs
+as ``SELECT * FROM {x}``, every CTE after the last cut and the final
+query. A CTE after a cut that reads one before it fails Spark's
+analysis, so a wrong cut is loud.
+
 Two process-wide ledgers are written here, so bench.py can keep per-row
 times leg-comparable:
 
@@ -46,6 +58,7 @@ times leg-comparable:
 
 from __future__ import annotations
 
+import re
 import threading
 import time
 from collections.abc import Callable
@@ -160,3 +173,105 @@ def broadcast_if_stored_small(df: DataFrame) -> DataFrame:
     stored = stored_bytes(df)
     limit = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
     return F.broadcast(df) if stored is not None and stored <= limit else df
+
+
+_CTE_HEAD = re.compile(r"(\w+)\s+AS\s*\(", re.IGNORECASE)
+
+
+def _skip(text: str, i: int) -> int:
+    """Index past whitespace, ``--`` and ``/* */`` comments from ``i``."""
+    while i < len(text):
+        if text[i].isspace():
+            i += 1
+        elif text.startswith("--", i):
+            j = text.find("\n", i)
+            i = len(text) if j < 0 else j
+        elif text.startswith("/*", i):
+            i = text.index("*/", i + 2) + 2
+        else:
+            break
+    return i
+
+
+def _close(text: str, i: int) -> int:
+    """Index past the parenthesis that closes the one open at ``i``,
+    skipping quoted strings and comments."""
+    depth = 0
+    while i < len(text):
+        c = text[i]
+        if c in "'\"`":
+            i += 1
+            while text[i] != c:
+                i += 2 if text[i] == "\\" else 1
+        elif text.startswith(("--", "/*"), i):
+            i = _skip(text, i) - 1
+        elif c == "(":
+            depth += 1
+        elif c == ")":
+            depth -= 1
+            if depth == 0:
+                return i + 1
+        i += 1
+    raise ValueError("unbalanced parenthesis in the WITH chain")
+
+
+def _ctes(text: str) -> list[tuple[str, int, int]]:
+    """``(name, start, end)`` of each top-level CTE: ``text[start:end]``
+    is ``name AS (...)``."""
+    i = _skip(text, 0)
+    if not re.match(r"WITH\b", text[i:], re.IGNORECASE):
+        raise ValueError("the text does not start with a WITH chain")
+    out = []
+    i += 4
+    while True:
+        start = _skip(text, i)
+        m = _CTE_HEAD.match(text, start)
+        if not m:
+            raise ValueError(f"no 'name AS (' at offset {start} of the WITH chain")
+        i = _close(text, m.end() - 1)
+        out.append((m.group(1), start, i))
+        j = _skip(text, i)
+        if not text.startswith(",", j):
+            return out
+        i = j + 1
+
+
+def stage_ctes(
+    spark: SparkSession, text: str, *names: str, **frames: DataFrame
+) -> DataFrame:
+    """``spark.sql(text)`` with the CTEs in ``names`` staged and the
+    CTEs in ``frames`` replaced by the frames given, cut by the rule in
+    the module docstring. A statement goes through ``str.format`` only
+    when it binds a frame."""
+    ctes = _ctes(text)
+    pos = {name: k for k, (name, _, _) in enumerate(ctes)}
+    for name in (*names, *frames):
+        if name not in pos:
+            raise ValueError(f"{name!r} is not a top-level CTE of the text")
+    for a, b in zip(names, names[1:]):
+        if pos[b] <= pos[a]:
+            raise ValueError(f"{b!r} is named after {a!r} but comes before it in the chain")
+    if set(names) & set(frames):
+        raise ValueError(f"{sorted(set(names) & set(frames))} both staged and bound")
+
+    head = text[: ctes[0][1]]
+    bound: dict[str, DataFrame] = {}
+
+    def run(ctes_and_query: str) -> DataFrame:
+        if not bound:
+            return spark.sql(head + ctes_and_query)
+        cut = ", ".join(f"{x} AS (SELECT * FROM {{{x}}})" for x in bound)
+        return spark.sql(head + cut + ctes_and_query, **bound)
+
+    since, end = 0, ctes[0][1]
+    for k in sorted(pos[n] for n in (*names, *frames)):
+        name, _, end = ctes[k]
+        if name in frames:
+            bound[name] = frames[name]
+        else:
+            body = text[ctes[since][1]:end] + f" SELECT * FROM {name}"
+            bound[name] = run((", " if bound else "") + body).localCheckpoint(
+                eager=False
+            )
+        since = k + 1
+    return run(text[end:])

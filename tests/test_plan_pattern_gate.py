@@ -1,8 +1,9 @@
-"""Drift-proof gate for the fleet-wide plan-pattern audit (r14 VERDICT
-item 3, modeled on the COVERAGE gate in test_coverage_doc.py): every
-CartesianProduct / BroadcastNestedLoopJoin / Python-UDF stage found in
-any registered query's physical plan must appear in the checked-in
-review ledger ``tools/plan_pattern_classification.json``. A new flag
+"""Drift-proof gate for the fleet-wide plan-pattern audit (modeled on
+the COVERAGE gate in test_coverage_doc.py): every CartesianProduct /
+BroadcastNestedLoopJoin / Python-UDF stage / Window -> Sort -> Exchange
+SinglePartition chain found in any registered query's physical plan
+must appear in the checked-in review ledger
+``tools/plan_pattern_classification.json``. A new flag
 can only ship after a human classifies it there with a reason — the
 audit stops being a ritual someone remembers to run and becomes a test
 that fails when skipped.

@@ -4,8 +4,9 @@ even under concurrent first calls, a new session starts empty, every
 memo kind lands in the build ledger and the rider manifest, no module
 global keeps a staged DataFrame, and the pair memos carry their stored
 size to the planner. Also: rows that stage without a memo bind their
-frames too, so they run side by side on threads of one session, and
-the query name the memo ledger reads is per thread."""
+frames too, so they run side by side on threads of one session, the
+query name the memo ledger reads is per thread, and ``stage_ctes``
+cuts a chain by CTE name, past comments, strings and hints."""
 
 from __future__ import annotations
 
@@ -37,9 +38,12 @@ PAIR_RIDERS = (
     "graph_triangle_count",
 )
 # Rows that stage per call (no memo): loops and chains of checkpointed
-# frames, the two rows that fan the embeddings scan, and hour-count
+# frames, the two rows that fan the embeddings scan, rows that stage
+# CTEs by name (one cut, two cuts, a hint in the tail), and hour-count
 # readers. Each binds its frames as SQL parameters.
 STAGED_ROWS = (
+    "ml_confusion_multiclass",
+    "basket_apriori_triples",
     "embedding_pca_project",
     "embedding_intrinsic_dim",
     "embedding_anisotropy",
@@ -162,7 +166,7 @@ def _rows(df):
 
 
 def test_thread_pool_matches_serial(spark):
-    """Eleven memo riders and twenty per-call staged rows, each twice,
+    """Eleven memo riders and twenty-two per-call staged rows, each twice,
     on a 4-thread pool in ONE fresh session (so the first builds race
     too) return their serial rows."""
     from emr_with_custom_metrics_spark.registry import all_specs
@@ -177,6 +181,53 @@ def test_thread_pool_matches_serial(spark):
         )
     for name, rows in got:
         assert rows == serial[name], name
+
+
+# Comments hold a parenthesis and a quote, a literal holds a
+# parenthesis, a hint holds a parenthesis; `b` and `c` each read the CTE
+# before them twice, and the final query reads `a` and `c`.
+_CHAIN = """
+    -- the first CTE ) is ' a literal
+    WITH a AS (
+        SELECT id, CASE WHEN id % 3 = 0 THEN 'x)' ELSE 'y' END AS tag
+        FROM range(40)
+    ), b AS (
+        SELECT /*+ BROADCAST(a2) */ a1.id, a1.tag  -- ) and ' here too
+        FROM a a1 JOIN a a2 ON a1.id = a2.id
+    ), c AS (
+        SELECT tag, COUNT(*) AS n FROM b GROUP BY tag
+        UNION ALL SELECT 'all', COUNT(*) FROM b
+    )
+    SELECT c.tag, c.n, (SELECT COUNT(*) FROM a) AS total FROM c
+"""
+
+
+def test_stage_ctes_two_cuts_match_the_one_statement(spark):
+    from emr_with_custom_metrics_spark.plans.stage_memo import stage_ctes
+
+    got = stage_ctes(spark, _CHAIN, "a", "c")
+    assert _rows(got) == _rows(spark.sql(_CHAIN))
+    assert _rows(got) == [("all", 40, 40), ("x)", 14, 40), ("y", 26, 40)]
+
+
+def test_stage_ctes_binds_a_frame_in_place_of_its_cte(spark):
+    from emr_with_custom_metrics_spark.plans.stage_memo import stage_ctes
+
+    got = stage_ctes(spark, _CHAIN, "c", a=spark.range(3).selectExpr("id", "'z' AS tag"))
+    assert _rows(got) == [("all", 3, 3), ("z", 3, 3)]
+
+
+def test_stage_ctes_names_the_cte_it_cannot_cut(spark):
+    import pytest
+
+    from emr_with_custom_metrics_spark.plans.stage_memo import stage_ctes
+
+    with pytest.raises(ValueError, match="'tag'"):
+        stage_ctes(spark, _CHAIN, "tag")  # a column, not a CTE
+    with pytest.raises(ValueError, match="'a'"):
+        stage_ctes(spark, _CHAIN, "c", "a")
+    with pytest.raises(ValueError, match="'d'"):
+        stage_ctes(spark, _CHAIN, d=spark.range(1))
 
 
 def test_current_query_is_per_thread(spark):

@@ -1,11 +1,10 @@
-"""Fleet-wide physical-plan anti-pattern audit (round-14 standing
-ritual, the companion of audit_single_partition.py) — now a mechanical
-GATE (r14 VERDICT item 3): every flag must appear in the checked-in
-classification table ``tools/plan_pattern_classification.json``, and
+"""Fleet-wide physical-plan anti-pattern audit — a mechanical GATE:
+every flag must appear in the checked-in classification table
+``tools/plan_pattern_classification.json``, and
 ``tests/test_plan_pattern_gate.py`` fails the suite on any unclassified
 new entrant.
 
-Scans every registered query's PHYSICAL plan for the three shapes the
+Scans every registered query's PHYSICAL plan for the four shapes the
 scale review hunts by hand:
 
   * CartesianProduct            — an unconditioned cross join of two
@@ -24,6 +23,19 @@ scale review hunts by hand:
                                   intentional demo row
                                   (python_udf_scalar) plus the two
                                   UDTF rows' BatchEvalPython.
+  * single_partition_window     — a Window over a Sort over
+                                  ``Exchange SinglePartition``: one
+                                  task sorts the window's whole input.
+                                  Fine when that relation is bounded
+                                  (a value histogram, a calendar spine,
+                                  a model-sized table); each entry
+                                  names its bound class from SCALING.md
+                                  (round-11 and round-12 tables). A
+                                  data-sized relation needs the
+                                  histogram-order-statistic rewrite:
+                                  cumulative counts pick the value, a
+                                  window partitioned BY VALUE picks the
+                                  id offset.
 
 A flag is not automatically a bug — the gate exists so a flag can only
 ship after a human classified it with a reason, exactly like the
@@ -46,11 +58,29 @@ CLASSIFICATION_PATH = os.path.join(
 )
 
 
+KEYS = ("cartesian", "bnlj", "python_udf", "single_partition_window")
+
+
+def _single_partition_window(plan: str) -> bool:
+    """A Window within three lines above a Sort within two lines above
+    an ``Exchange SinglePartition`` (a bare single-partition exchange
+    under a scalar aggregate is a one-row reduction and does not
+    count)."""
+    lines = [ln.strip() for ln in plan.splitlines()]
+    return any(
+        "Exchange SinglePartition" in ln
+        and "Sort [" in " ".join(lines[max(0, i - 2):i])
+        and "Window [" in " ".join(lines[max(0, i - 3):i])
+        for i, ln in enumerate(lines)
+    )
+
+
 def scan(spark, sf_dir: str, specs: dict, progress: bool = False) -> dict:
     """Build every registered query's physical plan (no execution) and
-    return {"cartesian": [...], "bnlj": [...], "python_udf": [...],
-    "errors": [(name, exc), ...]} sorted by name."""
-    cartesian, bnlj, pyudf, errs = [], [], [], []
+    return {key: [names...] for each of ``KEYS``, "errors": [(name,
+    exc), ...]} sorted by name."""
+    found: dict[str, list] = {k: [] for k in KEYS}
+    errs = []
     for i, (name, spec) in enumerate(specs.items()):
         try:
             plan = (
@@ -62,20 +92,18 @@ def scan(spark, sf_dir: str, specs: dict, progress: bool = False) -> dict:
         except Exception as exc:  # noqa: BLE001 — audit must survive
             errs.append((name, type(exc).__name__))
             continue
-        if "CartesianProduct" in plan:
-            cartesian.append(name)
-        if "BroadcastNestedLoopJoin" in plan:
-            bnlj.append(name)
-        if "BatchEvalPython" in plan or "ArrowEvalPython" in plan:
-            pyudf.append(name)
+        hits = {
+            "cartesian": "CartesianProduct" in plan,
+            "bnlj": "BroadcastNestedLoopJoin" in plan,
+            "python_udf": "BatchEvalPython" in plan or "ArrowEvalPython" in plan,
+            "single_partition_window": _single_partition_window(plan),
+        }
+        for key, hit in hits.items():
+            if hit:
+                found[key].append(name)
         if progress and i % 100 == 0:
             print(f".. {i}/{len(specs)}", flush=True)
-    return {
-        "cartesian": sorted(cartesian),
-        "bnlj": sorted(bnlj),
-        "python_udf": sorted(pyudf),
-        "errors": errs,
-    }
+    return {**{k: sorted(v) for k, v in found.items()}, "errors": errs}
 
 
 def load_classification() -> dict:
@@ -88,7 +116,7 @@ def diff_vs_classification(found: dict, table: dict) -> dict:
     (warnings — a query was renamed/removed or its plan lost the
     pattern; prune the table)."""
     out: dict[str, dict] = {}
-    for key in ("cartesian", "bnlj", "python_udf"):
+    for key in KEYS:
         classified = set(table.get(key, {}))
         hits = set(found[key])
         out[key] = {
@@ -116,6 +144,8 @@ def main() -> None:
     print(f"\nCartesianProduct ({len(found['cartesian'])}): {found['cartesian']}")
     print(f"BroadcastNestedLoopJoin ({len(found['bnlj'])}): {found['bnlj']}")
     print(f"Python-UDF stages ({len(found['python_udf'])}): {found['python_udf']}")
+    spw = found["single_partition_window"]
+    print(f"Window -> Sort -> Exchange SinglePartition ({len(spw)}): {spw}")
     print(f"errors ({len(found['errors'])}): {found['errors']}")
 
     rc = 0
