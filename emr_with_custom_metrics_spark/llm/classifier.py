@@ -239,7 +239,7 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_views(spark, sf_dir, ("documents",))
     d = _LR_BUCKETS + 1
-    feats = spark.sql(_lr_sql(SPARK, "__feats_only__")).localCheckpoint(eager=True)
+    feats = spark.sql(_lr_sql(SPARK, "__feats_only__")).localCheckpoint()
     n = feats.count()
 
     def sig9(w: list[float], dp: int):

@@ -118,7 +118,7 @@ def dedup_levenshtein_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.split("text", " ").getItem(0).alias("tok0"),
             F.substring("text", 1, 96).alias("prefix"),
         )
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     a = d.alias("a")
     b = d.alias("b")
@@ -186,7 +186,7 @@ def dedup_levenshtein_multipass(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.split("text", " ").getItem(1).alias("tok1"),
             F.substring("text", 1, 96).alias("prefix"),
         )
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
 
     def one_pass(key: str) -> DataFrame:
@@ -1325,7 +1325,7 @@ def corpus_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doc_id tie-break (sel_key is a 1e-6-quantized double, so equality
     # against the boundary is exact). scored feeds both the boundary
     # pass and the flag pass — one checkpoint, not two pipeline runs.
-    scored = scored.localCheckpoint(eager=False)
+    scored = scored.localCheckpoint()
     thr = (
         scored.select("sel_key", "doc_id")
         .orderBy(F.col("sel_key").desc(), "doc_id")

@@ -226,9 +226,8 @@ def jaccard_pairs_prefix(documents: DataFrame, threshold: float) -> DataFrame:
     # tokenize + shingle-hash chain (measured ~1.7 s per pass at sf0.1 —
     # the single most expensive subtree in this query). One compact row
     # per doc (id + distinct 64-bit hashes), same persisted-signature
-    # shape as per_doc below; lazy so it materializes inside the first
-    # consumer's job rather than as its own blocking round-trip.
-    documents = documents.localCheckpoint(eager=False)
+    # shape as per_doc below.
+    documents = documents.localCheckpoint()
     tok = documents.select("doc_id", F.explode("toks").alias("token"))
     # Global DF per token, joined back so each doc can order its tokens
     # rarest-first. The DF table is vocabulary-sized; at corpus scale it
@@ -586,7 +585,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2.5-2.7 s staged vs 2.1-2.2 s unstaged at sf0.1) — the compact-
     # relation rule of the round's other staging wins, learned negative.
     sh = _md5_shingles(d)
-    bands = _md5_minhash_bands(sh).localCheckpoint(eager=False)
+    bands = _md5_minhash_bands(sh).localCheckpoint()
     cand = (
         bands.alias("a")
         .join(
@@ -777,7 +776,7 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # band pipeline ran twice. Stage the 32-compact-rows-per-doc band
     # table (the dedup_minhash_lsh remedy, and physically the persisted
     # index the operator's contract describes).
-    bands = _md5_minhash_bands(_md5_shingles(d)).localCheckpoint(eager=False)
+    bands = _md5_minhash_bands(_md5_shingles(d)).localCheckpoint()
     corpus = bands.where(F.col("doc_id") < 400)
     batch = bands.where(F.col("doc_id") >= 400)
     return (
@@ -834,7 +833,7 @@ def connected_components(
         )
         new_labels = (
             labels.unionByName(neigh).groupBy("node").agg(F.min("comp").alias("comp"))
-        ).localCheckpoint(eager=True)
+        ).localCheckpoint()
         # Sum as decimal(38,0): non-ANSI SUM(long) wraps silently on
         # overflow, and a wrapped sum colliding with prev_sum would end the
         # loop before the true fixpoint (r4 VERDICT). 38 digits covers
@@ -1292,7 +1291,7 @@ def _pair_memo(pairs: DataFrame) -> DataFrame:
     """Checkpoint a pair set eagerly and hand the planner its stored
     size: the graph joins over a pair memo under the broadcast threshold
     build on it instead of shuffling it."""
-    return stage_memo.broadcast_if_stored_small(pairs.localCheckpoint(eager=True))
+    return stage_memo.broadcast_if_stored_small(pairs.localCheckpoint())
 
 
 def _cosine_pair_gemm(spark: SparkSession, sf_dir: str, threshold: float) -> DataFrame:
@@ -1394,11 +1393,8 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Opt r15: the shingle table feeds sizes + BOTH self-join sides —
     # un-staged, the scan + tokenize + shingle-hash chain ran once per
     # branch (the dedup_ngram_jaccard_prefix finding, ~1.7 s each at
-    # sf0.1). Lazy checkpoint: one compact (id, hashes) row per doc,
-    # materialized inside the first consumer's job.
-    docs = _shingle_sets(load_fanned(spark, sf_dir, "documents")).localCheckpoint(
-        eager=False
-    )
+    # sf0.1). Staged: one compact (id, hashes) row per doc.
+    docs = _shingle_sets(load_fanned(spark, sf_dir, "documents")).localCheckpoint()
     sizes = docs.select("doc_id", F.size("toks").alias("n"))
     tok = docs.select("doc_id", F.explode("toks").alias("s"))
     a, b = tok.alias("a"), tok.alias("b")

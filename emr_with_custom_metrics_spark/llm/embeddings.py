@@ -344,7 +344,7 @@ def _kmeans_df(spark: SparkSession, sf_dir: str, k: int = 8, iters: int = 3) -> 
                     lambda s: s["mean"].cast("float"),
                 ).alias("centroid")
             )
-            .localCheckpoint(eager=False)
+            .localCheckpoint()
         )
 
     final = (
@@ -467,7 +467,7 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
                transform(sequence(0, 7),
                          z -> CASE WHEN z = 0 THEN CAST(1.0 AS DOUBLE)
                                    ELSE CAST(0.0 AS DOUBLE) END) AS v
-    """).localCheckpoint(eager=False)
+    """).localCheckpoint()
     chunk = 10
     for start in range(0, _PCA_ITERS, chunk):
         parts = ["WITH w0 AS (SELECT m, v FROM {state})"]
@@ -477,7 +477,7 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
             w{it + 1} AS (SELECT m, transform(v, y -> y / sqrt({fold(sq)})) AS v
                           FROM mv{it})""")
         parts.append(f" SELECT m, v FROM w{chunk}")
-        state = spark.sql("".join(parts), state=state).localCheckpoint(eager=False)
+        state = spark.sql("".join(parts), state=state).localCheckpoint()
     proj_terms = ("transform(sequence(0, 7), "
                   "d -> CAST(element_at(embedding, d + 1) AS DOUBLE) "
                   "* element_at(v, d + 1))")

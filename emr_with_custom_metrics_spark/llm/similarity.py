@@ -169,7 +169,7 @@ def _ivf_topk_core(
         q = (
             e.where(F.col("vec_id") == QUERY_VEC_ID)
             .select(F.col("embedding").alias("qv"))
-            .localCheckpoint(eager=False)
+            .localCheckpoint()
         )
     if cents is None:
         cents = label_centroids(e)
@@ -345,7 +345,7 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("table_id", "bucket"),
     ).select(
         "vec_id", "table_id", F.col("bucket").cast("bigint").alias("bucket")
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint()
     # Opt r15 (guide §2.4): sigs feeds both self-join sides — un-staged,
     # the 128-integer-fold signature pipeline executed twice. One compact
     # (vec, table, bucket) row set, materialized in the first side's job.
@@ -374,7 +374,7 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # Opt r15: unit feeds both re-rank attach sides — staged so the
         # scan + normalize pass runs once (guide §2.4).
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     a = unit.select(F.col("vec_id").alias("a_id"), F.col("u").alias("a_u"))
     b = unit.select(F.col("vec_id").alias("b_id"), F.col("u").alias("b_u"))
@@ -529,7 +529,7 @@ def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_fanned(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
     # Opt r15: the 40-row codebook table feeds both the encode join and
     # the ADC table — staged so its posexplode aggregate runs once.
-    cb = pq_codebooks(e).localCheckpoint(eager=False)
+    cb = pq_codebooks(e).localCheckpoint()
 
     # Encode: every (vector, subspace) against the 40-row broadcast codebook;
     # min(struct(d2, cl)) is a deterministic argmin (ties break on label).
@@ -675,7 +675,7 @@ def _ivfpq_topk_df(
 
     Opt r15 (guide §2.4/§3.3): q, the codebooks and the probed cell each
     feed two or three plan branches; un-staged, every branch re-ran its
-    full embeddings scan (the _before plan held 13 scans). Lazy
+    full embeddings scan (the _before plan held 13 scans).
     localCheckpoints on the three compact relations (1 row, 40 rows,
     |cell| rows) execute each subtree once — same arithmetic, same rows.
 
@@ -690,10 +690,10 @@ def _ivfpq_topk_df(
         q = (
             e.where(F.col("vec_id") == QUERY_VEC_ID)
             .select(F.col("embedding").alias("qv"))
-            .localCheckpoint(eager=False)
+            .localCheckpoint()
         )
     if avgs is None:
-        avgs = pos_avgs(e).localCheckpoint(eager=False)
+        avgs = pos_avgs(e).localCheckpoint()
     if cents is None:
         cents = label_centroids(e, avgs)
 
@@ -709,12 +709,12 @@ def _ivfpq_topk_df(
     cell = (
         e.join(F.broadcast(best), "label")
         .where(F.col("vec_id") != QUERY_VEC_ID)
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
 
     # PQ encode the cell members against the broadcast codebooks (derived
     # from the shared staged pos_avgs — no second posexplode pass).
-    cb = pq_codebooks(e, avgs).localCheckpoint(eager=False)
+    cb = pq_codebooks(e, avgs).localCheckpoint()
     vec_slices = _sub_slices(cell.select("vec_id", "embedding"), "embedding")
     codes = (
         vec_slices.join(F.broadcast(cb), "m")
@@ -788,11 +788,7 @@ def similarity_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Opt r15: ex is the semi-join side of BOTH recall arms — un-staged,
     # the exact-top-k full scan executed twice (guide §2.4). One compact
     # k-row relation, materialized inside the first arm's job.
-    ex = (
-        similarity_topk_exact(spark, sf_dir)
-        .select("vec_id")
-        .localCheckpoint(eager=False)
-    )
+    ex = similarity_topk_exact(spark, sf_dir).select("vec_id").localCheckpoint()
     # Opt r16 (guide §2.4): the IVF and IVF+PQ arms each recomputed the
     # full component-average pass (posexplode of every embedding) and
     # staged their own copy of the 1-row query vector. Stage the shared
@@ -804,10 +800,10 @@ def similarity_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (
         e.where(F.col("vec_id") == QUERY_VEC_ID)
         .select(F.col("embedding").alias("qv"))
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
-    avgs = pos_avgs(e).localCheckpoint(eager=False)
-    cents = label_centroids(e, avgs).localCheckpoint(eager=False)
+    avgs = pos_avgs(e).localCheckpoint()
+    cents = label_centroids(e, avgs).localCheckpoint()
     rows = []
     for method, df in (
         ("ivf", _ivf_topk_core(spark, sf_dir, q=q, cents=cents)),
@@ -903,7 +899,7 @@ def similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.col("rel").desc(), "vec_id")
         .limit(MMR_POOL)
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     lam, mu = MMR_LAMBDA, round(1 - MMR_LAMBDA, 1)
     first = pool.orderBy(F.col("rel").desc(), "vec_id").limit(1).select(
@@ -915,7 +911,7 @@ def similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(lam) * F.col("rel") - F.lit(mu) * F.lit(0.0)).alias("score"),
         "v",
     )
-    selected = first.localCheckpoint(eager=False)
+    selected = first.localCheckpoint()
     for i in range(2, MMR_K + 1):
         sel_ids = selected.select("vec_id")
         sel_vecs = selected.select(F.col("vec_id").alias("s_id"), F.col("v").alias("sv"))
@@ -945,7 +941,7 @@ def similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy(F.col("score").desc(), "vec_id")
             .limit(1)
         )
-        selected = selected.unionByName(winner).localCheckpoint(eager=False)
+        selected = selected.unionByName(winner).localCheckpoint()
     return selected.select(
         "rank", "vec_id", "label", "rel", "max_sim", (F.round((F.col("score")) * 1000000).cast("bigint") / 1000000.0).alias("score")
     )

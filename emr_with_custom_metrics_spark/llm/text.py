@@ -343,13 +343,13 @@ def text_tfidf_top_term(spark: SparkSession, sf_dir: str) -> DataFrame:
     total_docs = d.count()  # one cheap metadata-ish count; a literal beats a cross join
     # Opt r15 (guide §2.4): `tf` feeds doclen, df AND the scoring join
     # — un-staged, the corpus explode + (doc, token) aggregation ran
-    # three times (plans/r15/text_tfidf_top_term_scan1.txt). One lazy
+    # three times (plans/r15/text_tfidf_top_term_scan1.txt). One
     # checkpoint of the compact count table.
     tf = (
         d.select("doc_id", F.explode(tokens(F.col("text"))).alias("token"))
         .groupBy("doc_id", "token")
         .agg(F.count("*").alias("cnt"))
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     doclen = tf.groupBy("doc_id").agg(F.sum("cnt").alias("n_tok"))
     df = tf.groupBy("token").agg(F.count("*").alias("n_docs_with"))
@@ -698,7 +698,7 @@ def text_bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one element — the ndcg precedent), so the corpus-wide explode no
     # longer runs once per doclen consumer; avgdl stays exact (integer
     # lengths sum exactly in double). `tf` feeds df_ AND scored, so it
-    # is staged behind a lazy checkpoint — the one explode pass runs
+    # is staged behind a checkpoint — the one explode pass runs
     # once (12 scans before, plans/r15/text_bm25_retrieval_scan1.txt).
     doclen = d.select(
         "doc_id", F.size(F.split("text", " ")).alias("dl")
@@ -715,7 +715,7 @@ def text_bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         tok.join(F.broadcast(q), "term")
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("f"))
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     df_ = tf.groupBy("term").agg(F.count_distinct("doc_id").alias("nd"))
     scored = (
@@ -863,7 +863,7 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
                 F.concat(F.lit("\x01"), F.col("a"), F.lit(" "), F.col("b"), F.lit("\x02")),
             ).alias("r"),
-        ).localCheckpoint(eager=False)
+        ).localCheckpoint()
         size = docs.select(
             F.expr(
                 "size(split(substring(r, 2, length(r) - 2), concat(char(2), char(1))))"
@@ -1084,7 +1084,7 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = (
             docs.crossJoin(F.broadcast(best))
             .select("doc_id", F.replace(F.col("r"), pat, rep).alias("r"))
-            .localCheckpoint(eager=False)
+            .localCheckpoint()
         )
         # Opt r15: no checkpoint on the full-corpus side — enc is consumed
         # exactly once at the end, so the five replaces chain into ONE
@@ -1415,7 +1415,7 @@ def retrieval_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("lex_rank") <= 15)
         .select("doc_id", "lex_rank")
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     e = load_fanned(spark, sf_dir, "embeddings")
     qv = e.where(F.col("vec_id") == 1).select(F.col("embedding").alias("qvec"))
@@ -1432,7 +1432,7 @@ def retrieval_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("sem_rank") <= 15)
         .select("doc_id", "sem_rank")
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     fused = lex.join(sem, "doc_id", "full_outer").select(
         "doc_id",
@@ -1687,7 +1687,7 @@ def _suffix_ranks(spark: SparkSession, sf_dir: str):
     w0 = Window.partitionBy("doc_id").orderBy("tok")
     r = toks.select(
         "doc_id", "pos", F.dense_rank().over(w0).alias("r")
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint()
     levels = [r]  # levels[k]: rank of the first 2^k tokens
     for k in range(_SA_ROUNDS):
         off = 1 << k
@@ -1702,7 +1702,7 @@ def _suffix_ranks(spark: SparkSession, sf_dir: str):
         wk = Window.partitionBy("doc_id").orderBy("r", "r2")
         r = j.select(
             "doc_id", "pos", F.dense_rank().over(wk).alias("r")
-        ).localCheckpoint(eager=False)
+        ).localCheckpoint()
         levels.append(r)
     return r, levels
 
@@ -2002,11 +2002,7 @@ def text_kneserney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # w2) — one row per distinct pair by construction), n2 = rows per
     # w2, t = rows. Stage the vocabulary-sized c12 once; the explode
     # now runs twice total (count pass + scoring pass).
-    c12 = (
-        bigrams.groupBy("w1", "w2")
-        .agg(F.count("*").alias("c12"))
-        .localCheckpoint(eager=False)
-    )
+    c12 = bigrams.groupBy("w1", "w2").agg(F.count("*").alias("c12")).localCheckpoint()
     c1 = c12.groupBy("w1").agg(
         F.sum("c12").alias("c1"), F.count("*").alias("n1p")
     )

@@ -265,7 +265,7 @@ def _ug_chain(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
         FROM (SELECT explode(split(text, " ")) AS w FROM documents) t
         WHERE LENGTH(w) > 0 GROUP BY w
         """
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint()
     v0 = spark.sql(
         f"""
         WITH cand AS (
@@ -288,7 +288,7 @@ def _ug_chain(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
         FROM sel0
         """,
         words=words,
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint()
     fold_fwd, fold_bwd = _FOLD_FWD, _FOLD_BWD
     v = v0
     for _ in range(_UG_ROUNDS):
@@ -328,7 +328,7 @@ def _ug_chain(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
             v=v,
             words=words,
             v0=v0,
-        ).localCheckpoint(eager=False)
+        ).localCheckpoint()
     return words, v
 
 

@@ -503,13 +503,9 @@ def basket_part_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     # Opt r15 (guide §2.4): `items` feeds n_orders, part_freq and both
     # pair-join sides — un-staged, the lineitem scan + DISTINCT ran
-    # five times (plans/r15/basket_part_lift_scan1.txt). One lazy
+    # five times (plans/r15/basket_part_lift_scan1.txt). One
     # checkpoint of the compact (order, part) table.
-    items = (
-        li.select("l_orderkey", "l_partkey")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    items = li.select("l_orderkey", "l_partkey").distinct().localCheckpoint()
     n_orders = items.agg(F.count_distinct("l_orderkey").alias("n"))
     part_freq = items.groupBy("l_partkey").agg(F.count("*").alias("f"))
     a = items.alias("a")

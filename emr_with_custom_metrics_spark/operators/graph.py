@@ -44,20 +44,20 @@ def pagerank(
     # table — no per-iteration degree aggregate, no per-iteration edge
     # exchange (only the small ranks side shuffles to the join, and the
     # one unavoidable contribution aggregate shuffles on dst). Without
-    # lineage truncation each of the `iters` lazy checkpoints would also
+    # lineage truncation each of the `iters` checkpoints would also
     # re-derive the full edge computation (measured 5× the jaccard join
     # cost at sf0.1 — 25 s → 7 s when this was first added).
     deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     # the equi-join on src already leaves the output hash-partitioned by
     # src — exactly the layout the per-iteration ranks join probes — so no
     # explicit repartition is needed before the checkpoint
-    edges_w = edges.join(deg, "src").localCheckpoint(eager=False)
+    edges_w = edges.join(deg, "src").localCheckpoint()
     # Same treatment for the node table: every iteration's rank-refresh
     # left join probes it on `node`, so scan + hash-partition it ONCE and
     # checkpoint that layout. Without this the source table is re-scanned
     # and re-exchanged `iters` times — noise at test scale, but at 100 TB
     # each re-scan is a full pass over the corpus ids.
-    nodes_p = nodes.repartition("node").localCheckpoint(eager=False)
+    nodes_p = nodes.repartition("node").localCheckpoint()
     n = nodes_p.agg(F.count("*").alias("__n"))
     ranks = nodes_p.crossJoin(F.broadcast(n)).select(
         "node", (F.lit(1.0) / F.col("__n")).alias("rank")
@@ -88,7 +88,7 @@ def pagerank(
             nodes_p.join(contribs, "node", "left")
             .crossJoin(F.broadcast(n))
             .select("node", new_rank.alias("rank"))
-            .localCheckpoint(eager=False)
+            .localCheckpoint()
         )
     return ranks
 
@@ -305,12 +305,12 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (
         embedding_cosine_pairs(spark, sf_dir, threshold=0.3)
         .select("a_id", "b_id")
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     dir_edges = edges.select(
         F.col("a_id").alias("node"), F.col("b_id").alias("nbr")
     ).unionByName(edges.select(F.col("b_id").alias("node"), F.col("a_id").alias("nbr")))
-    dir_edges = dir_edges.localCheckpoint(eager=False)
+    dir_edges = dir_edges.localCheckpoint()
 
     labels = (
         load_table(spark, sf_dir, "embeddings")
@@ -334,7 +334,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(
                 "node", F.coalesce("new_label", "label").alias("label")
             )
-            .localCheckpoint(eager=False)
+            .localCheckpoint()
         )
     return labels.select("node", F.col("label").alias("community"))
 
@@ -381,7 +381,7 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (
         embedding_cosine_pairs(spark, sf_dir, threshold=0.3)
         .select("a_id", "b_id")
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     dir_edges = edges.select(
         F.col("a_id").alias("src"), F.col("b_id").alias("dst")
@@ -444,7 +444,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (
         embedding_cosine_pairs(spark, sf_dir, threshold=0.3)
         .select("a_id", "b_id")
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     deg = (
         edges.select(F.col("a_id").alias("node"))
@@ -528,7 +528,7 @@ def graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("b_id").alias("src"), F.col("a_id").alias("dst"), w.alias("w")
             )
         )
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     dist = spark.createDataFrame([(0, 0)], "node bigint, cost bigint")
     for _ in range(4):
@@ -539,7 +539,7 @@ def graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
             dist.unionByName(relaxed)
             .groupBy("node")
             .agg(F.min("cost").alias("cost"))
-            .localCheckpoint(eager=False)
+            .localCheckpoint()
         )
     return dist.select("node", F.col("cost").cast("bigint").alias("cost"))
 
@@ -589,7 +589,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         embedding_cosine_pairs(spark, sf_dir, threshold=0.3)
         .select("a_id", "b_id")
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     dir_edges = pairs.select(
         F.col("a_id").alias("node"), F.col("b_id").alias("nbr")
@@ -680,7 +680,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (
         embedding_cosine_pairs(spark, sf_dir, threshold=0.3)
         .select("a_id", "b_id")
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     for _ in range(_KCORE_ROUNDS):
         deg = (
@@ -702,7 +702,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.broadcast(keep.withColumnRenamed("node", "b_id")), "b_id", "left_semi"
             )
             .select("a_id", "b_id")
-            .localCheckpoint(eager=False)
+            .localCheckpoint()
         )
     return (
         edges.select(F.col("a_id").alias("node"))
@@ -809,9 +809,9 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (
         shingle_jaccard_pairs_cached(spark, sf_dir, 0.3)
         .select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
-    nodes = d.select(F.col("doc_id").alias("node")).localCheckpoint(eager=False)
+    nodes = d.select(F.col("doc_id").alias("node")).localCheckpoint()
     state = nodes.select(
         "node",
         F.lit(1_000_000_000).cast("bigint").alias("a9"),
@@ -857,7 +857,7 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("a9").alias("s"))
         )
         hn = _normalize(hsum, "h9")
-        state = an.join(hn, "node").localCheckpoint(eager=False)
+        state = an.join(hn, "node").localCheckpoint()
 
     return state.select(
         F.col("node").alias("doc_id"),

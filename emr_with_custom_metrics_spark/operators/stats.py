@@ -341,17 +341,10 @@ def global_rank_guard(d: Dialect, rank_col: str) -> str:
 
 
 def hour_counts_sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
-    """Run ``text``, a chain that starts with :func:`counts_cte`, with
-    ``counts`` bound to an eager checkpoint of that CTE.
-
-    Eager, not a lazy cut: the readers' first action reads counts from a
-    broadcast and from shuffle stages at once, and a lazy checkpoint
-    that concurrent jobs materialize can deadlock Spark's DAG scheduler
-    (a job's doCheckpoint holds RDDCheckpointData and waits for the RDD;
-    the scheduler holds the RDD and waits for RDDCheckpointData)."""
+    """Run ``text``, a chain that starts with :func:`counts_cte`, over
+    the ``events`` view with its ``counts`` CTE staged."""
     register_views(spark, sf_dir, ("events",))
-    counts = spark.sql(f"WITH {counts_cte(SPARK)} SELECT * FROM counts")
-    return stage_memo.stage_ctes(spark, text, counts=counts.localCheckpoint())
+    return stage_memo.stage_ctes(spark, text, "counts")
 
 
 @register(
@@ -646,8 +639,8 @@ def stats_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     # replayed the ENTIRE 32-way explode + per-(row, replica) md5 pass
     # per reference (two identical BroadcastNestedLoopJoin subtrees in
     # plans/r15/stats_bootstrap_ci_before.txt). Stage the replica
-    # sufficient statistics (B rows per metric) behind a lazy
-    # checkpoint; the explode now runs ONCE. `point` re-derives `base`
+    # sufficient statistics (B rows per metric) behind a checkpoint;
+    # the explode now runs ONCE. `point` re-derives `base`
     # from events in the tail with the identical expression text, so
     # every value is computed by the same arithmetic as the one-string
     # oracle chain.
@@ -663,7 +656,7 @@ def stats_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT * FROM {reps}
     ), means AS"""
         + tail,
-        reps=spark.sql(head + " SELECT * FROM reps").localCheckpoint(eager=False),
+        reps=spark.sql(head + " SELECT * FROM reps").localCheckpoint(),
     )
 
 

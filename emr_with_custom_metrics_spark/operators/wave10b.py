@@ -383,7 +383,7 @@ def retrieval_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `scored` feeds both rank-count sides — 8+ embeddings scans).
     # Stage the three compact multi-consumer relations (truth: 10 rows;
     # z: one int8 array per vector; scored: |Q| x n small ints) behind
-    # lazy checkpoints. Each staged block's CTE text is unchanged;
+    # checkpoints. Each staged block's CTE text is unchanged;
     # sysrank's `q` carries only qid, re-derived from the staged z
     # (identical id set — z applies the same zero-norm source filter
     # as e), so every score and rank is computed by identical
@@ -395,7 +395,7 @@ def retrieval_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored_part, _, ranks_body = _MRR_TAIL.partition(", ranks AS")
 
     def ck(sql: str, **frames: DataFrame) -> DataFrame:
-        return spark.sql(sql, **frames).localCheckpoint(eager=False)
+        return spark.sql(sql, **frames).localCheckpoint()
 
     truth = ck(truth_part + " SELECT * FROM truth")
     z = ck(e_part + ", z AS" + z_part + " SELECT * FROM z")

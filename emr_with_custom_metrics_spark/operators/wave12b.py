@@ -696,7 +696,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (
         embedding_cosine_pairs(spark, sf_dir, threshold=0.3)
         .select("a_id", "b_id")
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     deg = (
         edges.select(F.col("a_id").alias("node"))

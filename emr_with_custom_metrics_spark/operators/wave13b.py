@@ -456,7 +456,7 @@ def mutual_topk_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("node") < F.col("nbr"))
         .select(F.col("node").alias("a_id"), F.col("nbr").alias("b_id"))
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
 
 
@@ -494,7 +494,7 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "inner",
             )
             .select("a_id", "b_id")
-            .localCheckpoint(eager=False)
+            .localCheckpoint()
         )
     sup = _edge_support(edges)
     return (

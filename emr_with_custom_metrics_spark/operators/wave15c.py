@@ -117,18 +117,16 @@ def _build_ann_index(spark: SparkSession, sf_dir: str) -> tuple:
     q = e.where(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("embedding").alias("qv")
     )
-    exact_ids = similarity_topk_exact(spark, sf_dir).select(
-        "vec_id"
-    ).localCheckpoint(eager=True)
+    exact_ids = similarity_topk_exact(spark, sf_dir).select("vec_id").localCheckpoint()
     n_other_val = e.count() - 1
     # Opt r16: centroids and codebooks derive from ONE shared
     # component-average pass (llm.similarity.pos_avgs) — identical
     # deterministic values, one posexplode instead of two (guide §2.4).
     from emr_with_custom_metrics_spark.llm.similarity import pos_avgs
 
-    avgs = pos_avgs(e).localCheckpoint(eager=False)
-    cents = label_centroids(e, avgs).localCheckpoint(eager=True)
-    cb = pq_codebooks(e, avgs).localCheckpoint(eager=True)
+    avgs = pos_avgs(e).localCheckpoint()
+    cents = label_centroids(e, avgs).localCheckpoint()
+    cb = pq_codebooks(e, avgs).localCheckpoint()
     vec_slices = _sub_slices(
         e.where(F.col("vec_id") != QUERY_VEC_ID).select(
             "vec_id", "embedding"
@@ -152,7 +150,7 @@ def _build_ann_index(spark: SparkSession, sf_dir: str) -> tuple:
             e.select("vec_id", F.col("label").alias("vlabel")),
             "vec_id",
         )
-        .localCheckpoint(eager=True)
+        .localCheckpoint()
     )
     adc = (
         _sub_slices(q, "qv")
@@ -162,7 +160,7 @@ def _build_ann_index(spark: SparkSession, sf_dir: str) -> tuple:
             F.col("label").alias("cl"),
             _l2sq(F.col("sub"), F.col("cv")).alias("d2"),
         )
-        .localCheckpoint(eager=True)
+        .localCheckpoint()
     )
     qcos = e.where(F.col("vec_id") != QUERY_VEC_ID).crossJoin(
         F.broadcast(q)
@@ -172,7 +170,7 @@ def _build_ann_index(spark: SparkSession, sf_dir: str) -> tuple:
         F.round(cosine(F.col("embedding"), F.col("qv")) * 1000000)
         .cast("bigint")
         .alias("cos_sim_e6"),
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint()
     return (exact_ids, n_other_val, cents, cb, codes, adc, qcos, q)
 
 

@@ -316,13 +316,13 @@ def dq_eval_leakage_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Opt r15 (guide §2.4): `evg` feeds the broadcast gram set AND the
     # per-doc counts — un-staged, the eval-side gram explode+distinct
-    # ran twice (plans/r15/dq_eval_leakage_screen_scan1.txt). One lazy
+    # ran twice (plans/r15/dq_eval_leakage_screen_scan1.txt). One
     # checkpoint of the benchmark-sized distinct gram table.
     evg = (
         ev.where(F.size("toks") >= k)
         .select("doc_id", F.explode(grams).alias("g"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     ev_set = evg.select("g").distinct()
     leaked = (

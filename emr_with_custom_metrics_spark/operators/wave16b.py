@@ -715,7 +715,7 @@ def retrieval_dirichlet_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ran three times. doclen = size(split(...)) is the identical
     # BIGINT (the bm25/ndcg identity), cf = SUM(f) over the per-doc
     # term counts is the identical integer, and the query-sized tf is
-    # staged behind a lazy checkpoint — ONE explode pass total.
+    # staged behind a checkpoint — ONE explode pass total.
     full = _DIR_TMPL.format(
         d=SPARK,
         unnest_q=SPARK.first_terms(8),
@@ -729,7 +729,7 @@ def retrieval_dirichlet_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = spark.sql(
         tok_part + ", q AS" + q_body + ", tf AS" + tf_body
         + " SELECT * FROM tf"
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint()
     return spark.sql(
         """
     WITH doclen AS (

@@ -125,7 +125,7 @@ def stage_welch_pv(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_views(spark, sf_dir, ("events",))
         return spark.sql(
             WELCH_PV_CTES + "\n    SELECT event_type, abs_z_e6, p_e9 FROM pv"
-        ).localCheckpoint(eager=True)
+        ).localCheckpoint()
 
     return stage_memo.staged(spark, "welch_pv", sf_dir, None, build)
 

@@ -1,7 +1,14 @@
-"""One memo for staged relations, one way to stage a CTE, and the one
-rule for every staged relation.
+"""One memo for staged relations, one way to stage a CTE, and the two
+rules for every staged relation.
 
-The rule, memo or not: a staged relation is a value. The code that
+Every staged relation, memo or not, is checkpointed eagerly (a bare
+``localCheckpoint()``), so it runs as its own step before any consumer
+reads it. A lazy one runs inside the first consumer's jobs, and when a
+broadcast and a shuffle stage get there at once Spark's DAG scheduler
+can deadlock (``doCheckpoint`` holds ``RDDCheckpointData`` and waits
+for the RDD; the scheduler holds the RDD and waits for the other).
+
+The second rule: a staged relation is a value. The code that
 stages it keeps the DataFrame and hands it to the SQL that reads it as
 a parameter (``spark.sql("... FROM {pv}", pv=df)``; the text then runs
 through ``str.format``, so a literal brace in it must be doubled) or
@@ -27,16 +34,15 @@ index (operators/wave15c) and the trained unigram vocabulary
   queries on threads of one session cannot re-point each other's
   input.
 * A per-key lock makes concurrent first callers wait for one build.
-  The pair, pv and ANN builds checkpoint eagerly, so their cost lands
-  in the ledger below; the unigram chain checkpoints lazily (its build
-  cost is plan analysis, its execution is under a second).
+  Every build runs its checkpoint jobs, so its whole cost, execution
+  included, lands in the ledger below.
 
 Spark inlines a WITH chain at every reference, so a CTE that several
 later CTEs read is re-run once per reader. :func:`stage_ctes` runs the
 same chain text the DuckDB oracle runs and stages the CTEs it is told
 to by name. The cut rule: each named CTE, in chain order, runs as ``WITH
 <the CTEs cut so far as x AS (SELECT * FROM {x})>, <the CTEs since the
-last cut, through this one> SELECT * FROM name`` behind a lazy
+last cut, through this one> SELECT * FROM name`` behind a
 ``localCheckpoint``; a frame passed under a CTE's name replaces that
 CTE and cuts the chain there too; the final statement is the cut CTEs
 as ``SELECT * FROM {x}``, every CTE after the last cut and the final
@@ -50,7 +56,8 @@ times leg-comparable:
   ``param`` is the caller's parameter (a pair threshold) or, when it is
   None, the scale factor ``registry._sf_of(sf_dir)``. bench.py subtracts
   any build that occurred inside a timed run and reports the total as
-  its own ``pair_memo`` record line.
+  its own ``pair_memo`` record line; ``BUILD_SECS[unigram]`` includes
+  execution, so that line also holds the two unigram rows' chain.
 * ``RIDERS`` — registered queries that asked for a staged relation,
   recorded at plan-construction time via ``registry.current_query()``
   so the transparency manifest is derived from actual calls.
@@ -270,8 +277,6 @@ def stage_ctes(
             bound[name] = frames[name]
         else:
             body = text[ctes[since][1]:end] + f" SELECT * FROM {name}"
-            bound[name] = run((", " if bound else "") + body).localCheckpoint(
-                eager=False
-            )
+            bound[name] = run((", " if bound else "") + body).localCheckpoint()
         since = k + 1
     return run(text[end:])

@@ -140,6 +140,7 @@ def _register_jdbc_roundtrip() -> None:
 
     from emr_with_custom_metrics_spark.catalog import load_table
     from emr_with_custom_metrics_spark.registry import register
+    from emr_with_custom_metrics_spark.sources.reference_pipeline import scratch
 
     @register(
         "jdbc_roundtrip_derby",
@@ -173,7 +174,7 @@ def _register_jdbc_roundtrip() -> None:
             )
         )
         base = os.path.basename(sf_dir.rstrip("/")) or "sf"
-        path = f"/tmp/spark_graft_derby_{base}"
+        path = scratch(f"derby_{base}")
         shutil.rmtree(path, ignore_errors=True)
         url = f"jdbc:derby:{path}/db;create=true"
         write_jdbc(
@@ -281,6 +282,7 @@ def _register_jdbc_roundtrip_duckdb() -> None:
 
     from emr_with_custom_metrics_spark.catalog import load_table
     from emr_with_custom_metrics_spark.registry import register
+    from emr_with_custom_metrics_spark.sources.reference_pipeline import scratch
 
     @register(
         "jdbc_roundtrip_duckdb",
@@ -314,7 +316,7 @@ def _register_jdbc_roundtrip_duckdb() -> None:
             )
         )
         base = _os.path.basename(sf_dir.rstrip("/")) or "sf"
-        path = f"/tmp/spark_graft_duckjdbc_{base}.db"
+        path = _os.path.join(scratch("duckjdbc"), f"{base}.db")
         for suffix in ("", ".wal"):
             try:
                 _os.remove(path + suffix)

@@ -14,8 +14,11 @@ parameterized library pipeline plus fixes the reference missed:
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,19 +28,23 @@ from emr_with_custom_metrics_spark.dialect import DUCK, Dialect, SPARK
 from emr_with_custom_metrics_spark.registry import register
 
 
-def _scratch(name: str) -> str:
-    """Fixed per-query scratch directory under the system temp root.
+_ROOTS: dict[int, str] = {}
+_ROOTS_LOCK = threading.Lock()
 
-    mkdtemp-per-invocation leaked a full dataset copy on every bench /
-    correctness run with no deletion (r6 ADVICE,
-    sources/reference_pipeline.py:634,718) — unbounded disk across
-    repeated runs. A FIXED path plus ``mode("overwrite")`` bounds disk
-    at one copy per query. Deleting instead would be wrong: the returned
-    DataFrames read lazily from this path, so it must outlive the call.
-    Two simultaneous bench runs would race on the same path, but that
-    configuration is already flagged by bench.py's contention detector.
-    """
-    d = os.path.join(tempfile.gettempdir(), "spark_graft_scratch", name)
+
+def scratch(name: str) -> str:
+    """``name``'s scratch directory under this process's own root in the
+    temp dir (``spark_graft_<pid>_*``), made on first use and removed at
+    exit: two processes never share a path, and ``mode("overwrite")``
+    bounds disk at one copy per name per live process. The returned
+    DataFrames read lazily from it, so it must outlive the call."""
+    pid = os.getpid()
+    with _ROOTS_LOCK:
+        if pid not in _ROOTS:  # a forked child makes its own root
+            root = _ROOTS[pid] = tempfile.mkdtemp(prefix=f"spark_graft_{pid}_")
+            # a forked child inherits this handler; only the maker removes
+            atexit.register(lambda: os.getpid() == pid and shutil.rmtree(root, True))
+    d = os.path.join(_ROOTS[pid], name)
     os.makedirs(d, exist_ok=True)
     return d
 
@@ -98,7 +105,7 @@ def formats_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    tmp = _scratch("csv_roundtrip")
+    tmp = scratch("csv_roundtrip")
     path = f"{tmp}/orders_tsv"
     o.write.mode("overwrite").option("sep", "\t").option("header", "true").csv(path)
     back = (
@@ -125,7 +132,7 @@ def formats_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").where(F.col("event_id") < 2000).select(
         "event_id", "event_type", "value"
     )
-    tmp = _scratch("json_roundtrip")
+    tmp = scratch("json_roundtrip")
     path = f"{tmp}/events_json"
     ev.write.mode("overwrite").json(path)
     back = spark.read.schema("event_id BIGINT, event_type STRING, value DOUBLE").json(path)
@@ -147,7 +154,7 @@ def formats_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").where(F.col("l_orderkey") < 500).select(
         "l_orderkey", "l_returnflag", "l_quantity"
     )
-    tmp = _scratch("orc_roundtrip")
+    tmp = scratch("orc_roundtrip")
     path = f"{tmp}/lineitem_orc"
     li.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
@@ -178,7 +185,7 @@ def should_run_on_master(instance_info: dict) -> bool:
 def formats_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
-    tmp = _scratch("text_roundtrip")
+    tmp = scratch("text_roundtrip")
     path = f"{tmp}/docs_text"
     d.select(F.col("text").alias("value")).write.mode("overwrite").text(path)
     back = spark.read.text(path)
@@ -205,7 +212,7 @@ def parquet_partitioned_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").withColumn(
         "order_year", F.year("o_orderdate")
     )
-    tmp = _scratch("pq_part")
+    tmp = scratch("pq_part")
     path = f"{tmp}/orders_by_year"
     # repartition on the partition column first: one task (and one file) per
     # partition instead of every shuffle task writing a sliver of every
@@ -250,7 +257,7 @@ def parquet_dpp_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").withColumn(
         "order_year", F.year("o_orderdate")
     )
-    tmp = _scratch("pq_dpp")
+    tmp = scratch("pq_dpp")
     path = f"{tmp}/orders_by_year"
     # single file per partition (see parquet_partitioned_write)
     o.repartition("order_year").write.mode("overwrite").partitionBy(
@@ -288,7 +295,7 @@ def formats_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_nationkey", "s_acctbal"
     )
-    tmp = _scratch("xml_roundtrip")
+    tmp = scratch("xml_roundtrip")
     path = f"{tmp}/supplier_xml"
     (
         s.write.mode("overwrite")
@@ -324,7 +331,7 @@ def write_bucketed_pair(spark: SparkSession, sf_dir: str, buckets: int = 8) -> t
     keeps the sandbox clean of Hive state, and option("path") keeps data in
     a tempdir instead of ./spark-warehouse."""
 
-    tmp = _scratch("bucketed")
+    tmp = scratch("bucketed")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
@@ -415,7 +422,7 @@ def bucketed_join_no_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 def formats_parquet_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = load_table(spark, sf_dir, "orders")
-    tmp = _scratch("pq_evolve")
+    tmp = scratch("pq_evolve")
     # batch 1: the early schema (no priority column), keys < 1000
     (
         o.where(F.col("o_orderkey") < 1000)
@@ -478,7 +485,7 @@ def maintenance_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFra
     li = load_table(spark, sf_dir, "lineitem").where(F.col("l_orderkey") < 2000).select(
         "l_orderkey", "l_quantity"
     )
-    tmp = _scratch("compact")
+    tmp = scratch("compact")
     li.repartition(64).write.mode("overwrite").parquet(f"{tmp}/small")
     small = spark.read.parquet(f"{tmp}/small")
     before = small.select(
@@ -525,7 +532,7 @@ def maintenance_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFra
 def formats_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents").select("text", "source")
-    tmp = _scratch("binaryfile_scan")
+    tmp = scratch("binaryfile_scan")
     path = f"{tmp}/docs_txt"
     d.repartition("source").write.mode("overwrite").partitionBy("source").text(path)
     back = (
@@ -652,7 +659,7 @@ def maintenance_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"({_interleave_sql('zx', 'zy', 8, SPARK)}) div 4096").alias("zfile"),
         F.expr("zy div 16").alias("lfile"),
     )
-    tmp = _scratch("zorder")
+    tmp = scratch("zorder")
     z.write.partitionBy("zfile").mode("overwrite").parquet(f"{tmp}/zorder")
     z.write.partitionBy("lfile").mode("overwrite").parquet(f"{tmp}/linear")
     zread = spark.read.parquet(f"{tmp}/zorder")
@@ -735,7 +742,7 @@ def corpus_jsonl_gz_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source"
     )
-    tmp = _scratch("jsonl_gz")
+    tmp = scratch("jsonl_gz")
     path = f"{tmp}/docs_jsonl"
     d.repartition("source").write.mode("overwrite").option(
         "compression", "gzip"

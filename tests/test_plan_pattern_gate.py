@@ -8,11 +8,14 @@ can only ship after a human classifies it there with a reason — the
 audit stops being a ritual someone remembers to run and becomes a test
 that fails when skipped.
 
-Builds all ~490 physical plans (no execution) at the smoke SF — the
-suite's one deliberately heavy structural test (~3-5 min). The same
-pass checks the staging idiom: staged relations are bound into SQL as
-parameters, so after every row has been built the session's temp views
-are the base tables and nothing else, each still the plain scan.
+Builds all 504 rows (their staging jobs run) and physical plans (no
+execution) at the smoke SF — the suite's one deliberately heavy
+structural test (~3-5 min). The same pass checks the staging idiom:
+every staged relation is checkpointed eagerly, so no row returns a
+checkpoint that has not run yet; and staged relations are bound into
+SQL as parameters, so after every row has been built the session's
+temp views are the base tables and nothing else, each still the plain
+scan.
 """
 
 from __future__ import annotations
@@ -37,6 +40,10 @@ def test_every_plan_pattern_flag_is_classified(spark):
     fresh = spark.newSession()  # views earlier tests left do not count
     found = app.scan(fresh, SF_SMOKE_DIR, all_specs())
     assert found["errors"] == [], found["errors"]
+    assert found["unrun_checkpoints"] == [], (
+        "rows returning a lazy checkpoint (stage with a bare "
+        f"localCheckpoint()): {found['unrun_checkpoints']}"
+    )
 
     views = {t.name for t in fresh.catalog.listTables() if t.isTemporary}
     assert views <= set(TABLES), sorted(views - set(TABLES))

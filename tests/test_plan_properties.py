@@ -102,11 +102,13 @@ def test_events_scan_prunes_for_json_query(spark):
 
 
 def test_no_driver_side_collect_in_query_modules():
-    """Source hygiene (VERDICT r01 #4, widened per r2 ADVICE): registered
-    queries must be one lazy DAG — no mid-plan ``.collect()``,
-    ``.toPandas()``, or eager ``.localCheckpoint()`` on the driver unless
-    the site is explicitly allowlisted below, so every documented exception
-    is auditable here rather than invisible to the grep.
+    """Source hygiene (VERDICT r01 #4, widened per r2 ADVICE): building a
+    registered query runs no driver-side job — no mid-plan
+    ``.collect()`` or ``.toPandas()`` — except at a site allowlisted
+    below, and a ``.localCheckpoint()`` (always eager, so it runs its
+    staging job while the row is built) only in an allowlisted file, so
+    every documented exception is auditable here rather than invisible
+    to the grep.
 
     ``.collect()`` allowlist: the plan debugging utility and the two tiny
     post-aggregation sinks whose output is one row per (rule, bucket).
@@ -152,7 +154,8 @@ def test_no_driver_side_collect_in_query_modules():
             "llm/classifier.py",
             # Unigram-LM EM: Spark inlines WITH-chains, so each round's
             # dictionary-sized vocabulary (and the words table) is
-            # checkpointed behind a temp view — the staged-execution fix
+            # checkpointed and bound into the next round's SQL — the
+            # staged-execution fix
             # measured 6-10 s -> <0.3 s exec (round-7 notes)
             "llm/unigram.py",
             # Rolling-active-users: the distinct (user, day) set feeds
@@ -160,9 +163,9 @@ def test_no_driver_side_collect_in_query_modules():
             # un-staged, WITH-inlining re-ran the events scan + distinct
             # shuffle per consumer
             "operators/analytics.py",
-            # Stats tier first-reduction staging (hour counts, chi2 obs,
-            # CUPED user grain, the decomposition feeding the anomaly
-            # screen): each aggregate is re-referenced by 2-3 tail CTEs,
+            # Stats tier first-reduction staging (chi2 obs, bootstrap
+            # replicas, CUPED user grain, the decomposition feeding the
+            # anomaly screen): each aggregate is re-referenced by 2-3 tail CTEs,
             # and un-staged plans re-ran the raw scan per reference —
             # measured in the round-8 scan-count audit
             "operators/stats.py",
@@ -226,8 +229,8 @@ def test_no_driver_side_collect_in_query_modules():
             "operators/wave16a.py",
             # Dirichlet-LM: the query-sized tf table feeds cf + matched
             "operators/wave16b.py",
-            # stage_ctes: the one lazy checkpoint every row that stages
-            # a CTE by name goes through
+            # stage_ctes: the checkpoint every row that stages a CTE by
+            # name (the hour counts included) goes through
             "plans/stage_memo.py",
         },
     }

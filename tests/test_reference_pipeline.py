@@ -158,3 +158,52 @@ def test_convert_counts_one_column_of_written_output(
     want = as_dict(category_counts(read_tsv(spark, reviews_tsv_with_blanks_dir), "product_category"))
     assert got == want and want[None] == 3000 // 7 + 1, (got, want)
     assert cache.numCachedEntries() == cached_before
+
+
+_SCRATCH_CHILD = """
+import json, os, sys
+from pyspark.sql import SparkSession
+from emr_with_custom_metrics_spark.registry import all_specs
+from emr_with_custom_metrics_spark.sources.reference_pipeline import scratch
+
+spark = SparkSession.builder.master("local[1]").getOrCreate()
+spark.sparkContext.setLogLevel("ERROR")
+for name in ("jdbc_roundtrip_derby", "jdbc_roundtrip_duckdb"):
+    all_specs()[name].fn(spark, sys.argv[1]).collect()
+root = os.path.dirname(scratch("probe"))
+print(json.dumps({
+    "pid": os.getpid(),
+    "root": root,
+    "names": sorted(os.listdir(root)),
+    "duck": sorted(os.listdir(os.path.join(root, "duckjdbc"))),
+}))
+"""
+
+
+def test_scratch_root_is_per_process_and_removed_at_exit(tmp_path):
+    """Two processes building the same write rows never share a path:
+    each writes under its own root in the temp dir, JDBC databases
+    included, and the root is gone once its process exits."""
+    import json
+    import subprocess
+    import sys
+
+    from emr_with_custom_metrics_spark.sources.reference_pipeline import scratch
+
+    from .conftest import SF_SMOKE_DIR
+
+    sf = os.path.basename(SF_SMOKE_DIR)
+    env = {**os.environ, "TMPDIR": str(tmp_path)}
+    r = subprocess.run(
+        [sys.executable, "-c", _SCRATCH_CHILD, SF_SMOKE_DIR],
+        capture_output=True, text=True, timeout=300, cwd=REPO_ROOT, env=env,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    child = json.loads(r.stdout.strip().splitlines()[-1])
+    root = child["root"]
+    assert os.path.dirname(root) == str(tmp_path)
+    assert os.path.basename(root).startswith(f"spark_graft_{child['pid']}_")
+    assert root != os.path.dirname(scratch("probe"))
+    assert child["names"] == [f"derby_{sf}", "duckjdbc", "probe"]
+    assert child["duck"] and all(n.startswith(f"{sf}.db") for n in child["duck"])
+    assert not os.path.exists(root)

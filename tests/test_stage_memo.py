@@ -6,7 +6,8 @@ global keeps a staged DataFrame, and the pair memos carry their stored
 size to the planner. Also: rows that stage without a memo bind their
 frames too, so they run side by side on threads of one session, the
 query name the memo ledger reads is per thread, and ``stage_ctes``
-cuts a chain by CTE name, past comments, strings and hints."""
+cuts a chain by CTE name, past comments, strings and hints, and runs
+each staged CTE before it returns."""
 
 from __future__ import annotations
 
@@ -208,6 +209,22 @@ def test_stage_ctes_two_cuts_match_the_one_statement(spark):
     got = stage_ctes(spark, _CHAIN, "a", "c")
     assert _rows(got) == _rows(spark.sql(_CHAIN))
     assert _rows(got) == [("all", 40, 40), ("x)", 14, 40), ("y", 26, 40)]
+
+
+def test_stage_ctes_materializes_before_it_returns(spark):
+    """Every staged CTE is checkpointed eagerly: before any action on
+    the returned frame, each checkpoint it reads has already run, so no
+    job of the first action can be the one that materializes it."""
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
+    from audit_plan_patterns import checkpoint_rdds
+
+    from emr_with_custom_metrics_spark.plans.stage_memo import stage_ctes
+
+    got = stage_ctes(spark, _CHAIN, "a", "b")
+    rdds = checkpoint_rdds(got)
+    assert len(rdds) == 2  # `b` under `c`, `a` in the scalar subquery
+    assert all(r.isCheckpointedAndMaterialized() for r in rdds)
+    assert _rows(got) == _rows(spark.sql(_CHAIN))
 
 
 def test_stage_ctes_binds_a_frame_in_place_of_its_cte(spark):

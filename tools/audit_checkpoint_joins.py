@@ -9,8 +9,9 @@ degrades to SortMergeJoin/ShuffledHashJoin — the hazard hit once in r15
 `7259ced`) and caught only because a plan test watched that one row.
 
 This tool makes the audit mechanical: for every registered query it
-builds the INITIAL physical plan (no execution) and walks the operator
-tree; every SortMergeJoin / ShuffledHashJoin whose subtree (on either
+builds the row (which runs its staging jobs: every ``localCheckpoint``
+is eager) and the INITIAL physical plan without executing it, and walks
+the operator tree; every SortMergeJoin / ShuffledHashJoin whose subtree (on either
 side) bottoms out in a ``Scan ExistingRDD`` is reported with the two
 child summaries, so a reviewer can decide whether a side is model-sized
 (→ add an explicit BROADCAST hint) or data-sized (→ SMJ is correct).

@@ -5,7 +5,9 @@ every flag must appear in the checked-in classification table
 new entrant.
 
 Scans every registered query's PHYSICAL plan for the four shapes the
-scale review hunts by hand:
+scale review hunts by hand (and, beside them, lists any row that
+returns a checkpoint that has not run yet: every staged relation is
+checkpointed eagerly, see ``plans/stage_memo``):
 
   * CartesianProduct            — an unconditioned cross join of two
                                   data-sized sides (a broadcast cross
@@ -43,7 +45,8 @@ COVERAGE doc gate (tests/test_coverage_doc.py).
 
 Usage: python tools/audit_plan_patterns.py [SF_DIR]
 Exit: 0 when every flag is classified (stale table entries are
-reported as warnings), 1 on unclassified entrants.
+reported as warnings), 1 on unclassified entrants or an unrun
+checkpoint.
 """
 
 from __future__ import annotations
@@ -76,19 +79,18 @@ def _single_partition_window(plan: str) -> bool:
 
 
 def scan(spark, sf_dir: str, specs: dict, progress: bool = False) -> dict:
-    """Build every registered query's physical plan (no execution) and
-    return {key: [names...] for each of ``KEYS``, "errors": [(name,
+    """Build every registered query (which runs its staging jobs) and
+    its physical plan (no execution) and return {key: [names...] for
+    each of ``KEYS``, "unrun_checkpoints": [names...], "errors": [(name,
     exc), ...]} sorted by name."""
-    found: dict[str, list] = {k: [] for k in KEYS}
+    found: dict[str, list] = {k: [] for k in (*KEYS, "unrun_checkpoints")}
     errs = []
     for i, (name, spec) in enumerate(specs.items()):
         try:
-            plan = (
-                spec.fn(spark, sf_dir)
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
+            df = spec.fn(spark, sf_dir)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            if not all(r.isCheckpointedAndMaterialized() for r in checkpoint_rdds(df)):
+                found["unrun_checkpoints"].append(name)
         except Exception as exc:  # noqa: BLE001 — audit must survive
             errs.append((name, type(exc).__name__))
             continue
@@ -126,6 +128,25 @@ def diff_vs_classification(found: dict, table: dict) -> dict:
     return out
 
 
+def checkpoint_rdds(df) -> list:
+    """The checkpointed RDDs behind ``df``: those of the ``LogicalRDD``
+    leaves of its analyzed plan and of its subqueries that carry
+    checkpoint data. One whose ``isCheckpointedAndMaterialized()`` is
+    false is a lazy ``localCheckpoint`` the first action would run."""
+    plan = df._jdf.queryExecution().analyzed()
+    plans, subs = [plan], plan.subqueriesAll().iterator()
+    while subs.hasNext():
+        plans.append(subs.next())
+    rdds = []
+    for p in plans:
+        leaves = p.collectLeaves().iterator()
+        while leaves.hasNext():
+            leaf = leaves.next()
+            if leaf.nodeName() == "LogicalRDD" and leaf.rdd().checkpointData().isDefined():
+                rdds.append(leaf.rdd())
+    return rdds
+
+
 def main() -> None:
     from pyspark.sql import SparkSession
 
@@ -149,6 +170,9 @@ def main() -> None:
     print(f"errors ({len(found['errors'])}): {found['errors']}")
 
     rc = 0
+    if found["unrun_checkpoints"]:
+        print(f"UNRUN CHECKPOINTS: {found['unrun_checkpoints']}")
+        rc = 1
     try:
         table = load_classification()
     except OSError:
